@@ -9025,8 +9025,7 @@ object SparkEntry {
         // stays AQE-coalescible, so it pinned nothing. It follows the
         // session's configured shuffle width (the wideBy arithmetic) —
         // a cluster tuned for 100 TB widens with its config.
-        val w = math.max(s.sparkContext.defaultParallelism,
-          s.sessionState.conf.numShufflePartitions)
+        val w = ops.shuffleWidth(s)
         s.sql(s"""WITH li AS (SELECT /*+ REPARTITION($w, l_orderkey) */
               DISTINCT l_orderkey, l_partkey
             FROM lineitem_v337),

@@ -79,9 +79,7 @@ object Dedup {
     * config instead of pinning a local constant.
     */
   private[ops] def wideBy(df: DataFrame, keys: Column*): DataFrame =
-    df.repartition(math.max(
-      df.sparkSession.sparkContext.defaultParallelism,
-      df.sparkSession.sessionState.conf.numShufflePartitions), keys: _*)
+    df.repartition(shuffleWidth(df.sparkSession), keys: _*)
 
   private def balanced(documents: DataFrame): DataFrame =
     // Explicit round-robin width = max(core count, configured shuffle
@@ -95,9 +93,7 @@ object Dedup {
     // same work (double-execution for any non-scan input). A cluster tuned
     // for 100 TB sets shuffle.partitions in the thousands, which this
     // width follows — so a wide upstream is not narrowed in practice.
-    documents.repartition(math.max(
-      documents.sparkSession.sparkContext.defaultParallelism,
-      documents.sparkSession.sessionState.conf.numShufflePartitions))
+    documents.repartition(shuffleWidth(documents.sparkSession))
 
   /** Distinct token n-gram shingles per document (one-pass native kernel;
     * empty array when the document has fewer than n tokens).

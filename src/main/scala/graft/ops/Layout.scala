@@ -209,8 +209,7 @@ object Layout {
     val session = df.sparkSession
     val n =
       if (parts > 0) parts
-      else math.max(session.sparkContext.defaultParallelism,
-        session.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+      else shuffleWidth(session)
     // persist: pass 1's eager collect and the caller's eventual action on
     // pass 2 both read this frame (the Packing convention — ContextCleaner
     // frees the blocks once references are gone; an eager unpersist would
@@ -261,8 +260,7 @@ object Layout {
     val session = df.sparkSession
     val n =
       if (parts > 0) parts
-      else math.max(session.sparkContext.defaultParallelism,
-        session.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+      else shuffleWidth(session)
     val vIdx = df.schema.fieldIndex(valueCol)
     val ranged = df
       .repartitionByRange(n, orderCols.map(col): _*)
@@ -317,8 +315,7 @@ object Layout {
     val session = df.sparkSession
     val n =
       if (parts > 0) parts
-      else math.max(session.sparkContext.defaultParallelism,
-        session.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+      else shuffleWidth(session)
     val gIdx = df.schema.fieldIndex(groupCol)
     val all = (groupCol +: orderCols).map(col)
     val ranged = df

@@ -42,8 +42,7 @@ object Packing {
     import session.implicits._
     val n =
       if (parts > 0) parts
-      else math.max(session.sparkContext.defaultParallelism,
-        session.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+      else shuffleWidth(session)
     val stats = documents.select(col("doc_id"),
       size(Text.tokens(col("text"))).cast("long").as("n_tokens"))
     // persist: pass 1 (eager collect, below) and the caller's eventual

@@ -138,6 +138,22 @@ class LayoutSpec extends SparkSpec {
     }
   }
 
+  test("shardedRanks plans the wideBy width when shuffle.partitions is unset") {
+    // an unset key must fall back to Spark's default width, the one
+    // Dedup.wideBy (and every planner shuffle) sees; 1000 distinct keys so
+    // range sampling can fill every requested partition
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.getOption(key)
+    spark.conf.unset(key)
+    try {
+      val df = (1 to 1000).map(_.toLong).toDF("v")
+      val ranked = Layout.shardedRanks(df, Seq("v")).rdd.getNumPartitions
+      val wide = Dedup.wideBy(df, col("v")).rdd.getNumPartitions
+      assert(wide == spark.sessionState.conf.numShufflePartitions)
+      assert(ranked == wide)
+    } finally saved.foreach(spark.conf.set(key, _))
+  }
+
   test("ntileFromRank matches SQL NTILE for ragged row/bucket combinations") {
     for ((n, b) <- Seq((16L, 4), (17L, 4), (23L, 5), (5L, 8), (1L, 3))) {
       val ranks = (1L to n).toDF("rnk")

@@ -1,7 +1,8 @@
 #!/usr/bin/env bash
 # Pre-snapshot gate (VERDICT r14 item 3): a round can never close red.
 #
-#   tools/precommit.sh                 # compile + test-compile + entry smoke
+#   tools/precommit.sh                 # compile + test-compile + benchmark
+#                                      # build + self-tests + entry smoke
 #   tools/precommit.sh q266 q267       # ... plus execute named queries at sf0.001
 #   tools/precommit.sh --all           # ... plus execute EVERY query (slow)
 #
@@ -12,6 +13,12 @@ cd "$(dirname "$0")/.."
 
 echo "[precommit] sbt compile + Test/compile"
 sbt -batch ";compile;Test/compile" 2>&1 | tail -3
+
+# sbt never compiles perfbench/scala: build the benchmark harness against
+# the library here, so an API change that breaks it fails the gate.
+echo "[precommit] perfbench build + self-tests"
+python3 perfbench/build.py >/dev/null   # prints the classpath
+python3 -m unittest discover -s perfbench/tests
 
 # NOTE: this sbt's log config suppresses [success] lines for runMain —
 # the EXIT CODE is the only reliable signal (captured via PIPESTATUS;

@@ -2,68 +2,107 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnsafeArrayData}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
 
-/** Codegen-STABLE nearest-centroid assignment for the iterative Lloyd loop
-  * (SURVEY.md §2.6 M2, reference KMeans.java:93–103 semantics: scan in
-  * centroid-idx order, strict `<`, first minimum wins).
+/** Shared shape of the 2-D centroid kernels: a point (lat, lon) against
+  * any number of centroid SETS, passed as concatenated arrays — `sizes(s)`
+  * centroids per set, set after set, in `lats`/`lons` (and `idxs` where the
+  * kernel reports idxs). Each kernel returns one value per set, so a sweep
+  * over many k evaluates every k in ONE scan of the points.
   *
-  * Why an Expression and not `array_min` over literal distance columns: a
-  * double `Literal` inlines its VALUE into the generated Java source, so a
-  * Lloyd loop that bakes each iteration's centroids into the plan produces
-  * DIFFERENT source every iteration — a fresh Janino compile (~100s of ms)
-  * × 2 plans × 20 iterations is what made the k-means queries dominate the
-  * bench. Here the centroid coordinates travel through
-  * `ctx.addReferenceObj` (the codegen `references` array), so every
-  * iteration generates byte-identical source and hits Spark's codegen
+  * Why an Expression and not literal distance columns: a double `Literal`
+  * inlines its VALUE into the generated Java source, so a Lloyd loop that
+  * bakes each round's centroids into the plan produces DIFFERENT source
+  * every round — a fresh Janino compile per plan per round. Here the
+  * centroid arrays travel through `ctx.addReferenceObj` (the codegen
+  * `references` array), so every round — whatever its centroids, set count
+  * or set sizes — generates byte-identical source and hits Spark's codegen
   * cache; only the tiny reference objects change.
   *
-  * Arithmetic is kept bit-identical to the previous literal formulation
-  * (`(lat−cLat)·(lat−cLat) + (lon−cLon)·(lon−cLon)`, same op order) so the
-  * golden-fixture convergence traces (iterations==12) are unchanged.
+  * Distances are `dl·dl + dn·dn` with `dl = lat − cLat`, `dn = lon − cLon`
+  * (the reference's op order, KMeans.java:98), scanned in array order.
   */
-case class NearestCentroid2D(left: Expression, right: Expression,
-                             idxs: Seq[Int], lats: Seq[Double],
-                             lons: Seq[Double])
-    extends BinaryExpression {
-  require(idxs.nonEmpty && idxs.length == lats.length &&
-    idxs.length == lons.length,
-    "graft_nearest_centroid needs equal-length non-empty centroid arrays")
+abstract class CentroidSetsKernel extends BinaryExpression {
+  def sizes: Seq[Int]
+  def lats: Seq[Double]
+  def lons: Seq[Double]
 
-  @transient private lazy val idxArr: Array[Int] = idxs.toArray
-  @transient private lazy val latArr: Array[Double] = lats.toArray
-  @transient private lazy val lonArr: Array[Double] = lons.toArray
+  /** Called from each subclass body: a superclass constructor would run
+    * before the case-class fields are set. */
+  protected def requireSets(): Unit =
+    require(sizes.nonEmpty && sizes.forall(_ >= 1) &&
+      sizes.sum == lats.length && lats.length == lons.length,
+      s"$prettyName needs non-empty centroid sets whose sizes sum to the " +
+        "length of equal-length centroid arrays")
+
+  @transient protected lazy val sizeArr: Array[Int] = sizes.toArray
+  @transient protected lazy val latArr: Array[Double] = lats.toArray
+  @transient protected lazy val lonArr: Array[Double] = lons.toArray
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (left.dataType == DoubleType && right.dataType == DoubleType)
       TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
       s"$prettyName requires two double arguments (lat, lon)")
-  override def dataType: DataType = IntegerType
+}
+
+/** Nearest centroid per set (SURVEY.md §2.6 M2, reference
+  * KMeans.java:93–103 semantics: scan in centroid-idx order, strict `<`,
+  * first minimum wins): array<int> of the winning centroid's own idx, one
+  * element per set. Arithmetic is bit-identical to the literal formulation
+  * it replaced, so the golden-fixture convergence traces (iterations==12)
+  * are unchanged.
+  */
+case class NearestCentroid2D(left: Expression, right: Expression,
+                             sizes: Seq[Int], idxs: Seq[Int],
+                             lats: Seq[Double], lons: Seq[Double])
+    extends CentroidSetsKernel {
+  requireSets()
+  require(idxs.length == lats.length,
+    "graft_nearest_centroid needs one idx per centroid")
+
+  @transient private lazy val idxArr: Array[Int] = idxs.toArray
+
+  override def dataType: DataType =
+    ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "graft_nearest_centroid"
 
   override def nullSafeEval(a: Any, b: Any): Any = {
     val lat = a.asInstanceOf[Double]
     val lon = b.asInstanceOf[Double]
-    var best = idxArr(0)
-    var bd = Double.PositiveInfinity
-    var i = 0
-    while (i < latArr.length) {
-      val dl = lat - latArr(i)
-      val dn = lon - lonArr(i)
-      val d = dl * dl + dn * dn
-      if (d < bd) { bd = d; best = idxArr(i) }
-      i += 1
+    val out = new Array[Int](sizeArr.length)
+    var off = 0
+    var s = 0
+    while (s < sizeArr.length) {
+      val end = off + sizeArr(s)
+      var best = idxArr(off)
+      var bd = Double.PositiveInfinity
+      var i = off
+      while (i < end) {
+        val dl = lat - latArr(i)
+        val dn = lon - lonArr(i)
+        val d = dl * dl + dn * dn
+        if (d < bd) { bd = d; best = idxArr(i) }
+        i += 1
+      }
+      out(s) = best
+      off = end
+      s += 1
     }
-    best
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
+      val sizeRef = ctx.addReferenceObj("csizes", sizeArr, "int[]")
       val idxRef = ctx.addReferenceObj("cidxs", idxArr, "int[]")
       val latRef = ctx.addReferenceObj("clats", latArr, "double[]")
       val lonRef = ctx.addReferenceObj("clons", lonArr, "double[]")
+      val out = ctx.freshName("out")
+      val off = ctx.freshName("off")
+      val s = ctx.freshName("s")
+      val end = ctx.freshName("end")
       val i = ctx.freshName("i")
       val best = ctx.freshName("best")
       val bd = ctx.freshName("bd")
@@ -71,20 +110,114 @@ case class NearestCentroid2D(left: Expression, right: Expression,
       val dn = ctx.freshName("dn")
       val d = ctx.freshName("d")
       s"""
-         |int $best = $idxRef[0];
-         |double $bd = Double.POSITIVE_INFINITY;
-         |for (int $i = 0; $i < $latRef.length; $i++) {
-         |  final double $dl = $a - $latRef[$i];
-         |  final double $dn = $b - $lonRef[$i];
-         |  final double $d = $dl * $dl + $dn * $dn;
-         |  if ($d < $bd) { $bd = $d; $best = $idxRef[$i]; }
+         |final int[] $out = new int[$sizeRef.length];
+         |int $off = 0;
+         |for (int $s = 0; $s < $sizeRef.length; $s++) {
+         |  final int $end = $off + $sizeRef[$s];
+         |  int $best = $idxRef[$off];
+         |  double $bd = Double.POSITIVE_INFINITY;
+         |  for (int $i = $off; $i < $end; $i++) {
+         |    final double $dl = $a - $latRef[$i];
+         |    final double $dn = $b - $lonRef[$i];
+         |    final double $d = $dl * $dl + $dn * $dn;
+         |    if ($d < $bd) { $bd = $d; $best = $idxRef[$i]; }
+         |  }
+         |  $out[$s] = $best;
+         |  $off = $end;
          |}
-         |${ev.value} = $best;
+         |${ev.value} = org.apache.spark.sql.catalyst.expressions
+         |  .UnsafeArrayData.fromPrimitiveArray($out);
        """.stripMargin
     })
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): NearestCentroid2D =
+    copy(left = newLeft, right = newRight)
+}
+
+/** Simplified silhouette per set (SURVEY.md §2.6 M4, reference
+  * Silhouette.java:83–97): with dmin and d2nd the smallest and
+  * second-smallest squared distances, `(d2nd − dmin) / d2nd`, or 0 when
+  * d2nd is not > 0 or the set has a single centroid; array<double>, one
+  * element per set. dmin/d2nd come from a running two-smallest scan (the
+  * reference's A13 trick, strict `<`), which yields exactly the first two
+  * elements of the sorted distance array — without building or sorting
+  * one per row.
+  */
+case class CentroidSilhouette2D(left: Expression, right: Expression,
+                                sizes: Seq[Int], lats: Seq[Double],
+                                lons: Seq[Double])
+    extends CentroidSetsKernel {
+  requireSets()
+
+  override def dataType: DataType =
+    ArrayType(DoubleType, containsNull = false)
+  override def prettyName: String = "graft_centroid_silhouette"
+
+  override def nullSafeEval(a: Any, b: Any): Any = {
+    val lat = a.asInstanceOf[Double]
+    val lon = b.asInstanceOf[Double]
+    val out = new Array[Double](sizeArr.length)
+    var off = 0
+    var s = 0
+    while (s < sizeArr.length) {
+      val end = off + sizeArr(s)
+      var d1 = Double.PositiveInfinity
+      var d2 = Double.PositiveInfinity
+      var i = off
+      while (i < end) {
+        val dl = lat - latArr(i)
+        val dn = lon - lonArr(i)
+        val d = dl * dl + dn * dn
+        if (d < d1) { d2 = d1; d1 = d } else if (d < d2) d2 = d
+        i += 1
+      }
+      out(s) = if (sizeArr(s) >= 2 && d2 > 0) (d2 - d1) / d2 else 0.0
+      off = end
+      s += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) => {
+      val sizeRef = ctx.addReferenceObj("csizes", sizeArr, "int[]")
+      val latRef = ctx.addReferenceObj("clats", latArr, "double[]")
+      val lonRef = ctx.addReferenceObj("clons", lonArr, "double[]")
+      val out = ctx.freshName("out")
+      val off = ctx.freshName("off")
+      val s = ctx.freshName("s")
+      val end = ctx.freshName("end")
+      val i = ctx.freshName("i")
+      val d1 = ctx.freshName("d1")
+      val d2 = ctx.freshName("d2")
+      val dl = ctx.freshName("dl")
+      val dn = ctx.freshName("dn")
+      val d = ctx.freshName("d")
+      s"""
+         |final double[] $out = new double[$sizeRef.length];
+         |int $off = 0;
+         |for (int $s = 0; $s < $sizeRef.length; $s++) {
+         |  final int $end = $off + $sizeRef[$s];
+         |  double $d1 = Double.POSITIVE_INFINITY;
+         |  double $d2 = Double.POSITIVE_INFINITY;
+         |  for (int $i = $off; $i < $end; $i++) {
+         |    final double $dl = $a - $latRef[$i];
+         |    final double $dn = $b - $lonRef[$i];
+         |    final double $d = $dl * $dl + $dn * $dn;
+         |    if ($d < $d1) { $d2 = $d1; $d1 = $d; }
+         |    else if ($d < $d2) { $d2 = $d; }
+         |  }
+         |  $out[$s] = ($sizeRef[$s] >= 2 && $d2 > 0) ? ($d2 - $d1) / $d2 : 0.0;
+         |  $off = $end;
+         |}
+         |${ev.value} = org.apache.spark.sql.catalyst.expressions
+         |  .UnsafeArrayData.fromPrimitiveArray($out);
+       """.stripMargin
+    })
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): CentroidSilhouette2D =
     copy(left = newLeft, right = newRight)
 }
 

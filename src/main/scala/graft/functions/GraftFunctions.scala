@@ -51,8 +51,11 @@ object GraftFunctions {
     ("graft_rolling_fp", classOf[RollingFingerprints].getName,
       c => RollingFingerprints(c(0), constInt(c(1)), constInt(c(2)))),
     ("graft_nearest_centroid", classOf[NearestCentroid2D].getName,
-      c => NearestCentroid2D(c(0), c(1), constInts(c(2)), constDoubles(c(3)),
-        constDoubles(c(4)))),
+      c => NearestCentroid2D(c(0), c(1), constInts(c(2)), constInts(c(3)),
+        constDoubles(c(4)), constDoubles(c(5)))),
+    ("graft_centroid_silhouette", classOf[CentroidSilhouette2D].getName,
+      c => CentroidSilhouette2D(c(0), c(1), constInts(c(2)),
+        constDoubles(c(3)), constDoubles(c(4)))),
     ("graft_nearest_vec_centroid", classOf[NearestVecCentroid].getName,
       c => NearestVecCentroid(c(0), constInts(c(1)), constVecs(c(2)))),
     ("graft_topk_vec_centroids", classOf[TopKVecCentroids].getName,
@@ -162,18 +165,29 @@ object GraftFunctions {
   def bloomContains(sketch: Column, hashedKey: Column): Column =
     call_function("graft_bloom_contains", sketch, hashedKey)
 
-  /** Codegen-STABLE 2-D nearest-centroid (see NearestCentroid2D): the
-    * centroid arrays ride the codegen `references` array, so an iterative
-    * caller reuses ONE compiled plan across iterations. The array-literal
-    * arguments are consumed at analysis time (they become plain constructor
-    * fields, not expression children).
+  /** Codegen-STABLE 2-D nearest centroid per centroid set (see
+    * NearestCentroid2D): array<int>, one winning idx per set. The sets are
+    * concatenated — `sizes(s)` centroids of set s, set after set, in
+    * `idxs`/`lats`/`lons`. The centroid arrays ride the codegen
+    * `references` array, so an iterative caller reuses ONE compiled plan
+    * across iterations; the array-literal arguments are consumed at
+    * analysis time (they become plain constructor fields, not expression
+    * children).
     */
-  def nearestCentroid(lat: Column, lon: Column, idxs: Seq[Int],
-                      lats: Seq[Double], lons: Seq[Double]): Column =
-    call_function("graft_nearest_centroid", lat, lon,
-      org.apache.spark.sql.functions.array(idxs.map(i => lit(i)): _*),
-      org.apache.spark.sql.functions.array(lats.map(v => lit(v)): _*),
-      org.apache.spark.sql.functions.array(lons.map(v => lit(v)): _*))
+  def nearestCentroid(lat: Column, lon: Column, sizes: Seq[Int],
+                      idxs: Seq[Int], lats: Seq[Double],
+                      lons: Seq[Double]): Column =
+    call_function("graft_nearest_centroid", lat, lon, lit(sizes.toArray),
+      lit(idxs.toArray), lit(lats.toArray), lit(lons.toArray))
+
+  /** Codegen-STABLE simplified silhouette per centroid set (see
+    * CentroidSilhouette2D): array<double>, one (d2nd − dmin)/d2nd per set,
+    * sets concatenated as in [[nearestCentroid]].
+    */
+  def centroidSilhouette(lat: Column, lon: Column, sizes: Seq[Int],
+                         lats: Seq[Double], lons: Seq[Double]): Column =
+    call_function("graft_centroid_silhouette", lat, lon, lit(sizes.toArray),
+      lit(lats.toArray), lit(lons.toArray))
 
   /** Codegen-STABLE banded LSH signatures (see HyperplaneSignatures): all
     * `tables` bit-signatures of `vec` in one kernel, the [tables][bits][dim]

@@ -29,14 +29,15 @@ final case class KMeansResult(centroids: Seq[Centroid], iterations: Int,
   *
   * Execution shape — the part the reference got wrong at scale: the whole
   * sweep is ONE Spark application. Points are cached once; each iteration
-  * is a narrow map (assignment against a K-row centroid LITERAL compiled
-  * into the plan — the broadcast-join analogue of Hadoop "load centroids
-  * in task setup") plus one k-row shuffle (the recenter groupBy). No job
-  * re-setup, no external state store — this is what removes the ~38–40 s
-  * per-iteration overhead BASELINE.md documents.
+  * is a narrow map (assignment against the centroid list, shipped to the
+  * tasks inside the codegen'd kernel — the analogue of Hadoop "load
+  * centroids in task setup") plus one k-row shuffle (the recenter groupBy).
+  * No job re-setup, no external state store — this is what removes the
+  * ~38–40 s per-iteration overhead BASELINE.md documents.
   *
-  * Assignment is pure codegen'd expressions (transform/array_position over
-  * a literal centroid array) — no UDF, O(K) per row.
+  * Assignment is the codegen-stable `graft_nearest_centroid` kernel — no
+  * UDF, O(K) per row — which takes any number of centroid sets, so
+  * ModelSelect's sweep assigns every k in the same scan.
   */
 object KMeans {
 
@@ -61,36 +62,41 @@ object KMeans {
     (r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3))
   }
 
-  /** Squared Euclidean distances to every centroid, in centroid order.
-    * Built as `array(d_0, …, d_{k-1})` of plain arithmetic expressions —
-    * fully codegen'd (a `transform` lambda over a literal centroid array
-    * would be interpreted per element).
-    */
-  private[ml] def distances(cs: Seq[Centroid]): Column =
-    array(cs.sortBy(_.idx).map { c =>
-      (col("lat") - lit(c.lat)) * (col("lat") - lit(c.lat)) +
-      (col("lon") - lit(c.lon)) * (col("lon") - lit(c.lon))
-    }: _*)
-
-  /** J3/J4: nearest-centroid assignment; adds `cidx` = the CENTROID's own
-    * idx (not its array position — init idxs need not be 0..k-1, e.g. when
-    * seeding from a golden centroid file). First min wins, matching the
-    * reference's strict `<` scan (KMeans.java:98–101).
+  /** J3/J4 for several centroid sets in ONE pass: one row per (point,
+    * set) with `set` = the set's position in `sets` and `cidx` = the
+    * nearest centroid's OWN idx in that set (not its array position —
+    * init idxs need not be 0..k-1, e.g. when seeding from a golden
+    * centroid file). First min wins, matching the reference's strict `<`
+    * scan (KMeans.java:98–101).
     *
     * Uses the codegen-STABLE NearestCentroid2D kernel: the centroid arrays
     * travel via the codegen `references` array instead of inlined literals,
-    * so the Lloyd loop reuses ONE compiled plan across all iterations (the
-    * literal formulation recompiled 2 plans × every iteration — the
-    * dominant cost of the k-means bench queries). Arithmetic and tie-break
-    * are bit-identical to the literal `distances` formulation.
+    * so an iterative caller reuses ONE compiled plan across all rounds,
+    * whatever the centroids or the number of sets.
     */
-  def assign(points: DataFrame, cs: Seq[Centroid]): DataFrame = {
+  private[ml] def assignSets(points: DataFrame,
+                             sets: Seq[Seq[Centroid]]): DataFrame =
+    points.select(col("lat"), col("lon"), col("cnt"),
+      posexplode(nearest(points, sets)).as(Seq("set", "cidx")))
+
+  /** J3/J4: nearest-centroid assignment of one centroid set; adds `cidx`
+    * (see [[assignSets]]).
+    */
+  def assign(points: DataFrame, cs: Seq[Centroid]): DataFrame =
+    points.withColumn("cidx", nearest(points, Seq(cs)).getItem(0))
+
+  private def nearest(points: DataFrame, sets: Seq[Seq[Centroid]]): Column = {
     graft.functions.GraftFunctions.register(points.sparkSession)
-    val sorted = cs.sortBy(_.idx)
-    points.withColumn("cidx",
-      graft.functions.GraftFunctions.nearestCentroid(col("lat"), col("lon"),
-        sorted.map(_.idx), sorted.map(_.lat), sorted.map(_.lon)))
+    val sorted = sets.map(_.sortBy(_.idx))
+    val all = sorted.flatten
+    graft.functions.GraftFunctions.nearestCentroid(col("lat"), col("lon"),
+      sorted.map(_.size), all.map(_.idx), all.map(_.lat), all.map(_.lon))
   }
+
+  /** A10 aggregates: the count-weighted mean lat/lon, 3 dp HALF_UP. */
+  private[ml] def centerCols: Seq[Column] = Seq(
+    round(sum(col("lat") * col("cnt")) / sum(col("cnt")), 3).as("lat"),
+    round(sum(col("lon") * col("cnt")) / sum(col("cnt")), 3).as("lon"))
 
   /** A10: weighted-mean recenter, 3 dp HALF_UP; empty clusters inherit the
     * previous centroid. Collects K rows to the driver.
@@ -98,9 +104,7 @@ object KMeans {
   def recenter(assigned: DataFrame, prev: Seq[Centroid]): Seq[Centroid] = {
     val computed = assigned
       .groupBy("cidx")
-      .agg(
-        round(sum(col("lat") * col("cnt")) / sum(col("cnt")), 3).as("lat"),
-        round(sum(col("lon") * col("cnt")) / sum(col("cnt")), 3).as("lon"))
+      .agg(centerCols.head, centerCols.tail: _*)
       .collect()
       .map(r => r.getInt(0) -> Centroid(r.getInt(0), r.getDouble(1), r.getDouble(2)))
       .toMap

@@ -1,7 +1,6 @@
 package graft.ml
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 /** Hyperparameter sweep + model selection (SURVEY.md §2.6 M5/M6, §2.4 A12).
@@ -9,13 +8,16 @@ import org.apache.spark.storage.StorageLevel
   * The reference's KDriver (/root/reference/final/src/main/java/program/
   * KDriver.java:60–63) runs one MR-job chain per k and parks results in
   * HBase; a naive Spark port still schedules one job per (k, iteration).
-  * This sweep batches instead: each Lloyd ROUND unions the assignment
-  * frames of every still-active k (tagged by `kval`) and recenters them in
-  * ONE groupBy(kval, cidx) job — per-k math is untouched (identical
-  * centroids/iterations to sequential fits), but the job count drops from
-  * Σ iterations(k) to max iterations(k), which is what matters when the
-  * per-job scheduling overhead rivals the compute (the reference's own
-  * diagnosis of its 38–40 s/job bottleneck, BASELINE.md).
+  * This sweep batches instead: each Lloyd ROUND is ONE scan of the cached
+  * points through the set-batched nearest-centroid kernel, which assigns
+  * every still-active k at once (one `cidx` per k, exploded with the k's
+  * set position), and ONE groupBy(set, cidx) recenter — per-k math is
+  * untouched (identical centroids/iterations to sequential fits), but the
+  * job count drops from Σ iterations(k) to max iterations(k), which is what
+  * matters when the per-job scheduling overhead rivals the compute (the
+  * reference's own diagnosis of its 38–40 s/job bottleneck, BASELINE.md).
+  * The plan of a round does not depend on the centroids or on how many ks
+  * are still active, so rounds 2..n reuse round 1's compiled code.
   */
 final case class SweepEntry(k: Int, silScore: Double, iterations: Int,
                             converged: Boolean)
@@ -26,12 +28,20 @@ object ModelSelect {
                                   converged: Boolean)
 
   /** M5: fit every k on the same cached points (one job per round across
-    * all ks), then score all ks' silhouettes in one more job.
+    * all ks), then score all ks' silhouettes in one more job. ks must be
+    * distinct and ≥ 1. Points the caller has not cached are cached for the
+    * sweep and released after it; a caller's own cache is left alone.
     */
   def sweep(points: DataFrame, ks: Seq[Int], seed: Long,
             maxIter: Int = 20, tol: Double = 0.001): Seq[SweepEntry] = {
-    require(ks.nonEmpty)
-    val cached = points.persist(StorageLevel.MEMORY_AND_DISK)
+    require(ks.nonEmpty, "sweep needs at least one k")
+    ks.foreach(k => require(k >= 1, s"sweep needs every k >= 1, got k=$k"))
+    val repeated = ks.diff(ks.distinct)
+    require(repeated.isEmpty,
+      s"sweep needs distinct ks, k=${repeated.head} repeats")
+    val owned = points.storageLevel == StorageLevel.NONE
+    val cached =
+      if (owned) points.persist(StorageLevel.MEMORY_AND_DISK) else points
     try {
       val (minLat, maxLat, minLon, maxLon) = KMeans.bbox(cached)
       val state = scala.collection.mutable.LinkedHashMap(ks.map { k =>
@@ -42,16 +52,11 @@ object ModelSelect {
       var roundNo = 0
       while (roundNo < maxIter && state.values.exists(!_.converged)) {
         val active = ks.filter(k => !state(k).converged)
-        val unioned = active.map { k =>
-          KMeans.assign(cached, state(k).cs).withColumn("kval", lit(k))
-        }.reduce(_ unionByName _)
-        val recentered = unioned
-          .groupBy("kval", "cidx")
-          .agg(
-            round(sum(col("lat") * col("cnt")) / sum(col("cnt")), 3).as("lat"),
-            round(sum(col("lon") * col("cnt")) / sum(col("cnt")), 3).as("lon"))
+        val recentered = KMeans.assignSets(cached, active.map(state(_).cs))
+          .groupBy("set", "cidx")
+          .agg(KMeans.centerCols.head, KMeans.centerCols.tail: _*)
           .collect()
-          .groupBy(_.getInt(0))
+          .groupBy(r => active(r.getInt(0)))
           .map { case (k, rows) =>
             k -> rows.map(r =>
               r.getInt(1) -> Centroid(r.getInt(1), r.getDouble(2),
@@ -67,26 +72,13 @@ object ModelSelect {
         roundNo += 1
       }
 
-      val sils = scoreMany(cached, ks.map(k => k -> state(k).cs).toMap)
-      ks.map { k =>
+      val sils = Silhouette.scoreSets(cached, ks.map(state(_).cs))
+      ks.zip(sils).map { case (k, sil) =>
         val s = state(k)
-        SweepEntry(k, sils(k), s.iterations, s.converged)
+        SweepEntry(k, sil, s.iterations, s.converged)
       }
-    } finally { cached.unpersist(blocking = false); () }
+    } finally { if (owned) cached.unpersist(blocking = false); () }
   }
-
-  /** All ks' weighted silhouettes in one job (union + groupBy(kval)). */
-  private def scoreMany(points: DataFrame,
-                        css: Map[Int, Seq[Centroid]]): Map[Int, Double] =
-    css.map { case (k, cs) =>
-      points.select(lit(k).as("kval"), Silhouette.silColumn(cs).as("sil"),
-        col("cnt"))
-    }.reduce(_ unionByName _)
-      .groupBy("kval")
-      .agg((sum(col("sil") * col("cnt")) / sum(col("cnt"))).as("score"))
-      .collect()
-      .map(r => r.getInt(0) -> r.getDouble(1))
-      .toMap
 
   /** M6/A12: argmax silhouette (first k wins ties, like the reference's
     * strict `>` driver scan, Summarizer.java:81–86).

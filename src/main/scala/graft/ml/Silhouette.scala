@@ -12,33 +12,36 @@ import org.apache.spark.sql.functions._
   * points. Spark ML's ClusteringEvaluator(squaredEuclidean) implements the
   * same simplified silhouette and serves as a cross-check oracle in tests.
   *
-  * A13's "running 2-smallest" reducer trick collapses into
-  * `array_sort(dists)[0..1]` over the literal centroid array — one narrow
-  * map + one global aggregate; no shuffle of the point cloud.
+  * The per-point score is the codegen-stable `graft_centroid_silhouette`
+  * kernel, which keeps A13's running two-smallest scan and takes any number
+  * of centroid sets: every set's silhouette comes out of one narrow map +
+  * one set-keyed aggregate; no shuffle of the point cloud.
   */
 object Silhouette {
 
-  /** Per-point silhouette expression for the given centroids — the single
-    * source of the (d2nd − dmin)/d2nd formula (ModelSelect's batched
-    * scoring reuses it; keep the semantics in one place).
+  /** Weighted mean silhouette of every centroid set, in `sets` order, from
+    * ONE scan of `points` — the single source of the (d2nd − dmin)/d2nd
+    * formula (ModelSelect's batched scoring and [[score]] both use it).
     */
-  private[ml] def silColumn(cs: Seq[Centroid]): org.apache.spark.sql.Column =
-    if (cs.size < 2) lit(0.0)
-    else {
-      val sorted = array_sort(KMeans.distances(cs))
-      val d1 = element_at(sorted, 1)
-      val d2 = element_at(sorted, 2)
-      when(d2 > 0, (d2 - d1) / d2).otherwise(lit(0.0))
-    }
+  private[ml] def scoreSets(points: DataFrame,
+                            sets: Seq[Seq[Centroid]]): Seq[Double] = {
+    graft.functions.GraftFunctions.register(points.sparkSession)
+    val all = sets.flatten
+    val bySet = points
+      .select(posexplode(graft.functions.GraftFunctions.centroidSilhouette(
+        col("lat"), col("lon"), sets.map(_.size), all.map(_.lat),
+        all.map(_.lon))).as(Seq("set", "sil")), col("cnt"))
+      .groupBy("set")
+      .agg(sum(col("sil") * col("cnt")) / sum(col("cnt")))
+      .collect()
+      .map(r => r.getInt(0) -> r.getDouble(1))
+      .toMap
+    sets.indices.map(bySet)
+  }
 
   /** Weighted mean silhouette of a weighted point cloud (lat, lon, cnt)
     * under the given centroids. Returns 0 when k < 2 (no second distance).
     */
-  def score(points: DataFrame, cs: Seq[Centroid]): Double = {
-    if (cs.size < 2) return 0.0
-    points
-      .select(silColumn(cs).as("sil"), col("cnt"))
-      .agg(sum(col("sil") * col("cnt")) / sum(col("cnt")))
-      .head().getDouble(0)
-  }
+  def score(points: DataFrame, cs: Seq[Centroid]): Double =
+    if (cs.size < 2) 0.0 else scoreSets(points, Seq(cs)).head
 }

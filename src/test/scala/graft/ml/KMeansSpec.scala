@@ -1,8 +1,14 @@
 package graft.ml
 
 import graft.SparkSpec
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.storage.StorageLevel
 
-class KMeansSpec extends SparkSpec {
+class KMeansSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private def pts(ps: (Double, Double, Int)*) = ps.toDF("lat", "lon", "cnt")
@@ -97,9 +103,77 @@ class KMeansSpec extends SparkSpec {
       val fit = KMeans.fit(noisy, e.k, seed = 7L, maxIter = 15)
       assert(fit.iterations == e.iterations, s"k=${e.k}")
       assert(fit.converged == e.converged, s"k=${e.k}")
-      // union changes float summation order → compare to ULP tolerance
+      // partial sums may merge in another order → compare to ULP tolerance
       val sil = Silhouette.score(noisy, fit.centroids)
       assert(math.abs(sil - e.silScore) < 1e-12, s"k=${e.k}")
     }
+  }
+
+  /** A deterministic cloud where ks 2..5 converge after different numbers
+    * of rounds, so the set of active ks shrinks during the sweep. */
+  private lazy val cloud = pts((0 until 60).map { i =>
+    val r = new scala.util.Random(i.toLong)
+    val (cLat, cLon) = Seq((0.0, 0.0), (4.0, 1.0), (1.0, 5.0), (6.0, 6.0))(i % 4)
+    (cLat + r.nextGaussian(), cLon + r.nextGaussian(), 1 + i % 3)
+  }: _*)
+
+  test("sweep leaves a caller's cache in place and drops only its own") {
+    val cached = cloud.filter($"cnt" > 1).persist(StorageLevel.MEMORY_ONLY)
+    try {
+      cached.count()
+      ModelSelect.sweep(cached, Seq(2, 3), seed = 3L, maxIter = 3)
+      assert(cached.storageLevel == StorageLevel.MEMORY_ONLY)
+    } finally { cached.unpersist(blocking = true); () }
+    val uncached = cloud.filter($"cnt" < 3)
+    ModelSelect.sweep(uncached, Seq(2, 3), seed = 3L, maxIter = 3)
+    assert(uncached.storageLevel == StorageLevel.NONE)
+  }
+
+  test("sweep rejects k < 1 and repeated ks, naming the bad k") {
+    val zero = intercept[IllegalArgumentException](
+      ModelSelect.sweep(blobs, Seq(2, 0), seed = 1L))
+    assert(zero.getMessage.contains("k=0"), zero.getMessage)
+    val dup = intercept[IllegalArgumentException](
+      ModelSelect.sweep(blobs, Seq(3, 2, 3), seed = 1L))
+    assert(dup.getMessage.contains("k=3"), dup.getMessage)
+  }
+
+  test("every sweep action scans the cached points once, and rounds " +
+      "2..n compile no new class") {
+    val ks = Seq(2, 3, 4, 5)
+    val scans = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+                             durationNs: Long): Unit =
+        scans.add(collect(qe.executedPlan) {
+          case s: InMemoryTableScanExec => s
+        }.size)
+      override def onFailure(funcName: String, qe: QueryExecution,
+                             exception: Exception): Unit = ()
+    }
+    // the listener bus delivers asynchronously
+    def awaitActions(n: Int): Unit = {
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (scans.size < n && System.nanoTime() < deadline) Thread.sleep(20)
+    }
+    spark.listenerManager.register(listener)
+    val entries = try {
+      // one round compiles every plan a sweep has: bounding box, round,
+      // silhouettes
+      ModelSelect.sweep(cloud, ks, seed = 11L, maxIter = 1)
+      val compiled = CodegenMetrics.METRIC_SOURCE_CODE_SIZE.getCount
+      awaitActions(3)
+      scans.clear()
+      val es = ModelSelect.sweep(cloud, ks, seed = 11L, maxIter = 20)
+      assert(CodegenMetrics.METRIC_SOURCE_CODE_SIZE.getCount == compiled,
+        "a later round or the silhouettes compiled new code")
+      awaitActions(es.map(_.iterations).max + 2)
+      es
+    } finally spark.listenerManager.unregister(listener)
+    val rounds = entries.map(_.iterations).max
+    assert(rounds >= 3 && entries.map(_.iterations).distinct.size > 1,
+      s"the cloud should need several rounds with shrinking ks: $entries")
+    // bounding box, every round, silhouettes: one cached scan each
+    assert(scans.toArray.toSeq == Seq.fill(rounds + 2)(1))
   }
 }

@@ -1372,17 +1372,18 @@ object Dedup {
     * only proposes, it never decides. Output schema matches
     * `jaccardPairs`; the recall contract lives in DedupSpec.
     *
-    * The verify is the PAYLOAD-LIGHT count device (the q298 shape,
-    * ported r19): candidate docs semi-join the exploded postings, the
-    * intersection is a partial-agg count keyed on the shingle, and only
-    * (id_a, id_b, count) rows shuffle — full shingle arrays never cross
-    * the wire (the r17→r18 q298 retirement measured the array form at
-    * 121×/OOM vs 6.5× at x64 for the count form). Postings counts equal
-    * `size(array_intersect)` exactly because `shingleSets` emits
-    * DISTINCT shingles. A band-collision pair sharing ZERO shingles has
-    * no intersection row and drops at the inner join — correct at any
-    * `threshold` > 0 (its exact Jaccard is 0), which is why the
-    * threshold must be positive.
+    * The verify is bounded by the candidate pairs: each candidate gets
+    * both endpoints' shingle arrays from the signature frame (two
+    * equi-joins on doc_id) and scores `size(array_intersect)`, exact
+    * because `shingleSets` emits DISTINCT shingles; both set sizes are
+    * `size()` of the same arrays. Work is O(candidates × set size), never
+    * the shared-shingle postings of every candidate document. The array
+    * side of both joins is pinned to a shuffle join (`hint("merge")`, as
+    * in `Skew.skewedJoinCensus`): shingle arrays are the corpus text
+    * again, and a broadcast of them fails the driver at scale (PLANS.md,
+    * measured scaling curves). A band-collision pair sharing ZERO
+    * shingles scores exact Jaccard 0 and drops at the threshold filter,
+    * which is why the threshold must be positive.
     */
   def minhashPairs(documents: DataFrame, n: Int = 3,
                    numHashes: Int = 32, bands: Int = 16,
@@ -1391,10 +1392,10 @@ object Dedup {
     require(threshold > 0 && threshold <= 1, "need 0 < threshold <= 1")
     val rows = numHashes / bands
     // materialize once: the signature frame feeds both bucket-join sides
-    // AND the exact-verify postings — without this the shingle+minhash
-    // kernels would re-evaluate per subtree (the q53-regression pattern).
-    // persist, not localCheckpoint: recoverable on executor loss (see
-    // pairsBySetOverlap)
+    // AND both endpoint joins of the verify — without this the
+    // shingle+minhash kernels would re-evaluate per subtree (the
+    // q53-regression pattern). persist, not localCheckpoint: recoverable
+    // on executor loss (see pairsBySetOverlap)
     val sigs = minhashSignatures(documents, n, numHashes)
       .persist(StorageLevel.MEMORY_AND_DISK)
     // band IDS ONLY through the bucket join — carrying the shingle arrays
@@ -1407,27 +1408,17 @@ object Dedup {
         col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
       .dropDuplicates("id_a", "id_b")
-    val candDocs = cands.select(col("id_a").as("doc_id"))
-      .union(cands.select(col("id_b").as("doc_id")))
-      .distinct()
-    val items = sigs.select(col("doc_id"),
-      explode(col("shingles")).as("item"))
-    val post = items.join(candDocs, Seq("doc_id"), "left_semi")
-    val nInter = wideBy(post.as("x")
-        .join(post.as("y"),
-          col("x.item") === col("y.item") && col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b")),
-        col("id_a"), col("id_b"))
-      .groupBy("id_a", "id_b")
-      .agg(count(lit(1)).as("__inter"))
-    val sizes = sigs.select(col("doc_id"),
-      size(col("shingles")).cast("long").as("__sz"))
+    def setOf(id: String, set: String): DataFrame =
+      sigs.select(col("doc_id").as(id), col("shingles").as(set))
+        .hint("merge")
     cands
-      .join(nInter, Seq("id_a", "id_b"))
-      .join(sizes.select(col("doc_id").as("id_a"),
-        col("__sz").as("__sza")), "id_a")
-      .join(sizes.select(col("doc_id").as("id_b"),
-        col("__sz").as("__szb")), "id_b")
+      .join(setOf("id_a", "__sa"), "id_a")
+      .join(setOf("id_b", "__sb"), "id_b")
+      .select(col("id_a"), col("id_b"),
+        size(array_intersect(col("__sa"), col("__sb"))).cast("long")
+          .as("__inter"),
+        size(col("__sa")).cast("long").as("__sza"),
+        size(col("__sb")).cast("long").as("__szb"))
       .withColumn("jaccard",
         col("__inter") /
           (col("__sza") + col("__szb") - col("__inter")))

@@ -95,7 +95,8 @@ object Sinks {
     * same pipeline a month later) re-derives (n_rows, checksum) per
     * shard and diffs two tiny tables to prove the export is intact — no
     * row-level comparison, no trust in file timestamps. Returns the
-    * manifest DataFrame.
+    * manifest as a driver-local DataFrame (one row per shard, ordered by
+    * shard): collecting it starts no Spark job.
     */
   def writeShardedWithManifest(df: DataFrame, idCol: String,
                                checksumCols: Seq[String], path: String,
@@ -113,14 +114,20 @@ object Sinks {
     // pass over the input plan: it must describe the export it ships
     // with even if an upstream stage was nondeterministic, and the
     // read-back scans shard-pruned parquet instead of re-running the
-    // whole upstream DAG
-    val manifest = df.sparkSession.read.parquet(path)
+    // whole upstream DAG. Collected ONCE (one row per shard): the
+    // `_manifest` file and the returned frame are built from the same
+    // rows, so neither the write nor the caller's collect re-aggregates
+    // the shard files
+    val spark = df.sparkSession
+    val manifest = spark.read.parquet(path)
       .groupBy("shard").agg(count(lit(1)).as("n_rows"),
         sum(Profiling.rowDigest(checksumCols).cast("decimal(38,0)"))
           .as("checksum"))
       .orderBy("shard")
-    manifest.write.mode("overwrite").parquet(s"$path/_manifest")
-    manifest
+    val rows = java.util.Arrays.asList(manifest.collect(): _*)
+    val local = spark.createDataFrame(rows, manifest.schema)
+    local.coalesce(1).write.mode("overwrite").parquet(s"$path/_manifest")
+    local
   }
 
   /** Deterministic per-query scratch directory for the sink roundtrip

@@ -1,8 +1,12 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.sql.execution.GenerateExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import org.apache.spark.sql.types.{ArrayType, StringType}
 
-class DedupSpec extends SparkSpec {
+class DedupSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private def docs(texts: String*) =
@@ -112,6 +116,103 @@ class DedupSpec extends SparkSpec {
       threshold = 0.5).collect().map(x => (x.getLong(0), x.getLong(1))).toSet
     assert(exact == Set((0L, 1L)))
     assert(mh == exact)
+  }
+
+  /** A seeded corpus for the MinHash verify: random base documents, planted
+    * edits of them, exact duplicates, documents shorter than n = 3
+    * tokens, one band collision between documents that share no shingle
+    * (found by search over single-shingle documents: band 9 of the
+    * default 32-hash/16-band signature), and pairs at exactly J = 2/10.
+    */
+  private def minhashCorpus(seed: Long) = {
+    val rnd = new scala.util.Random(seed)
+    val vocab = (0 until 120).map(i => s"v$i")
+    def words(k: Int) = Seq.fill(k)(vocab(rnd.nextInt(vocab.size)))
+    val base = Seq.fill(40)(words(8 + rnd.nextInt(28)))
+    val edits = Seq.fill(30) {
+      val b = base(rnd.nextInt(base.size)).toVector
+      (0 until 1 + rnd.nextInt(4)).foldLeft(b) { (t, _) =>
+        val i = rnd.nextInt(t.size)
+        rnd.nextInt(3) match {
+          case 0 => t.updated(i, vocab(rnd.nextInt(vocab.size)))
+          case 1 => t.patch(i, Seq(vocab(rnd.nextInt(vocab.size))), 0)
+          case _ => if (t.size > 1) t.patch(i, Nil, 1) else t
+        }
+      }
+    }
+    val dups = Seq.fill(5)(base(rnd.nextInt(base.size)))
+    val short = Seq(Nil, Seq("v1"), Seq("v1", "v2"), Seq("v1", "v2"))
+    val collision = Seq("w29559a w29559b w29559c", "w74413a w74413b w74413c")
+      .map(_.split(" ").toSeq)
+    // 6 shingles each, 2 shared: J = 2 / 10 exactly
+    val atThreshold = (0 until 8).flatMap { k =>
+      val head = Seq("p", "q", "r", "s").map(w => s"$w$k$seed")
+      Seq(head ++ (1 to 4).map(i => s"a$i$k$seed"),
+        head ++ (1 to 4).map(i => s"b$i$k$seed"))
+    }
+    rnd.shuffle(base ++ edits ++ dups ++ short ++ collision ++ atThreshold)
+      .map(_.mkString(" "))
+  }
+
+  test("minhash verify ≡ driver-side exact Jaccard over the band-bucket " +
+      "candidates") {
+    val threshold = 0.2
+    for (seed <- 1L to 3L) {
+      val d = docs(minhashCorpus(seed): _*)
+      val sets = Dedup.shingleSets(d, 3).collect()
+        .map(r => r.getLong(0) -> r.getSeq[String](1).toSet).toMap
+      val cands = Dedup.bandKeys(d, 3, 32, 16).collect()
+        .groupBy(r => (r.getInt(1), r.getInt(2)))
+        .values.flatMap { rs =>
+          val ids = rs.map(_.getLong(0)).distinct.sorted.toSeq
+          for (a <- ids; b <- ids if a < b) yield (a, b)
+        }.toSet
+      val scored = cands.toSeq.map { case (a, b) =>
+        val i = (sets(a) intersect sets(b)).size.toLong
+        (a, b, i.toDouble / (sets(a).size + sets(b).size - i))
+      }
+      val oracle = scored.filter(_._3 >= threshold).map { case (a, b, j) =>
+        (a, b, BigDecimal(j).setScale(4, BigDecimal.RoundingMode.HALF_UP)
+          .toDouble)
+      }.sortBy(p => (p._1, p._2))
+      val got = Dedup.minhashPairs(d, n = 3, numHashes = 32, bands = 16,
+          threshold = threshold)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+        .toSeq
+      assert(got == oracle, s"seed $seed")
+      // the planted shapes are really exercised at this seed
+      val text = d.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+      assert(got.exists(_._3 == 1.0), s"seed $seed: no exact duplicate")
+      assert(got.exists(_._3 == threshold), s"seed $seed: no pair at J = t")
+      val shortIds = text.collect {
+        case (id, t) if t.split(" ").count(_.nonEmpty) < 3 => id }.toSet
+      assert(shortIds.size == 4 && shortIds.forall(sets(_).isEmpty))
+      assert(!got.exists(p => shortIds(p._1) || shortIds(p._2)))
+      val coll = text.collect { case (id, t) if t.startsWith("w") => id }
+        .toSeq.sorted
+      assert(cands(coll(0) -> coll(1)), s"seed $seed: collision not banded")
+      assert(sets(coll(0)).intersect(sets(coll(1))).isEmpty)
+      assert(!got.exists(p => p._1 == coll(0) && p._2 == coll(1)))
+    }
+  }
+
+  test("minhash verify plan: no shingle explode, no shingle-array " +
+      "broadcast") {
+    val df = Dedup.minhashPairs(docs(minhashCorpus(1L): _*))
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    val explodes = collect(plan) {
+      case g: GenerateExec
+          if g.generator.references.exists(_.name == "shingles") => g
+    }
+    assert(explodes.isEmpty, plan.toString)
+    val arrayBroadcasts = collect(plan) {
+      case b: BroadcastExchangeExec if b.output.exists(_.dataType match {
+        case ArrayType(StringType, _) => true
+        case _ => false
+      }) => b
+    }
+    assert(arrayBroadcasts.isEmpty, plan.toString)
   }
 
   test("winnowing: shared long passage yields shared fingerprints") {

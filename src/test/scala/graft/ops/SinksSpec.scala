@@ -119,6 +119,38 @@ class SinksSpec extends SparkSpec {
     assert(again == manifest)
   }
 
+  test("sharded export: collecting the returned manifest starts no job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val df = (0L until 200L).map(i => (i, s"doc$i")).toDF("id", "name")
+    val manifest = Sinks.writeShardedWithManifest(df, "id",
+      Seq("id", "name"), tmp("shards3") + "/out", numShards = 4)
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val rows = try {
+      sc.setJobGroup("manifest-collect", "collect the returned manifest")
+      val r = manifest.collect()
+      // the bus delivers in order: once a later sentinel job is seen,
+      // every job of the collect has been seen too
+      sc.setJobGroup("manifest-sentinel", "flush the listener bus")
+      spark.range(1).rdd.count()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!groups.contains("manifest-sentinel") &&
+        System.nanoTime() < deadline) Thread.sleep(20)
+      r
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(groups.contains("manifest-sentinel"))
+    assert(!groups.contains("manifest-collect"))
+    assert(rows.map(_.getLong(1)).sum == 200L)
+  }
+
   test("S8: driver-side report file") {
     val f = tmp("report") + "/r/summary.txt"
     Sinks.writeReport(Seq("Max SilScore:0.9", "k:2"), f)

@@ -8,16 +8,17 @@ import org.apache.spark.storage.StorageLevel
   * The reference's KDriver (/root/reference/final/src/main/java/program/
   * KDriver.java:60–63) runs one MR-job chain per k and parks results in
   * HBase; a naive Spark port still schedules one job per (k, iteration).
-  * This sweep batches instead: each Lloyd ROUND is ONE scan of the cached
-  * points through the set-batched nearest-centroid kernel, which assigns
-  * every still-active k at once (one `cidx` per k, exploded with the k's
-  * set position), and ONE groupBy(set, cidx) recenter — per-k math is
-  * untouched (identical centroids/iterations to sequential fits), but the
-  * job count drops from Σ iterations(k) to max iterations(k), which is what
-  * matters when the per-job scheduling overhead rivals the compute (the
-  * reference's own diagnosis of its 38–40 s/job bottleneck, BASELINE.md).
-  * The plan of a round does not depend on the centroids or on how many ks
-  * are still active, so rounds 2..n reuse round 1's compiled code.
+  * This sweep batches instead: each Lloyd ROUND is ONE Spark job over the
+  * cached points ([[KMeans.lloydRound]]) — the set-batched
+  * nearest-centroid kernel assigns every still-active k at once, and each
+  * partition hands the driver per-(k, centroid) partial sums to merge, so
+  * no round shuffles. Per-k math is untouched (identical centroids and
+  * iterations to sequential fits), but the job count drops from
+  * Σ iterations(k) to max iterations(k), which is what matters when the
+  * per-job scheduling overhead rivals the compute (the reference's own
+  * diagnosis of its 38–40 s/job bottleneck, BASELINE.md). The plan of a
+  * round does not depend on the centroids or on how many ks are still
+  * active, so rounds 2..n reuse round 1's compiled code.
   */
 final case class SweepEntry(k: Int, silScore: Double, iterations: Int,
                             converged: Boolean)
@@ -28,7 +29,7 @@ object ModelSelect {
                                   converged: Boolean)
 
   /** M5: fit every k on the same cached points (one job per round across
-    * all ks), then score all ks' silhouettes in one more job. ks must be
+    * all ks), then score all ks' silhouettes in one more action. ks must be
     * distinct and ≥ 1. Points the caller has not cached are cached for the
     * sweep and released after it; a caller's own cache is left alone.
     */
@@ -52,22 +53,11 @@ object ModelSelect {
       var roundNo = 0
       while (roundNo < maxIter && state.values.exists(!_.converged)) {
         val active = ks.filter(k => !state(k).converged)
-        val recentered = KMeans.assignSets(cached, active.map(state(_).cs))
-          .groupBy("set", "cidx")
-          .agg(KMeans.centerCols.head, KMeans.centerCols.tail: _*)
-          .collect()
-          .groupBy(r => active(r.getInt(0)))
-          .map { case (k, rows) =>
-            k -> rows.map(r =>
-              r.getInt(1) -> Centroid(r.getInt(1), r.getDouble(2),
-                r.getDouble(3))).toMap
-          }
-        active.foreach { k =>
+        val next = KMeans.lloydRound(cached, active.map(state(_).cs))
+        active.zip(next).foreach { case (k, cs) =>
           val prev = state(k)
-          val next = prev.cs.map(c =>
-            recentered.getOrElse(k, Map.empty).getOrElse(c.idx, c))
-          state(k) = KState(next, prev.iterations + 1,
-            KMeans.converged(prev.cs, next, tol))
+          state(k) = KState(cs, prev.iterations + 1,
+            KMeans.converged(prev.cs, cs, tol))
         }
         roundNo += 1
       }

@@ -2,6 +2,7 @@ package graft.ml
 
 import graft.SparkSpec
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -62,6 +63,21 @@ class KMeansSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val prev = Seq(Centroid(0, 0.0, 0.0), Centroid(1, 99.0, 99.0))
     val r = KMeans.recenter(KMeans.assign(p, prev), prev)
     assert(r(1) == Centroid(1, 99.0, 99.0))
+  }
+
+  test("fit rejects k < 1, an empty init and repeated idxs, naming the " +
+      "bad value") {
+    val zero = intercept[IllegalArgumentException](
+      KMeans.fit(blobs, k = 0, seed = 1L))
+    assert(zero.getMessage.contains("k=0"), zero.getMessage)
+    val empty = intercept[IllegalArgumentException](
+      KMeans.fitWithInit(blobs, Seq.empty))
+    assert(empty.getMessage.contains("initial centroid"), empty.getMessage)
+    // a repeated idx would merge both centroids into one cluster's mean
+    val dup = intercept[IllegalArgumentException](
+      KMeans.fitWithInit(blobs, Seq(Centroid(4, 0.0, 0.0),
+        Centroid(2, 5.0, 5.0), Centroid(4, 10.0, 10.0))))
+    assert(dup.getMessage.contains("idx=4"), dup.getMessage)
   }
 
   test("M3: convergence threshold is ≤ 0.001 on BOTH axes") {
@@ -175,5 +191,65 @@ class KMeansSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       s"the cloud should need several rounds with shrinking ks: $entries")
     // bounding box, every round, silhouettes: one cached scan each
     assert(scans.toArray.toSeq == Seq.fill(rounds + 2)(1))
+  }
+
+  /** (jobs, stages) of every SQL execution `body` runs, in execution
+    * order: its jobs carry their own job group, and a marker job in a
+    * second group, seen after them on the listener bus, proves every
+    * earlier event was delivered. */
+  private def jobsAndStages(body: => Unit): Seq[(Int, Int)] = {
+    val group = "kmeans-round-jobs"
+    val marker = "kmeans-round-jobs-marker"
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long)]()
+    val done = new java.util.concurrent.CountDownLatch(1)
+    def record(kind: String, props: java.util.Properties): Unit =
+      if (props != null) props.getProperty("spark.jobGroup.id") match {
+        case `group` => Option(props.getProperty("spark.sql.execution.id"))
+          .foreach(id => events.add(kind -> id.toLong))
+        case `marker` => done.countDown()
+        case _ =>
+      }
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        record("job", e.properties)
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        record("stage", e.properties)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "k-means rounds")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "listener bus marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(done.await(30, java.util.concurrent.TimeUnit.SECONDS),
+        "the marker job never reached the listener")
+    } finally sc.removeSparkListener(listener)
+    val byExec = events.toArray(Array.empty[(String, Long)]).toSeq
+      .groupBy(_._2)
+    byExec.keys.toSeq.sorted.map { id =>
+      val kinds = byExec(id).map(_._1)
+      (kinds.count(_ == "job"), kinds.count(_ == "stage"))
+    }
+  }
+
+  test("every Lloyd round of a sweep and of a fit is one job with one " +
+      "stage") {
+    var entries = Seq.empty[SweepEntry]
+    val sweep = jobsAndStages {
+      entries = ModelSelect.sweep(cloud, Seq(2, 3, 4, 5), seed = 11L)
+    }
+    // bounding box, rounds, silhouettes
+    val rounds = entries.map(_.iterations).max
+    assert(sweep.size == rounds + 2, s"$sweep")
+    assert(sweep.slice(1, rounds + 1) == Seq.fill(rounds)((1, 1)), s"$sweep")
+
+    var fit: KMeansResult = null
+    val fitted = jobsAndStages {
+      fit = KMeans.fit(cloud, k = 4, seed = 11L)
+    }
+    // bounding box, rounds
+    assert(fitted.size == fit.iterations + 1, s"$fitted")
+    assert(fitted.tail == Seq.fill(fit.iterations)((1, 1)), s"$fitted")
   }
 }

@@ -2,7 +2,8 @@
 # Pre-snapshot gate (VERDICT r14 item 3): a round can never close red.
 #
 #   tools/precommit.sh                 # compile + test-compile + benchmark
-#                                      # build + self-tests + entry smoke
+#                                      # build + self-tests + one short run
+#                                      # of each workload + entry smoke
 #   tools/precommit.sh q266 q267       # ... plus execute named queries at sf0.001
 #   tools/precommit.sh --all           # ... plus execute EVERY query (slow)
 #
@@ -19,6 +20,25 @@ sbt -batch ";compile;Test/compile" 2>&1 | tail -3
 echo "[precommit] perfbench build + self-tests"
 python3 perfbench/build.py >/dev/null   # prints the classpath
 python3 -m unittest discover -s perfbench/tests
+
+# One short run of every benchmark workload: its result line must be
+# correct, with operations attempted and none failed — an engine change
+# that hides operations from the harness's listeners fails here.
+echo "[precommit] benchmark smoke"
+for w in $(python3 -c 'import json; print(*(w["name"] for w in
+    json.load(open("BENCHMARK.json"))["workloads"]))'); do
+  last=$(python3 perfbench/run.py --workload "$w" --seed 1 --seconds 1 \
+           --trace 0 | tail -1) \
+    || { echo "[precommit] BENCHMARK SMOKE FAILED: $w did not run"; exit 1; }
+  python3 - "$w" "$last" <<'EOF' || exit 1
+import json, sys
+w, r = sys.argv[1], json.loads(sys.argv[2])
+print(f"[precommit] {w}: correct={r['correct']} "
+      f"attempted={r['attempted']} failed={r['failed']}")
+if not (r["correct"] is True and r["attempted"] > 0 and r["failed"] == 0):
+    sys.exit(f"[precommit] BENCHMARK SMOKE FAILED: {w}")
+EOF
+done
 
 # NOTE: this sbt's log config suppresses [success] lines for runMain —
 # the EXIT CODE is the only reliable signal (captured via PIPESTATUS;

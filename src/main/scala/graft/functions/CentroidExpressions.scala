@@ -1,27 +1,77 @@
 package graft.functions
 
+import scala.reflect.ClassTag
+
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnsafeArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
 
+/** The two 2-D centroid scans, each written once: the SQL kernels below
+  * call them once per set (interpreted and generated code alike), and the
+  * k-means passes of graft.ml call them from their partition closures.
+  * A centroid SET is a range `[from, until)` of the concatenated `lats` /
+  * `lons` arrays. Distances are `dl·dl + dn·dn` with `dl = lat − cLat`,
+  * `dn = lon − cLon` (the reference's op order, KMeans.java:98), scanned
+  * in array order with a strict `<`.
+  */
+object CentroidScan {
+
+  /** Array position of the point's nearest centroid in `[from, until)`:
+    * the first minimum wins (reference KMeans.java:93–103); a point whose
+    * every distance is NaN goes to `from`. */
+  def nearest(lat: Double, lon: Double, lats: Array[Double],
+              lons: Array[Double], from: Int, until: Int): Int = {
+    var best = from
+    var bd = Double.PositiveInfinity
+    var i = from
+    while (i < until) {
+      val dl = lat - lats(i)
+      val dn = lon - lons(i)
+      val d = dl * dl + dn * dn
+      if (d < bd) { bd = d; best = i }
+      i += 1
+    }
+    best
+  }
+
+  /** The point's simplified silhouette against `[from, until)` (reference
+    * Silhouette.java:83–97): with dmin and d2nd the smallest and
+    * second-smallest squared distances, `(d2nd − dmin) / d2nd`, or 0 when
+    * d2nd is not > 0 or the set has a single centroid. dmin/d2nd come from
+    * a running two-smallest scan (the reference's A13 trick), which yields
+    * exactly the first two elements of the sorted distance array. */
+  def silhouette(lat: Double, lon: Double, lats: Array[Double],
+                 lons: Array[Double], from: Int, until: Int): Double = {
+    var d1 = Double.PositiveInfinity
+    var d2 = Double.PositiveInfinity
+    var i = from
+    while (i < until) {
+      val dl = lat - lats(i)
+      val dn = lon - lons(i)
+      val d = dl * dl + dn * dn
+      if (d < d1) { d2 = d1; d1 = d } else if (d < d2) d2 = d
+      i += 1
+    }
+    if (until - from >= 2 && d2 > 0) (d2 - d1) / d2 else 0.0
+  }
+}
+
 /** Shared shape of the 2-D centroid kernels: a point (lat, lon) against
   * any number of centroid SETS, passed as concatenated arrays — `sizes(s)`
   * centroids per set, set after set, in `lats`/`lons` (and `idxs` where the
   * kernel reports idxs). Each kernel returns one value per set, so a sweep
-  * over many k evaluates every k in ONE scan of the points.
+  * over many k evaluates every k in ONE scan of the points. The per-set
+  * work is one [[CentroidScan]] call.
   *
   * Why an Expression and not literal distance columns: a double `Literal`
-  * inlines its VALUE into the generated Java source, so a Lloyd loop that
-  * bakes each round's centroids into the plan produces DIFFERENT source
-  * every round — a fresh Janino compile per plan per round. Here the
-  * centroid arrays travel through `ctx.addReferenceObj` (the codegen
-  * `references` array), so every round — whatever its centroids, set count
-  * or set sizes — generates byte-identical source and hits Spark's codegen
-  * cache; only the tiny reference objects change.
-  *
-  * Distances are `dl·dl + dn·dn` with `dl = lat − cLat`, `dn = lon − cLon`
-  * (the reference's op order, KMeans.java:98), scanned in array order.
+  * inlines its VALUE into the generated Java source, so a plan that bakes
+  * each round's centroids in produces DIFFERENT source every round — a
+  * fresh Janino compile per plan per round. Here the centroid arrays travel
+  * through `ctx.addReferenceObj` (the codegen `references` array) into a
+  * static [[CentroidScan]] call, so every plan — whatever its centroids,
+  * set count or set sizes — generates byte-identical source and hits
+  * Spark's codegen cache; only the tiny reference objects change.
   */
 abstract class CentroidSetsKernel extends BinaryExpression {
   def sizes: Seq[Int]
@@ -36,9 +86,39 @@ abstract class CentroidSetsKernel extends BinaryExpression {
       s"$prettyName needs non-empty centroid sets whose sizes sum to the " +
         "length of equal-length centroid arrays")
 
-  @transient protected lazy val sizeArr: Array[Int] = sizes.toArray
+  @transient protected lazy val offArr: Array[Int] =
+    sizes.scanLeft(0)(_ + _).toArray
   @transient protected lazy val latArr: Array[Double] = lats.toArray
   @transient protected lazy val lonArr: Array[Double] = lons.toArray
+
+  /** One value per set from `elem(from, until)`, the interpreted path. */
+  protected def perSet[T: ClassTag](elem: (Int, Int) => T): Array[T] =
+    Array.tabulate(offArr.length - 1)(s => elem(offArr(s), offArr(s + 1)))
+
+  /** Generated code: an `elemType[]` with one element per set, each
+    * `elem(args)` where `args` are the point and the set's centroids as
+    * [[CentroidScan]] takes them. The loop over sets stays in the
+    * generated method, so the JIT can inline the scan into it: a static
+    * wrapper that looped over the sets itself was compiled out of line
+    * and ran the kernel 5–8% slower per row (3 M rows × 100 centroids,
+    * local[4]). */
+  protected def perSetCode(ctx: CodegenContext, ev: ExprCode,
+                           elemType: String)(elem: String => String): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) => {
+      val off = ctx.addReferenceObj("coffsets", offArr, "int[]")
+      val la = ctx.addReferenceObj("clats", latArr, "double[]")
+      val lo = ctx.addReferenceObj("clons", lonArr, "double[]")
+      val out = ctx.freshName("out")
+      val s = ctx.freshName("s")
+      s"""
+         |final $elemType[] $out = new $elemType[$off.length - 1];
+         |for (int $s = 0; $s < $out.length; $s++) {
+         |  $out[$s] = ${elem(s"$a, $b, $la, $lo, $off[$s], $off[$s + 1]")};
+         |}
+         |${ev.value} = org.apache.spark.sql.catalyst.expressions
+         |  .UnsafeArrayData.fromPrimitiveArray($out);
+       """.stripMargin
+    })
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (left.dataType == DoubleType && right.dataType == DoubleType)
@@ -50,9 +130,7 @@ abstract class CentroidSetsKernel extends BinaryExpression {
 /** Nearest centroid per set (SURVEY.md §2.6 M2, reference
   * KMeans.java:93–103 semantics: scan in centroid-idx order, strict `<`,
   * first minimum wins): array<int> of the winning centroid's own idx, one
-  * element per set. Arithmetic is bit-identical to the literal formulation
-  * it replaced, so the golden-fixture convergence traces (iterations==12)
-  * are unchanged.
+  * element per set ([[CentroidScan.nearest]]).
   */
 case class NearestCentroid2D(left: Expression, right: Expression,
                              sizes: Seq[Int], idxs: Seq[Int],
@@ -71,64 +149,15 @@ case class NearestCentroid2D(left: Expression, right: Expression,
   override def nullSafeEval(a: Any, b: Any): Any = {
     val lat = a.asInstanceOf[Double]
     val lon = b.asInstanceOf[Double]
-    val out = new Array[Int](sizeArr.length)
-    var off = 0
-    var s = 0
-    while (s < sizeArr.length) {
-      val end = off + sizeArr(s)
-      var best = idxArr(off)
-      var bd = Double.PositiveInfinity
-      var i = off
-      while (i < end) {
-        val dl = lat - latArr(i)
-        val dn = lon - lonArr(i)
-        val d = dl * dl + dn * dn
-        if (d < bd) { bd = d; best = idxArr(i) }
-        i += 1
-      }
-      out(s) = best
-      off = end
-      s += 1
-    }
-    UnsafeArrayData.fromPrimitiveArray(out)
+    UnsafeArrayData.fromPrimitiveArray(perSet((from, until) =>
+      idxArr(CentroidScan.nearest(lat, lon, latArr, lonArr, from, until))))
   }
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val sizeRef = ctx.addReferenceObj("csizes", sizeArr, "int[]")
-      val idxRef = ctx.addReferenceObj("cidxs", idxArr, "int[]")
-      val latRef = ctx.addReferenceObj("clats", latArr, "double[]")
-      val lonRef = ctx.addReferenceObj("clons", lonArr, "double[]")
-      val out = ctx.freshName("out")
-      val off = ctx.freshName("off")
-      val s = ctx.freshName("s")
-      val end = ctx.freshName("end")
-      val i = ctx.freshName("i")
-      val best = ctx.freshName("best")
-      val bd = ctx.freshName("bd")
-      val dl = ctx.freshName("dl")
-      val dn = ctx.freshName("dn")
-      val d = ctx.freshName("d")
-      s"""
-         |final int[] $out = new int[$sizeRef.length];
-         |int $off = 0;
-         |for (int $s = 0; $s < $sizeRef.length; $s++) {
-         |  final int $end = $off + $sizeRef[$s];
-         |  int $best = $idxRef[$off];
-         |  double $bd = Double.POSITIVE_INFINITY;
-         |  for (int $i = $off; $i < $end; $i++) {
-         |    final double $dl = $a - $latRef[$i];
-         |    final double $dn = $b - $lonRef[$i];
-         |    final double $d = $dl * $dl + $dn * $dn;
-         |    if ($d < $bd) { $bd = $d; $best = $idxRef[$i]; }
-         |  }
-         |  $out[$s] = $best;
-         |  $off = $end;
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions
-         |  .UnsafeArrayData.fromPrimitiveArray($out);
-       """.stripMargin
-    })
+    perSetCode(ctx, ev, "int") { args =>
+      val idx = ctx.addReferenceObj("cidxs", idxArr, "int[]")
+      s"$idx[graft.functions.CentroidScan.nearest($args)]"
+    }
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): NearestCentroid2D =
@@ -136,13 +165,8 @@ case class NearestCentroid2D(left: Expression, right: Expression,
 }
 
 /** Simplified silhouette per set (SURVEY.md §2.6 M4, reference
-  * Silhouette.java:83–97): with dmin and d2nd the smallest and
-  * second-smallest squared distances, `(d2nd − dmin) / d2nd`, or 0 when
-  * d2nd is not > 0 or the set has a single centroid; array<double>, one
-  * element per set. dmin/d2nd come from a running two-smallest scan (the
-  * reference's A13 trick, strict `<`), which yields exactly the first two
-  * elements of the sorted distance array — without building or sorting
-  * one per row.
+  * Silhouette.java:83–97): array<double>, one
+  * [[CentroidScan.silhouette]] per set.
   */
 case class CentroidSilhouette2D(left: Expression, right: Expression,
                                 sizes: Seq[Int], lats: Seq[Double],
@@ -157,64 +181,13 @@ case class CentroidSilhouette2D(left: Expression, right: Expression,
   override def nullSafeEval(a: Any, b: Any): Any = {
     val lat = a.asInstanceOf[Double]
     val lon = b.asInstanceOf[Double]
-    val out = new Array[Double](sizeArr.length)
-    var off = 0
-    var s = 0
-    while (s < sizeArr.length) {
-      val end = off + sizeArr(s)
-      var d1 = Double.PositiveInfinity
-      var d2 = Double.PositiveInfinity
-      var i = off
-      while (i < end) {
-        val dl = lat - latArr(i)
-        val dn = lon - lonArr(i)
-        val d = dl * dl + dn * dn
-        if (d < d1) { d2 = d1; d1 = d } else if (d < d2) d2 = d
-        i += 1
-      }
-      out(s) = if (sizeArr(s) >= 2 && d2 > 0) (d2 - d1) / d2 else 0.0
-      off = end
-      s += 1
-    }
-    UnsafeArrayData.fromPrimitiveArray(out)
+    UnsafeArrayData.fromPrimitiveArray(perSet((from, until) =>
+      CentroidScan.silhouette(lat, lon, latArr, lonArr, from, until)))
   }
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val sizeRef = ctx.addReferenceObj("csizes", sizeArr, "int[]")
-      val latRef = ctx.addReferenceObj("clats", latArr, "double[]")
-      val lonRef = ctx.addReferenceObj("clons", lonArr, "double[]")
-      val out = ctx.freshName("out")
-      val off = ctx.freshName("off")
-      val s = ctx.freshName("s")
-      val end = ctx.freshName("end")
-      val i = ctx.freshName("i")
-      val d1 = ctx.freshName("d1")
-      val d2 = ctx.freshName("d2")
-      val dl = ctx.freshName("dl")
-      val dn = ctx.freshName("dn")
-      val d = ctx.freshName("d")
-      s"""
-         |final double[] $out = new double[$sizeRef.length];
-         |int $off = 0;
-         |for (int $s = 0; $s < $sizeRef.length; $s++) {
-         |  final int $end = $off + $sizeRef[$s];
-         |  double $d1 = Double.POSITIVE_INFINITY;
-         |  double $d2 = Double.POSITIVE_INFINITY;
-         |  for (int $i = $off; $i < $end; $i++) {
-         |    final double $dl = $a - $latRef[$i];
-         |    final double $dn = $b - $lonRef[$i];
-         |    final double $d = $dl * $dl + $dn * $dn;
-         |    if ($d < $d1) { $d2 = $d1; $d1 = $d; }
-         |    else if ($d < $d2) { $d2 = $d; }
-         |  }
-         |  $out[$s] = ($sizeRef[$s] >= 2 && $d2 > 0) ? ($d2 - $d1) / $d2 : 0.0;
-         |  $off = $end;
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions
-         |  .UnsafeArrayData.fromPrimitiveArray($out);
-       """.stripMargin
-    })
+    perSetCode(ctx, ev, "double")(args =>
+      s"graft.functions.CentroidScan.silhouette($args)")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CentroidSilhouette2D =

@@ -1,7 +1,15 @@
 package graft.ml
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders}
+import scala.reflect.ClassTag
+import scala.reflect.runtime.universe.TypeTag
+
+import graft.functions.CentroidScan
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType}
 
 /** One Lloyd's K-Means iteration state: centroid list held on the driver —
   * the Spark replacement for the reference's `Centroids` HBase table
@@ -11,6 +19,53 @@ final case class Centroid(idx: Int, lat: Double, lon: Double)
 
 final case class KMeansResult(centroids: Seq[Centroid], iterations: Int,
                               converged: Boolean)
+
+/** The (lat, lon, cnt) rows of a weighted point cloud, PLANNED ONCE: the
+  * projection is analysed, optimised, planned and code-generated when the
+  * scan is built, and every k-means pass over it (bounding box, Lloyd
+  * rounds, silhouettes) is a partition-local fold of the same physical
+  * rows — the points' plan is never rebuilt; a pass plans only the small
+  * Dataset that carries its partials. Rows keep their nulls; each pass
+  * skips them its own way.
+  *
+  * A pass is still ONE Dataset action (its partials come back through a
+  * `collect`), so QueryExecutionListeners see one action per pass, and it
+  * runs as one Spark job with one stage under the job description
+  * `"<label> <pass>"` (e.g. `graft.ml.sweep round 3`). The caller's job
+  * group is left alone and its job description comes back afterwards.
+  */
+private[ml] final class PointScan private (spark: SparkSession,
+                                           rows: RDD[InternalRow],
+                                           label: String) {
+
+  /** `fold` turns each partition's rows — lat, lon, cnt at ordinals 0, 1,
+    * 2 as double, double, long — into one partial; the partials come back
+    * in partition order. */
+  def pass[P <: Product : ClassTag : TypeTag](name: String)(
+      fold: Iterator[InternalRow] => P): Array[P] = {
+    val partials = rows.mapPartitions(it => Iterator.single(fold(it)))
+    val sc = spark.sparkContext
+    val caller = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(s"$label $name")
+    try spark.createDataset(partials)(Encoders.product[P]).collect()
+    finally sc.setJobDescription(caller)
+  }
+}
+
+private[ml] object PointScan {
+
+  /** Plans `points`' scan. `cnt` must up-cast to a long (an integral
+    * column does; a fractional one fails analysis, as it would decoding
+    * the rows), and lat/lon to doubles. Take `queryExecution.toRdd`, not
+    * `Dataset.rdd`: the latter is an action of its own to listeners. */
+  def apply(points: DataFrame, label: String): PointScan = {
+    val cols = points.select(col("lat"), col("lon"), col("cnt"))
+    cols.as(Encoders.product[(Double, Double, Long)])
+    val typed = cols.select(col("lat").cast(DoubleType),
+      col("lon").cast(DoubleType), col("cnt").cast(LongType))
+    new PointScan(points.sparkSession, typed.queryExecution.toRdd, label)
+  }
+}
 
 /** Lloyd's K-Means over a weighted 2-D point cloud (SURVEY.md §2.6 M1–M3).
   *
@@ -28,18 +83,20 @@ final case class KMeansResult(centroids: Seq[Centroid], iterations: Int,
   *    old HBase row in place when a reducer gets no points).
   *
   * Execution shape — the part the reference got wrong at scale: the whole
-  * sweep is ONE Spark application. Points are cached once; each iteration
-  * is ONE narrow stage, one Spark job: assignment against the centroid
-  * list (shipped to the tasks inside the codegen'd kernel — the analogue of
-  * Hadoop "load centroids in task setup"), then per-partition partial sums
-  * that the driver merges into the new centroids. No shuffle, no job
-  * re-setup, no external state store — this is what removes the ~38–40 s
-  * per-iteration overhead BASELINE.md documents.
+  * sweep is ONE Spark application, and a fit or a sweep plans its points'
+  * scan ONCE ([[PointScan]]). The bounding box and every round are then
+  * one partition-local pass each — one Spark job, one stage, no shuffle:
+  * each task scans its partition against the centroid list shipped in the
+  * task closure (the analogue of Hadoop "load centroids in task setup")
+  * and returns partial sums that the driver merges into the new
+  * centroids. No re-planned scan, no shuffle, no external state store —
+  * this is what removes the ~38–40 s per-iteration overhead BASELINE.md
+  * documents.
   *
-  * Assignment is the codegen-stable `graft_nearest_centroid` kernel — no
-  * UDF, O(K) per row — which takes any number of centroid sets, so
-  * ModelSelect's sweep runs every k's round in the same scan; a fit is the
-  * same round with one set.
+  * Assignment is [[CentroidScan.nearest]], the same scan as the SQL
+  * `graft_nearest_centroid` kernel of [[assign]]; a round takes any number
+  * of centroid sets, so ModelSelect's sweep runs every k's round in the
+  * same pass, and a fit is the same round with one set.
   */
 object KMeans {
 
@@ -57,11 +114,50 @@ object KMeans {
     }
   }
 
-  /** A9: bounding box of the point cloud, one narrow aggregate. */
-  def bbox(points: DataFrame): (Double, Double, Double, Double) = {
-    val r = points.agg(min("lat"), max("lat"), min("lon"), max("lon")).head()
-    require(!r.isNullAt(0), "k-means needs a non-empty point cloud")
-    (r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3))
+  /** A9: bounding box of the point cloud (minLat, maxLat, minLon, maxLon),
+    * one partition-local pass. SQL `min`/`max` semantics: nulls are skipped
+    * per column, NaN ranks above every number, and of equal values
+    * (0.0 and -0.0) the first seen in partition order is kept. Fails when
+    * either column has no value. `points` needs only lat and lon: the
+    * pass reads no weight, so a constant one stands in for `cnt`.
+    */
+  def bbox(points: DataFrame): (Double, Double, Double, Double) =
+    bbox(PointScan(points.select(col("lat"), col("lon"), lit(1L).as("cnt")),
+      "graft.ml.bbox"))
+
+  /** One column's (min, max) so far, if it has a value. */
+  private type Extent = Option[(Double, Double)]
+
+  private[ml] final case class BoxPartial(lat: Extent, lon: Extent)
+
+  private def extend(e: Extent, v: Double): Extent = e match {
+    case None => Some((v, v))
+    case Some((lo, hi)) =>
+      Some((if (SQLOrderingUtil.compareDoubles(v, lo) < 0) v else lo,
+        if (SQLOrderingUtil.compareDoubles(v, hi) > 0) v else hi))
+  }
+
+  private def merge(a: Extent, b: Extent): Extent =
+    b.fold(a)(q => extend(extend(a, q._1), q._2))
+
+  private[ml] def bbox(scan: PointScan): (Double, Double, Double, Double) = {
+    val box = scan.pass("bbox") { rows =>
+      var lat: Extent = None
+      var lon: Extent = None
+      rows.foreach { r =>
+        if (!r.isNullAt(0)) lat = extend(lat, r.getDouble(0))
+        if (!r.isNullAt(1)) lon = extend(lon, r.getDouble(1))
+      }
+      BoxPartial(lat, lon)
+    }.foldLeft(BoxPartial(None, None)) { (a, b) =>
+      BoxPartial(merge(a.lat, b.lat), merge(a.lon, b.lon))
+    }
+    (box.lat, box.lon) match {
+      case (Some((minLat, maxLat)), Some((minLon, maxLon))) =>
+        (minLat, maxLat, minLon, maxLon)
+      case _ => throw new IllegalArgumentException(
+        "k-means needs a non-empty point cloud")
+    }
   }
 
   /** J3/J4: nearest-centroid assignment of one centroid set; adds `cidx`,
@@ -70,15 +166,12 @@ object KMeans {
     * First min wins, matching the reference's strict `<` scan
     * (KMeans.java:98–101).
     */
-  def assign(points: DataFrame, cs: Seq[Centroid]): DataFrame =
-    points.withColumn("cidx", nearest(points, Seq(cs)).getItem(0))
-
-  private def nearest(points: DataFrame, sets: Seq[Seq[Centroid]]): Column = {
+  def assign(points: DataFrame, cs: Seq[Centroid]): DataFrame = {
     graft.functions.GraftFunctions.register(points.sparkSession)
-    val sorted = sets.map(_.sortBy(_.idx))
-    val all = sorted.flatten
-    graft.functions.GraftFunctions.nearestCentroid(col("lat"), col("lon"),
-      sorted.map(_.size), all.map(_.idx), all.map(_.lat), all.map(_.lon))
+    val sorted = cs.sortBy(_.idx)
+    points.withColumn("cidx", graft.functions.GraftFunctions.nearestCentroid(
+      col("lat"), col("lon"), Seq(sorted.size), sorted.map(_.idx),
+      sorted.map(_.lat), sorted.map(_.lon)).getItem(0))
   }
 
   /** A10 aggregates: the count-weighted mean lat/lon, 3 dp HALF_UP — the
@@ -107,37 +200,52 @@ object KMeans {
                                             lonW: Array[Double],
                                             cnt: Array[Long])
 
-  /** J3/J4 + A10 for several centroid sets in ONE Spark job with one stage:
-    * every set's next centroids, in `sets` order, each set in its own order.
+  /** J3/J4 + A10 for several centroid sets in one pass over `scan` (one
+    * Spark job with one stage): every set's next centroids, in `sets`
+    * order, each set in its own order. `round` numbers the pass's job
+    * description.
     *
-    * Each partition assigns its points through the kernel and accumulates,
-    * per slot, Σ lat·cnt and Σ lon·cnt (doubles, row order, from 0.0 — the
-    * order SQL `sum` adds a partition's rows in) and Σ cnt (a long that
-    * fails on overflow, like ANSI `sum`). The driver adds the partials in
-    * partition order and rounds each mean with [[round3]] — so on one
-    * partition the result is bit-equal to [[assign]] + [[recenter]]. Rows
-    * with a null lat, lon or cnt add nothing; a centroid without weight
-    * keeps its previous value. Idxs must be distinct within a set.
-    *
-    * The round is one Dataset action (a `collect`), and its plan does not
-    * depend on the centroids or the set count, so later rounds reuse the
-    * first round's compiled code.
+    * Each partition assigns its points ([[CentroidScan.nearest]] over each
+    * set's idx-sorted centroids, so the winner's position is its slot) and
+    * accumulates, per slot, Σ lat·cnt and Σ lon·cnt (doubles, row order,
+    * from 0.0 — the order SQL `sum` adds a partition's rows in) and Σ cnt
+    * (a long that fails on overflow, like ANSI `sum`). The driver adds the
+    * partials in partition order and rounds each mean with [[round3]] — so
+    * on one partition the result is bit-equal to [[assign]] +
+    * [[recenter]]. Rows with a null lat, lon or cnt add nothing; a
+    * centroid without weight keeps its previous value. Idxs must be
+    * distinct within a set.
     */
-  private[ml] def lloydRound(points: DataFrame,
-                             sets: Seq[Seq[Centroid]]): Seq[Seq[Centroid]] = {
+  private[ml] def lloydRound(scan: PointScan, sets: Seq[Seq[Centroid]],
+                             round: Int): Seq[Seq[Centroid]] = {
     val sorted = sets.map(_.sortBy(_.idx))
     val offsets = sorted.map(_.size).scanLeft(0)(_ + _).toArray
-    val idxs = sorted.flatten.map(_.idx).toArray
-    val partials = points
-      .where(col("lat").isNotNull && col("lon").isNotNull &&
-        col("cnt").isNotNull)
-      .select(col("lat"), col("lon"), col("cnt"),
-        nearest(points, sorted).as("cidx"))
-      .as(Encoders.product[(Double, Double, Long, Array[Int])])
-      .mapPartitions((rows: Iterator[(Double, Double, Long, Array[Int])]) =>
-        Iterator.single(partialSums(rows, offsets, idxs)))(
-        Encoders.product[RoundPartial])
-      .collect()
+    val all = sorted.flatten
+    val idxs = all.map(_.idx).toArray
+    val lats = all.map(_.lat).toArray
+    val lons = all.map(_.lon).toArray
+    val partials = scan.pass(s"round $round") { rows =>
+      val latW = new Array[Double](lats.length)
+      val lonW = new Array[Double](lats.length)
+      val cnt = new Array[Long](lats.length)
+      rows.foreach { r =>
+        if (!r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2)) {
+          val lat = r.getDouble(0)
+          val lon = r.getDouble(1)
+          val c = r.getLong(2)
+          var s = 0
+          while (s < offsets.length - 1) {
+            val i = CentroidScan.nearest(lat, lon, lats, lons, offsets(s),
+              offsets(s + 1))
+            latW(i) += lat * c
+            lonW(i) += lon * c
+            cnt(i) = Math.addExact(cnt(i), c)
+            s += 1
+          }
+        }
+      }
+      RoundPartial(latW, lonW, cnt)
+    }
     val latW = new Array[Double](idxs.length)
     val lonW = new Array[Double](idxs.length)
     val cnt = new Array[Long](idxs.length)
@@ -160,26 +268,6 @@ object KMeans {
     }
   }
 
-  private def partialSums(rows: Iterator[(Double, Double, Long, Array[Int])],
-                          offsets: Array[Int],
-                          idxs: Array[Int]): RoundPartial = {
-    val latW = new Array[Double](idxs.length)
-    val lonW = new Array[Double](idxs.length)
-    val cnt = new Array[Long](idxs.length)
-    rows.foreach { case (lat, lon, c, cidx) =>
-      var s = 0
-      while (s < cidx.length) {
-        val i = java.util.Arrays.binarySearch(idxs, offsets(s),
-          offsets(s + 1), cidx(s))
-        latW(i) += lat * c
-        lonW(i) += lon * c
-        cnt(i) = Math.addExact(cnt(i), c)
-        s += 1
-      }
-    }
-    RoundPartial(latW, lonW, cnt)
-  }
-
   /** M3: converged iff every rounded delta ≤ tol (strictly-greater ⇒ keep
     * iterating, KMeans.java:307–308).
     */
@@ -188,6 +276,12 @@ object KMeans {
     prev.sortBy(_.idx).zip(next.sortBy(_.idx)).forall { case (p, q) =>
       math.abs(p.lat - q.lat) <= tol && math.abs(p.lon - q.lon) <= tol
     }
+
+  /** The loop's bounds: `maxIter` ≥ 1 rounds, a `tol` ≥ 0. */
+  private[ml] def requireLoop(maxIter: Int, tol: Double): Unit = {
+    require(maxIter >= 1, s"k-means needs maxIter >= 1, got maxIter=$maxIter")
+    require(tol >= 0, s"k-means needs a tolerance >= 0, got tol=$tol")
+  }
 
   /** M2 with caller-supplied initial centroids (the reference's golden
     * `inputs/centroids/part-r-00000` path, and the deterministic route for
@@ -200,11 +294,17 @@ object KMeans {
     val repeated = init.map(_.idx).diff(init.map(_.idx).distinct)
     require(repeated.isEmpty,
       s"k-means needs distinct centroid idxs, idx=${repeated.head} repeats")
+    requireLoop(maxIter, tol)
+    lloyd(PointScan(points, "graft.ml.fit"), init, maxIter, tol)
+  }
+
+  private def lloyd(scan: PointScan, init: Seq[Centroid], maxIter: Int,
+                    tol: Double): KMeansResult = {
     var cs = init
     var iter = 0
     var done = false
     while (iter < maxIter && !done) {
-      val next = lloydRound(points, Seq(cs)).head
+      val next = lloydRound(scan, Seq(cs), iter + 1).head
       done = converged(cs, next, tol)
       cs = next
       iter += 1
@@ -212,15 +312,17 @@ object KMeans {
     KMeansResult(cs, iter, done)
   }
 
-  /** M2: the full Lloyd loop. `points` must have (lat, lon, cnt) — cache it
-    * before calling when running a sweep; `fit` does not manage persistence
-    * so sweeps can share one cached cloud.
+  /** M2: the full Lloyd loop. `points` must have (lat, lon, cnt); `fit`
+    * does not manage persistence, so cache a cloud that is read again —
+    * every pass of the fit scans it.
     */
   def fit(points: DataFrame, k: Int, seed: Long, maxIter: Int = 20,
           tol: Double = 0.001): KMeansResult = {
     require(k >= 1, s"k-means needs k >= 1, got k=$k")
-    val (minLat, maxLat, minLon, maxLon) = bbox(points)
-    fitWithInit(points,
-      initUniform(k, seed, minLat, maxLat, minLon, maxLon), maxIter, tol)
+    requireLoop(maxIter, tol)
+    val scan = PointScan(points, "graft.ml.fit")
+    val (minLat, maxLat, minLon, maxLon) = bbox(scan)
+    lloyd(scan, initUniform(k, seed, minLat, maxLat, minLon, maxLon),
+      maxIter, tol)
   }
 }

@@ -8,17 +8,17 @@ import org.apache.spark.storage.StorageLevel
   * The reference's KDriver (/root/reference/final/src/main/java/program/
   * KDriver.java:60–63) runs one MR-job chain per k and parks results in
   * HBase; a naive Spark port still schedules one job per (k, iteration).
-  * This sweep batches instead: each Lloyd ROUND is ONE Spark job over the
-  * cached points ([[KMeans.lloydRound]]) — the set-batched
-  * nearest-centroid kernel assigns every still-active k at once, and each
-  * partition hands the driver per-(k, centroid) partial sums to merge, so
-  * no round shuffles. Per-k math is untouched (identical centroids and
-  * iterations to sequential fits), but the job count drops from
-  * Σ iterations(k) to max iterations(k), which is what matters when the
-  * per-job scheduling overhead rivals the compute (the reference's own
-  * diagnosis of its 38–40 s/job bottleneck, BASELINE.md). The plan of a
-  * round does not depend on the centroids or on how many ks are still
-  * active, so rounds 2..n reuse round 1's compiled code.
+  * This sweep batches instead, and plans once: the cached points' scan is
+  * planned a single time ([[PointScan]]), and the bounding box, each Lloyd
+  * ROUND ([[KMeans.lloydRound]]) and the silhouettes are one
+  * partition-local pass over it — one Spark job with one stage each, no
+  * shuffle, and no re-planning of the points between rounds. A round
+  * assigns every still-active k at once and each partition hands the
+  * driver per-(k, centroid) partial sums to merge. Per-k math is untouched
+  * (identical centroids and iterations to sequential fits), but the job
+  * count drops from Σ iterations(k) to max iterations(k) + 2, which is
+  * what matters when the per-job overhead rivals the compute (the
+  * reference's own diagnosis of its 38–40 s/job bottleneck, BASELINE.md).
   */
 final case class SweepEntry(k: Int, silScore: Double, iterations: Int,
                             converged: Boolean)
@@ -30,8 +30,9 @@ object ModelSelect {
 
   /** M5: fit every k on the same cached points (one job per round across
     * all ks), then score all ks' silhouettes in one more action. ks must be
-    * distinct and ≥ 1. Points the caller has not cached are cached for the
-    * sweep and released after it; a caller's own cache is left alone.
+    * distinct and ≥ 1, `maxIter` ≥ 1 and `tol` ≥ 0. Points the caller has
+    * not cached are cached for the sweep and released after it; a caller's
+    * own cache is left alone.
     */
   def sweep(points: DataFrame, ks: Seq[Int], seed: Long,
             maxIter: Int = 20, tol: Double = 0.001): Seq[SweepEntry] = {
@@ -40,11 +41,13 @@ object ModelSelect {
     val repeated = ks.diff(ks.distinct)
     require(repeated.isEmpty,
       s"sweep needs distinct ks, k=${repeated.head} repeats")
+    KMeans.requireLoop(maxIter, tol)
     val owned = points.storageLevel == StorageLevel.NONE
     val cached =
       if (owned) points.persist(StorageLevel.MEMORY_AND_DISK) else points
     try {
-      val (minLat, maxLat, minLon, maxLon) = KMeans.bbox(cached)
+      val scan = PointScan(cached, "graft.ml.sweep")
+      val (minLat, maxLat, minLon, maxLon) = KMeans.bbox(scan)
       val state = scala.collection.mutable.LinkedHashMap(ks.map { k =>
         k -> KState(
           KMeans.initUniform(k, seed, minLat, maxLat, minLon, maxLon), 0, false)
@@ -53,7 +56,8 @@ object ModelSelect {
       var roundNo = 0
       while (roundNo < maxIter && state.values.exists(!_.converged)) {
         val active = ks.filter(k => !state(k).converged)
-        val next = KMeans.lloydRound(cached, active.map(state(_).cs))
+        val next = KMeans.lloydRound(scan, active.map(state(_).cs),
+          roundNo + 1)
         active.zip(next).foreach { case (k, cs) =>
           val prev = state(k)
           state(k) = KState(cs, prev.iterations + 1,
@@ -62,7 +66,7 @@ object ModelSelect {
         roundNo += 1
       }
 
-      val sils = Silhouette.scoreSets(cached, ks.map(state(_).cs))
+      val sils = Silhouette.scoreSets(scan, ks.map(state(_).cs))
       ks.zip(sils).map { case (k, sil) =>
         val s = state(k)
         SweepEntry(k, sil, s.iterations, s.converged)
@@ -73,8 +77,10 @@ object ModelSelect {
   /** M6/A12: argmax silhouette (first k wins ties, like the reference's
     * strict `>` driver scan, Summarizer.java:81–86).
     */
-  def best(entries: Seq[SweepEntry]): SweepEntry =
+  def best(entries: Seq[SweepEntry]): SweepEntry = {
+    require(entries.nonEmpty, "best needs at least one sweep entry, got none")
     entries.maxBy(_.silScore)
+  }
 
   /** M6: the reference's Summary.txt shape (Summarizer.java:98–115) —
     * `Max SilScore:<s> at kValue:<k> at iteration:<itr>`, then the winning

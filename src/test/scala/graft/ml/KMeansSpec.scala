@@ -4,12 +4,11 @@ import graft.SparkSpec
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.functions.{col, udf}
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.storage.StorageLevel
 
-class KMeansSpec extends SparkSpec with AdaptiveSparkPlanHelper {
+class KMeansSpec extends SparkSpec {
   import spark.implicits._
 
   private def pts(ps: (Double, Double, Int)*) = ps.toDF("lat", "lon", "cnt")
@@ -154,58 +153,74 @@ class KMeansSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(dup.getMessage.contains("k=3"), dup.getMessage)
   }
 
-  test("every sweep action scans the cached points once, and rounds " +
-      "2..n compile no new class") {
+  test("a sweep is rounds + 2 Dataset actions over one evaluation of its " +
+      "points, and rounds 2..n compile no new class") {
     val ks = Seq(2, 3, 4, 5)
-    val scans = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val actions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution,
-                             durationNs: Long): Unit =
-        scans.add(collect(qe.executedPlan) {
-          case s: InMemoryTableScanExec => s
-        }.size)
+                             durationNs: Long): Unit = actions.add(funcName)
       override def onFailure(funcName: String, qe: QueryExecution,
-                             exception: Exception): Unit = ()
+                             exception: Exception): Unit =
+        actions.add(funcName)
     }
-    // the listener bus delivers asynchronously
-    def awaitActions(n: Int): Unit = {
+    // the listener bus delivers asynchronously, in order: a marker action
+    // (a `count`; every sweep action is a `collect`) seen after the
+    // sweep's proves that all of them were delivered
+    def sweepActions(): Seq[String] = {
+      spark.range(1).count()
       val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (scans.size < n && System.nanoTime() < deadline) Thread.sleep(20)
+      while (!actions.contains("count") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      val seen = actions.toArray(Array.empty[String]).toSeq
+      actions.clear()
+      assert(seen.contains("count"), "the marker action never arrived")
+      seen.takeWhile(_ != "count")
     }
+    // an uncached source that counts the rows it evaluates
+    val evaluated = spark.sparkContext.longAccumulator("kmeans-source-rows")
+    val counted = udf { (lat: Double) => evaluated.add(1); lat }
+      .asNondeterministic()
+    val source = cloud.withColumn("lat", counted(col("lat")))
     spark.listenerManager.register(listener)
-    val entries = try {
+    val (entries, names) = try {
       // one round compiles every plan a sweep has: bounding box, round,
       // silhouettes
-      ModelSelect.sweep(cloud, ks, seed = 11L, maxIter = 1)
+      ModelSelect.sweep(source, ks, seed = 11L, maxIter = 1)
+      sweepActions()
       val compiled = CodegenMetrics.METRIC_SOURCE_CODE_SIZE.getCount
-      awaitActions(3)
-      scans.clear()
-      val es = ModelSelect.sweep(cloud, ks, seed = 11L, maxIter = 20)
+      evaluated.reset()
+      val es = ModelSelect.sweep(source, ks, seed = 11L, maxIter = 20)
       assert(CodegenMetrics.METRIC_SOURCE_CODE_SIZE.getCount == compiled,
         "a later round or the silhouettes compiled new code")
-      awaitActions(es.map(_.iterations).max + 2)
-      es
+      (es, sweepActions())
     } finally spark.listenerManager.unregister(listener)
     val rounds = entries.map(_.iterations).max
     assert(rounds >= 3 && entries.map(_.iterations).distinct.size > 1,
       s"the cloud should need several rounds with shrinking ks: $entries")
-    // bounding box, every round, silhouettes: one cached scan each
-    assert(scans.toArray.toSeq == Seq.fill(rounds + 2)(1))
+    // bounding box, every round, silhouettes: one action each, and none
+    // of them a planning-time `rdd` action
+    assert(names.size == rounds + 2 && !names.contains("rdd"), s"$names")
+    // the sweep's cache is built once and every pass reads it
+    assert(evaluated.sum == cloud.count(),
+      s"the sweep evaluated ${evaluated.sum} source rows")
   }
 
-  /** (jobs, stages) of every SQL execution `body` runs, in execution
-    * order: its jobs carry their own job group, and a marker job in a
-    * second group, seen after them on the listener bus, proves every
-    * earlier event was delivered. */
-  private def jobsAndStages(body: => Unit): Seq[(Int, Int)] = {
+  /** (kind, SQL execution id, job description) of every job and stage
+    * `body` runs, in listener order: its jobs carry their own job group,
+    * and a marker job in a second group, seen after them on the listener
+    * bus, proves every earlier event was delivered. */
+  private def jobEvents(body: => Unit): Seq[(String, Long, String)] = {
     val group = "kmeans-round-jobs"
     val marker = "kmeans-round-jobs-marker"
-    val events = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long)]()
+    val events =
+      new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, String)]()
     val done = new java.util.concurrent.CountDownLatch(1)
     def record(kind: String, props: java.util.Properties): Unit =
       if (props != null) props.getProperty("spark.jobGroup.id") match {
         case `group` => Option(props.getProperty("spark.sql.execution.id"))
-          .foreach(id => events.add(kind -> id.toLong))
+          .foreach(id => events.add((kind, id.toLong,
+            props.getProperty("spark.job.description"))))
         case `marker` => done.countDown()
         case _ =>
       }
@@ -219,14 +234,23 @@ class KMeansSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     sc.addSparkListener(listener)
     try {
       sc.setJobGroup(group, "k-means rounds")
-      try body finally sc.clearJobGroup()
+      try {
+        body
+        assert(sc.getLocalProperty("spark.job.description") ==
+          "k-means rounds", "the caller's job description was not restored")
+      } finally sc.clearJobGroup()
       sc.setJobGroup(marker, "listener bus marker")
       try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
       assert(done.await(30, java.util.concurrent.TimeUnit.SECONDS),
         "the marker job never reached the listener")
     } finally sc.removeSparkListener(listener)
-    val byExec = events.toArray(Array.empty[(String, Long)]).toSeq
-      .groupBy(_._2)
+    events.toArray(Array.empty[(String, Long, String)]).toSeq
+  }
+
+  /** (jobs, stages) of every SQL execution `body` runs, in execution
+    * order. */
+  private def jobsAndStages(body: => Unit): Seq[(Int, Int)] = {
+    val byExec = jobEvents(body).groupBy(_._2)
     byExec.keys.toSeq.sorted.map { id =>
       val kinds = byExec(id).map(_._1)
       (kinds.count(_ == "job"), kinds.count(_ == "stage"))
@@ -235,21 +259,75 @@ class KMeansSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("every Lloyd round of a sweep and of a fit is one job with one " +
       "stage") {
+    // and so is every other action: the bounding box and the silhouettes
     var entries = Seq.empty[SweepEntry]
     val sweep = jobsAndStages {
       entries = ModelSelect.sweep(cloud, Seq(2, 3, 4, 5), seed = 11L)
     }
     // bounding box, rounds, silhouettes
     val rounds = entries.map(_.iterations).max
-    assert(sweep.size == rounds + 2, s"$sweep")
-    assert(sweep.slice(1, rounds + 1) == Seq.fill(rounds)((1, 1)), s"$sweep")
+    assert(sweep == Seq.fill(rounds + 2)((1, 1)), s"$sweep")
 
     var fit: KMeansResult = null
     val fitted = jobsAndStages {
       fit = KMeans.fit(cloud, k = 4, seed = 11L)
     }
     // bounding box, rounds
-    assert(fitted.size == fit.iterations + 1, s"$fitted")
-    assert(fitted.tail == Seq.fill(fit.iterations)((1, 1)), s"$fitted")
+    assert(fitted == Seq.fill(fit.iterations + 1)((1, 1)), s"$fitted")
+  }
+
+  test("k-means jobs are described by operation and pass, and the " +
+      "caller's description comes back, also after a failed round") {
+    def descriptions(body: => Unit): Seq[String] =
+      jobEvents(body).filter(_._1 == "job").map(_._3)
+    var entries = Seq.empty[SweepEntry]
+    val sweep = descriptions {
+      entries = ModelSelect.sweep(cloud, Seq(2, 3), seed = 11L)
+    }
+    val rounds = entries.map(_.iterations).max
+    assert(sweep == "graft.ml.sweep bbox" +:
+      (1 to rounds).map(n => s"graft.ml.sweep round $n") :+
+      "graft.ml.sweep silhouettes", s"$sweep")
+    var fit: KMeansResult = null
+    val fitted = descriptions { fit = KMeans.fit(cloud, k = 3, seed = 11L) }
+    assert(fitted == "graft.ml.fit bbox" +:
+      (1 to fit.iterations).map(n => s"graft.ml.fit round $n"), s"$fitted")
+
+    // one partition whose weights overflow a long: round 1's task fails
+    val overflow = pts((0.0, 0.0, 1), (0.0, 0.0, 1))
+      .withColumn("cnt", col("cnt").cast("long") * Long.MaxValue)
+      .coalesce(1)
+    val sc = spark.sparkContext
+    sc.setJobDescription("the caller's")
+    try {
+      intercept[Exception](KMeans.fit(overflow, k = 1, seed = 1L))
+      assert(sc.getLocalProperty("spark.job.description") == "the caller's")
+      assert(sc.getLocalProperty("spark.jobGroup.id") == null,
+        "k-means set a job group")
+    } finally sc.setJobDescription(null)
+  }
+
+  test("fit, fitWithInit and sweep reject maxIter < 1 and a negative or " +
+      "NaN tol, naming the bad value") {
+    val init = Seq(Centroid(0, 0.0, 0.0), Centroid(1, 10.0, 10.0))
+    val bad: Seq[(String, () => Any)] = Seq(
+      "maxIter=0" -> (() => KMeans.fit(blobs, 2, seed = 1L, maxIter = 0)),
+      "maxIter=-3" -> (() => KMeans.fitWithInit(blobs, init, maxIter = -3)),
+      "maxIter=0" -> (() => ModelSelect.sweep(blobs, Seq(2), 1L, maxIter = 0)),
+      "tol=-0.001" -> (() => KMeans.fit(blobs, 2, seed = 1L, tol = -0.001)),
+      "tol=NaN" -> (() => KMeans.fitWithInit(blobs, init, tol = Double.NaN)),
+      "tol=NaN" -> (() => ModelSelect.sweep(blobs, Seq(2), 1L,
+        tol = Double.NaN)))
+    bad.foreach { case (value, call) =>
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains(value), e.getMessage)
+    }
+    // a zero tolerance is a legal, if strict, bound
+    assert(KMeans.fitWithInit(blobs, init, tol = 0.0).converged)
+  }
+
+  test("best of no sweep entries fails with a message") {
+    val e = intercept[IllegalArgumentException](ModelSelect.best(Seq.empty))
+    assert(e.getMessage.contains("at least one sweep entry"), e.getMessage)
   }
 }

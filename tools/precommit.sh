@@ -38,6 +38,28 @@ print(f"[precommit] {w}: correct={r['correct']} "
 if not (r["correct"] is True and r["attempted"] > 0 and r["failed"] == 0):
     sys.exit(f"[precommit] BENCHMARK SMOKE FAILED: {w}")
 EOF
+  if [ "$w" = kmeans_sweep ]; then
+    # the harness counts a sweep's rounds as its listener actions minus
+    # the bounding box and the silhouettes: an engine change that adds or
+    # hides an action shifts every op sample, so pin the count
+    python3 - .perfbench/run/kmeans_sweep-1-t0/out/result.json <<'EOF' \
+      || exit 1
+import json, sys
+r = json.load(open(sys.argv[1]))
+sweeps = [o for o in r["ops"] if o["name"] == "sweep" and o["ok"]]
+lists = r["checks"].get("pass:sweep", [])
+bad = [f"{len(o['actions'])} actions ({sorted({a['name'] for a in o['actions']})}) "
+       f"for {max(e[2] for e in es)} rounds"
+       for o, es in zip(sweeps, lists)
+       if len(o["actions"]) != max(e[2] for e in es) + 2
+       or any(a["name"] == "rdd" for a in o["actions"])]
+print(f"[precommit] kmeans_sweep: {len(sweeps)} sweeps, "
+      f"actions = rounds + 2 in {len(sweeps) - len(bad)}")
+if not sweeps or len(sweeps) != len(lists) or bad:
+    sys.exit(f"[precommit] BENCHMARK SMOKE FAILED: kmeans_sweep actions "
+             f"{bad or 'unmatched to sweep results'}")
+EOF
+  fi
 done
 
 # NOTE: this sbt's log config suppresses [success] lines for runMain —

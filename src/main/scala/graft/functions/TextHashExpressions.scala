@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -16,7 +16,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * lambda per token/shingle/hash. At sf0.1 that was ~9 s just to shingle
   * 5 000 docs. Each expression below is evaluated ONCE per document
   * (CodegenFallback is fine at that granularity) and loops over the
-  * document in tight JVM code.
+  * document in tight JVM code. The shingle and MinHash kernels generate
+  * a call to that same loop instead (`PerRowKernel`): a CodegenFallback
+  * expression keeps its whole operator out of whole-stage code, which
+  * costs its projection a generated class of its own.
   *
   * Hashing uses Spark's XXH64 (the same kernel behind `xxhash64`), with
   * the Kirsch–Mitzenmacher construction h_i = h1 + i·h2 for the MinHash
@@ -42,13 +45,28 @@ private object Tok {
     b == ' ' || b == '\t' || b == '\n' || b == '\r' || b == '\f'
 }
 
+/** Generated code that evaluates the child and calls the expression's own
+  * `nullSafeEval` on it (a null result is a null value), so the
+  * expression can sit inside a whole-stage generated stage. */
+private[functions] trait PerRowKernel extends UnaryExpression {
+  override protected def doGenCode(ctx: CodegenContext,
+                                   ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("kernel", this)
+    val boxed = CodeGenerator.boxedType(dataType)
+    nullSafeCodeGen(ctx, ev, c => s"""
+      Object r = $self.nullSafeEval($c);
+      ${ev.isNull} = r == null;
+      if (!${ev.isNull}) ${ev.value} = ($boxed) r;""")
+  }
+}
+
 /** Distinct whitespace-token n-gram shingles of a string column, joined by
   * single spaces — byte-compatible with
   * `array_distinct(transform(sequence(...), i => array_join(slice(tokens,
   * i+1, n), " ")))` over `filter(split(text, "\\s+"), _ != "")`.
   */
 case class TokenShingles(child: Expression, n: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with PerRowKernel {
 
   require(n >= 1, "shingle size must be >= 1")
 
@@ -106,7 +124,7 @@ case class TokenShingles(child: Expression, n: Int)
   * empty sets (no minimum exists).
   */
 case class MinHashSignature(child: Expression, k: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with PerRowKernel {
 
   require(k >= 1, "signature length must be >= 1")
 

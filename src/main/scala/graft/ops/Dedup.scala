@@ -1,7 +1,8 @@
 package graft.ops
 
 import graft.functions.GraftFunctions
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
+import org.apache.spark.sql.types.{StructField, StructType}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -98,10 +99,12 @@ object Dedup {
   /** Distinct token n-gram shingles per document (one-pass native kernel;
     * empty array when the document has fewer than n tokens).
     */
-  def shingleSets(documents: DataFrame, n: Int = 3): DataFrame = {
-    GraftFunctions.register(documents.sparkSession)
-    balanced(documents).select(
-      col("doc_id"),
+  def shingleSets(documents: DataFrame, n: Int = 3): DataFrame =
+    shinglesOf(balanced(documents), n)
+
+  private def shinglesOf(parted: DataFrame, n: Int): DataFrame = {
+    GraftFunctions.register(parted.sparkSession)
+    parted.select(col("doc_id"),
       GraftFunctions.shingles(col("text"), n).as("shingles"))
   }
 
@@ -1246,9 +1249,9 @@ object Dedup {
     * persist, NOT `localCheckpoint`: checkpoint blocks are executor-local
     * and non-recoverable — one lost executor fails the job on a real
     * cluster — while a lost cached partition recomputes from lineage.
-    * Blocks are freed by the ContextCleaner once the query's references
-    * go out of scope (callers holding the frame across many actions should
-    * unpersist explicitly).
+    * The cache entry stays in the session's CacheManager until the
+    * caller runs `spark.catalog.clearCache()` — the ContextCleaner never
+    * frees a Dataset cache entry, however unreachable the frame.
     *
     * With a df-cap armed, per-item document frequency comes from a plain
     * partial-agg `groupBy(item).count()`: map-side combine means the
@@ -1370,7 +1373,8 @@ object Dedup {
   /** MinHash+LSH near-dup pairs: band the signature, bucket-join on
     * (band, band-hash), then verify candidates with EXACT Jaccard — LSH
     * only proposes, it never decides. Output schema matches
-    * `jaccardPairs`; the recall contract lives in DedupSpec.
+    * `jaccardPairs`; the recall contract lives in DedupSpec. Documents
+    * with a null `doc_id` never pair.
     *
     * The verify is bounded by the candidate pairs: each candidate gets
     * both endpoints' shingle arrays from the signature frame (two
@@ -1378,12 +1382,29 @@ object Dedup {
     * because `shingleSets` emits DISTINCT shingles; both set sizes are
     * `size()` of the same arrays. Work is O(candidates × set size), never
     * the shared-shingle postings of every candidate document. The array
-    * side of both joins is pinned to a shuffle join (`hint("merge")`, as
-    * in `Skew.skewedJoinCensus`): shingle arrays are the corpus text
-    * again, and a broadcast of them fails the driver at scale (PLANS.md,
-    * measured scaling curves). A band-collision pair sharing ZERO
-    * shingles scores exact Jaccard 0 and drops at the threshold filter,
-    * which is why the threshold must be positive.
+    * side of both joins is pinned to a sort-merge join (`hint("merge")`,
+    * as in `Skew.skewedJoinCensus`): shingle arrays are the corpus text
+    * again, a broadcast of them fails the driver at scale, and a
+    * shuffled hash join cannot spill its in-memory build side — it failed
+    * at DevScale x64 where the merge join completes (PLANS.md, measured
+    * scaling curves). A band-collision pair sharing ZERO shingles scores
+    * exact Jaccard 0 and drops at the threshold filter, which is why the
+    * threshold must be positive.
+    *
+    * Execution shape, for one action on the result: the documents are
+    * hash-partitioned by `doc_id` at the shuffle width (`wideBy`) and the
+    * signature frame `(doc_id, shingles, sig)` is cached sorted by
+    * `doc_id` within those partitions. When AQE broadcasts one side of
+    * the band self-join (band keys are ids and ints, so it does up to
+    * its broadcast threshold), the other side probes with the cached
+    * partitions in place and candidates leave it partitioned by `id_a`:
+    * the dedup and the `id_a` endpoint join need no exchange, and every
+    * endpoint join reads the cache already sorted. Only `(id_a, id_b, a's
+    * shingles)` crosses an exchange, to `id_b`, for the second endpoint
+    * join; the verified pairs then take the final range sort. `doc_id` is declared non-null in the cache (null ids are
+    * dropped first), so the joins read it without a null filter of their
+    * own. The signature frame stays in the session's cache until
+    * `spark.catalog.clearCache()` (DedupSpec pins what is left).
     */
   def minhashPairs(documents: DataFrame, n: Int = 3,
                    numHashes: Int = 32, bands: Int = 16,
@@ -1395,30 +1416,39 @@ object Dedup {
     // AND both endpoint joins of the verify — without this the
     // shingle+minhash kernels would re-evaluate per subtree (the
     // q53-regression pattern). persist, not localCheckpoint: recoverable
-    // on executor loss (see pairsBySetOverlap)
-    val sigs = minhashSignatures(documents, n, numHashes)
+    // on executor loss (see pairsBySetOverlap). The coalesce after the
+    // null filter changes no value; it makes `doc_id` non-nullable, which
+    // spares each join side an `isnotnull` filter stage
+    val idType = documents.schema("doc_id").dataType
+    val ids = documents.where(col("doc_id").isNotNull)
+      .withColumn("doc_id", coalesce(col("doc_id"), lit(0).cast(idType)))
+    val sigs = shinglesOf(wideBy(ids, col("doc_id")), n)
+      .select(col("doc_id"), col("shingles"),
+        GraftFunctions.minhash(col("shingles"), numHashes).as("sig"))
+      .sortWithinPartitions("doc_id")
       .persist(StorageLevel.MEMORY_AND_DISK)
     // band IDS ONLY through the bucket join — carrying the shingle arrays
     // would copy every document's set `bands` times across both shuffle
-    // sides
-    val banded = bandKeysOf(sigs, bands, rows)
+    // sides. Documents with no shingle (a null signature) are cached but
+    // never banded: the filter sits here, on the cached column, because
+    // below the cache it would be pushed into the scan and shingle every
+    // document twice
+    val banded = bandKeysOf(sigs.where(size(col("shingles")) > 0), bands,
+      rows)
     val cands = banded.as("x")
       .join(banded.as("y"),
         col("x.band") === col("y.band") && col("x.bhash") === col("y.bhash") &&
         col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
       .dropDuplicates("id_a", "id_b")
-    def setOf(id: String, set: String): DataFrame =
-      sigs.select(col("doc_id").as(id), col("shingles").as(set))
-        .hint("merge")
     cands
-      .join(setOf("id_a", "__sa"), "id_a")
-      .join(setOf("id_b", "__sb"), "id_b")
+      .join(sigs.as("a").hint("merge"), col("id_a") === col("a.doc_id"))
+      .join(sigs.as("b").hint("merge"), col("id_b") === col("b.doc_id"))
       .select(col("id_a"), col("id_b"),
-        size(array_intersect(col("__sa"), col("__sb"))).cast("long")
-          .as("__inter"),
-        size(col("__sa")).cast("long").as("__sza"),
-        size(col("__sb")).cast("long").as("__szb"))
+        size(array_intersect(col("a.shingles"), col("b.shingles")))
+          .cast("long").as("__inter"),
+        size(col("a.shingles")).cast("long").as("__sza"),
+        size(col("b.shingles")).cast("long").as("__szb"))
       .withColumn("jaccard",
         col("__inter") /
           (col("__sza") + col("__szb") - col("__inter")))
@@ -1623,7 +1653,10 @@ object Dedup {
     * diameter-many shuffle rounds with one action + one ids-only distinct
     * (the nodes ∪ endpoints universe both paths share) + one broadcast
     * join, and NODES are never collected — un-edged documents label
-    * themselves through the coalesce. Labels are identical by construction (union
+    * themselves through the coalesce. The one action is the edge pin: its
+    * row count, which picks the path, is a metric observed on the pin's
+    * own run, and the driver reads the pinned rows straight off the pin's
+    * RDD. Labels are identical by construction (union
     * by min root ⇒ root = component min id = the min-label fixed point;
     * DedupSpec pins path equality — universe, schema, and values). Only
     * engaged when the coerced id type is integral; 0 forces the
@@ -1647,10 +1680,34 @@ object Dedup {
   def connectedComponents(nodes: DataFrame, edges: DataFrame,
                           maxIter: Int = 20,
                           reliable: Boolean = false,
-                          driverUnionFindMaxEdges: Long = 2000000L,
-                          pointerJump: Boolean = true)
-      : DataFrame = {
-    val sc = nodes.sparkSession.sparkContext
+                          driverUnionFindMaxEdges: Long =
+                            DriverUnionFindMaxEdges,
+                          pointerJump: Boolean = true): DataFrame =
+    components(Some(nodes), edges, maxIter, reliable,
+      driverUnionFindMaxEdges, pointerJump)
+
+  private val DriverUnionFindMaxEdges = 2000000L
+
+  /** The ids a keep-one-per-component pass drops, from the edges alone:
+    * `(id, cluster_id)` for every edge endpoint whose component's
+    * minimum is another id, with `connectedComponents`' labels, id type
+    * and two paths. Every such id is an endpoint (an id on no edge is its
+    * own component's minimum), so no node frame is scanned. On the driver
+    * path the rows are a local frame in id order (no Spark job reads
+    * them); the iterative path filters and orders its label frame.
+    */
+  private[ops] def nonRepresentatives(edges: DataFrame,
+                                     driverUnionFindMaxEdges: Long =
+                                       DriverUnionFindMaxEdges): DataFrame =
+    components(None, edges, maxIter = 20, reliable = false,
+      driverUnionFindMaxEdges, pointerJump = true)
+
+  private def components(nodes: Option[DataFrame], edges: DataFrame,
+                         maxIter: Int, reliable: Boolean,
+                         driverUnionFindMaxEdges: Long,
+                         pointerJump: Boolean): DataFrame = {
+    val session = edges.sparkSession
+    val sc = session.sparkContext
     if (reliable)
       require(sc.getCheckpointDir.isDefined,
         "reliable connectedComponents needs sc.setCheckpointDir(...) — " +
@@ -1687,26 +1744,39 @@ object Dedup {
     // dropped here, identically on BOTH paths (it would otherwise NPE the
     // driver collect and silently vanish in the iterative joins — the
     // result must not depend on which path ran).
-    val (e, edgeCkpt) =
-      pin(edges.select(col("id_a").as("src"), col("id_b").as("dst"))
-        .where(col("id_a").isNotNull && col("id_b").isNotNull))
+    // the edge count that picks the path is observed on the pin's own
+    // run, not counted by a query of its own
+    val edgeObs = Observation("cc_edges")
+    val (pinnedEdges, edgeCkpt) =
+      pin(edges.select("id_a", "id_b")
+        .where(col("id_a").isNotNull && col("id_b").isNotNull)
+        .observe(edgeObs, count(lit(1)).as("n")))
+    val nEdges = edgeObs.get("n").asInstanceOf[Long]
+    val e = pinnedEdges.select(col("id_a").as("src"), col("id_b").as("dst"))
     // The labeled universe is nodes ∪ edge endpoints on BOTH paths, and
     // both emit (id, cluster_id) in the union-coerced id type — the
     // result may never depend on whether the edge count crossed the
     // driver-union-find threshold. (Call sites keep edges ⊆ nodes, where
     // this is exactly the old "just nodes" universe.)
-    val allIds = nodes.select(col("id"))
-      .union(e.select(col("src").as("id")))
+    val endpoints = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id")))
+    val allIds = nodes.fold(endpoints)(_.select(col("id")).union(endpoints))
       .distinct()
     val idType = allIds.schema("id").dataType
     val integralIds =
       idType == org.apache.spark.sql.types.LongType ||
         idType == org.apache.spark.sql.types.IntegerType
     if (integralIds && driverUnionFindMaxEdges > 0 &&
-        e.count() <= driverUnionFindMaxEdges) {
-      val pairs = e.select(col("src").cast("long"), col("dst").cast("long"))
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
+        nEdges <= driverUnionFindMaxEdges) {
+      // read off the pin's own RDD: a SQL collect of the pinned frame
+      // would plan, code-generate and run a query of its own
+      val Seq(ta, tb) = pinnedEdges.schema.map(_.dataType)
+      val pairs = pinnedEdges.queryExecution.logical.collectFirst {
+          case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+        }.get
+        .map(r => (r.get(0, ta).asInstanceOf[Number].longValue,
+          r.get(1, tb).asInstanceOf[Number].longValue))
+        .collect()
       val parent = scala.collection.mutable.HashMap.empty[Long, Long]
       def find(x: Long): Long = {
         var r = x
@@ -1728,18 +1798,26 @@ object Dedup {
       }
       val touched = pairs.iterator
         .flatMap(p => Iterator(p._1, p._2)).toArray.distinct
-      val session = nodes.sparkSession
       import session.implicits._
+      sweep(edgeCkpt)
+      if (nodes.isEmpty) {
+        def id(x: Long): Any =
+          if (idType == org.apache.spark.sql.types.IntegerType) x.toInt else x
+        val rows = touched.sorted.iterator.filter(x => find(x) != x)
+          .map(x => Row(id(x), id(find(x)))).toSeq
+        return session.createDataFrame(java.util.Arrays.asList(rows: _*),
+          StructType(Seq(StructField("id", idType, nullable = false),
+            StructField("cluster_id", idType, nullable = false))))
+      }
       val labelDf = touched.toSeq.map(x => (x, find(x)))
         .toDF("__uid", "__cl")
-      sweep(edgeCkpt)
       // the nodes ∪ endpoints universe, WITHOUT referencing `e` — the
       // edge checkpoint was just swept, and the endpoints are already on
       // the driver (`touched`); labels cast BACK to the universe's id
       // type (roots are member ids, so the narrowing cast is lossless —
       // the iterative path's min(lbl) stays in that type, and so must
       // this one)
-      return nodes.select(col("id").cast(idType).as("id"))
+      return nodes.get.select(col("id").cast(idType).as("id"))
         .union(touched.toSeq.toDF("id")
           .select(col("id").cast(idType).as("id")))
         .distinct()
@@ -1804,7 +1882,9 @@ object Dedup {
       // the returned frame reads only the FINAL label checkpoint; the
       // edge list is no longer reachable from it
       sweep(edgeCkpt)
-      labels.select(col("id"), col("lbl").as("cluster_id")).orderBy("id")
+      val out = labels.select(col("id"), col("lbl").as("cluster_id"))
+      (if (nodes.isEmpty) out.filter(col("id") =!= col("cluster_id"))
+       else out).orderBy("id")
     } finally { und.unpersist(blocking = false); () }
   }
 

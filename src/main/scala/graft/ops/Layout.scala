@@ -211,9 +211,9 @@ object Layout {
       if (parts > 0) parts
       else shuffleWidth(session)
     // persist: pass 1's eager collect and the caller's eventual action on
-    // pass 2 both read this frame (the Packing convention — ContextCleaner
-    // frees the blocks once references are gone; an eager unpersist would
-    // evict before the lazy pass 2 runs)
+    // pass 2 both read this frame (the Packing convention — the entry
+    // stays in the session's cache until the caller's `clearCache()`; an
+    // eager unpersist would evict before the lazy pass 2 runs)
     val ranged = df
       .repartitionByRange(n, orderCols.map(col): _*)
       .sortWithinPartitions(orderCols.map(col): _*)

@@ -49,8 +49,8 @@ object Packing {
     // action on pass 2 both read this frame — without the cache, pass 2
     // would re-run the tokenize + range shuffle. NOT unpersisted here:
     // pass 2 is lazy, so an eager unpersist would evict before the caller
-    // ever runs it; the ContextCleaner frees the blocks once the frame's
-    // references are gone (the pairsBySetOverlap convention).
+    // ever runs it. The entry stays in the session's cache until the
+    // caller's `clearCache()` (the pairsBySetOverlap convention).
     val ranged = stats
       .repartitionByRange(n, col("doc_id"))
       .sortWithinPartitions("doc_id")

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The end-to-end corpus-preparation composition a training-data pipeline
@@ -9,8 +9,9 @@ import org.apache.spark.sql.functions._
   * that the library's pieces COMPOSE declaratively, so Catalyst sees ONE
   * plan: fingerprint + tokenization in the scan stage, one
   * map-side-combined shuffle for the dup-group keys, a semi-join back
-  * (AQE picks broadcast when the keeper set allows), and one final
-  * aggregate by split. No stage materializes an intermediate frame
+  * (AQE picks broadcast when the keeper set allows), and one global
+  * aggregate with a conditional count/sum per split label. No stage
+  * materializes an intermediate frame
   * (except the iterative cluster closure in the near-dup variant, which
   * is inherently multi-job — see Dedup.connectedComponents).
   *
@@ -24,35 +25,58 @@ object Pipeline {
   /** (doc_id, n_tokens, n_stop) computed in the scan stage — text is
     * dropped RIGHT HERE, so no downstream exchange ever carries it.
     */
-  private def tokenStats(documents: DataFrame): DataFrame = {
-    val toks = Text.tokens(col("text"))
-    documents.select(
-      col("doc_id"),
-      size(toks).as("n_tokens"),
-      size(filter(toks, w =>
-        w.isin(Text.defaultStopwords: _*))).as("n_stop"))
-  }
+  private def tokenStats(documents: DataFrame): DataFrame =
+    documents.select(col("doc_id"), nTokens.as("n_tokens"),
+      nStop.as("n_stop"))
+
+  /** `size(Text.tokens(text))` and the number of those tokens that are
+    * `Text.defaultStopwords`, as two regex counts: a token is a maximal
+    * run of characters outside `Text.ws`'s class, a stopword token is a
+    * stopword with no token character on either side. `regexp_count` is
+    * code-generated, so the counts join the scan's generated stage; the
+    * split → `filter` → `isin` form goes through interpreted higher-order
+    * functions and keeps its projection out of it.
+    */
+  private val nTokens = regexp_count(col("text"), lit("[^ \\t\\n\\r\\f]+"))
+  private val nStop = regexp_count(col("text"), lit(
+    Text.defaultStopwords.map(java.util.regex.Pattern.quote)
+      .mkString("(?<![^ \\t\\n\\r\\f])(?:", "|", ")(?![^ \\t\\n\\r\\f])")))
 
   /** The shared pipeline tail: quality gate (Gopher/C4-style — enough
     * tokens, enough stopword density to look like natural language) →
     * engine-portable md5 split (pure projection, no shuffle) → per-split
     * accounting, three-ish rows out.
+    *
+    * The split labels are known when the plan is built, so the accounting
+    * is ONE global aggregate with a conditional count/sum/avg per label,
+    * exploded into one row per label in label order (the order
+    * `orderBy("split")` gives, UTF-8 binary) and filtered to the labels
+    * that received a document — the rows `groupBy("split")` emits. One
+    * single-partition exchange of partial rows replaces the hash
+    * exchange, the range exchange and its sampling job, and the sort.
     */
-  private def gateSplitAccount(scored0: DataFrame, minTokens: Int,
+  private def gateSplitAccount(scored: DataFrame, minTokens: Int,
                                minStopRatio: Double,
                                fractions: Seq[(String, Double)]): DataFrame = {
-    val scored = scored0
-      .filter(col("n_tokens") >= minTokens &&
-        col("n_stop") / col("n_tokens") >= minStopRatio)
-      .select("doc_id", "n_tokens", "n_stop")
+    val gate = col("n_tokens") >= minTokens &&
+      col("n_stop") / col("n_tokens") >= minStopRatio
+    val labels = fractions.map(_._1).distinct
+      .sortBy(org.apache.spark.unsafe.types.UTF8String.fromString)
+    val perLabel = labels.zipWithIndex.flatMap { case (label, i) =>
+      def of(c: Column) = when(gate && col("split") === label, c)
+      Seq(count(of(lit(1))).as(s"n$i"), sum(of(col("n_tokens"))).as(s"t$i"),
+        avg(of(col("n_tokens"))).as(s"a$i"), sum(of(col("n_stop"))).as(s"s$i"))
+    }
     Sampling.deterministicSplit(scored, "doc_id", fractions)
-      .groupBy("split")
-      .agg(
-        count(lit(1)).as("n_docs"),
-        sum("n_tokens").as("total_tokens"),
-        round(avg("n_tokens"), 2).as("avg_tokens"),
-        round(sum("n_stop") / sum("n_tokens"), 4).as("stop_share"))
-      .orderBy("split")
+      .agg(perLabel.head, perLabel.tail: _*)
+      .select(explode(array(labels.indices.map(i => struct(
+        lit(labels(i)).as("split"),
+        col(s"n$i").as("n_docs"),
+        col(s"t$i").as("total_tokens"),
+        round(col(s"a$i"), 2).as("avg_tokens"),
+        round(col(s"s$i") / col(s"t$i"), 4).as("stop_share"))): _*)).as("r"))
+      .select("r.*")
+      .filter(col("n_docs") > 0)
   }
 
   /** Per-split corpus accounting after EXACT dedup + quality filtering:
@@ -77,13 +101,11 @@ object Pipeline {
                     fractions: Seq[(String, Double)] =
                       Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
       : DataFrame = {
-    val toks = Text.tokens(col("text"))
     val slim = documents.select(
       col("doc_id"),
       md5(Text.normText(col("text")).cast("binary")).as("fp"),
-      size(toks).as("n_tokens"),
-      size(filter(toks, w =>
-        w.isin(Text.defaultStopwords: _*))).as("n_stop"))
+      nTokens.as("n_tokens"),
+      nStop.as("n_stop"))
     val keepers = slim.groupBy("fp").agg(min("doc_id").as("doc_id"))
     val kept = slim.join(keepers, Seq("fp", "doc_id"), "left_semi")
     gateSplitAccount(kept, minTokens, minStopRatio, fractions)
@@ -120,6 +142,19 @@ object Pipeline {
     * gate → split → accounting tail. The exact-Jaccard default above is
     * the oracle-checkable instance; this is what a user actually calls
     * when the corpus is too big for exact pairs.
+    *
+    * Execution shape: only the ids a component drops matter — every id
+    * whose component minimum is another id, and each of them is a pair
+    * endpoint — so `Dedup.nonRepresentatives` closes the pairs alone, with
+    * no scan of the documents: one SQL execution pins the edges (its
+    * observed row count picks the path), and up to 2M edges the driver's
+    * union-find returns the dropped ids as a local frame. The accounting
+    * is then ONE query: the documents' scan stage counts tokens and
+    * stopwords (code-generated regex counts), anti-joins the broadcast
+    * dropped ids and pre-aggregates per split; a single-partition
+    * exchange carries the partial rows to the final aggregate. Documents
+    * with a null `doc_id` are dropped: a null id is no component's
+    * representative.
     */
   def prepareCorpusWithPairs(documents: DataFrame, pairs: DataFrame,
                              minTokens: Int = 20,
@@ -127,12 +162,10 @@ object Pipeline {
                              fractions: Seq[(String, Double)] =
                                Seq("train" -> 0.8, "val" -> 0.1,
                                  "test" -> 0.1)): DataFrame = {
-    val reps = Dedup.connectedComponents(
-        documents.select(col("doc_id").as("id")),
-        pairs.select("id_a", "id_b"))
-      .filter(col("id") === col("cluster_id"))
+    val dropped = Dedup.nonRepresentatives(pairs.select("id_a", "id_b"))
       .select(col("id").as("doc_id"))
-    val kept = tokenStats(documents).join(reps, Seq("doc_id"), "left_semi")
+    val kept = tokenStats(documents.filter(col("doc_id").isNotNull))
+      .join(dropped, Seq("doc_id"), "left_anti")
     gateSplitAccount(kept, minTokens, minStopRatio, fractions)
   }
 
@@ -160,8 +193,9 @@ object Pipeline {
     // final action (its stage row, both positional-gram branches of the
     // span census, and the cleaned stage) — union branches share no
     // subplans, so without this the dedup semi-join and text scan run
-    // 4×. Blocks are freed by ContextCleaner once the returned frame is
-    // unreachable (the Layout.shardedRanks convention).
+    // 4×. The entry stays in the session's cache until the caller runs
+    // `spark.catalog.clearCache()` (the Layout.shardedRanks convention):
+    // the ContextCleaner never frees a Dataset cache entry.
     val ded = documents.join(keepIds, Seq("doc_id"), "left_semi")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val spanOk = Text.dupSpanFraction(ded, n)
@@ -251,7 +285,7 @@ object Pipeline {
     // re-read by each of qualityEnsemble's three bucket passes AND the
     // gated semi-join — without these the keep-best semi-join and the
     // decontamination shingle subtree recompute ~4-5x inside ONE action.
-    // Blocks are freed by ContextCleaner once the frame is unreachable.
+    // Both entries stay in the session's cache until `clearCache()`.
     val ded = corpus.join(keep, Seq("doc_id"), "left_semi")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val hits = Dedup.benchmarkContainment(ded, benchmark, n, minPermille)

@@ -609,8 +609,8 @@ object Sampling {
       .partitionBy(stratumCol).orderBy(col(scoreCol).desc, col(idCol).asc)
     // persist: the rank window feeds three downstream reads of the lazy
     // result — an eager unpersist here would evict before the caller's
-    // action runs, so the blocks are freed by ContextCleaner once the
-    // returned frame is unreachable (the Layout.shardedRanks convention)
+    // action runs, so the entry stays in the session's cache until the
+    // caller's `clearCache()` (the Layout.shardedRanks convention)
     val ranked = df.select(col(idCol), col(stratumCol), col(scoreCol))
       .withColumn("rnk", row_number().over(w).cast("long"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -97,35 +97,69 @@ object Sinks {
     * row-level comparison, no trust in file timestamps. Returns the
     * manifest as a driver-local DataFrame (one row per shard, ordered by
     * shard): collecting it starts no Spark job.
+    *
+    * Execution shape: the write is one SQL execution (the input's plan,
+    * one hash exchange to `numShards` partitions, the writer's sort by
+    * shard). The manifest is read back from the written files with the
+    * written schema (no inference job) as one scan-only Spark job: each
+    * scan task sums its own rows per shard and the driver adds the
+    * partials in shard order — no exchange, no aggregate stage. The
+    * `_manifest` file is one more write of the collected rows.
     */
   def writeShardedWithManifest(df: DataFrame, idCol: String,
                                checksumCols: Seq[String], path: String,
                                numShards: Int): DataFrame = {
-    import org.apache.spark.sql.functions.{col, conv, count, lit, md5,
-      substring, sum}
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions.{col, conv, md5, substring}
+    import org.apache.spark.sql.types.{DecimalType, IntegerType, LongType,
+      StructField, StructType}
     require(numShards >= 1, "numShards must be >= 1")
     require(checksumCols.nonEmpty, "name the stable checksum columns")
     val shard = (conv(substring(md5(col(idCol).cast("string")), 1, 4),
       16, 10).cast("int") % numShards).as("shard")
-    df.withColumn("shard", shard)
-      .repartition(numShards, col("shard"))
+    val sharded = df.withColumn("shard", shard)
+    sharded.repartition(numShards, col("shard"))
       .write.mode("overwrite").partitionBy("shard").parquet(path)
     // the manifest is computed from the FILES ON DISK, not by a second
     // pass over the input plan: it must describe the export it ships
     // with even if an upstream stage was nondeterministic, and the
     // read-back scans shard-pruned parquet instead of re-running the
-    // whole upstream DAG. Collected ONCE (one row per shard): the
-    // `_manifest` file and the returned frame are built from the same
-    // rows, so neither the write nor the caller's collect re-aggregates
-    // the shard files
+    // whole upstream DAG. The read-back is given the schema just
+    // written (parquet reads every column back nullable), so no job
+    // infers it from the footers. It has one row per shard, so each scan
+    // partition sums its own rows per shard and the driver adds the
+    // partials in shard order (null shard first, as `orderBy` puts it):
+    // an exchange and a final aggregate would carry nothing the driver
+    // cannot add. The `_manifest` file and the returned frame are built
+    // from the same rows, so neither the write nor the caller's collect
+    // re-reads the shard files
     val spark = df.sparkSession
-    val manifest = spark.read.parquet(path)
-      .groupBy("shard").agg(count(lit(1)).as("n_rows"),
-        sum(Profiling.rowDigest(checksumCols).cast("decimal(38,0)"))
-          .as("checksum"))
-      .orderBy("shard")
-    val rows = java.util.Arrays.asList(manifest.collect(): _*)
-    val local = spark.createDataFrame(rows, manifest.schema)
+    val written = StructType(sharded.schema.map(_.copy(nullable = true)))
+    val digests = spark.read.schema(written).parquet(path)
+      .select(col("shard"), Profiling.rowDigest(checksumCols))
+    // a digest is < 2^32, so a partition's long sum overflows (loudly)
+    // only past 2^31 rows; the driver adds the partials exactly, as the
+    // DECIMAL(38,0) sum of `Profiling.tableChecksum` does
+    val partials = digests.queryExecution.toRdd.mapPartitions { rows =>
+      val acc = scala.collection.mutable.HashMap.empty[Option[Int],
+        (Long, Long)]
+      rows.foreach { r =>
+        val k = if (r.isNullAt(0)) None else Some(r.getInt(0))
+        val (n, sum) = acc.getOrElse(k, (0L, 0L))
+        acc(k) = (n + 1, Math.addExact(sum, r.getLong(1)))
+      }
+      Iterator.single(acc.toMap)
+    }.collect()
+    val rows = partials.flatten.groupMapReduce(_._1) {
+        case (_, (n, sum)) => (n, java.math.BigInteger.valueOf(sum))
+      } { case ((n1, s1), (n2, s2)) => (n1 + n2, s1.add(s2)) }
+      .toSeq.sortBy(_._1)
+      .map { case (k, (n, sum)) =>
+        Row(k.map(Int.box).orNull, n, new java.math.BigDecimal(sum)) }
+    val local = spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+      StructType(Seq(StructField("shard", IntegerType),
+        StructField("n_rows", LongType, nullable = false),
+        StructField("checksum", DecimalType(38, 0)))))
     local.coalesce(1).write.mode("overwrite").parquet(s"$path/_manifest")
     local
   }

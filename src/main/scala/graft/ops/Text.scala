@@ -1291,8 +1291,8 @@ object Text {
   def vocabCoverage(documents: DataFrame, vocabSize: Int = 1000): DataFrame = {
     require(vocabSize >= 1, "vocabSize must be >= 1")
     // persist: vocab + totals + the final join all read this census from
-    // the caller's lazy action — blocks are freed by ContextCleaner once
-    // the returned frame is unreachable (the Layout.shardedRanks
+    // the caller's lazy action — the entry stays in the session's cache
+    // until the caller's `clearCache()` (the Layout.shardedRanks
     // convention; an eager unpersist would evict before the action)
     val bySrc = documents
       .select(col("source"), explode(tokens(col("text"))).as("tok"))
@@ -1423,9 +1423,9 @@ object Text {
                       minCount: Long = 3L): DataFrame = {
     require(topK >= 1 && priorMass > 0 && minCount >= 1,
       "need positive topK/priorMass/minCount")
-    // persist: margins/srcTot/scored all read this census lazily —
-    // blocks are freed by ContextCleaner once the returned frame is
-    // unreachable (the Layout.shardedRanks convention)
+    // persist: margins/srcTot/scored all read this census lazily — the
+    // entry stays in the session's cache until the caller's
+    // `clearCache()` (the Layout.shardedRanks convention)
     val census = documents
       .select(col("source"), explode(tokens(col("text"))).as("w"))
       .groupBy("source", "w").agg(count(lit(1)).as("y_sw"))
@@ -1528,8 +1528,8 @@ object Text {
   def zipfCensus(documents: DataFrame, topK: Int = 50): DataFrame = {
     require(topK >= 2, "topK must be >= 2 for a slope")
     // persist: totals + the rank window both read this census lazily —
-    // blocks are freed by ContextCleaner once the returned frame is
-    // unreachable (the Layout.shardedRanks convention)
+    // the entry stays in the session's cache until the caller's
+    // `clearCache()` (the Layout.shardedRanks convention)
     val census = documents
       .select(col("source"), explode(tokens(col("text"))).as("w"))
       .groupBy("source", "w").agg(count(lit(1)).as("c"))

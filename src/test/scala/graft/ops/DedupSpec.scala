@@ -1,10 +1,11 @@
 package graft.ops
 
 import graft.SparkSpec
-import org.apache.spark.sql.execution.GenerateExec
+import org.apache.spark.sql.execution.{GenerateExec, QueryExecution}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.types.{ArrayType, StringType}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 class DedupSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
@@ -288,6 +289,88 @@ class DedupSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       .as[(Long, Long)].collect().toSeq
     assert(fast == slow)
     assert(fast.toMap.apply(31L) == 1L) // 30-31 merged into the chain via 5
+  }
+
+  test("connected components: a 3-edge call is one SQL execution, the " +
+      "edge pin") {
+    val nodes = Seq(1L, 2L, 3L, 4L, 5L).toDF("id")
+    val edges = Seq((1L, 2L), (2L, 3L), (4L, 5L)).toDF("id_a", "id_b")
+    val actions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+                             durationNs: Long): Unit = actions.add(funcName)
+      override def onFailure(funcName: String, qe: QueryExecution,
+                             exception: Exception): Unit =
+        actions.add(funcName)
+    }
+    spark.listenerManager.register(listener)
+    val cc = try {
+      val r = Dedup.connectedComponents(nodes, edges)
+      // the listener bus delivers in order: a marker action (`tail`) seen
+      // after the call's proves that all of them were delivered
+      spark.range(1).tail(1)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!actions.contains("tail") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      r
+    } finally spark.listenerManager.unregister(listener)
+    val seen = actions.toArray(Array.empty[String]).toSeq
+    assert(seen.contains("tail"), "the marker action never arrived")
+    // the edge count comes from the pin's own run (an observed metric)
+    // and the driver union-find reads the pinned rows directly: no
+    // `count` and no `collect` of their own
+    assert(seen.takeWhile(_ != "tail") == Seq("localCheckpoint"))
+    assert(cc.as[(Long, Long)].collect().toSeq ==
+      Seq((1L, 1L), (2L, 1L), (3L, 1L), (4L, 4L), (5L, 4L)))
+  }
+
+  test("minhashPairs leaves its signature frame in the session cache " +
+      "until clearCache") {
+    spark.catalog.clearCache()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val d = docs("the quick brown fox jumps over the lazy dog",
+      "the quick brown fox jumps over the lazy cat",
+      "an entirely different sentence about other things")
+    assert(Dedup.minhashPairs(d).collect().length == 1)
+    // a persisted Dataset stays in the CacheManager until unpersist or
+    // clearCache: the ContextCleaner frees nothing a cache entry holds
+    System.gc()
+    val cm = spark.sharedState.cacheManager
+    assert(!cm.isEmpty)
+    val left = spark.sparkContext.getPersistentRDDs
+      .filter { case (id, _) => !before(id) }.values.toSeq
+    assert(left.size == 1, left.map(_.name))
+    assert(left.head.name.contains("graft_minhash") &&
+      left.head.name.contains("graft_shingles"), left.head.name)
+    assert(left.head.getStorageLevel ==
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    spark.catalog.clearCache()
+    assert(cm.isEmpty)
+  }
+
+  test("nonRepresentatives ≡ the non-root rows of connectedComponents, " +
+      "on both paths") {
+    val nodes = (1L to 40L).toDF("id")
+    val edges = ((1L to 12L).map(i => (i, i + 1)) ++
+      Seq((20L, 21L), (21L, 22L), (22L, 20L)) ++
+      Seq((5L, 30L), (30L, 31L), (17L, 17L)) ++
+      Seq((35L, 36L))).toDF("id_a", "id_b")
+    val want = Dedup.connectedComponents(nodes, edges)
+      .filter($"id" =!= $"cluster_id").as[(Long, Long)].collect().toSeq
+    val fast = Dedup.nonRepresentatives(edges)
+    val slow = Dedup.nonRepresentatives(edges, driverUnionFindMaxEdges = 0L)
+    assert(fast.as[(Long, Long)].collect().toSeq == want)
+    assert(slow.as[(Long, Long)].collect().toSeq == want)
+    // the id type follows the edges on both paths; null endpoints drop
+    val edgesI = Seq((Some(3), Some(2)), (Some(2), Some(1)), (Some(4), None))
+      .toDF("id_a", "id_b")
+    for (f <- Seq(Dedup.nonRepresentatives(edgesI),
+        Dedup.nonRepresentatives(edgesI, driverUnionFindMaxEdges = 0L))) {
+      assert(f.schema.map(_.dataType) ==
+        Seq(org.apache.spark.sql.types.IntegerType,
+          org.apache.spark.sql.types.IntegerType))
+      assert(f.as[(Int, Int)].collect().toSeq == Seq((2, 1), (3, 1)))
+    }
   }
 
   test("connected components: path equivalence — int ids, foreign endpoints, null edges") {

@@ -53,6 +53,24 @@ class PipelineSpec extends SparkSpec {
     assert(viaMinhash.map(_.getAs[Long]("total_tokens")).sum == 40L)
   }
 
+  test("prepareCorpusWithPairs: documents with a null doc_id are dropped") {
+    val a1 = "the quick brown fox jumps over a lazy dog and it is near " +
+      "the old river bank for fun today"
+    val a2 = a1.stripSuffix(" today")
+    val b = "it is a fine day and the sun shines over the tall green " +
+      "hills for everyone to enjoy in peace"
+    val c = "a man and a dog walk to the shop in town for bread and it " +
+      "is a long way for them"                             // 21 toks, passes
+    val docs = Seq(Some(0L) -> a1, Some(1L) -> a2, Some(2L) -> b,
+      None -> c, None -> a2).toDF("doc_id", "text")
+    val pairs = Seq((0L, 1L)).toDF("id_a", "id_b")
+    val r = Pipeline.prepareCorpusWithPairs(docs, pairs).collect()
+    // only the non-null ids 0 and 2 survive: a null id is never a
+    // component's representative, whether or not its text pairs
+    assert(r.map(_.getAs[Long]("n_docs")).sum == 2L)
+    assert(r.map(_.getAs[Long]("total_tokens")).sum == 40L)
+  }
+
   test("prepareCorpus: keeps the LOWEST doc_id of a dup group") {
     val text = ("the cat sat on a mat and it is big for now " * 2).trim
     val docs = Seq(7L -> text, 3L -> text, 9L -> text).toDF("doc_id", "text")

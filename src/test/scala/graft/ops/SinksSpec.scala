@@ -119,6 +119,23 @@ class SinksSpec extends SparkSpec {
     assert(again == manifest)
   }
 
+  test("sharded export: a null id has its own shard row, first; an empty " +
+      "export has an empty manifest") {
+    val df = Seq((Some(1L), "a"), (None, "b"), (Some(2L), "c"), (None, "d"))
+      .toDF("id", "name")
+    val m = Sinks.writeShardedWithManifest(df, "id", Seq("id", "name"),
+      tmp("shards-null") + "/out", numShards = 4).collect()
+    assert(m.head.isNullAt(0) && m.head.getLong(1) == 2L)
+    assert(m.map(_.getLong(1)).sum == 4L)
+    assert(m.tail.map(_.getInt(0)).toSeq == m.tail.map(_.getInt(0)).sorted.toSeq)
+    // no shard file at all: the read-back has no footer to infer a schema
+    // from, and the manifest is simply empty
+    val empty = Sinks.writeShardedWithManifest(df.limit(0), "id",
+      Seq("id", "name"), tmp("shards-empty") + "/out", numShards = 4)
+    assert(empty.collect().isEmpty)
+    assert(empty.columns.toSeq == Seq("shard", "n_rows", "checksum"))
+  }
+
   test("sharded export: collecting the returned manifest starts no job") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val df = (0L until 200L).map(i => (i, s"doc$i")).toDF("id", "name")

@@ -1,15 +1,9 @@
 package graft.ml
 
-import scala.reflect.ClassTag
-import scala.reflect.runtime.universe.TypeTag
-
 import graft.functions.CentroidScan
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType}
 
 /** One Lloyd's K-Means iteration state: centroid list held on the driver —
   * the Spark replacement for the reference's `Centroids` HBase table
@@ -19,53 +13,6 @@ final case class Centroid(idx: Int, lat: Double, lon: Double)
 
 final case class KMeansResult(centroids: Seq[Centroid], iterations: Int,
                               converged: Boolean)
-
-/** The (lat, lon, cnt) rows of a weighted point cloud, PLANNED ONCE: the
-  * projection is analysed, optimised, planned and code-generated when the
-  * scan is built, and every k-means pass over it (bounding box, Lloyd
-  * rounds, silhouettes) is a partition-local fold of the same physical
-  * rows — the points' plan is never rebuilt; a pass plans only the small
-  * Dataset that carries its partials. Rows keep their nulls; each pass
-  * skips them its own way.
-  *
-  * A pass is still ONE Dataset action (its partials come back through a
-  * `collect`), so QueryExecutionListeners see one action per pass, and it
-  * runs as one Spark job with one stage under the job description
-  * `"<label> <pass>"` (e.g. `graft.ml.sweep round 3`). The caller's job
-  * group is left alone and its job description comes back afterwards.
-  */
-private[ml] final class PointScan private (spark: SparkSession,
-                                           rows: RDD[InternalRow],
-                                           label: String) {
-
-  /** `fold` turns each partition's rows — lat, lon, cnt at ordinals 0, 1,
-    * 2 as double, double, long — into one partial; the partials come back
-    * in partition order. */
-  def pass[P <: Product : ClassTag : TypeTag](name: String)(
-      fold: Iterator[InternalRow] => P): Array[P] = {
-    val partials = rows.mapPartitions(it => Iterator.single(fold(it)))
-    val sc = spark.sparkContext
-    val caller = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(s"$label $name")
-    try spark.createDataset(partials)(Encoders.product[P]).collect()
-    finally sc.setJobDescription(caller)
-  }
-}
-
-private[ml] object PointScan {
-
-  /** Plans `points`' scan. `cnt` must up-cast to a long (an integral
-    * column does; a fractional one fails analysis, as it would decoding
-    * the rows), and lat/lon to doubles. Take `queryExecution.toRdd`, not
-    * `Dataset.rdd`: the latter is an action of its own to listeners. */
-  def apply(points: DataFrame, label: String): PointScan = {
-    val cols = points.select(col("lat"), col("lon"), col("cnt"))
-    cols.as(Encoders.product[(Double, Double, Long)])
-    val typed = cols.select(col("lat").cast(DoubleType),
-      col("lon").cast(DoubleType), col("cnt").cast(LongType))
-    new PointScan(points.sparkSession, typed.queryExecution.toRdd, label)
-  }
-}
 
 /** Lloyd's K-Means over a weighted 2-D point cloud (SURVEY.md §2.6 M1–M3).
   *
@@ -83,13 +30,14 @@ private[ml] object PointScan {
   *    old HBase row in place when a reducer gets no points).
   *
   * Execution shape — the part the reference got wrong at scale: the whole
-  * sweep is ONE Spark application, and a fit or a sweep plans its points'
-  * scan ONCE ([[PointScan]]). The bounding box and every round are then
-  * one partition-local pass each — one Spark job, one stage, no shuffle:
-  * each task scans its partition against the centroid list shipped in the
-  * task closure (the analogue of Hadoop "load centroids in task setup")
-  * and returns partial sums that the driver merges into the new
-  * centroids. No re-planned scan, no shuffle, no external state store —
+  * sweep is ONE Spark application, and a fit or a sweep evaluates its
+  * points once, into per-partition primitive blocks, and plans its passes
+  * once ([[PointScan]]). The bounding box and every round are then one
+  * partition-local pass each — one Spark job, one stage, no shuffle: each
+  * task folds its partition's block against the centroid list shipped in
+  * the job's task binary (the analogue of Hadoop "load centroids in task
+  * setup") and returns partial sums that the driver merges into the new
+  * centroids. No re-planned query, no shuffle, no external state store —
   * this is what removes the ~38–40 s per-iteration overhead BASELINE.md
   * documents.
   *
@@ -122,8 +70,8 @@ object KMeans {
     * pass reads no weight, so a constant one stands in for `cnt`.
     */
   def bbox(points: DataFrame): (Double, Double, Double, Double) =
-    bbox(PointScan(points.select(col("lat"), col("lon"), lit(1L).as("cnt")),
-      "graft.ml.bbox"))
+    PointScan.using(points.select(col("lat"), col("lon"), lit(1L).as("cnt")),
+      "graft.ml.bbox")(bbox)
 
   /** One column's (min, max) so far, if it has a value. */
   private type Extent = Option[(Double, Double)]
@@ -141,12 +89,14 @@ object KMeans {
     b.fold(a)(q => extend(extend(a, q._1), q._2))
 
   private[ml] def bbox(scan: PointScan): (Double, Double, Double, Double) = {
-    val box = scan.pass("bbox") { rows =>
+    val box = scan.pass("bbox") { b =>
       var lat: Extent = None
       var lon: Extent = None
-      rows.foreach { r =>
-        if (!r.isNullAt(0)) lat = extend(lat, r.getDouble(0))
-        if (!r.isNullAt(1)) lon = extend(lon, r.getDouble(1))
+      var i = 0
+      while (i < b.size) {
+        if (b.hasLat(i)) lat = extend(lat, b.lat(i))
+        if (b.hasLon(i)) lon = extend(lon, b.lon(i))
+        i += 1
       }
       BoxPartial(lat, lon)
     }.foldLeft(BoxPartial(None, None)) { (a, b) =>
@@ -194,6 +144,25 @@ object KMeans {
     prev.map(c => computed.getOrElse(c.idx, c))
   }
 
+  /** Fails unless every `(column, value)` is finite, naming the first
+    * that is not and `where` it is. */
+  private def requireFinite(where: => String,
+                            values: (String, Double)*): Unit =
+    values.find(!_._2.isFinite).foreach { case (c, v) =>
+      throw new IllegalArgumentException(
+        s"k-means needs finite coordinates, got $c=$v $where")
+    }
+
+  /** The bounding box `box`, checked finite: a NaN or infinite coordinate
+    * anywhere in the points makes it non-finite. */
+  private[ml] def finiteBox(box: (Double, Double, Double, Double))
+      : (Double, Double, Double, Double) = {
+    val (minLat, maxLat, minLon, maxLon) = box
+    requireFinite("in the points", "lat" -> minLat, "lat" -> maxLat,
+      "lon" -> minLon, "lon" -> maxLon)
+    box
+  }
+
   /** One partition's A10 partial sums, one slot per (set, centroid) in
     * slot order (set after set, idx-ascending within a set). */
   private[ml] final case class RoundPartial(latW: Array[Double],
@@ -213,8 +182,10 @@ object KMeans {
     * partials in partition order and rounds each mean with [[round3]] — so
     * on one partition the result is bit-equal to [[assign]] +
     * [[recenter]]. Rows with a null lat, lon or cnt add nothing; a
-    * centroid without weight keeps its previous value. Idxs must be
-    * distinct within a set.
+    * centroid without weight keeps its previous value. A mean that is not
+    * finite (a NaN or infinite coordinate in the cluster) fails, naming the
+    * column and the value; the SQL reference returns NaN there. Idxs must
+    * be distinct within a set.
     */
   private[ml] def lloydRound(scan: PointScan, sets: Seq[Seq[Centroid]],
                              round: Int): Seq[Seq[Centroid]] = {
@@ -224,15 +195,16 @@ object KMeans {
     val idxs = all.map(_.idx).toArray
     val lats = all.map(_.lat).toArray
     val lons = all.map(_.lon).toArray
-    val partials = scan.pass(s"round $round") { rows =>
+    val partials = scan.pass(s"round $round") { b =>
       val latW = new Array[Double](lats.length)
       val lonW = new Array[Double](lats.length)
       val cnt = new Array[Long](lats.length)
-      rows.foreach { r =>
-        if (!r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2)) {
-          val lat = r.getDouble(0)
-          val lon = r.getDouble(1)
-          val c = r.getLong(2)
+      var r = 0
+      while (r < b.size) {
+        if (b.complete(r)) {
+          val lat = b.lat(r)
+          val lon = b.lon(r)
+          val c = b.cnt(r)
           var s = 0
           while (s < offsets.length - 1) {
             val i = CentroidScan.nearest(lat, lon, lats, lons, offsets(s),
@@ -243,6 +215,7 @@ object KMeans {
             s += 1
           }
         }
+        r += 1
       }
       RoundPartial(latW, lonW, cnt)
     }
@@ -263,9 +236,17 @@ object KMeans {
         val i = java.util.Arrays.binarySearch(idxs, offsets(s),
           offsets(s + 1), c.idx)
         if (cnt(i) == 0) c
-        else Centroid(c.idx, round3(latW(i) / cnt(i)), round3(lonW(i) / cnt(i)))
+        else Centroid(c.idx, mean("lat", c.idx, latW(i), cnt(i)),
+          mean("lon", c.idx, lonW(i), cnt(i)))
       }
     }
+  }
+
+  /** The rounded weighted mean `sum / cnt` of centroid `idx`'s `column`. */
+  private def mean(column: String, idx: Int, sum: Double, cnt: Long): Double = {
+    val m = sum / cnt
+    requireFinite(s"as the mean of centroid idx=$idx's points", column -> m)
+    round3(m)
   }
 
   /** M3: converged iff every rounded delta ≤ tol (strictly-greater ⇒ keep
@@ -285,8 +266,9 @@ object KMeans {
 
   /** M2 with caller-supplied initial centroids (the reference's golden
     * `inputs/centroids/part-r-00000` path, and the deterministic route for
-    * fixture tests): non-empty, with distinct idxs. Each round is one
-    * [[lloydRound]] over the single set.
+    * fixture tests): non-empty, with distinct idxs and finite coordinates.
+    * Each round is one [[lloydRound]] over the single set; the points are
+    * evaluated once, as in [[fit]].
     */
   def fitWithInit(points: DataFrame, init: Seq[Centroid], maxIter: Int = 20,
                   tol: Double = 0.001): KMeansResult = {
@@ -294,8 +276,10 @@ object KMeans {
     val repeated = init.map(_.idx).diff(init.map(_.idx).distinct)
     require(repeated.isEmpty,
       s"k-means needs distinct centroid idxs, idx=${repeated.head} repeats")
+    init.foreach(c => requireFinite(s"in initial centroid idx=${c.idx}",
+      "lat" -> c.lat, "lon" -> c.lon))
     requireLoop(maxIter, tol)
-    lloyd(PointScan(points, "graft.ml.fit"), init, maxIter, tol)
+    PointScan.using(points, "graft.ml.fit")(lloyd(_, init, maxIter, tol))
   }
 
   private def lloyd(scan: PointScan, init: Seq[Centroid], maxIter: Int,
@@ -312,17 +296,21 @@ object KMeans {
     KMeansResult(cs, iter, done)
   }
 
-  /** M2: the full Lloyd loop. `points` must have (lat, lon, cnt); `fit`
-    * does not manage persistence, so cache a cloud that is read again —
-    * every pass of the fit scans it.
+  /** M2: the full Lloyd loop. `points` must have (lat, lon, cnt), with
+    * finite coordinates: a NaN or infinite one fails before round 1,
+    * naming the column and the value. The fit evaluates `points` once,
+    * into per-partition blocks that its bounding box and rounds read and
+    * that it releases when it returns ([[PointScan]]); there is no need to
+    * cache the points for it.
     */
   def fit(points: DataFrame, k: Int, seed: Long, maxIter: Int = 20,
           tol: Double = 0.001): KMeansResult = {
     require(k >= 1, s"k-means needs k >= 1, got k=$k")
     requireLoop(maxIter, tol)
-    val scan = PointScan(points, "graft.ml.fit")
-    val (minLat, maxLat, minLon, maxLon) = bbox(scan)
-    lloyd(scan, initUniform(k, seed, minLat, maxLat, minLon, maxLon),
-      maxIter, tol)
+    PointScan.using(points, "graft.ml.fit") { scan =>
+      val (minLat, maxLat, minLon, maxLon) = finiteBox(bbox(scan))
+      lloyd(scan, initUniform(k, seed, minLat, maxLat, minLon, maxLon),
+        maxIter, tol)
+    }
   }
 }

@@ -1,24 +1,24 @@
 package graft.ml
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.storage.StorageLevel
 
 /** Hyperparameter sweep + model selection (SURVEY.md §2.6 M5/M6, §2.4 A12).
   *
   * The reference's KDriver (/root/reference/final/src/main/java/program/
   * KDriver.java:60–63) runs one MR-job chain per k and parks results in
   * HBase; a naive Spark port still schedules one job per (k, iteration).
-  * This sweep batches instead, and plans once: the cached points' scan is
-  * planned a single time ([[PointScan]]), and the bounding box, each Lloyd
-  * ROUND ([[KMeans.lloydRound]]) and the silhouettes are one
-  * partition-local pass over it — one Spark job with one stage each, no
-  * shuffle, and no re-planning of the points between rounds. A round
-  * assigns every still-active k at once and each partition hands the
-  * driver per-(k, centroid) partial sums to merge. Per-k math is untouched
-  * (identical centroids and iterations to sequential fits), but the job
-  * count drops from Σ iterations(k) to max iterations(k) + 2, which is
-  * what matters when the per-job overhead rivals the compute (the
-  * reference's own diagnosis of its 38–40 s/job bottleneck, BASELINE.md).
+  * This sweep batches instead, and evaluates and plans once
+  * ([[PointScan]]): the points are evaluated once, into per-partition
+  * primitive blocks, and the bounding box, each Lloyd ROUND
+  * ([[KMeans.lloydRound]]) and the silhouettes re-run one planned
+  * `collect` over those blocks — one Spark job with one stage each, no
+  * shuffle, and no query planned between rounds. A round assigns every
+  * still-active k at once and each partition hands the driver per-(k,
+  * centroid) partial sums to merge. Per-k math is untouched (identical
+  * centroids and iterations to sequential fits), but the job count drops
+  * from Σ iterations(k) to max iterations(k) + 2, which is what matters
+  * when the per-job overhead rivals the compute (the reference's own
+  * diagnosis of its 38–40 s/job bottleneck, BASELINE.md).
   */
 final case class SweepEntry(k: Int, silScore: Double, iterations: Int,
                             converged: Boolean)
@@ -28,10 +28,12 @@ object ModelSelect {
   private final case class KState(cs: Seq[Centroid], iterations: Int,
                                   converged: Boolean)
 
-  /** M5: fit every k on the same cached points (one job per round across
-    * all ks), then score all ks' silhouettes in one more action. ks must be
-    * distinct and ≥ 1, `maxIter` ≥ 1 and `tol` ≥ 0. Points the caller has
-    * not cached are cached for the sweep and released after it; a caller's
+  /** M5: fit every k on the same points (one job per round across all
+    * ks), then score all ks' silhouettes in one more action. ks must be
+    * distinct and ≥ 1, `maxIter` ≥ 1, `tol` ≥ 0, and the coordinates finite
+    * (a NaN or infinite one fails before round 1, naming the column and the
+    * value). The sweep evaluates `points` once, into blocks it releases
+    * when it returns; it never persists the caller's frame, and a caller's
     * own cache is left alone.
     */
   def sweep(points: DataFrame, ks: Seq[Int], seed: Long,
@@ -42,12 +44,9 @@ object ModelSelect {
     require(repeated.isEmpty,
       s"sweep needs distinct ks, k=${repeated.head} repeats")
     KMeans.requireLoop(maxIter, tol)
-    val owned = points.storageLevel == StorageLevel.NONE
-    val cached =
-      if (owned) points.persist(StorageLevel.MEMORY_AND_DISK) else points
-    try {
-      val scan = PointScan(cached, "graft.ml.sweep")
-      val (minLat, maxLat, minLon, maxLon) = KMeans.bbox(scan)
+    PointScan.using(points, "graft.ml.sweep") { scan =>
+      val (minLat, maxLat, minLon, maxLon) =
+        KMeans.finiteBox(KMeans.bbox(scan))
       val state = scala.collection.mutable.LinkedHashMap(ks.map { k =>
         k -> KState(
           KMeans.initUniform(k, seed, minLat, maxLat, minLon, maxLon), 0, false)
@@ -71,7 +70,7 @@ object ModelSelect {
         val s = state(k)
         SweepEntry(k, sil, s.iterations, s.converged)
       }
-    } finally { if (owned) cached.unpersist(blocking = false); () }
+    }
   }
 
   /** M6/A12: argmax silhouette (first k wins ties, like the reference's

@@ -38,14 +38,15 @@ object Silhouette {
     val offsets = sets.map(_.size).scanLeft(0)(_ + _).toArray
     val lats = sets.flatten.map(_.lat).toArray
     val lons = sets.flatten.map(_.lon).toArray
-    val partials = scan.pass("silhouettes") { rows =>
+    val partials = scan.pass("silhouettes") { b =>
       val silW = new Array[Double](offsets.length - 1)
       var cnt = 0L
-      rows.foreach { r =>
-        if (!r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2)) {
-          val lat = r.getDouble(0)
-          val lon = r.getDouble(1)
-          val c = r.getLong(2)
+      var r = 0
+      while (r < b.size) {
+        if (b.complete(r)) {
+          val lat = b.lat(r)
+          val lon = b.lon(r)
+          val c = b.cnt(r)
           var s = 0
           while (s < silW.length) {
             silW(s) += CentroidScan.silhouette(lat, lon, lats, lons,
@@ -54,6 +55,7 @@ object Silhouette {
           }
           cnt = Math.addExact(cnt, c)
         }
+        r += 1
       }
       SilPartial(silW, cnt)
     }
@@ -68,9 +70,10 @@ object Silhouette {
   }
 
   /** Weighted mean silhouette of a weighted point cloud (lat, lon, cnt)
-    * under the given centroids. Returns 0 when k < 2 (no second distance).
+    * under the given centroids, from one evaluation of `points`. Returns 0
+    * when k < 2 (no second distance).
     */
   def score(points: DataFrame, cs: Seq[Centroid]): Double =
     if (cs.size < 2) 0.0
-    else scoreSets(PointScan(points, "graft.ml.score"), Seq(cs)).head
+    else PointScan.using(points, "graft.ml.score")(scoreSets(_, Seq(cs))).head
 }

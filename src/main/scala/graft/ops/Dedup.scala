@@ -1334,12 +1334,18 @@ object Dedup {
   }
 
   /** MinHash signature: `numHashes` minima of the Kirsch–Mitzenmacher
-    * family h_i = h1 + i·h2 over the shingle set (single native pass).
+    * family h_i = h1 + i·h2 over the shingle set (single native pass), for
+    * every document with a shingle.
+    *
+    * A document has a shingle iff it has at least `n` tokens, so the
+    * filter counts tokens ([[Text.tokenCount]]) before the shingle kernel
+    * runs, once per kept document. A filter on `size(shingles)` would be
+    * pushed below the projection that computes the shingles, and every
+    * document would be shingled twice.
     */
   def minhashSignatures(documents: DataFrame, n: Int = 3,
                         numHashes: Int = 32): DataFrame =
-    shingleSets(documents, n)
-      .filter(size(col("shingles")) > 0)
+    shingleSets(documents.filter(Text.tokenCount(col("text")) >= n), n)
       .select(col("doc_id"), col("shingles"),
         GraftFunctions.minhash(col("shingles"), numHashes).as("sig"))
 

@@ -30,14 +30,13 @@ object Pipeline {
       nStop.as("n_stop"))
 
   /** `size(Text.tokens(text))` and the number of those tokens that are
-    * `Text.defaultStopwords`, as two regex counts: a token is a maximal
-    * run of characters outside `Text.ws`'s class, a stopword token is a
-    * stopword with no token character on either side. `regexp_count` is
-    * code-generated, so the counts join the scan's generated stage; the
-    * split → `filter` → `isin` form goes through interpreted higher-order
-    * functions and keeps its projection out of it.
+    * `Text.defaultStopwords`, as two regex counts ([[Text.tokenCount]]): a
+    * stopword token is a stopword with no token character on either side.
+    * `regexp_count` is code-generated, so the counts join the scan's
+    * generated stage; the split → `filter` → `isin` form goes through
+    * interpreted higher-order functions and keeps its projection out of it.
     */
-  private val nTokens = regexp_count(col("text"), lit("[^ \\t\\n\\r\\f]+"))
+  private val nTokens = Text.tokenCount(col("text"))
   private val nStop = regexp_count(col("text"), lit(
     Text.defaultStopwords.map(java.util.regex.Pattern.quote)
       .mkString("(?<![^ \\t\\n\\r\\f])(?:", "|", ")(?![^ \\t\\n\\r\\f])")))

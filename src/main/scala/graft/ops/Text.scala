@@ -38,6 +38,14 @@ object Text {
   def tokens(text: Column): Column =
     filter(split(text, ws), w => length(w) > 0)
 
+  /** `size(tokens(text))` (null for a null text) as one regex count: a
+    * token is a maximal run of characters outside `ws`'s class.
+    * `regexp_count` is code-generated, so the count joins the scan's
+    * generated stage; `size(tokens(...))` goes through an interpreted
+    * higher-order function. */
+  def tokenCount(text: Column): Column =
+    regexp_count(text, lit("[^ \\t\\n\\r\\f]+"))
+
   /** Whitespace-normalized lowercase body — the canonical form used by
     * fingerprinting AND exact dedup (Dedup delegates here; the two must
     * stay byte-identical).

@@ -17,7 +17,9 @@ import org.scalacheck.{Gen, Prop, Test}
   *    `posexplode` → `groupBy(set)` → `sum(sil * cnt) / sum(cnt)` formula
   *    (kept here as the oracle), and on three partitions to a driver-side
   *    oracle that sums each partition's rows in row order, then the
-  *    partitions' sums in partition order.
+  *    partitions' sums in partition order;
+  *  - one planned [[PointScan]], re-run pass after pass with alternating
+  *    centroid sets, gives every pass the result of a fresh scan.
   */
 class KMeansPassSpec extends SparkSpec {
 
@@ -172,8 +174,8 @@ class KMeansPassSpec extends SparkSpec {
                            sets: Seq[Seq[Centroid]]): Option[String] = {
     val one = frame(pts, 1)
     val three = frame(pts, 3)
-    val got1 = Silhouette.scoreSets(PointScan(one, "test"), sets)
-    val got3 = Silhouette.scoreSets(PointScan(three, "test"), sets)
+    val got1 = PointScan.using(one, "test")(Silhouette.scoreSets(_, sets))
+    val got3 = PointScan.using(three, "test")(Silhouette.scoreSets(_, sets))
     val want1 = sqlOracle(one, sets)
     val want3 = partitionOracle(three, sets)
     Seq(
@@ -202,5 +204,52 @@ class KMeansPassSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException](Silhouette.score(frame(ps, 2),
       Seq(Centroid(0, 0.0, 0.0), Centroid(1, 2.0, 2.0))))
     assert(e.getMessage.contains("cnt=0"), e.getMessage)
+  }
+
+  // ---- one planned scan, many passes --------------------------------------
+
+  /** The doubles of a pass result as their bits, so NaN and ±0.0 compare
+    * exactly. */
+  private def exact(x: Any): Any = x match {
+    case d: Double => bits(d)
+    case s: Iterable[_] => s.map(exact).toList
+    case p: Product => p.productIterator.map(exact).toList
+    case o => o
+  }
+
+  private val reuseCase = for {
+    a <- setGen
+    b <- setGen
+    anchor <- Gen.zip(half, half, Gen.chooseNum(1, 9))
+    pts <- Gen.chooseNum(0, 30).flatMap(n => Gen.listOfN(n, pointGen))
+    parts <- Gen.chooseNum(1, 7)
+  } yield {
+    val (la, lo, c) = anchor
+    (Seq[P]((Some(la), Some(lo), Some(c))) ++ pts, a, b, parts)
+  }
+
+  test("one planned scan, re-run with alternating centroid sets over 1–7 " +
+      "partitions with nulls, equals a fresh scan bit for bit every time") {
+    var failure = ""
+    val prop = Prop.forAllNoShrink(reuseCase) { case (pts, a, b, parts) =>
+      val df = frame(pts, parts)
+      val passes: Seq[PointScan => Any] = Seq(
+        KMeans.lloydRound(_, Seq(a), 1),
+        KMeans.lloydRound(_, Seq(b), 2),
+        Silhouette.scoreSets(_, Seq(a)),
+        KMeans.lloydRound(_, Seq(a, b), 3),
+        KMeans.bbox(_),
+        Silhouette.scoreSets(_, Seq(b, a)),
+        KMeans.lloydRound(_, Seq(b), 4))
+      val reused = PointScan.using(df, "reused")(s => passes.map(_(s)))
+      val fresh = passes.map(p => PointScan.using(df, "fresh")(p))
+      val bad = passes.indices.find(i => exact(reused(i)) != exact(fresh(i)))
+      bad.foreach(i => failure = s"pass $i over $parts partitions: " +
+        s"${reused(i)} vs fresh ${fresh(i)}\n points=$pts\n a=$a\n b=$b")
+      bad.isEmpty
+    }
+    val res = Test.check(
+      Test.Parameters.default.withMinSuccessfulTests(20), prop)
+    assert(res.passed, s"${res.status}: $failure")
   }
 }

@@ -153,48 +153,61 @@ class KMeansSpec extends SparkSpec {
     assert(dup.getMessage.contains("k=3"), dup.getMessage)
   }
 
+  /** (name, query execution) of every listener action `body` runs, in
+    * order. The listener bus delivers asynchronously, in order: a marker
+    * action (a `count`; every k-means action is a `collect`) seen after
+    * `body`'s proves that all of them were delivered. */
+  private def actionsOf(body: => Unit): Seq[(String, QueryExecution)] = {
+    val actions =
+      new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+                             durationNs: Long): Unit =
+        actions.add((funcName, qe))
+      override def onFailure(funcName: String, qe: QueryExecution,
+                             exception: Exception): Unit =
+        actions.add((funcName, qe))
+    }
+    def seen = actions.toArray(Array.empty[(String, QueryExecution)]).toSeq
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.range(1).count()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.exists(_._1 == "count") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+    assert(seen.exists(_._1 == "count"), "the marker action never arrived")
+    seen.takeWhile(_._1 != "count")
+  }
+
+  /** An uncached copy of `cloud` and the number of its rows evaluated so
+    * far (a counting UDF on lat). Its rows come from an RDD: the optimizer
+    * evaluates a projection of a local relation itself, once per plan. */
+  private def countedCloud(name: String) = {
+    val evaluated = spark.sparkContext.longAccumulator(name)
+    val counted = udf { (lat: Double) => evaluated.add(1); lat }
+      .asNondeterministic()
+    val rows = spark.createDataFrame(
+      spark.sparkContext.parallelize(cloud.collect().toSeq, 3), cloud.schema)
+    (rows.withColumn("lat", counted(col("lat"))), evaluated)
+  }
+
   test("a sweep is rounds + 2 Dataset actions over one evaluation of its " +
       "points, and rounds 2..n compile no new class") {
     val ks = Seq(2, 3, 4, 5)
-    val actions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution,
-                             durationNs: Long): Unit = actions.add(funcName)
-      override def onFailure(funcName: String, qe: QueryExecution,
-                             exception: Exception): Unit =
-        actions.add(funcName)
-    }
-    // the listener bus delivers asynchronously, in order: a marker action
-    // (a `count`; every sweep action is a `collect`) seen after the
-    // sweep's proves that all of them were delivered
-    def sweepActions(): Seq[String] = {
-      spark.range(1).count()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!actions.contains("count") && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      val seen = actions.toArray(Array.empty[String]).toSeq
-      actions.clear()
-      assert(seen.contains("count"), "the marker action never arrived")
-      seen.takeWhile(_ != "count")
-    }
-    // an uncached source that counts the rows it evaluates
-    val evaluated = spark.sparkContext.longAccumulator("kmeans-source-rows")
-    val counted = udf { (lat: Double) => evaluated.add(1); lat }
-      .asNondeterministic()
-    val source = cloud.withColumn("lat", counted(col("lat")))
-    spark.listenerManager.register(listener)
-    val (entries, names) = try {
-      // one round compiles every plan a sweep has: bounding box, round,
-      // silhouettes
-      ModelSelect.sweep(source, ks, seed = 11L, maxIter = 1)
-      sweepActions()
-      val compiled = CodegenMetrics.METRIC_SOURCE_CODE_SIZE.getCount
-      evaluated.reset()
-      val es = ModelSelect.sweep(source, ks, seed = 11L, maxIter = 20)
-      assert(CodegenMetrics.METRIC_SOURCE_CODE_SIZE.getCount == compiled,
-        "a later round or the silhouettes compiled new code")
-      (es, sweepActions())
-    } finally spark.listenerManager.unregister(listener)
+    val (source, evaluated) = countedCloud("kmeans-source-rows")
+    // one round compiles every plan a sweep has: bounding box, round,
+    // silhouettes
+    actionsOf(ModelSelect.sweep(source, ks, seed = 11L, maxIter = 1))
+    val compiled = CodegenMetrics.METRIC_SOURCE_CODE_SIZE.getCount
+    evaluated.reset()
+    var entries = Seq.empty[SweepEntry]
+    val names = actionsOf {
+      entries = ModelSelect.sweep(source, ks, seed = 11L, maxIter = 20)
+    }.map(_._1)
+    assert(CodegenMetrics.METRIC_SOURCE_CODE_SIZE.getCount == compiled,
+      "a later round or the silhouettes compiled new code")
     val rounds = entries.map(_.iterations).max
     assert(rounds >= 3 && entries.map(_.iterations).distinct.size > 1,
       s"the cloud should need several rounds with shrinking ks: $entries")
@@ -204,6 +217,70 @@ class KMeansSpec extends SparkSpec {
     // the sweep's cache is built once and every pass reads it
     assert(evaluated.sum == cloud.count(),
       s"the sweep evaluated ${evaluated.sum} source rows")
+  }
+
+  test("every pass of a sweep and of a fit re-runs one planned query") {
+    var entries = Seq.empty[SweepEntry]
+    val sweep = actionsOf {
+      entries = ModelSelect.sweep(cloud, Seq(2, 3, 4, 5), seed = 11L)
+    }.map(_._2)
+    assert(sweep.size == entries.map(_.iterations).max + 2, s"$sweep")
+    assert(sweep.forall(_ eq sweep.head),
+      "a sweep pass planned a query of its own")
+    var fit: KMeansResult = null
+    val fitted = actionsOf { fit = KMeans.fit(cloud, k = 4, seed = 11L) }
+      .map(_._2)
+    assert(fitted.size == fit.iterations + 1 && fit.iterations > 1,
+      s"$fitted")
+    assert(fitted.forall(_ eq fitted.head),
+      "a fit pass planned a query of its own")
+  }
+
+  test("fit, fitWithInit and Silhouette.score evaluate an uncached source " +
+      "once and release what they persisted") {
+    val (source, evaluated) = countedCloud("kmeans-fit-source-rows")
+    val n = cloud.count()
+    val init = Seq(Centroid(0, 0.0, 0.0), Centroid(1, 4.0, 1.0),
+      Centroid(2, 1.0, 5.0))
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val calls: Seq[(String, () => Any)] = Seq(
+      "fit" -> (() => assert(KMeans.fit(source, 4, seed = 11L).iterations > 1)),
+      "fitWithInit" -> (() =>
+        assert(KMeans.fitWithInit(source, init).iterations > 1)),
+      "score" -> (() => Silhouette.score(source, init)),
+      "sweep" -> (() => ModelSelect.sweep(source, Seq(2, 3), seed = 11L)))
+    calls.foreach { case (name, call) =>
+      evaluated.reset()
+      call()
+      assert(evaluated.sum == n,
+        s"$name evaluated ${evaluated.sum} source rows for $n")
+      assert(spark.sparkContext.getPersistentRDDs.keySet == persisted,
+        s"$name left an RDD persisted")
+    }
+  }
+
+  test("fit, fitWithInit and sweep reject a NaN or infinite coordinate, " +
+      "naming the column and the value") {
+    val nanLat = blobs.union(pts((Double.NaN, 0.0, 1)))
+    val infLon = blobs.union(pts((0.0, Double.PositiveInfinity, 1)))
+    val negInfLat = blobs.union(pts((Double.NegativeInfinity, 0.0, 1)))
+    val init = Seq(Centroid(0, 0.0, 0.0), Centroid(1, 10.0, 10.0))
+    val bad: Seq[(String, () => Any)] = Seq(
+      "lat=NaN" -> (() => KMeans.fit(nanLat, 2, seed = 1L)),
+      "lon=Infinity" -> (() => KMeans.fit(infLon, 2, seed = 1L)),
+      "lon=Infinity" -> (() => ModelSelect.sweep(infLon, Seq(2, 3), 1L)),
+      "lat=-Infinity" -> (() => ModelSelect.sweep(negInfLat, Seq(2), 1L)),
+      // no bounding box: the round's mean names the value
+      "lat=NaN" -> (() => KMeans.fitWithInit(nanLat, init)),
+      "lat=-Infinity" -> (() => KMeans.fitWithInit(negInfLat, init)),
+      "lon=NaN" -> (() => KMeans.fitWithInit(blobs,
+        Seq(Centroid(0, 0.0, Double.NaN), Centroid(1, 10.0, 10.0)))))
+    bad.foreach { case (value, call) =>
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains(value), e.getMessage)
+    }
+    // the bounding box keeps SQL min/max: NaN ranks above every number
+    assert(KMeans.bbox(nanLat)._2.isNaN)
   }
 
   /** (kind, SQL execution id, job description) of every job and stage

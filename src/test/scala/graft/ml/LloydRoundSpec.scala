@@ -86,10 +86,11 @@ class LloydRoundSpec extends SparkSpec {
 
   /** None when the round matches the reference and the oracle. */
   private def violation(pts: Seq[P], sets: Seq[Seq[Centroid]]): Option[String] = {
-    val one = KMeans.lloydRound(PointScan(frame(pts, 1), "test"), sets, 1)
+    val one =
+      PointScan.using(frame(pts, 1), "test")(KMeans.lloydRound(_, sets, 1))
     val clean = frame(complete(pts), 1)
     val three = frame(pts, 3)
-    val got3 = KMeans.lloydRound(PointScan(three, "test"), sets, 1)
+    val got3 = PointScan.using(three, "test")(KMeans.lloydRound(_, sets, 1))
     sets.indices.iterator.flatMap { s =>
       val ref = KMeans.recenter(KMeans.assign(clean, sets(s)), sets(s))
       val orc = oracle(three, sets(s))
@@ -112,7 +113,8 @@ class LloydRoundSpec extends SparkSpec {
       (Some(1.0), Some(0.0), None))      // null cnt: adds nothing
     val cs = Seq(Centroid(9, 0.0, 0.0), Centroid(4, 1.0, 0.0),
       Centroid(17, 50.0, 50.0))
-    val got = KMeans.lloydRound(PointScan(frame(pts, 1), "test"), Seq(cs, cs.reverse), 1)
+    val got = PointScan.using(frame(pts, 1), "test")(
+      KMeans.lloydRound(_, Seq(cs, cs.reverse), 1))
     // the tie goes to idx 4 (the scan runs in idx order), idx 17 is empty
     val want = Seq(Centroid(9, 0.0, 0.0), Centroid(4, 0.667, 0.0),
       Centroid(17, 50.0, 50.0))

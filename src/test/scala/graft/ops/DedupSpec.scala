@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.functions.GraftFunctions
 import org.apache.spark.sql.execution.{GenerateExec, QueryExecution}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
@@ -195,6 +196,26 @@ class DedupSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       assert(sets(coll(0)).intersect(sets(coll(1))).isEmpty)
       assert(!got.exists(p => p._1 == coll(0) && p._2 == coll(1)))
     }
+  }
+
+  test("minhashSignatures shingles each document once and keeps the " +
+      "documents with a shingle") {
+    import org.apache.spark.sql.functions._
+    // an RDD source: the optimizer folds a filter over a local relation
+    val d = spark.sparkContext.parallelize(Seq((0L, "a b c d"),
+      (1L, "only two"), (2L, ""), (3L, " x\ty  z\f"), (4L, null),
+      (5L, "p q r p q r")), 2).toDF("doc_id", "text")
+    val sigs = Dedup.minhashSignatures(d)
+    val got = sigs.collect()
+      .map(r => r.getLong(0) -> (r.getSeq[String](1), r.getSeq[Long](2))).toMap
+    val want = Dedup.shingleSets(d).filter(size(col("shingles")) > 0)
+      .select(col("doc_id"), col("shingles"),
+        GraftFunctions.minhash(col("shingles"), 32))
+      .collect()
+      .map(r => r.getLong(0) -> (r.getSeq[String](1), r.getSeq[Long](2))).toMap
+    assert(got.keySet == Set(0L, 3L, 5L) && got == want, s"$got vs $want")
+    val plan = stripAQEPlan(sigs.queryExecution.executedPlan).toString
+    assert("graft_shingles\\(".r.findAllIn(plan).size == 1, plan)
   }
 
   test("minhash verify plan: no shingle explode, no shingle-array " +

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
 
   /** The driver captures only the LAST ~2000 BYTES of COMBINED
@@ -340,26 +339,7 @@ object Bench {
     // kill costs one rep, never the artifact (the per-rep emits).
     val budgetSec =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_SEC", "600").toDouble
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Let AQE coalesce post-shuffle partitions by BYTE TARGET instead
-      // of stopping at the core count (the Spark docs' recommended
-      // production posture): a KB-sized shuffle then runs 1 reduce task
-      // instead of 32, which removes ~30% of the surface's wall time at
-      // sf0.1 (measured r19; the tail of small queries is task-scheduling
-      // bound). Scale-adaptive by construction — the byte target is
-      // spark.sql.adaptive.advisoryPartitionSizeInBytes, so a 100 TB
-      // shuffle still gets its thousands of partitions. CPU-quadratic
-      // pair-join stages opt out via an explicit key-hashed repartition
-      // (Dedup.wideBy), which AQE never coalesces.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        "false")
-      .config("spark.ui.enabled", "false")
-      // events fixtures may be TIMESTAMP(NANOS) — see Tables.load
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // UTC pins the events NTZ->nanos normalization (Tables.normalizeEventTs)
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = Session.builder(cpus.toInt).appName("graft-bench")
       .getOrCreate()
     // ERROR: stray WARNs between the timing loop and the JSON line would
     // interleave with the one-line contract the driver parses

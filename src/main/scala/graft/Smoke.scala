@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Smoke-check main mirroring the driver's t1 gate: `SparkEntry.entry`
   * must return rows > 0 on sf0.001. Prints the row count and the plan.
   *
@@ -13,14 +11,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // UTC pins the events NTZ->nanos normalization (Tables.normalizeEventTs)
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = Session.builder(4).appName("graft-smoke").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val names: Seq[String] =

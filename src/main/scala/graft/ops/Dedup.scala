@@ -71,9 +71,8 @@ object Dedup {
   /** Key-hashed repartition at the full configured width — pins CPU
     * parallelism for the inverted-index self-joins. These stages are
     * CPU-quadratic per key group on small BYTE volumes, so AQE's
-    * byte-targeted coalescing (parallelismFirst=false, the production
-    * posture the bench session now runs) would serialize exactly the
-    * work that must stay wide; a USER repartition is exempt from
+    * byte-targeted coalescing (`graft.Session`'s posture) would serialize
+    * exactly the work that must stay wide; a USER repartition is exempt from
     * coalescing, and hashing by the join key lets the self-join reuse
     * the exchange on both sides (no extra shuffle). Width follows the
     * configured shuffle width, so a 100 TB cluster widens with its
@@ -1455,6 +1454,11 @@ object Dedup {
           .cast("long").as("__inter"),
         size(col("a.shingles")).cast("long").as("__sza"),
         size(col("b.shingles")).cast("long").as("__szb"))
+      // one row through a generator: the threshold filter reads only its
+      // output, so it is not pushed into the join condition (computing
+      // the intersection twice) nor inferred as not-null filters below
+      .select(col("id_a"), col("id_b"),
+        inline(array(struct("__inter", "__sza", "__szb"))))
       .withColumn("jaccard",
         col("__inter") /
           (col("__sza") + col("__szb") - col("__inter")))
@@ -1659,10 +1663,11 @@ object Dedup {
     * diameter-many shuffle rounds with one action + one ids-only distinct
     * (the nodes ∪ endpoints universe both paths share) + one broadcast
     * join, and NODES are never collected — un-edged documents label
-    * themselves through the coalesce. The one action is the edge pin: its
-    * row count, which picks the path, is a metric observed on the pin's
-    * own run, and the driver reads the pinned rows straight off the pin's
-    * RDD. Labels are identical by construction (union
+    * themselves through the coalesce. The one action is a collect of at
+    * most `driverUnionFindMaxEdges + 1` edges: its row count picks the
+    * path, and on the driver path its rows are the union-find's input; only
+    * past the threshold are the edges pinned for the rounds. Labels are
+    * identical by construction (union
     * by min root ⇒ root = component min id = the min-label fixed point;
     * DedupSpec pins path equality — universe, schema, and values). Only
     * engaged when the coerced id type is integral; 0 forces the
@@ -1744,45 +1749,37 @@ object Dedup {
           .map(new org.apache.hadoop.fs.Path(_)).toSet
         (pinned, files)
       }
-    // materialize the (possibly expensive) pair computation ONCE — the
-    // undirected edge list reads it twice (forward + reversed), and every
-    // round reads the adjacency again. A NULL endpoint is not an edge:
-    // dropped here, identically on BOTH paths (it would otherwise NPE the
-    // driver collect and silently vanish in the iterative joins — the
-    // result must not depend on which path ran).
-    // the edge count that picks the path is observed on the pin's own
-    // run, not counted by a query of its own
-    val edgeObs = Observation("cc_edges")
-    val (pinnedEdges, edgeCkpt) =
-      pin(edges.select("id_a", "id_b")
-        .where(col("id_a").isNotNull && col("id_b").isNotNull)
-        .observe(edgeObs, count(lit(1)).as("n")))
-    val nEdges = edgeObs.get("n").asInstanceOf[Long]
-    val e = pinnedEdges.select(col("id_a").as("src"), col("id_b").as("dst"))
+    // A NULL endpoint is not an edge: dropped here, identically on BOTH
+    // paths (it would otherwise NPE the driver union-find and silently
+    // vanish in the iterative joins — the result must not depend on which
+    // path ran).
+    val edgeIds = edges.select(col("id_a").as("src"), col("id_b").as("dst"))
+      .where(col("src").isNotNull && col("dst").isNotNull)
     // The labeled universe is nodes ∪ edge endpoints on BOTH paths, and
     // both emit (id, cluster_id) in the union-coerced id type — the
     // result may never depend on whether the edge count crossed the
     // driver-union-find threshold. (Call sites keep edges ⊆ nodes, where
     // this is exactly the old "just nodes" universe.)
-    val endpoints = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id")))
-    val allIds = nodes.fold(endpoints)(_.select(col("id")).union(endpoints))
-      .distinct()
-    val idType = allIds.schema("id").dataType
+    def universe(e: DataFrame): DataFrame = {
+      val endpoints = e.select(col("src").as("id"))
+        .union(e.select(col("dst").as("id")))
+      nodes.fold(endpoints)(_.select(col("id")).union(endpoints)).distinct()
+    }
+    val idType = universe(edgeIds).schema("id").dataType
     val integralIds =
       idType == org.apache.spark.sql.types.LongType ||
         idType == org.apache.spark.sql.types.IntegerType
-    if (integralIds && driverUnionFindMaxEdges > 0 &&
-        nEdges <= driverUnionFindMaxEdges) {
-      // read off the pin's own RDD: a SQL collect of the pinned frame
-      // would plan, code-generate and run a query of its own
-      val Seq(ta, tb) = pinnedEdges.schema.map(_.dataType)
-      val pairs = pinnedEdges.queryExecution.logical.collectFirst {
-          case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-        }.get
-        .map(r => (r.get(0, ta).asInstanceOf[Number].longValue,
-          r.get(1, tb).asInstanceOf[Number].longValue))
-        .collect()
+    // one bounded collect both picks the path and feeds the union-find: a
+    // row past the threshold sends the edges down the iterative path
+    // (`limit` takes an Int; no driver holds 2^31 edges anyway)
+    val driverMax = math.min(driverUnionFindMaxEdges, Int.MaxValue - 1L).toInt
+    val tryDriver = integralIds && driverMax > 0
+    val pairs =
+      if (!tryDriver) Array.empty[(Long, Long)]
+      else edgeIds.limit(driverMax + 1).collect()
+        .map(r => (r.get(0).asInstanceOf[Number].longValue,
+          r.get(1).asInstanceOf[Number].longValue))
+    if (tryDriver && pairs.length <= driverMax) {
       val parent = scala.collection.mutable.HashMap.empty[Long, Long]
       def find(x: Long): Long = {
         var r = x
@@ -1805,7 +1802,6 @@ object Dedup {
       val touched = pairs.iterator
         .flatMap(p => Iterator(p._1, p._2)).toArray.distinct
       import session.implicits._
-      sweep(edgeCkpt)
       if (nodes.isEmpty) {
         def id(x: Long): Any =
           if (idType == org.apache.spark.sql.types.IntegerType) x.toInt else x
@@ -1817,12 +1813,11 @@ object Dedup {
       }
       val labelDf = touched.toSeq.map(x => (x, find(x)))
         .toDF("__uid", "__cl")
-      // the nodes ∪ endpoints universe, WITHOUT referencing `e` — the
-      // edge checkpoint was just swept, and the endpoints are already on
-      // the driver (`touched`); labels cast BACK to the universe's id
-      // type (roots are member ids, so the narrowing cast is lossless —
-      // the iterative path's min(lbl) stays in that type, and so must
-      // this one)
+      // the nodes ∪ endpoints universe from the endpoints already on the
+      // driver (`touched`), not a second edge scan; labels cast BACK to
+      // the universe's id type (roots are member ids, so the narrowing
+      // cast is lossless — the iterative path's min(lbl) stays in that
+      // type, and so must this one)
       return nodes.get.select(col("id").cast(idType).as("id"))
         .union(touched.toSeq.toDF("id")
           .select(col("id").cast(idType).as("id")))
@@ -1833,6 +1828,11 @@ object Dedup {
           coalesce(col("__cl").cast(idType), col("id")).as("cluster_id"))
         .orderBy("id")
     }
+    // the iterative path materializes the (possibly expensive) pair
+    // computation ONCE — the undirected edge list reads it twice (forward
+    // + reversed), and every round reads the adjacency again
+    val (e, edgeCkpt) = pin(edgeIds)
+    val allIds = universe(e)
     val und = e
       .union(e.select(col("dst").as("src"), col("src").as("dst")))
       .union(allIds.select(col("id").as("src"), col("id").as("dst")))

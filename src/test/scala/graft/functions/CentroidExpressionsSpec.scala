@@ -134,17 +134,6 @@ class CentroidExpressionsSpec extends SparkSpec
       "spark.sql.codegen.wholeStage" -> "false",
       "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")))
 
-  private def withConfs[T](confs: Map[String, String])(body: => T): T = {
-    val saved = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    try {
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
-      body
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   test("SQL surface: sizes first, then the concatenated centroid arrays") {
     // set 0 = {7: (0, 0), 3: (2, 0)}, set 1 = {5: (1, 0)}
     val r = spark.sql(

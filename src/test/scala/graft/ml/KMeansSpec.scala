@@ -3,9 +3,7 @@ package graft.ml
 import graft.SparkSpec
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
-import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions.{col, udf}
-import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.storage.StorageLevel
 
 class KMeansSpec extends SparkSpec {
@@ -151,34 +149,6 @@ class KMeansSpec extends SparkSpec {
     val dup = intercept[IllegalArgumentException](
       ModelSelect.sweep(blobs, Seq(3, 2, 3), seed = 1L))
     assert(dup.getMessage.contains("k=3"), dup.getMessage)
-  }
-
-  /** (name, query execution) of every listener action `body` runs, in
-    * order. The listener bus delivers asynchronously, in order: a marker
-    * action (a `count`; every k-means action is a `collect`) seen after
-    * `body`'s proves that all of them were delivered. */
-  private def actionsOf(body: => Unit): Seq[(String, QueryExecution)] = {
-    val actions =
-      new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution,
-                             durationNs: Long): Unit =
-        actions.add((funcName, qe))
-      override def onFailure(funcName: String, qe: QueryExecution,
-                             exception: Exception): Unit =
-        actions.add((funcName, qe))
-    }
-    def seen = actions.toArray(Array.empty[(String, QueryExecution)]).toSeq
-    spark.listenerManager.register(listener)
-    try {
-      body
-      spark.range(1).count()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!seen.exists(_._1 == "count") && System.nanoTime() < deadline)
-        Thread.sleep(20)
-    } finally spark.listenerManager.unregister(listener)
-    assert(seen.exists(_._1 == "count"), "the marker action never arrived")
-    seen.takeWhile(_._1 != "count")
   }
 
   /** An uncached copy of `cloud` and the number of its rows evaluated so

@@ -11,18 +11,15 @@ class BucketingSpec extends SparkSpec {
     val items = (1L to 600L).map(i => (i % 200 + 1, s"i$i")).toDF("key", "i")
     Bucketing.writeBucketed(orders, "b_orders", "key", buckets = 4)
     Bucketing.writeBucketed(items, "b_items", "key", buckets = 4)
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      // tiny test tables would auto-broadcast and bypass the bucketed
-      // path entirely — force the shuffle-join planner to show bucketing
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    // tiny test tables would auto-broadcast and bypass the bucketed path
+    // entirely — force the shuffle-join planner to show bucketing
+    try withConfs(Map("spark.sql.autoBroadcastJoinThreshold" -> "-1")) {
       val joined = Bucketing.coLocatedJoin(spark, "b_orders", "b_items", "key")
       assert(joined.count() == 600)
       val plan = joined.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange"), s"unexpected shuffle in:\n$plan")
       assert(plan.contains("Bucketed: true"), s"bucketing unused in:\n$plan")
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
       spark.sql("DROP TABLE IF EXISTS b_orders")
       spark.sql("DROP TABLE IF EXISTS b_items")
       ()

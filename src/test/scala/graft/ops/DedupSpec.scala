@@ -2,11 +2,10 @@ package graft.ops
 
 import graft.SparkSpec
 import graft.functions.GraftFunctions
-import org.apache.spark.sql.execution.{GenerateExec, QueryExecution}
+import org.apache.spark.sql.execution.GenerateExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.types.{ArrayType, StringType}
-import org.apache.spark.sql.util.QueryExecutionListener
 
 class DedupSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
@@ -237,6 +236,17 @@ class DedupSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(arrayBroadcasts.isEmpty, plan.toString)
   }
 
+  test("minhash verify computes each candidate's intersection once") {
+    import org.apache.spark.sql.catalyst.expressions.ArrayIntersect
+    val d = docs(minhashCorpus(1L): _*)
+    val df = Dedup.minhashPairs(d)
+    assert(df.collect().nonEmpty)
+    val intersects = collect(df.queryExecution.executedPlan) { case p =>
+      p.expressions.map(_.collect { case e: ArrayIntersect => e }.size).sum
+    }.sum
+    assert(intersects == 1, df.queryExecution.executedPlan.toString)
+  }
+
   test("winnowing: shared long passage yields shared fingerprints") {
     val passage = "the quick brown fox jumps over the lazy dog repeatedly " * 3
     val d = docs(
@@ -305,44 +315,31 @@ class DedupSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       Seq((35L, 36L))).toDF("id_a", "id_b")
     val fast = Dedup.connectedComponents(nodes, edges)
       .as[(Long, Long)].collect().toSeq
-    val slow = Dedup.connectedComponents(nodes, edges, maxIter = 20,
-        driverUnionFindMaxEdges = 0L)
-      .as[(Long, Long)].collect().toSeq
-    assert(fast == slow)
+    // 0 skips the driver path; 1 takes it only past the edge collect
+    for (max <- Seq(0L, 1L)) {
+      val slow = Dedup.connectedComponents(nodes, edges, maxIter = 20,
+          driverUnionFindMaxEdges = max)
+        .as[(Long, Long)].collect().toSeq
+      assert(fast == slow, s"driverUnionFindMaxEdges = $max")
+    }
     assert(fast.toMap.apply(31L) == 1L) // 30-31 merged into the chain via 5
   }
 
   test("connected components: a 3-edge call is one SQL execution, the " +
-      "edge pin") {
+      "bounded edge collect") {
     val nodes = Seq(1L, 2L, 3L, 4L, 5L).toDF("id")
     val edges = Seq((1L, 2L), (2L, 3L), (4L, 5L)).toDF("id_a", "id_b")
-    val actions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution,
-                             durationNs: Long): Unit = actions.add(funcName)
-      override def onFailure(funcName: String, qe: QueryExecution,
-                             exception: Exception): Unit =
-        actions.add(funcName)
-    }
-    spark.listenerManager.register(listener)
-    val cc = try {
-      val r = Dedup.connectedComponents(nodes, edges)
-      // the listener bus delivers in order: a marker action (`tail`) seen
-      // after the call's proves that all of them were delivered
-      spark.range(1).tail(1)
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!actions.contains("tail") && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      r
-    } finally spark.listenerManager.unregister(listener)
-    val seen = actions.toArray(Array.empty[String]).toSeq
-    assert(seen.contains("tail"), "the marker action never arrived")
-    // the edge count comes from the pin's own run (an observed metric)
-    // and the driver union-find reads the pinned rows directly: no
-    // `count` and no `collect` of their own
-    assert(seen.takeWhile(_ != "tail") == Seq("localCheckpoint"))
+    var cc: org.apache.spark.sql.DataFrame = null
+    // one collect of at most driverUnionFindMaxEdges + 1 edges picks the
+    // path and feeds the union-find: no pin, no `count` of its own
+    assert(actionsOf { cc = Dedup.connectedComponents(nodes, edges) }
+      .map(_._1) == Seq("collect"))
     assert(cc.as[(Long, Long)].collect().toSeq ==
       Seq((1L, 1L), (2L, 1L), (3L, 1L), (4L, 4L), (5L, 4L)))
+    // past the threshold the same collect sends the edges to the rounds,
+    // which pin their labels
+    assert(actionsOf(Dedup.connectedComponents(nodes, edges,
+      driverUnionFindMaxEdges = 2L)).map(_._1).contains("localCheckpoint"))
   }
 
   test("minhashPairs leaves its signature frame in the session cache " +
@@ -378,10 +375,10 @@ class DedupSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       Seq((35L, 36L))).toDF("id_a", "id_b")
     val want = Dedup.connectedComponents(nodes, edges)
       .filter($"id" =!= $"cluster_id").as[(Long, Long)].collect().toSeq
-    val fast = Dedup.nonRepresentatives(edges)
-    val slow = Dedup.nonRepresentatives(edges, driverUnionFindMaxEdges = 0L)
-    assert(fast.as[(Long, Long)].collect().toSeq == want)
-    assert(slow.as[(Long, Long)].collect().toSeq == want)
+    for (f <- Seq(Dedup.nonRepresentatives(edges),
+        Dedup.nonRepresentatives(edges, driverUnionFindMaxEdges = 0L),
+        Dedup.nonRepresentatives(edges, driverUnionFindMaxEdges = 1L)))
+      assert(f.as[(Long, Long)].collect().toSeq == want)
     // the id type follows the edges on both paths; null endpoints drop
     val edgesI = Seq((Some(3), Some(2)), (Some(2), Some(1)), (Some(4), None))
       .toDF("id_a", "id_b")

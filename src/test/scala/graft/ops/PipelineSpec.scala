@@ -45,9 +45,18 @@ class PipelineSpec extends SparkSpec {
     val b = "it is a fine day and the sun shines over the tall green " +
       "hills for everyone to enjoy in peace"
     val docs = Seq(0L -> a1, 1L -> a2, 2L -> b).toDF("doc_id", "text")
-    val viaMinhash = Pipeline.prepareCorpusWithPairs(docs,
-      Dedup.minhashPairs(docs, n = 3, numHashes = 32, bands = 16,
-        threshold = 0.2)).collect()
+    val pairs = Dedup.minhashPairs(docs, n = 3, numHashes = 32, bands = 16,
+      threshold = 0.2).persist()
+    var viaMinhash = Array.empty[org.apache.spark.sql.Row]
+    try {
+      assert(pairs.count() == 1L)
+      // one bounded collect of the persisted pairs feeds the union-find;
+      // the other jobs are the accounting query's
+      val jobs = jobsOf {
+        viaMinhash = Pipeline.prepareCorpusWithPairs(docs, pairs).collect()
+      }
+      assert(jobs == 4, s"$jobs jobs")
+    } finally spark.catalog.clearCache()
     // the scale-path proposer reaches the same accounting as the exact one
     assert(viaMinhash.map(_.getAs[Long]("n_docs")).sum == 2L)
     assert(viaMinhash.map(_.getAs[Long]("total_tokens")).sum == 40L)

@@ -137,34 +137,11 @@ class SinksSpec extends SparkSpec {
   }
 
   test("sharded export: collecting the returned manifest starts no job") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val df = (0L until 200L).map(i => (i, s"doc$i")).toDF("id", "name")
     val manifest = Sinks.writeShardedWithManifest(df, "id",
       Seq("id", "name"), tmp("shards3") + "/out", numShards = 4)
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    val rows = try {
-      sc.setJobGroup("manifest-collect", "collect the returned manifest")
-      val r = manifest.collect()
-      // the bus delivers in order: once a later sentinel job is seen,
-      // every job of the collect has been seen too
-      sc.setJobGroup("manifest-sentinel", "flush the listener bus")
-      spark.range(1).rdd.count()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!groups.contains("manifest-sentinel") &&
-        System.nanoTime() < deadline) Thread.sleep(20)
-      r
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-    assert(groups.contains("manifest-sentinel"))
-    assert(!groups.contains("manifest-collect"))
+    var rows = Array.empty[org.apache.spark.sql.Row]
+    assert(jobsOf { rows = manifest.collect() } == 0)
     assert(rows.map(_.getLong(1)).sum == 200L)
   }
 
@@ -246,21 +223,11 @@ class SinksSpec extends SparkSpec {
     // again (no second violation — adjacency is pairwise), so 3 total
     val exact = Sinks.sortViolations(spark.read.parquet(dir), "k")
     assert(exact == 3L)
-    val prev = spark.conf.getOption("spark.sql.files.maxPartitionBytes")
-    try {
-      spark.conf.set("spark.sql.files.maxPartitionBytes", "2048")
-      spark.conf.set("spark.sql.files.openCostInBytes", "0")
+    withConfs(Map("spark.sql.files.maxPartitionBytes" -> "2048",
+        "spark.sql.files.openCostInBytes" -> "0")) {
       val split = Sinks.sortViolations(spark.read.parquet(dir), "k")
       assert(split == exact,
         s"split-chopped read counted $split, contiguous read $exact")
-    } finally {
-      prev match {
-        case Some(v) =>
-          spark.conf.set("spark.sql.files.maxPartitionBytes", v)
-        case None =>
-          spark.conf.unset("spark.sql.files.maxPartitionBytes")
-      }
-      spark.conf.unset("spark.sql.files.openCostInBytes")
     }
   }
 

@@ -112,9 +112,7 @@ class SkewSpec extends SparkSpec {
         -> "8KB",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "4KB",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
-    val saved = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    try {
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    withConfs(confs) {
       val li = spark.read
         .parquet("/root/testdata/sf0.01/lineitem.parquet")
       val sup = spark.read
@@ -138,9 +136,6 @@ class SkewSpec extends SparkSpec {
       val hotNation = got.maxBy(_._2)
       assert(hotNation._2 * 10 >= total * 9,
         s"plant failed: $hotNation of $total")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 }

@@ -17,6 +17,9 @@ class StreamingSpec extends SparkSpec {
   private def ev(user: Long, tsNs: Long, typ: String = "view",
                  value: Double = 1.0) = Event(user, tsNs, typ, value)
 
+  private val rocksDb = Map("spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+
   private def withQuery[T](q: StreamingQuery)(f: => T): T =
     try f finally q.stop()
 
@@ -209,12 +212,7 @@ class StreamingSpec extends SparkSpec {
       "event time, and the output matches the v1 state machine") {
     implicit val ctx = spark.sqlContext
     val M = 60L * 1000000000L
-    val saved = spark.conf
-      .getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
-    try {
+    withConfs(rocksDb) {
       val in = MemoryStream[Event]
       val q = EventStreams.sessionizeWithStateV2(in.toDF(),
           gapUs = 30L * 60 * 1000000, delay = "10 minutes")
@@ -240,11 +238,6 @@ class StreamingSpec extends SparkSpec {
           EventStreams.SessionOut(2L, (base + 2 * 60 * M) / 1000,
             (base + 2 * 60 * M) / 1000, 1L, 1.0)), out.toString)
       }
-    } finally saved match {
-      case Some(v) => spark.conf
-        .set("spark.sql.streaming.stateStore.providerClass", v)
-      case None => spark.conf
-        .unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
@@ -689,21 +682,13 @@ class StreamingSpec extends SparkSpec {
       "state-backend law — the provider is a deployment dial, never a " +
       "semantic choice)") {
     val src = "/root/testdata/sf0.001"
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(key)
     val default = EventStreams.closedSessionCensusViaStream(spark, src)
       .as[(Long, Long, Long, Long)].collect().toSeq
-    try {
-      spark.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state." +
-          "RocksDBStateStoreProvider")
+    withConfs(rocksDb) {
       val rocks = EventStreams.closedSessionCensusViaStream(spark, src)
         .as[(Long, Long, Long, Long)].collect().toSeq
       assert(rocks == default)
       assert(default.nonEmpty)
-    } finally saved match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 

@@ -12,6 +12,11 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
+# one session posture: graft.Session is the only SparkSession builder
+drift=$(git grep -l 'SparkSession.builder' -- src |
+  grep -vx src/main/scala/graft/Session.scala || true)
+[ -z "$drift" ] || { echo "[precommit] SESSION BUILDER DRIFT: $drift"; exit 1; }
+
 echo "[precommit] sbt compile + Test/compile"
 sbt -batch ";compile;Test/compile" 2>&1 | tail -3
 

@@ -326,20 +326,23 @@ class DedupSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("connected components: a 3-edge call is one SQL execution, the " +
-      "bounded edge collect") {
+      "edge pin") {
     val nodes = Seq(1L, 2L, 3L, 4L, 5L).toDF("id")
     val edges = Seq((1L, 2L), (2L, 3L), (4L, 5L)).toDF("id_a", "id_b")
     var cc: org.apache.spark.sql.DataFrame = null
-    // one collect of at most driverUnionFindMaxEdges + 1 edges picks the
-    // path and feeds the union-find: no pin, no `count` of its own
+    // below the threshold the one execution is a collect of at most
+    // driverUnionFindMaxEdges + 1 edges: it picks the path and feeds the
+    // union-find, with no edge pin and no `count` of its own
     assert(actionsOf { cc = Dedup.connectedComponents(nodes, edges) }
       .map(_._1) == Seq("collect"))
     assert(cc.as[(Long, Long)].collect().toSeq ==
       Seq((1L, 1L), (2L, 1L), (3L, 1L), (4L, 4L), (5L, 4L)))
-    // past the threshold the same collect sends the edges to the rounds,
-    // which pin their labels
-    assert(actionsOf(Dedup.connectedComponents(nodes, edges,
-      driverUnionFindMaxEdges = 2L)).map(_._1).contains("localCheckpoint"))
+    // past the threshold the same collect sends the edges to the rounds:
+    // the edge pin comes next, over the (src, dst) edge list
+    val past = actionsOf(Dedup.connectedComponents(nodes, edges,
+      driverUnionFindMaxEdges = 2L))
+    assert(past.take(2).map(_._1) == Seq("collect", "localCheckpoint"))
+    assert(past(1)._2.analyzed.output.map(_.name) == Seq("src", "dst"))
   }
 
   test("minhashPairs leaves its signature frame in the session cache " +

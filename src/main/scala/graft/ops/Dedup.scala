@@ -352,7 +352,7 @@ object Dedup {
     */
   def contaminationCoverage(corpus: DataFrame, benchmark: DataFrame,
                             n: Int = 3): DataFrame = {
-    require(n >= 1, "n must be >= 1")
+    require(n >= 1, s"n must be >= 1, got $n")
     // positional grams via the ONE shared construction (Text
     // .positionalGrams — it owns the generate-pushdown discipline this
     // operator's 8.5 s → 1.7 s fix established)
@@ -392,9 +392,9 @@ object Dedup {
   def benchmarkContainment(corpus: DataFrame, benchmark: DataFrame,
                            n: Int = 3,
                            minPermille: Long = 800L): DataFrame = {
-    require(n >= 1, "n must be >= 1")
+    require(n >= 1, s"n must be >= 1, got $n")
     require(minPermille >= 1 && minPermille <= 1000,
-      "minPermille must be in [1, 1000]")
+      s"minPermille must be in [1, 1000], got $minPermille")
     val c = shingleSets(corpus, n)
       .select(col("doc_id").as("corpus_id"),
         explode(col("shingles")).as("item"))
@@ -425,39 +425,6 @@ object Dedup {
                    maxDf: Long = 10000L): DataFrame =
     pairsBySetOverlap(shingleSets(documents, n), "shingles", threshold, maxDf)
 
-  /** `jaccardPairs` with PREFIX FILTERING (the AllPairs/PPJoin device —
-    * Bayardo et al. WWW'07; Xiao et al. WWW'08): order every document's
-    * shingles by one global (df asc, shingle) canonical order, index only
-    * each document's first `sz − ⌈t·sz⌉ + 1` shingles, and generate
-    * candidates from the PREFIX postings alone — if J(x, y) ≥ t, the two
-    * prefixes must share at least one shingle under any common total
-    * order, so the candidate set provably contains every qualifying pair.
-    * Candidates are then verified with EXACT intersection on the full
-    * sets, so the output equals `jaccardPairs` at the same threshold
-    * verbatim (q298 runs against the exact q22 oracle).
-    *
-    * Why it exists next to the df-cap: the cap bounds the quadratic
-    * blowup by DROPPING hot shingles (changes the score's universe);
-    * prefix filtering is LOSSLESS — at t = 0.8 only ~20% of each
-    * posting list is indexed and the hottest (highest-df) shingles land
-    * at the END of the canonical order, exactly where prefixes rarely
-    * reach, so the candidate join shrinks without touching semantics.
-    * The two compose: the cap stays available as the skew rail.
-    *
-    * Scale shape: the df census and rarest-first rank are a partial agg
-    * plus a per-document window (partitions bounded by document size,
-    * never corpus size); the candidate join is keyed on the prefix
-    * shingle (posting lists ≤ the full index's, typically ≪); the
-    * verify stage is PAYLOAD-LIGHT (r17 verdict item 1) — Jaccard needs
-    * only |A∩B| and the two set sizes, so the full postings are
-    * semi-joined down to docs appearing in some candidate pair and the
-    * intersection is a partial-agg COUNT keyed on the pair (the
-    * `containmentPairs` device): the verify shuffle carries
-    * (id_a, id_b, partial count) rows, never KB-sized shingle arrays
-    * (the r17 form shipped full arrays per pair and was the lone
-    * super-output x64 row — 121× wall for 64× output, OOM at the
-    * default heap).
-    */
   /** Exact-dup rate under each CANONICALIZATION variant — the
     * sensitivity table behind the q21 fingerprint choice: raw bytes,
     * lowercase, whitespace-collapse, and the composed form (the q21
@@ -563,23 +530,13 @@ object Dedup {
                         maxDf: Long = 10000L): DataFrame = {
     require(thresholdsPm.nonEmpty &&
         thresholdsPm.forall(t => t >= 1 && t <= 1000),
-      "thresholds are permille in [1, 1000]")
+      "thresholds are permille in [1, 1000], got " +
+        thresholdsPm.mkString(", "))
     val ts = thresholdsPm.distinct.sorted
     val (items, sizes) =
       cappedInvertedIndex(shingleSets(documents, n), "shingles", maxDf)
-    // pair-census agg pinned wide — the pairsBySetOverlapUnordered
-    // rationale
-    val scored = wideBy(items.as("x")
-        .join(items.as("y"),
-          col("x.item") === col("y.item") && col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b")),
-        col("id_a"), col("id_b"))
-      .groupBy("id_a", "id_b")
-      .agg(count(lit(1)).as("inter"))
-      .join(sizes.select(col("doc_id").as("id_a"), col("sz").as("sz_a")),
-        "id_a")
-      .join(sizes.select(col("doc_id").as("id_b"), col("sz").as("sz_b")),
-        "id_b")
+    val scored = withSizes(postingsCensus(items, items, undirected), sizes,
+        sizes)
       .withColumn("jac_pm",
         expr("inter * 1000 div (sz_a + sz_b - inter)"))
       .filter(col("jac_pm") >= ts.head)
@@ -603,9 +560,42 @@ object Dedup {
       .orderBy("t_pm")
   }
 
+  /** `jaccardPairs` with PREFIX FILTERING (the AllPairs/PPJoin device —
+    * Bayardo et al. WWW'07; Xiao et al. WWW'08): order every document's
+    * shingles by one global (df asc, shingle) canonical order, index only
+    * each document's first `sz − ⌈t·sz⌉ + 1` shingles, and generate
+    * candidates from the PREFIX postings alone — if J(x, y) ≥ t, the two
+    * prefixes must share at least one shingle under any common total
+    * order, so the candidate set provably contains every qualifying pair.
+    * Candidates are then verified with EXACT intersection on the full
+    * sets, so the output equals `jaccardPairs` at the same threshold
+    * verbatim (q298 runs against the exact q22 oracle).
+    *
+    * Why it exists next to the df-cap: the cap bounds the quadratic
+    * blowup by DROPPING hot shingles (changes the score's universe);
+    * prefix filtering is LOSSLESS — at t = 0.8 only ~20% of each
+    * posting list is indexed and the hottest (highest-df) shingles land
+    * at the END of the canonical order, exactly where prefixes rarely
+    * reach, so the candidate join shrinks without touching semantics.
+    * The two compose: the cap stays available as the skew rail.
+    *
+    * Scale shape: the df census and rarest-first rank are a partial agg
+    * plus a per-document window (partitions bounded by document size,
+    * never corpus size); the candidate join is keyed on the prefix
+    * shingle (posting lists ≤ the full index's, typically ≪); the
+    * verify stage is PAYLOAD-LIGHT (r17 verdict item 1) — Jaccard needs
+    * only |A∩B| and the two set sizes, so the full postings are
+    * semi-joined down to docs appearing in some candidate pair and the
+    * intersection is a partial-agg COUNT keyed on the pair
+    * (`countVerify` over the shared `postingsCensus`): the verify
+    * shuffle carries (id_a, id_b, partial count) rows, never KB-sized
+    * shingle arrays (the r17 form shipped full arrays per pair and was
+    * the lone super-output x64 row — 121× wall for 64× output, OOM at
+    * the default heap).
+    */
   def jaccardPairsPrefix(documents: DataFrame, n: Int = 3,
                          threshold: Double = 0.2): DataFrame = {
-    require(threshold > 0 && threshold <= 1, "need 0 < threshold <= 1")
+    val tpm = prefixPermille(threshold)
     val sets = shingleSets(documents, n)
       .filter(size(col("shingles")) > 0)
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -613,33 +603,15 @@ object Dedup {
     // this cache; an unforced persist materializing inside one job is
     // computed once per concurrent subtree (cache-population race)
     sets.count()
-    val items = sets.select(col("doc_id"), explode(col("shingles")).as("item"))
+    val (items, sizes) = postingsOf(sets)
     val dfc = items.groupBy("item").agg(count(lit(1)).as("__df"))
-    val wDoc = org.apache.spark.sql.expressions.Window
-      .partitionBy("doc_id").orderBy(col("__df"), col("item"))
-    // prefix length sz − ⌈t·sz⌉ + 1 with the ceiling in INTEGER permille
-    // arithmetic: a double ceil(0.2 · sz) can land one above the true
-    // ceiling (0.2 is not binary-exact), silently shortening the prefix
-    // — and a too-short prefix LOSES qualifying pairs. The permille
-    // quantization itself must round DOWN: floor keeps tpm/1000 ≤ t, so
-    // ceil(tpm·sz/1000) ≤ ceil(t·sz) and the prefix stays ≥ the lossless
-    // length (round() could round UP — 0.1995 → 200‰ — overshooting the
-    // true ceiling and dropping qualifying pairs); the verify stage
-    // filters on the exact double threshold, so a longer prefix only
-    // costs candidates, never correctness
-    val tpm = math.floor(threshold * 1000).toLong
     // width-pinned before the rank window: the per-doc sort is
     // CPU-bound on small bytes and the window reuses this exchange;
     // unlike the index-build path (whose window feeds a bucketed WRITE
-    // and must stay narrow — see prefixUnderCensus) this output lands
+    // and must stay narrow — see rankedByFrozen) this output lands
     // in a persist, so the pin has no file fan-out to pay
-    val prefix = wideBy(items.join(dfc, "item"), col("doc_id"))
-      .withColumn("__pos", row_number().over(wDoc))
-      .join(sets.select(col("doc_id"),
-        size(col("shingles")).cast("long").as("__sz")), "doc_id")
-      .filter(col("__pos") <=
-        col("__sz") - expr(s"(${tpm}L * __sz + 999L) div 1000L") + 1)
-      .select(col("doc_id"), col("item"))
+    val prefix = prefixUnderCensus(
+        wideBy(items.join(dfc, "item"), col("doc_id")), sizes, tpm)
       // item-hashed at full width before the cache: the candidate
       // self-join below is CPU-quadratic per shingle group and must not
       // be byte-coalesced (see wideBy)
@@ -648,14 +620,7 @@ object Dedup {
     // force: the candidate self-join reads prefix from TWO subtrees —
     // unforced, the posting build ran once per side inside cand's job
     prefix.count()
-    // candidate dedup pinned wide (the pair-census rationale: near-unique
-    // pair keys, byte-coalescing must not serialize the distinct)
-    val cand = wideBy(prefix.as("x")
-        .join(prefix.as("y"),
-          col("x.item") === col("y.item") &&
-            col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b")),
-        col("id_a"), col("id_b"))
+    val cand = sharedItemPairs(prefix, prefix, undirected, PairIds)
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
     // force the candidate set NOW so the corpus-sized prefix postings can
@@ -667,37 +632,14 @@ object Dedup {
     // cand recomputes from lineage (slower, still correct).
     cand.count()
     prefix.unpersist(blocking = false)
-    // payload-light exact verify: restrict the FULL postings to docs in
-    // some candidate pair (a semi-join — no payload widening), count
-    // shared shingles per pair by partial agg, then join the two set
-    // sizes. Every candidate pair shares ≥1 prefix shingle, so the
-    // inner join against the counts drops nothing; pairs co-occurring
-    // only outside the candidate set are pruned by the join with `cand`.
+    // the verify reads the FULL postings of docs in some candidate pair
+    // (a semi-join — no payload widening), one frame for both sides
     val candDocs = cand.select(col("id_a").as("doc_id"))
       .union(cand.select(col("id_b").as("doc_id")))
       .distinct()
     val post = items.join(candDocs, Seq("doc_id"), "left_semi")
-    val nInter = wideBy(post.as("x")
-        .join(post.as("y"),
-          col("x.item") === col("y.item") && col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b")),
-        col("id_a"), col("id_b"))
-      .groupBy("id_a", "id_b")
-      .agg(count(lit(1)).as("__inter"))
-    val sizes = sets.select(col("doc_id"),
-      size(col("shingles")).cast("long").as("__sz"))
-    cand
-      .join(nInter, Seq("id_a", "id_b"))
-      .join(sizes.select(col("doc_id").as("id_a"),
-        col("__sz").as("__sza")), "id_a")
-      .join(sizes.select(col("doc_id").as("id_b"),
-        col("__sz").as("__szb")), "id_b")
-      .withColumn("jaccard",
-        col("__inter") /
-          (col("__sza") + col("__szb") - col("__inter")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
-      .orderBy("id_a", "id_b")
+    countVerify(cand, post, post, sizes, sizes, undirected, PairIds,
+      threshold)
   }
 
   /** INCREMENTAL near-dup detection: the NEW drop checked against the
@@ -725,35 +667,22 @@ object Dedup {
   def jaccardAgainstHistoryPrefix(documents: DataFrame,
                                   historyIds: DataFrame, n: Int = 3,
                                   threshold: Double = 0.2): DataFrame = {
-    require(threshold > 0 && threshold <= 1, "need 0 < threshold <= 1")
+    val tpm = prefixPermille(threshold)
     val sets = shingleSets(documents, n)
       .filter(size(col("shingles")) > 0)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val hist = historyIds.select(col("doc_id")).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val items = sets.select(col("doc_id"), explode(col("shingles")).as("item"))
+    val (items, sizes) = postingsOf(sets)
     val dfc = items.groupBy("item").agg(count(lit(1)).as("__df"))
-    val wDoc = org.apache.spark.sql.expressions.Window
-      .partitionBy("doc_id").orderBy(col("__df"), col("item"))
-    // lossless floor-permille prefix length — the q298 arithmetic
-    val tpm = math.floor(threshold * 1000).toLong
     // width-pinned before the rank window (the jaccardPairsPrefix
     // note: persist-bound output, no write fan-out)
-    val prefix = wideBy(items.join(dfc, "item"), col("doc_id"))
-      .withColumn("__pos", row_number().over(wDoc))
-      .join(sets.select(col("doc_id"),
-        size(col("shingles")).cast("long").as("__sz")), "doc_id")
-      .filter(col("__pos") <=
-        col("__sz") - expr(s"(${tpm}L * __sz + 999L) div 1000L") + 1)
-      .select(col("doc_id"), col("item"))
+    val prefix = prefixUnderCensus(
+        wideBy(items.join(dfc, "item"), col("doc_id")), sizes, tpm)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val prefNew = prefix.join(hist, Seq("doc_id"), "left_anti")
     val prefHist = prefix.join(hist, Seq("doc_id"), "left_semi")
-    // candidate dedup pinned wide (the pair-census rationale)
-    val cand = wideBy(prefNew.as("x")
-        .join(prefHist.as("y"), col("x.item") === col("y.item"))
-        .select(col("x.doc_id").as("new_id"), col("y.doc_id").as("hist_id")),
-        col("new_id"), col("hist_id"))
+    val cand = sharedItemPairs(prefNew, prefHist, crossSide, CrossIds)
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
     // force candidates, release the postings + history-id caches (dead
@@ -767,27 +696,8 @@ object Dedup {
     val postHist = items.join(
       cand.select(col("hist_id").as("doc_id")).distinct(),
       Seq("doc_id"), "left_semi")
-    val nInter = wideBy(postNew.as("x")
-        .join(postHist.as("y"), col("x.item") === col("y.item"))
-        .select(col("x.doc_id").as("new_id"), col("y.doc_id").as("hist_id")),
-        col("new_id"), col("hist_id"))
-      .groupBy("new_id", "hist_id")
-      .agg(count(lit(1)).as("__inter"))
-    val sizes = sets.select(col("doc_id"),
-      size(col("shingles")).cast("long").as("__sz"))
-    cand
-      .join(nInter, Seq("new_id", "hist_id"))
-      .join(sizes.select(col("doc_id").as("new_id"),
-        col("__sz").as("__sza")), "new_id")
-      .join(sizes.select(col("doc_id").as("hist_id"),
-        col("__sz").as("__szb")), "hist_id")
-      .withColumn("jaccard",
-        col("__inter") /
-          (col("__sza") + col("__szb") - col("__inter")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("new_id"), col("hist_id"),
-        round(col("jaccard"), 4).as("jaccard"))
-      .orderBy("new_id", "hist_id")
+    countVerify(cand, postNew, postHist, sizes, sizes, crossSide, CrossIds,
+      threshold)
   }
 
   /** ---- Near-dup index LIFECYCLE (q374/q375/q376) ----
@@ -823,31 +733,65 @@ object Dedup {
     * to requalify (= rebuild under a fresh census).
     */
 
-  /** Prefix postings of `items` under the census `dfc` (item, __df) —
-    * the one prefix-under-a-frozen-order construction shared by index
-    * build, append, and query (they MUST agree or the shared-total-order
-    * lossless guarantee breaks). `tpm` is the floor-permille threshold
-    * (the q298 integer-ceiling arithmetic).
+  /** The one prefix builder, shared by the in-memory operators
+    * (`jaccardPairsPrefix`, `jaccardAgainstHistoryPrefix`) and the index
+    * lifecycle (build, append, query): each document's first
+    * `sz − ⌈t·sz⌉ + 1` items in the canonical (df asc, item) order. All
+    * postings compared against each other MUST come from one census, or
+    * the shared-total-order lossless guarantee breaks.
+    *
+    * `ranked` is the (doc_id, item, __df) frame of the items already
+    * joined to that census, so its partitioning stays the caller's
+    * measured choice: the in-memory callers pin it `wideBy(doc_id)`
+    * (their prefixes land in a persist), the index callers pass
+    * `rankedByFrozen` unpinned (their prefixes feed bucketed writes).
+    * `tpm` is `prefixPermille(threshold)`; `sizes` is (doc_id, sz).
     */
-  private def prefixUnderCensus(items: DataFrame, sizes: DataFrame,
-                                dfc: DataFrame, tpm: Long): DataFrame = {
+  private def prefixUnderCensus(ranked: DataFrame, sizes: DataFrame,
+                                tpm: Long): DataFrame = {
     val wDoc = org.apache.spark.sql.expressions.Window
       .partitionBy("doc_id")
-      .orderBy(col("__df0"), col("item"))
-    // NOT width-pinned (r20, measured): a wideBy(doc_id) pin here
-    // regressed the whole lifecycle family ~20% — the window exchange
-    // feeds bucketed WRITES downstream, and a 32-partition window fans
-    // each write into width×buckets files whose footer overhead every
-    // later candidate join then pays. The window's own sort is
-    // drop-sized; letting AQE coalesce it is the cheaper shape.
-    items.join(dfc, Seq("item"), "left")
-      .withColumn("__df0", coalesce(col("__df"), lit(0L)))
+      .orderBy(col("__df"), col("item"))
+    ranked
       .withColumn("__pos", row_number().over(wDoc))
       .join(sizes, "doc_id")
       .filter(col("__pos") <=
-        col("__sz") - expr(s"(${tpm}L * __sz + 999L) div 1000L") + 1)
+        col("sz") - expr(s"(${tpm}L * sz + 999L) div 1000L") + 1)
       .select(col("doc_id"), col("item"))
   }
+
+  /** The prefix length's threshold in integer permille. The ceiling
+    * ⌈t·sz⌉ is taken in INTEGER permille arithmetic: a double
+    * ceil(0.2 · sz) can land one above the true ceiling (0.2 is not
+    * binary-exact), silently shortening the prefix — and a too-short
+    * prefix LOSES qualifying pairs. The quantization itself rounds DOWN:
+    * floor keeps tpm/1000 ≤ t, so ceil(tpm·sz/1000) ≤ ceil(t·sz) and the
+    * prefix stays ≥ the lossless length (round() could round UP —
+    * 0.1995 → 200‰ — overshooting the true ceiling and dropping
+    * qualifying pairs); the verify filters on the exact double
+    * threshold, so a longer prefix only costs candidates, never
+    * correctness.
+    */
+  private def prefixPermille(threshold: Double): Long = {
+    require(threshold > 0 && threshold <= 1,
+      s"need 0 < threshold <= 1, got $threshold")
+    math.floor(threshold * 1000).toLong
+  }
+
+  /** `items` ranked against a FROZEN census (item, __df): shingles the
+    * census never saw rank at df 0 — rarest, consistently on every side.
+    *
+    * NOT width-pinned (r20, measured): a wideBy(doc_id) pin here
+    * regressed the whole lifecycle family ~20% — the window exchange
+    * feeds bucketed WRITES downstream, and a 32-partition window fans
+    * each write into width×buckets files whose footer overhead every
+    * later candidate join then pays. The window's own sort is
+    * drop-sized; letting AQE coalesce it is the cheaper shape.
+    */
+  private def rankedByFrozen(items: DataFrame,
+                             frozen: DataFrame): DataFrame =
+    items.join(frozen, Seq("item"), "left")
+      .withColumn("__df", coalesce(col("__df"), lit(0L)))
 
   private def setsItemsSizes(documents: DataFrame, ids: DataFrame,
                              n: Int,
@@ -865,9 +809,7 @@ object Dedup {
       case None => shingleSets(
         documents.join(ids.select("doc_id"), Seq("doc_id"), "left_semi"), n)
     }).filter(size(col("shingles")) > 0)
-    val items = sets.select(col("doc_id"), explode(col("shingles")).as("item"))
-    val sizes = sets.select(col("doc_id"),
-      size(col("shingles")).cast("long").as("__sz"))
+    val (items, sizes) = postingsOf(sets)
     (sets, items, sizes)
   }
 
@@ -881,9 +823,10 @@ object Dedup {
                         indexTable: String, n: Int = 3,
                         threshold: Double = 0.2, buckets: Int = 8,
                         corpusSets: Option[DataFrame] = None): Unit = {
-    require(threshold > 0 && threshold <= 1, "need 0 < threshold <= 1")
-    require(buckets >= 1, "buckets must be >= 1")
-    require(indexTable.nonEmpty, "indexTable must be explicit")
+    val tpm = prefixPermille(threshold)
+    require(buckets >= 1, s"buckets must be >= 1, got $buckets")
+    require(indexTable.nonEmpty,
+      "indexTable must be explicit, got an empty name")
     val (sets, items, sizes) =
       setsItemsSizes(documents, historyIds, n, corpusSets)
     val cached = sets.persist(StorageLevel.MEMORY_AND_DISK)
@@ -896,10 +839,9 @@ object Dedup {
       // side). An r20 attempt to share one in-memory census compute
       // measured ~neutral-to-worse and was reverted.
       val frozen = documents.sparkSession.table(s"${indexTable}_df")
-      val tpm = math.floor(threshold * 1000).toLong
       Bucketing.writeBucketed(
-        prefixUnderCensus(items, sizes, frozen, tpm), indexTable, "item",
-        buckets)
+        prefixUnderCensus(rankedByFrozen(items, frozen), sizes, tpm),
+        indexTable, "item", buckets)
     } finally { cached.unpersist(blocking = false); () }
   }
 
@@ -915,17 +857,16 @@ object Dedup {
                          indexTable: String, n: Int = 3,
                          threshold: Double = 0.2, buckets: Int = 8,
                          corpusSets: Option[DataFrame] = None): Unit = {
-    require(threshold > 0 && threshold <= 1, "need 0 < threshold <= 1")
+    val tpm = prefixPermille(threshold)
     val spark = documents.sparkSession
     val (sets, items, sizes) =
       setsItemsSizes(documents, dropIds, n, corpusSets)
     val cached = sets.persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val frozen = spark.table(s"${indexTable}_df")
-      val tpm = math.floor(threshold * 1000).toLong
       // bucketed APPEND: one new file per bucket, same spec as the build
       // — the table's bucket metadata keeps candidate joins exchange-free
-      prefixUnderCensus(items, sizes, frozen, tpm)
+      prefixUnderCensus(rankedByFrozen(items, frozen), sizes, tpm)
         .write.mode(org.apache.spark.sql.SaveMode.Append)
         .bucketBy(buckets, "item").sortBy("item")
         .format("parquet").saveAsTable(indexTable)
@@ -944,7 +885,7 @@ object Dedup {
                           indexTable: String, n: Int = 3,
                           threshold: Double = 0.2,
                           corpusSets: Option[DataFrame] = None): DataFrame = {
-    require(threshold > 0 && threshold <= 1, "need 0 < threshold <= 1")
+    val tpm = prefixPermille(threshold)
     val spark = documents.sparkSession
     // persist the DROP-sized shingle sets (items + sizes both derive
     // from them — the q53-regression guard); the residents this query
@@ -954,21 +895,14 @@ object Dedup {
       setsItemsSizes(documents, newIds, n, corpusSets)
     newSets.persist(StorageLevel.MEMORY_AND_DISK)
     val frozen = spark.table(s"${indexTable}_df")
-    val tpm = math.floor(threshold * 1000).toLong
-    val index = spark.table(indexTable)
-      .select(col("doc_id").as("hist_id"), col("item"))
-    // candidate dedup pinned wide (the pair-census rationale)
-    val cand = wideBy(prefixUnderCensus(newItems, newSizes, frozen, tpm)
-        .withColumnRenamed("doc_id", "new_id")
-        .join(index, Seq("item"))
-        .select(col("new_id"), col("hist_id")),
-        col("new_id"), col("hist_id"))
+    val cand = sharedItemPairs(
+        prefixUnderCensus(rankedByFrozen(newItems, frozen), newSizes, tpm),
+        spark.table(indexTable), crossSide, CrossIds)
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
     cand.count()
-    // payload-light exact verify — the q298/q371 count device. Full
-    // postings come from `documents` by id (both sides), never from the
-    // prefix-only index.
+    // full postings come from `documents` by id (both sides), never from
+    // the prefix-only index
     val matchedHist = cand.select(col("hist_id").as("doc_id")).distinct()
     val (histSets, histItems, histSizes) =
       setsItemsSizes(documents, matchedHist, n, corpusSets)
@@ -976,25 +910,8 @@ object Dedup {
     val postNew = newItems.join(
       cand.select(col("new_id").as("doc_id")).distinct(),
       Seq("doc_id"), "left_semi")
-    val nInter = wideBy(postNew.as("x")
-        .join(histItems.as("y"), col("x.item") === col("y.item"))
-        .select(col("x.doc_id").as("new_id"), col("y.doc_id").as("hist_id")),
-        col("new_id"), col("hist_id"))
-      .groupBy("new_id", "hist_id")
-      .agg(count(lit(1)).as("__inter"))
-    cand
-      .join(nInter, Seq("new_id", "hist_id"))
-      .join(newSizes.select(col("doc_id").as("new_id"),
-        col("__sz").as("__sza")), "new_id")
-      .join(histSizes.select(col("doc_id").as("hist_id"),
-        col("__sz").as("__szb")), "hist_id")
-      .withColumn("jaccard",
-        col("__inter") /
-          (col("__sza") + col("__szb") - col("__inter")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("new_id"), col("hist_id"),
-        round(col("jaccard"), 4).as("jaccard"))
-      .orderBy("new_id", "hist_id")
+    countVerify(cand, postNew, histItems, newSizes, histSizes, crossSide,
+      CrossIds, threshold)
   }
 
   /** Staleness report for a frozen index census: the current history df
@@ -1179,25 +1096,15 @@ object Dedup {
                        minPermille: Long = 600L,
                        maxDf: Long = 10000L): DataFrame = {
     require(minPermille >= 1 && minPermille <= 1000,
-      "need 1 <= minPermille <= 1000")
+      s"need 1 <= minPermille <= 1000, got $minPermille")
     val (items, sizes) =
       cappedInvertedIndex(shingleSets(documents, n), "shingles", maxDf)
-    // pair-census agg pinned wide — the pairsBySetOverlapUnordered
-    // rationale (near-unique pair keys; byte-targeted coalescing must
-    // not serialize the final agg)
-    val inter = wideBy(items.as("x")
-        .join(items.as("y"),
-          col("x.item") === col("y.item") &&
-            col("x.doc_id") =!= col("y.doc_id"))
-        .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b")),
-        col("id_a"), col("id_b"))
-      .groupBy("id_a", "id_b")
-      .agg(count(lit(1)).as("n_inter"))
-    inter
+    postingsCensus(items, items, directed)
       .join(sizes.select(col("doc_id").as("id_a"), col("sz").as("n_a")),
         "id_a")
-      .filter(col("n_inter") * lit(1000L) >= lit(minPermille) * col("n_a"))
-      .select(col("id_a"), col("id_b"), col("n_inter"), col("n_a"))
+      .filter(col("inter") * lit(1000L) >= lit(minPermille) * col("n_a"))
+      .select(col("id_a"), col("id_b"), col("inter").as("n_inter"),
+        col("n_a"))
       .orderBy("id_a", "id_b")
   }
 
@@ -1236,15 +1143,20 @@ object Dedup {
       .orderBy("source_lo", "source_hi")
   }
 
-  /** Shared inverted-index Jaccard core for jaccardPairs/winnowingPairs.
+  /** The (items, sizes) inverted index of the count-based pair
+    * operators — ONE copy of the hot-shingle guard so the undirected
+    * (`pairsBySetOverlap`), directed (`containmentPairs`) and census
+    * (`dupThresholdSweep`, `minhashAccuracyAudit`) joins can't drift.
+    * Returns the exploded (doc_id, item) postings (df-capped when armed)
+    * and the per-doc surviving-item counts `sz` the scorers divide by.
+    * A `maxDf` below 1 would cap every item away and is rejected.
     *
     * The per-document item sets come from a CPU-heavy native kernel
     * (shingling / per-character Rabin–Karp), and the scoring graph consumes
     * them in three subtrees (both self-join sides + the sizes aggregate).
     * Without materialization Catalyst re-evaluates the kernel per subtree —
     * recorded as the round-3 q53 3× regression — so the kernel output is
-    * pinned with `persist(MEMORY_AND_DISK)`: lazy, but every subtree reads
-    * the same InMemoryRelation, so the kernel still runs exactly once.
+    * pinned with `persist(MEMORY_AND_DISK)` and forced before the fan-out.
     * persist, NOT `localCheckpoint`: checkpoint blocks are executor-local
     * and non-recoverable — one lost executor fails the job on a real
     * cluster — while a lost cached partition recomputes from lineage.
@@ -1264,22 +1176,15 @@ object Dedup {
     * sizes count surviving items (the Jaccard denominator matches the
     * capped universe); uncapped, sizes are a narrow array-size projection.
     */
-  /** Shared (items, sizes) construction for the inverted-index pair
-    * operators — ONE copy of the hot-shingle guard so the undirected
-    * (pairsBySetOverlap) and directed (containmentPairs) joins can't drift.
-    * Returns the exploded (doc_id, item) postings (df-capped when armed)
-    * and the per-doc surviving-item counts the scorers divide by.
-    */
   private def cappedInvertedIndex(sets0: DataFrame, setCol: String,
                                   maxDf: Long): (DataFrame, DataFrame) = {
+    requireMaxDf(maxDf)
     val sets = sets0.persist(StorageLevel.MEMORY_AND_DISK)
     // force before fan-out (cache-population race — the q298 note):
     // postings and sizes both read this cache inside one job
     sets.count()
-    val exploded = sets.select(col("doc_id"), explode(col(setCol)).as("item"))
-    if (maxDf == Long.MaxValue)
-      (exploded,
-        sets.select(col("doc_id"), size(col(setCol)).cast("long").as("sz")))
+    val (exploded, sizes) = postingsOf(sets, setCol)
+    if (maxDf == Long.MaxValue) (exploded, sizes)
     else {
       val overCap = exploded
         .groupBy("item").agg(count(lit(1)).as("df"))
@@ -1292,6 +1197,117 @@ object Dedup {
       (capped, capped.groupBy("doc_id").agg(count(lit(1)).as("sz")))
     }
   }
+
+  private def requireMaxDf(maxDf: Long): Unit =
+    require(maxDf >= 1, s"need maxDf >= 1, got $maxDf")
+
+  /** (doc_id, item) postings and (doc_id, sz) set sizes of a
+    * (doc_id, `setCol`) frame of distinct-item arrays. */
+  private def postingsOf(sets: DataFrame,
+                         setCol: String = "shingles"): (DataFrame, DataFrame) =
+    (sets.select(col("doc_id"), explode(col(setCol)).as("item")),
+      sets.select(col("doc_id"), size(col(setCol)).cast("long").as("sz")))
+
+  /** How the two `doc_id` sides of a shared-item pair join relate:
+    * `undirected` emits each unordered pair of one postings frame once,
+    * `directed` emits both orders, `crossSide` pairs two disjoint frames
+    * (the new drop against history) without an id filter.
+    */
+  private type PairRel = (Column, Column) => Column
+  private val undirected: PairRel = _ < _
+  private val directed: PairRel = _ =!= _
+  private val crossSide: PairRel = (_, _) => lit(true)
+  /** Output id columns of a pair: self-joins and across-sides joins. */
+  private val PairIds = ("id_a", "id_b")
+  private val CrossIds = ("new_id", "hist_id")
+
+  /** One row per (pair, shared item): x ⋈ y on the item under `rel`,
+    * projected to the pair's `ids` plus `carry`, hash-repartitioned on
+    * the pair at the full shuffle width. The census counts these rows;
+    * the prefix candidate joins keep only their distinct pairs.
+    *
+    * Pinned wide (r20): the pair key is near-unique, so the next
+    * aggregate's partial agg reduces almost nothing, and byte-targeted
+    * AQE coalescing serialized the FINAL agg onto 1–4 tasks (measured
+    * 1.3 s → 0.67 s with the pin at sf0.1). The user repartition IS that
+    * agg's exchange (same keys — no second shuffle), just exempt from
+    * coalescing; a 100 TB shuffle keeps its configured width.
+    */
+  private def sharedItemPairs(x: DataFrame, y: DataFrame, rel: PairRel,
+                              ids: (String, String),
+                              carry: Column*): DataFrame = {
+    val (a, b) = ids
+    wideBy(x.as("x")
+        .join(y.as("y"), col("x.item") === col("y.item") &&
+          rel(col("x.doc_id"), col("y.doc_id")))
+        .select(col("x.doc_id").as(a) +: col("y.doc_id").as(b) +: carry: _*),
+      col(a), col(b))
+  }
+
+  /** The shared-postings census behind every count-based near-dup
+    * operator (jaccardPairs/winnowingPairs, containmentPairs,
+    * dupThresholdSweep, minhashAccuracyAudit, the three prefix-candidate
+    * verifies and, weighted, both IDF operators): per pair of documents
+    * sharing an item, `inter` = the number of shared items, or with
+    * `weight` (a column of x's postings) their summed weight. A
+    * partial-agg count keyed on the pair: the shuffle carries
+    * (pair, partial count) rows, never item strings. Each operator then
+    * computes only its own score column from `inter` and the set sizes.
+    */
+  private def postingsCensus(x: DataFrame, y: DataFrame, rel: PairRel,
+                             ids: (String, String) = PairIds,
+                             weight: Option[Column] = None): DataFrame =
+    sharedItemPairs(x, y, rel, ids, weight.map(_.as("__w")).toSeq: _*)
+      .groupBy(ids._1, ids._2)
+      .agg(weight.fold(count(lit(1)))(_ => sum(col("__w"))).as("inter"))
+
+  /** Joins both sides' set sizes, (doc_id, sz) frames, onto a pair frame
+    * as `sz_a` and `sz_b`. */
+  private def withSizes(pairs: DataFrame, sizesA: DataFrame,
+                        sizesB: DataFrame,
+                        ids: (String, String) = PairIds): DataFrame =
+    pairs
+      .join(sizesA.select(col("doc_id").as(ids._1), col("sz").as("sz_a")),
+        ids._1)
+      .join(sizesB.select(col("doc_id").as(ids._2), col("sz").as("sz_b")),
+        ids._2)
+
+  /** Pairs of a census at exact Jaccard |A∩B| / (|A|+|B|−|A∩B|) ≥
+    * `threshold`, rounded to 4 places (the q22 output). */
+  private def jaccardAtLeast(census: DataFrame, sizesA: DataFrame,
+                             sizesB: DataFrame, ids: (String, String),
+                             threshold: Double): DataFrame =
+    withSizes(census, sizesA, sizesB, ids)
+      .withColumn("jaccard",
+        col("inter") / (col("sz_a") + col("sz_b") - col("inter")))
+      .filter(col("jaccard") >= threshold)
+      .select(col(ids._1), col(ids._2), round(col("jaccard"), 4).as("jaccard"))
+
+  /** The exact COUNT verify of a prefix-candidate pair set (q298, q371,
+    * q374–q378): the census over the full postings `x` and `y` —
+    * restricted by the caller to documents in some candidate pair —
+    * joined to the candidates, then exact Jaccard against `threshold`.
+    * Every candidate shares ≥1 prefix item, so the inner join against
+    * the counts drops nothing; pairs co-occurring only outside the
+    * candidate set are pruned by the join with `cand`.
+    *
+    * Why a count and not `minhashPairs`' `size(array_intersect)` over
+    * the candidates' shingle arrays: prefix filtering proposes ~83× as
+    * many candidates as banded MinHash, and at that volume the arrays
+    * cost more than the postings. On the `corpus` seed-3 documents at
+    * t = 0.2 (PLANS.md, jaccardPairsPrefix verify) the array form joins
+    * 13.6 M shingle strings onto the DevScale x1 candidates where the
+    * count moves 0.23 M postings-join rows, and verifies in 4.47 s
+    * against 2.36 s (31.2 s against 14.9 s at x16).
+    */
+  private def countVerify(cand: DataFrame, x: DataFrame, y: DataFrame,
+                          sizesX: DataFrame, sizesY: DataFrame,
+                          rel: PairRel, ids: (String, String),
+                          threshold: Double): DataFrame =
+    jaccardAtLeast(
+        cand.join(postingsCensus(x, y, rel, ids), Seq(ids._1, ids._2)),
+        sizesX, sizesY, ids, threshold)
+      .orderBy(ids._1, ids._2)
 
   private def pairsBySetOverlap(sets0: DataFrame, setCol: String,
                                 threshold: Double, maxDf: Long): DataFrame =
@@ -1309,27 +1325,8 @@ object Dedup {
                                          threshold: Double,
                                          maxDf: Long): DataFrame = {
     val (items, sizes) = cappedInvertedIndex(sets0, setCol, maxDf)
-    // pair-census agg pinned wide (r20): the intersection count's own
-    // exchange carries near-unique (id_a, id_b) keys — partial agg
-    // reduces almost nothing, and byte-targeted AQE coalescing
-    // serialized the FINAL agg onto 1–4 tasks (measured 1.3 s → 0.67 s
-    // with the pin at sf0.1). The user repartition IS the agg's
-    // exchange (same keys — no second shuffle), just exempt from
-    // coalescing; a 100 TB shuffle keeps its configured width.
-    val inter = wideBy(items.as("x")
-        .join(items.as("y"),
-          col("x.item") === col("y.item") && col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b")),
-        col("id_a"), col("id_b"))
-      .groupBy("id_a", "id_b")
-      .agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.select(col("doc_id").as("id_a"), col("sz").as("sz_a")), "id_a")
-      .join(sizes.select(col("doc_id").as("id_b"), col("sz").as("sz_b")), "id_b")
-      .withColumn("jaccard",
-        col("inter") / (col("sz_a") + col("sz_b") - col("inter")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
+    jaccardAtLeast(postingsCensus(items, items, undirected), sizes, sizes,
+      PairIds, threshold)
   }
 
   /** MinHash signature: `numHashes` minima of the Kirsch–Mitzenmacher
@@ -1386,7 +1383,9 @@ object Dedup {
     * equi-joins on doc_id) and scores `size(array_intersect)`, exact
     * because `shingleSets` emits DISTINCT shingles; both set sizes are
     * `size()` of the same arrays. Work is O(candidates × set size), never
-    * the shared-shingle postings of every candidate document. The array
+    * the shared-shingle postings of every candidate document; banding
+    * proposes ~83× fewer candidates than the prefix family, whose
+    * verify counts postings instead (`countVerify`, PLANS.md). The array
     * side of both joins is pinned to a sort-merge join (`hint("merge")`,
     * as in `Skew.skewedJoinCensus`): shingle arrays are the corpus text
     * again, a broadcast of them fails the driver at scale, and a
@@ -2066,19 +2065,8 @@ object Dedup {
     val sets = shingleSets(documents, n)
       .filter(size(col("shingles")) > 0)
     val (items, sizes) = cappedInvertedIndex(sets, "shingles", maxDf)
-    // pair-census agg pinned wide — the pairsBySetOverlapUnordered
-    // rationale
-    val pairs = wideBy(items.as("x")
-        .join(items.as("y"),
-          col("x.item") === col("y.item") && col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b")),
-        col("id_a"), col("id_b"))
-      .groupBy("id_a", "id_b")
-      .agg(count(lit(1)).as("inter"))
-      .join(sizes.select(col("doc_id").as("id_a"), col("sz").as("sz_a")),
-        "id_a")
-      .join(sizes.select(col("doc_id").as("id_b"), col("sz").as("sz_b")),
-        "id_b")
+    val pairs = withSizes(postingsCensus(items, items, undirected), sizes,
+        sizes)
       .withColumn("jaccard_q6",
         expr("inter * 1000000 div (sz_a + sz_b - inter)"))
       .filter(col("jaccard_q6") >= (threshold * 1e6).toLong)
@@ -2124,14 +2112,27 @@ object Dedup {
     */
   def weightedJaccardPairs(documents: DataFrame, n: Int = 3,
                            thresholdQ6: Long = 150000L,
-                           maxDf: Long = 10000L): DataFrame = {
+                           maxDf: Long = 10000L): DataFrame =
+    idfWeightedPairs(documents, n, thresholdQ6, maxDf)._2
+      .orderBy("id_a", "id_b")
+
+  /** The IDF-weighted census shared by `weightedJaccardPairs` and
+    * `weightedJaccardEvidence`: the weighted postings `wi`
+    * (doc_id, item, w) — persisted and forced, for the evidence pass to
+    * re-read — and the unordered qualifying pairs
+    * (id_a, id_b, wjacc_q6). A set's weighted size is its summed weight,
+    * `inter` the summed weight of the shared items.
+    */
+  private def idfWeightedPairs(documents: DataFrame, n: Int,
+                               thresholdQ6: Long,
+                               maxDf: Long): (DataFrame, DataFrame) = {
     require(thresholdQ6 >= 0 && thresholdQ6 <= 1000000L,
-      "thresholdQ6 must be in [0, 1000000]")
+      s"thresholdQ6 must be in [0, 1000000], got $thresholdQ6")
+    requireMaxDf(maxDf)
     val sets = shingleSets(documents, n)
       .filter(size(col("shingles")) > 0)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val items = sets.select(col("doc_id"),
-      explode(col("shingles")).as("item"))
+    val (items, _) = postingsOf(sets)
     val nDocs = sets.agg(count(lit(1)).as("__n"))
     val weights = items.groupBy("item").agg(count(lit(1)).as("__df"))
       .filter(col("__df") <= maxDf)
@@ -2143,31 +2144,18 @@ object Dedup {
       .persist(StorageLevel.MEMORY_AND_DISK)
     // force: docw + both pair-join sides read this cache (q298 note)
     wi.count()
-    val docw = wi.groupBy("doc_id").agg(sum(col("w")).as("tw"))
-    // pair-census agg pinned wide — the pairsBySetOverlapUnordered
-    // rationale (long sums are order-free, so the moved partial agg is
-    // exact)
-    wideBy(wi.as("a")
-        .join(wi.as("b"),
-          col("a.item") === col("b.item") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
-          col("a.w").as("__w")),
-        col("id_a"), col("id_b"))
-      .groupBy("id_a", "id_b")
-      .agg(sum(col("__w")).as("sw"))
-      .join(docw.select(col("doc_id").as("id_a"), col("tw").as("twa")),
-        "id_a")
-      .join(docw.select(col("doc_id").as("id_b"), col("tw").as("twb")),
-        "id_b")
+    val docw = wi.groupBy("doc_id").agg(sum(col("w")).as("sz"))
+    val scored = withSizes(
+        postingsCensus(wi, wi, undirected, weight = Some(col("x.w"))), docw,
+        docw)
       // nullif: a pair whose every shingle is corpus-ubiquitous has
-      // tw = sw = 0 — an undefined score (filtered), not an ANSI error
+      // sz = inter = 0 — an undefined score (filtered), not an ANSI error
       .withColumn("wjacc_q6", expr(
-        "cast(cast(sw as decimal(38,0)) * 1000000" +
-          " div nullif(twa + twb - sw, 0L) as bigint)"))
+        "cast(cast(inter as decimal(38,0)) * 1000000" +
+          " div nullif(sz_a + sz_b - inter, 0L) as bigint)"))
       .filter(col("wjacc_q6") >= thresholdQ6)
       .select(col("id_a"), col("id_b"), col("wjacc_q6"))
-      .orderBy("id_a", "id_b")
+    (wi, scored)
   }
 
   /** EXPLAINABLE near-dup pairs: q330's IDF-weighted Jaccard join with
@@ -2185,55 +2173,20 @@ object Dedup {
                               thresholdQ6: Long = 150000L,
                               maxDf: Long = 10000L,
                               topE: Int = 3): DataFrame = {
-    require(topE >= 1, "topE must be >= 1")
-    val sets = shingleSets(documents, n)
-      .filter(size(col("shingles")) > 0)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val items = sets.select(col("doc_id"),
-      explode(col("shingles")).as("item"))
-    val nDocs = sets.agg(count(lit(1)).as("__n"))
-    val weights = items.groupBy("item").agg(count(lit(1)).as("__df"))
-      .filter(col("__df") <= maxDf)
-      .crossJoin(broadcast(nDocs))
-      .select(col("item"), expr(
-        "cast(round(1000 * ln(cast(__n as double) / cast(__df as double)))" +
-          " as long)").as("w"))
-    val wi = wideBy(items.join(weights, "item"), col("item"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // force: docw + both pair-join sides read this cache (q298 note)
-    wi.count()
-    val docw = wi.groupBy("doc_id").agg(sum(col("w")).as("tw"))
+    require(topE >= 1, s"topE must be >= 1, got $topE")
     // r19: the pair blow-up is never materialized. The old form persisted
     // the full (id_a, id_b, item, w) self-join output — the largest
     // intermediate of the query, cached only so the evidence pass could
-    // re-read it. Instead: pass 1 pipes the self-join straight into the
-    // map-side partial agg (the shuffle carries (id_a, id_b, partial sw),
-    // never the shingle strings), and the evidence pass re-joins ONLY the
-    // docs that appear in a qualifying pair (the q298 payload-light
-    // verify device) — a pair join over a semi-join-bounded posting set,
-    // joined back to `scored` so exactly the qualifying pairs rank their
-    // shared shingles. Same math, same rows.
-    // pair-census agg pinned wide — the pairsBySetOverlapUnordered
-    // rationale
-    val scored = wideBy(wi.as("a")
-        .join(wi.as("b"),
-          col("a.item") === col("b.item") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
-          col("a.w").as("__w")),
-        col("id_a"), col("id_b"))
-      .groupBy("id_a", "id_b")
-      .agg(sum(col("__w")).as("sw"))
-      .join(docw.select(col("doc_id").as("id_a"), col("tw").as("twa")),
-        "id_a")
-      .join(docw.select(col("doc_id").as("id_b"), col("tw").as("twb")),
-        "id_b")
-      .withColumn("wjacc_q6", expr(
-        "cast(cast(sw as decimal(38,0)) * 1000000" +
-          " div nullif(twa + twb - sw, 0L) as bigint)"))
-      .filter(col("wjacc_q6") >= thresholdQ6)
-      .select(col("id_a"), col("id_b"), col("wjacc_q6"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // re-read it. Instead: the census pipes the self-join straight into
+    // the map-side partial agg (the shuffle carries (id_a, id_b,
+    // partial sum), never the shingle strings), and the evidence pass
+    // re-joins ONLY the docs that appear in a qualifying pair (the q298
+    // payload-light verify device) — a pair join over a
+    // semi-join-bounded posting set, joined back to `scored` so exactly
+    // the qualifying pairs rank their shared shingles. Same math, same
+    // rows.
+    val (wi, scored0) = idfWeightedPairs(documents, n, thresholdQ6, maxDf)
+    val scored = scored0.persist(StorageLevel.MEMORY_AND_DISK)
     val candDocs = scored.select(col("id_a").as("doc_id"))
       .union(scored.select(col("id_b").as("doc_id")))
       .distinct()
@@ -2287,7 +2240,8 @@ object Dedup {
   def lshParamPlan(session: org.apache.spark.sql.SparkSession,
                    thresholdNum: Int = 64): DataFrame = {
     require(thresholdNum >= 1 && thresholdNum <= 127,
-      "thresholdNum must be in [1, 127] (threshold = num/128)")
+      s"thresholdNum must be in [1, 127] (threshold = num/128), got " +
+        thresholdNum)
     import session.implicits._
     val combos = for (b <- Seq(4, 8, 16, 32); r <- Seq(2, 4, 8))
       yield (b, r)

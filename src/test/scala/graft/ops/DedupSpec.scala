@@ -236,6 +236,35 @@ class DedupSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(arrayBroadcasts.isEmpty, plan.toString)
   }
 
+  test("prefix-family verify counts shared postings: no exchange ships " +
+      "an array column") {
+    import org.apache.spark.sql.execution.exchange.Exchange
+    // the prefix candidates are ~10² times MinHash's, so their verify
+    // counts postings instead of shipping shingle arrays to each pair
+    // (PLANS.md, the minhashPairs verify measurements)
+    val d = docs(minhashCorpus(2L): _*)
+    val ids = d.select("doc_id").as[Long].collect().sorted
+    val hist = ids.take(ids.length / 2).toSeq.toDF("doc_id")
+    val fresh = ids.drop(ids.length / 2).toSeq.toDF("doc_id")
+    Dedup.neardupIndexBuild(d, hist, "spec_verify_form_index", n = 3,
+      threshold = 0.2, buckets = 4)
+    val verifies = Seq(
+      "jaccardPairsPrefix" -> Dedup.jaccardPairsPrefix(d),
+      "jaccardAgainstHistoryPrefix" ->
+        Dedup.jaccardAgainstHistoryPrefix(d, hist),
+      "jaccardAgainstIndex" ->
+        Dedup.jaccardAgainstIndex(d, fresh, "spec_verify_form_index"))
+    for ((name, df) <- verifies) {
+      assert(df.collect().nonEmpty, name)
+      val plan = df.queryExecution.executedPlan
+      val arrayExchanges = collect(plan) {
+        case e: Exchange
+            if e.output.exists(_.dataType.isInstanceOf[ArrayType]) => e
+      }
+      assert(arrayExchanges.isEmpty, s"$name: $plan")
+    }
+  }
+
   test("minhash verify computes each candidate's intersection once") {
     import org.apache.spark.sql.catalyst.expressions.ArrayIntersect
     val d = docs(minhashCorpus(1L): _*)
@@ -1238,5 +1267,38 @@ class DedupSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         thresholdsPm = Seq(100, 900))
       .as[(Int, Long, Long)].collect().toSeq
     assert(got == Seq((100, 0L, 0L), (900, 0L, 0L)))
+  }
+
+  test("a maxDf below 1 is rejected with the value in the message") {
+    val e = intercept[IllegalArgumentException] {
+      Dedup.jaccardPairs(docs("a b c d", "a b c e"), maxDf = 0)
+    }
+    assert(e.getMessage.contains("got 0"), e.getMessage)
+  }
+
+  test("the postings census's consumers agree on a seeded corpus") {
+    val d = docs(minhashCorpus(3L): _*)
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.select("id_a", "id_b").as[(Long, Long)].collect().toSeq
+    val sweep = Dedup.dupThresholdSweep(d, n = 3,
+        thresholdsPm = Seq(200, 500, 800), maxDf = 1000L)
+      .as[(Int, Long, Long)].collect().toSeq
+    for ((t, nPairs, _) <- sweep) {
+      val exact = Dedup.jaccardPairs(d, n = 3, threshold = t / 1000.0,
+        maxDf = 1000L).count()
+      assert(nPairs == exact, s"t=$t")
+    }
+    assert(sweep.head._2 > sweep.last._2 && sweep.last._2 > 0, sweep)
+    val audit = Dedup.minhashAccuracyAudit(d, n = 3, threshold = 0.2,
+      maxDf = 1000L)
+    val exact = pairs(Dedup.jaccardPairs(d, n = 3, threshold = 0.2,
+      maxDf = 1000L))
+    assert(exact.nonEmpty && pairs(audit) == exact)
+    val weighted = Dedup.weightedJaccardPairs(d, n = 3)
+      .as[(Long, Long, Long)].collect().toSeq
+    val evidence = Dedup.weightedJaccardEvidence(d, n = 3)
+      .select("id_a", "id_b", "wjacc_q6").as[(Long, Long, Long)]
+      .collect().toSeq
+    assert(weighted.nonEmpty && evidence == weighted)
   }
 }

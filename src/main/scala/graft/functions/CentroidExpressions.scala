@@ -4,7 +4,8 @@ import scala.reflect.ClassTag
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
 
 /** The two 2-D centroid scans, each written once: the SQL kernels below
@@ -194,187 +195,147 @@ case class CentroidSilhouette2D(left: Expression, right: Expression,
     copy(left = newLeft, right = newRight)
 }
 
-/** Vector (array<double>) nearest-centroid, same codegen-stability story as
-  * [[NearestCentroid2D]], for the IVF coarse quantizer's Lloyd loop
-  * (ml.KMeansVec). Distances are Σ(x_i−c_i)² over the common prefix; scan
-  * in centroid order, strict `<`, first minimum wins.
+/** The vector centroid scans, each written once — the [[CentroidScan]]
+  * discipline for array<double> vectors: [[NearestVecCentroid]] and
+  * [[TopKVecCentroids]] call them from `nullSafeEval` and from their
+  * generated code alike. Row `c` of `cs` is the centroid whose idx is
+  * `idxs(c)`; its distance to `x` is Σ(x_i−c_i)² over the common prefix.
+  * Rows are scanned in order with a strict `<`, so at equal distance the
+  * earlier row wins, and a NaN distance never displaces anything.
   */
-case class NearestVecCentroid(child: Expression, idxs: Seq[Int],
-                              centroids: Seq[Seq[Double]])
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  require(idxs.nonEmpty && idxs.length == centroids.length,
-    "graft_nearest_vec_centroid needs equal-length non-empty centroid arrays")
+object VecCentroidScan {
 
-  @transient private lazy val idxArr: Array[Int] = idxs.toArray
-  @transient private lazy val cMat: Array[Array[Double]] =
-    centroids.map(_.toArray).toArray
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case org.apache.spark.sql.types.ArrayType(DoubleType, _) =>
-      TypeCheckResult.TypeCheckSuccess
-    case _ => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires an array<double> argument")
+  private def sqDist(x: ArrayData, c: Array[Double]): Double = {
+    val n = math.min(x.numElements(), c.length)
+    var s = 0.0
+    var i = 0
+    while (i < n) {
+      val dx = x.getDouble(i) - c(i)
+      s += dx * dx
+      i += 1
+    }
+    s
   }
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "graft_nearest_vec_centroid"
 
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    var best = idxArr(0)
+  /** Idx of the nearest centroid; a vector whose every distance is NaN
+    * goes to `idxs(0)`. */
+  def nearest(x: ArrayData, idxs: Array[Int],
+              cs: Array[Array[Double]]): Int = {
+    var best = idxs(0)
     var bd = Double.PositiveInfinity
     var c = 0
-    while (c < cMat.length) {
-      val cv = cMat(c)
-      val n = math.min(x.numElements(), cv.length)
-      var s = 0.0
-      var i = 0
-      while (i < n) {
-        val dx = x.getDouble(i) - cv(i)
-        s += dx * dx
-        i += 1
-      }
-      if (s < bd) { bd = s; best = idxArr(c) }
+    while (c < cs.length) {
+      val s = sqDist(x, cs(c))
+      if (s < bd) { bd = s; best = idxs(c) }
       c += 1
     }
     best
   }
 
+  /** Idxs of the min(k, |cs|) nearest centroids, nearest first, kept in a
+    * k-element insertion buffer; slots no finite distance reached hold 0. */
+  def topK(x: ArrayData, idxs: Array[Int], cs: Array[Array[Double]],
+           k: Int): Array[Int] = {
+    val kk = math.min(k, cs.length)
+    val bd = Array.fill(kk)(Double.PositiveInfinity)
+    val bi = new Array[Int](kk)
+    var c = 0
+    while (c < cs.length) {
+      val s = sqDist(x, cs(c))
+      if (s < bd(kk - 1)) {
+        var p = kk - 1
+        while (p > 0 && s < bd(p - 1)) {
+          bd(p) = bd(p - 1); bi(p) = bi(p - 1); p -= 1
+        }
+        bd(p) = s; bi(p) = idxs(c)
+      }
+      c += 1
+    }
+    bi
+  }
+}
+
+/** Shared shape of the vector centroid kernels: an array<double> child
+  * against a centroid matrix with one idx per row. Same codegen-stability
+  * story as [[CentroidSetsKernel]]: the matrix and idxs ride
+  * `ctx.addReferenceObj` into a static [[VecCentroidScan]] call, so the
+  * generated source is byte-identical for any centroid set and list count.
+  */
+abstract class VecCentroidKernel extends UnaryExpression {
+  def idxs: Seq[Int]
+  def centroids: Seq[Seq[Double]]
+
+  /** Called from each subclass body (see [[CentroidSetsKernel]]). */
+  protected def requireCentroids(): Unit =
+    require(idxs.nonEmpty && idxs.length == centroids.length,
+      s"$prettyName needs equal-length non-empty centroid arrays")
+
+  @transient protected lazy val idxArr: Array[Int] = idxs.toArray
+  @transient protected lazy val cMat: Array[Array[Double]] =
+    centroids.map(_.toArray).toArray
+
+  /** Generated code: `call(x, idxs, matrix)` on the non-null child. */
+  protected def scanCode(ctx: CodegenContext, ev: ExprCode)(
+      call: (String, String, String) => String): ExprCode = {
+    val idxRef = ctx.addReferenceObj("cidxs", idxArr, "int[]")
+    val matRef = ctx.addReferenceObj("cmat", cMat, "double[][]")
+    defineCodeGen(ctx, ev, a => call(a, idxRef, matRef))
+  }
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
+    case _ => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires an array<double> argument")
+  }
+}
+
+/** Vector nearest-centroid for the IVF coarse quantizer's Lloyd loop
+  * (ml.KMeansVec): the idx of [[VecCentroidScan.nearest]].
+  */
+case class NearestVecCentroid(child: Expression, idxs: Seq[Int],
+                              centroids: Seq[Seq[Double]])
+    extends VecCentroidKernel {
+  requireCentroids()
+
+  override def dataType: DataType = IntegerType
+  override def prettyName: String = "graft_nearest_vec_centroid"
+
+  override def nullSafeEval(a: Any): Any =
+    VecCentroidScan.nearest(a.asInstanceOf[ArrayData], idxArr, cMat)
+
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val idxRef = ctx.addReferenceObj("cidxs", idxArr, "int[]")
-      val matRef = ctx.addReferenceObj("cmat", cMat, "double[][]")
-      val c = ctx.freshName("c")
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val dx = ctx.freshName("dx")
-      val cv = ctx.freshName("cv")
-      val best = ctx.freshName("best")
-      val bd = ctx.freshName("bd")
-      s"""
-         |int $best = $idxRef[0];
-         |double $bd = Double.POSITIVE_INFINITY;
-         |for (int $c = 0; $c < $matRef.length; $c++) {
-         |  final double[] $cv = $matRef[$c];
-         |  final int $n = java.lang.Math.min($a.numElements(), $cv.length);
-         |  double $s = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    final double $dx = $a.getDouble($i) - $cv[$i];
-         |    $s += $dx * $dx;
-         |  }
-         |  if ($s < $bd) { $bd = $s; $best = $idxRef[$c]; }
-         |}
-         |${ev.value} = $best;
-       """.stripMargin
-    })
+    scanCode(ctx, ev)((a, i, m) =>
+      s"graft.functions.VecCentroidScan.nearest($a, $i, $m)")
 
   override protected def withNewChildInternal(
       newChild: Expression): NearestVecCentroid = copy(child = newChild)
 }
 
 /** Top-`k` nearest centroids of an array<double> vector, as an array<int>
-  * of centroid idxs ordered (distance asc, idx asc) — the IVF PROBE
-  * kernel. Replaces the `array_sort(array(struct(dist_0, 0), …))` device,
-  * whose expression width grows with the LIST COUNT (an nlist-element
-  * struct array built and sorted per row put a hard practical ceiling on
-  * nlist); here the centroid matrix rides `ctx.addReferenceObj` exactly
-  * like [[NearestVecCentroid]], so the generated source is byte-identical
-  * at ANY nlist and the per-row cost is one O(nlist·d) scan with a
-  * k-element insertion buffer (k = nprobe, a small constant).
-  *
-  * Tie-breaking matches the struct-sort device it replaces: strictly
-  * smaller distance displaces; equal distance keeps the earlier idx (the
-  * scan runs in ascending-idx order).
+  * of centroid idxs ordered (distance asc, scan order) — the IVF PROBE
+  * kernel ([[VecCentroidScan.topK]]). It replaced an
+  * `array_sort(array(struct(dist_0, 0), …))` device whose expression width
+  * grew with the LIST COUNT; here the per-row cost is one O(nlist·d) scan
+  * with a k-element insertion buffer (k = nprobe, a small constant).
   */
 case class TopKVecCentroids(child: Expression, idxs: Seq[Int],
                             centroids: Seq[Seq[Double]], k: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  require(idxs.nonEmpty && idxs.length == centroids.length,
-    "graft_topk_vec_centroids needs equal-length non-empty centroid arrays")
+    extends VecCentroidKernel {
+  requireCentroids()
   require(k >= 1, "graft_topk_vec_centroids needs k >= 1")
 
-  @transient private lazy val idxArr: Array[Int] = idxs.toArray
-  @transient private lazy val cMat: Array[Array[Double]] =
-    centroids.map(_.toArray).toArray
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case org.apache.spark.sql.types.ArrayType(DoubleType, _) =>
-      TypeCheckResult.TypeCheckSuccess
-    case _ => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires an array<double> argument")
-  }
   override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(IntegerType, containsNull = false)
+    ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "graft_topk_vec_centroids"
 
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    val kk = math.min(k, cMat.length)
-    val bd = Array.fill(kk)(Double.PositiveInfinity)
-    val bi = new Array[Int](kk)
-    var c = 0
-    while (c < cMat.length) {
-      val cv = cMat(c)
-      val n = math.min(x.numElements(), cv.length)
-      var s = 0.0
-      var i = 0
-      while (i < n) {
-        val dx = x.getDouble(i) - cv(i)
-        s += dx * dx
-        i += 1
-      }
-      if (s < bd(kk - 1)) {
-        var p = kk - 1
-        while (p > 0 && s < bd(p - 1)) {
-          bd(p) = bd(p - 1); bi(p) = bi(p - 1); p -= 1
-        }
-        bd(p) = s; bi(p) = idxArr(c)
-      }
-      c += 1
-    }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-      .fromPrimitiveArray(bi)
-  }
+  override def nullSafeEval(a: Any): Any =
+    UnsafeArrayData.fromPrimitiveArray(
+      VecCentroidScan.topK(a.asInstanceOf[ArrayData], idxArr, cMat, k))
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val idxRef = ctx.addReferenceObj("cidxs", idxArr, "int[]")
-      val matRef = ctx.addReferenceObj("cmat", cMat, "double[][]")
-      val c = ctx.freshName("c")
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val dx = ctx.freshName("dx")
-      val cv = ctx.freshName("cv")
-      val kk = ctx.freshName("kk")
-      val bd = ctx.freshName("bd")
-      val bi = ctx.freshName("bi")
-      val p = ctx.freshName("p")
-      s"""
-         |final int $kk = java.lang.Math.min($k, $matRef.length);
-         |final double[] $bd = new double[$kk];
-         |java.util.Arrays.fill($bd, Double.POSITIVE_INFINITY);
-         |final int[] $bi = new int[$kk];
-         |for (int $c = 0; $c < $matRef.length; $c++) {
-         |  final double[] $cv = $matRef[$c];
-         |  final int $n = java.lang.Math.min($a.numElements(), $cv.length);
-         |  double $s = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    final double $dx = $a.getDouble($i) - $cv[$i];
-         |    $s += $dx * $dx;
-         |  }
-         |  if ($s < $bd[$kk - 1]) {
-         |    int $p = $kk - 1;
-         |    while ($p > 0 && $s < $bd[$p - 1]) {
-         |      $bd[$p] = $bd[$p - 1]; $bi[$p] = $bi[$p - 1]; $p--;
-         |    }
-         |    $bd[$p] = $s; $bi[$p] = $idxRef[$c];
-         |  }
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions
-         |  .UnsafeArrayData.fromPrimitiveArray($bi);
-       """.stripMargin
-    })
+    scanCode(ctx, ev)((a, i, m) =>
+      "org.apache.spark.sql.catalyst.expressions.UnsafeArrayData" +
+        s".fromPrimitiveArray(graft.functions.VecCentroidScan.topK($a, $i, $m, $k))")
 
   override protected def withNewChildInternal(
       newChild: Expression): TopKVecCentroids = copy(child = newChild)

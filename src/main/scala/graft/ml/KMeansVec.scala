@@ -9,9 +9,8 @@ import org.apache.spark.sql.functions._
   * quantizer for IVF similarity search (Similarity.annIvf).
   *
   * Execution shape per iteration (same discipline as the 2-D loop):
-  *  - assignment: ||x−c||² = ‖x‖² − 2·x·c + ‖c‖², with x·c and ‖x‖²
-  *    through the codegen'd graft_dot kernel and ‖c‖² folded as a literal
-  *    — one narrow pass, k dots per row;
+  *  - assignment: the codegen'd NearestVecCentroid kernel, Σ(x_i−c_i)² to
+  *    every centroid — one narrow pass;
   *  - recenter: `posexplode` of the vector → groupBy(cluster, dim) sums —
   *    one shuffle of k·d partial rows per partition (map-side combined),
   *    collecting only k·d (cluster, dim, mean) cells to the driver.
@@ -64,6 +63,14 @@ object KMeansVec {
     require(first.nonEmpty, "k-means needs a non-empty vector corpus")
     var chosen = Vector(
       VecCentroid(0, first(0).getSeq[Double](1).toArray))
+    // squared distance to one chosen centroid: ‖x‖² − 2·x·c + ‖c‖², with
+    // x·c and ‖x‖² through the codegen'd graft_dot kernel and ‖c‖² folded
+    // as a literal
+    val v = col(vecCol)
+    def distTo(c: VecCentroid): Column =
+      GraftFunctions.dot(v, v) -
+        lit(2.0) * GraftFunctions.dot(v, array(c.vec.map(lit(_)): _*)) +
+        lit(c.vec.map(x => x * x).sum)
     // r19: carry the running min-distance as a materialized column
     // instead of re-deriving distances to EVERY chosen centroid each
     // round — the old per-round plan inlined chosen.size × d literal
@@ -82,8 +89,8 @@ object KMeansVec {
     // and the recompute work per round is ≤ 8 extra dot products per
     // row — noise next to a job launch; a large-k fit still never
     // re-analyzes an unbounded plan.
-    var cur = vectors.select(col(idCol), col(vecCol))
-      .withColumn("__d", distCols(col(vecCol), chosen.takeRight(1)).head)
+    var cur = vectors.select(col(idCol), v)
+      .withColumn("__d", distTo(chosen.last))
     var sinceCheckpoint = 0
     while (chosen.size < k) {
       val far = cur
@@ -92,7 +99,7 @@ object KMeansVec {
       chosen = chosen :+
         VecCentroid(chosen.size, far.getSeq[Double](1).toArray)
       if (chosen.size < k) {
-        val dNew = distCols(col(vecCol), chosen.takeRight(1)).head
+        val dNew = distTo(chosen.last)
         cur = cur.withColumn("__d",
           when(col("__d") < dNew, col("__d")).otherwise(dNew))
         sinceCheckpoint += 1
@@ -105,29 +112,13 @@ object KMeansVec {
     chosen
   }
 
-  private def litVec(v: Array[Double]): Column = array(v.map(lit(_)): _*)
-
-  /** Squared distances to every centroid, in idx order (codegen'd dot
-    * products; ‖c‖² folded as a literal). Shared by assignment here and
-    * by Similarity.annIvf's query-probe scoring — one formula, no drift.
-    */
-  private[graft] def distCols(vecCol: Column,
-                              cs: Seq[VecCentroid]): Seq[Column] = {
-    val xx = GraftFunctions.dot(vecCol, vecCol)
-    cs.sortBy(_.idx).map { c =>
-      val cc = c.vec.map(x => x * x).sum
-      xx - lit(2.0) * GraftFunctions.dot(vecCol, litVec(c.vec)) + lit(cc)
-    }
-  }
-
   /** Adds `cidx` = idx of the nearest centroid (first minimum wins).
     *
     * Codegen-STABLE (NearestVecCentroid): the centroid matrix rides the
     * codegen `references` array, so the Lloyd loop reuses one compiled
     * plan across iterations instead of recompiling per-iteration literal
-    * plans. Distances here are Σ(x_i−c_i)² directly (not the ‖x‖²−2x·c+‖c‖²
-    * expansion distCols uses for query-probe scoring): both orderings agree
-    * except in FP noise far below centroid separation at quantizer scale.
+    * plans. Distances are Σ(x_i−c_i)², the same scan the IVF query probe
+    * (TopKVecCentroids) runs.
     */
   def assign(vectors: DataFrame, vecCol: String,
              cs: Seq[VecCentroid]): DataFrame = {
@@ -142,22 +133,34 @@ object KMeansVec {
     * clusters keep their previous centroid.
     */
   def recenter(assigned: DataFrame, vecCol: String,
-               prev: Seq[VecCentroid]): Seq[VecCentroid] = {
+               prev: Seq[VecCentroid]): Seq[VecCentroid] =
+    recenter(assigned, vecCol, lit(0), Map(0 -> prev))(0)
+
+  /** [[recenter]] for several independent centroid sets in ONE Spark job:
+    * `group` names each row's set (an int), `prev` holds every set by its
+    * group, and the partial sums run per (group, cluster, dim).
+    */
+  private[graft] def recenter(assigned: DataFrame, vecCol: String,
+                              group: Column,
+                              prev: Map[Int, Seq[VecCentroid]])
+      : Map[Int, Seq[VecCentroid]] = {
     val cells = assigned
-      .select(col("cidx"), posexplode(col(vecCol)))
-      .groupBy("cidx", "pos")
+      .select(group.as("__g"), col("cidx"), posexplode(col(vecCol)))
+      .groupBy("__g", "cidx", "pos")
       .agg(sum("col").as("s"), count(lit(1)).as("n"))
       .collect()
-    val byCluster = cells.groupBy(_.getInt(0))
-    prev.map { c =>
-      byCluster.get(c.idx) match {
-        case Some(rows) =>
-          val vec = c.vec.clone()
-          rows.foreach { r =>
-            vec(r.getInt(1)) = r.getDouble(2) / r.getLong(3)
-          }
-          VecCentroid(c.idx, vec)
-        case None => c
+    val byCluster = cells.groupBy(r => (r.getInt(0), r.getInt(1)))
+    prev.map { case (g, cs) =>
+      g -> cs.map { c =>
+        byCluster.get((g, c.idx)) match {
+          case Some(rows) =>
+            val vec = c.vec.clone()
+            rows.foreach { r =>
+              vec(r.getInt(2)) = r.getDouble(3) / r.getLong(4)
+            }
+            VecCentroid(c.idx, vec)
+          case None => c
+        }
       }
     }
   }
@@ -175,6 +178,8 @@ object KMeansVec {
           maxIter: Int = 10, tol: Double = 1e-4,
           idCol: String = "vec_id",
           farthestInit: Boolean = false): KMeansVecResult = {
+    require(k >= 1, s"k-means needs k >= 1, got k=$k")
+    KMeans.requireLoop(maxIter, tol)
     var cs =
       if (farthestInit) initFarthest(vectors, idCol, vecCol, k, seed)
       else initFromSample(vectors, idCol, vecCol, k, seed)

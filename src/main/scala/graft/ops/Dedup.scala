@@ -61,13 +61,6 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  /** Spread CPU-heavy per-document work across the cluster: a small
-    * parquet table often arrives as one partition (single row group), which
-    * would serialize the whole shingle/hash stage on one core; documents
-    * also vary 10× in length, so round-robin rebalancing helps even at
-    * scale. The shuffled payload is just the raw text — cheap next to the
-    * per-doc compute it balances.
-    */
   /** Key-hashed repartition at the full configured width — pins CPU
     * parallelism for the inverted-index self-joins. These stages are
     * CPU-quadratic per key group on small BYTE volumes, so AQE's
@@ -81,6 +74,13 @@ object Dedup {
   private[ops] def wideBy(df: DataFrame, keys: Column*): DataFrame =
     df.repartition(shuffleWidth(df.sparkSession), keys: _*)
 
+  /** Spread CPU-heavy per-document work across the cluster: a small
+    * parquet table often arrives as one partition (single row group), which
+    * would serialize the whole shingle/hash stage on one core; documents
+    * also vary 10× in length, so round-robin rebalancing helps even at
+    * scale. The shuffled payload is just the raw text — cheap next to the
+    * per-doc compute it balances.
+    */
   private def balanced(documents: DataFrame): DataFrame =
     // Explicit round-robin width = max(core count, configured shuffle
     // width). Not the argless AQE REBALANCE: AQE sizes partitions by
@@ -1367,7 +1367,8 @@ object Dedup {
     */
   def bandKeys(documents: DataFrame, n: Int = 3, numHashes: Int = 32,
                bands: Int = 16): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
+    require(numHashes % bands == 0,
+      s"bands must divide numHashes, got bands=$bands, numHashes=$numHashes")
     bandKeysOf(minhashSignatures(documents, n, numHashes), bands,
       numHashes / bands)
   }
@@ -1413,8 +1414,10 @@ object Dedup {
   def minhashPairs(documents: DataFrame, n: Int = 3,
                    numHashes: Int = 32, bands: Int = 16,
                    threshold: Double = 0.2): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    require(threshold > 0 && threshold <= 1, "need 0 < threshold <= 1")
+    require(numHashes % bands == 0,
+      s"bands must divide numHashes, got bands=$bands, numHashes=$numHashes")
+    require(threshold > 0 && threshold <= 1,
+      s"need 0 < threshold <= 1, got threshold=$threshold")
     val rows = numHashes / bands
     // materialize once: the signature frame feeds both bucket-join sides
     // AND both endpoint joins of the verify — without this the

@@ -1,9 +1,11 @@
 package graft.ops
 
 import graft.functions.GraftFunctions
+import graft.ml.{KMeansVec, VecCentroid}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Similarity search over embedding columns (north-star surface; no
   * reference citation — the reference has no vector ops, SURVEY.md §2.8).
@@ -36,6 +38,59 @@ object Similarity {
 
   /** array<float> → array<double> (all scoring in double). */
   def asDouble(a: Column): Column = transform(a, _.cast("double"))
+
+  /** A vec_id/embedding table as (p_id, p_emb) rows in double — `p` is
+    * "q" for the query side, "n" for the corpus side of a k-NN join.
+    */
+  private def side(df: DataFrame, p: String): DataFrame =
+    df.select(col("vec_id").as(s"${p}_id"),
+      asDouble(col("embedding")).as(s"${p}_emb"))
+
+  /** Requires a parameter to be >= 1, naming it and its value. */
+  private def requirePositive(name: String, v: Long): Unit =
+    require(v >= 1, s"need $name >= 1, got $v")
+
+  /** Runs `body` with `keep`, which persists a frame (MEMORY_AND_DISK)
+    * until `body` returns or throws: the frames serve the operator's
+    * eager work (quantizer and codebook fits) and leave no cache entry in
+    * a long-lived session; the lazily returned result recomputes them.
+    */
+  private def withPersisted[T](body: (DataFrame => DataFrame) => T): T = {
+    val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    try body { df =>
+      held += df.persist(StorageLevel.MEMORY_AND_DISK); held.last
+    } finally held.foreach(_.unpersist(blocking = false))
+  }
+
+  /** A k-NN builder that trains a model on its corpus (quantizer,
+    * codebooks, ranges): `body` gets the corpus as persisted (n_id, n_emb)
+    * rows and `keep` (see `withPersisted`). An empty corpus has no model
+    * to train, so it yields the empty (q_id, rank, n_id) result — the
+    * schema every k-NN builder here emits — without running `body`.
+    */
+  private def knnOverCorpus(corpus: DataFrame)(
+      body: (DataFrame, DataFrame => DataFrame) => DataFrame): DataFrame = {
+    val spark = corpus.sparkSession
+    GraftFunctions.register(spark)
+    val corpusD = side(corpus, "n")
+    if (corpusD.isEmpty) {
+      import spark.implicits._
+      Seq.empty[(Long, Int, Long)].toDF("q_id", "rank", "n_id")
+    } else withPersisted(keep => body(keep(corpusD), keep))
+  }
+
+  /** Top `k` neighbors per query by exact cosine over candidate rows
+    * (q_id, q_emb, n_id, n_emb), ties broken on neighbor id — the
+    * (q_id, rank, n_id) result every k-NN builder here emits.
+    */
+  private def topKByCosine(cands: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy("q_id").orderBy(desc("cos"), asc("n_id"))
+    cands.withColumn("cos", cosine(col("q_emb"), col("n_emb")))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select("q_id", "rank", "n_id")
+      .orderBy("q_id", "rank")
+  }
 
   /** Diversity-capped sampling by coarse semantic bucket (SemDeDup-lite):
     * bucket = the sign bits of the first `bits` embedding dimensions
@@ -128,18 +183,8 @@ object Similarity {
     */
   def bruteForceKnn(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
     GraftFunctions.register(corpus.sparkSession)
-    val cand = corpus.select(col("vec_id").as("n_id"),
-      asDouble(col("embedding")).as("n_emb"))
-    val q = broadcast(queries.select(col("vec_id").as("q_id"),
-      asDouble(col("embedding")).as("q_emb")))
-    val w = Window.partitionBy("q_id")
-      .orderBy(desc("cos"), asc("n_id"))
-    q.join(cand, col("q_id") =!= col("n_id"))
-      .withColumn("cos", cosine(col("q_emb"), col("n_emb")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("q_id", "rank", "n_id")
-      .orderBy("q_id", "rank")
+    topKByCosine(broadcast(side(queries, "q"))
+      .join(side(corpus, "n"), col("q_id") =!= col("n_id")), k)
   }
 
   /** Mutual nearest neighbors: pairs (a, b) where b is a's top-1 cosine
@@ -226,14 +271,7 @@ object Similarity {
     * list sizes ~constant: cost ≈ nprobe·N·targetListSize — linear.
     *
     * Past `maxFlatLists` planned lists the planner goes TWO-LEVEL
-    * (residual coarse quantization — the IVF scale rung FAISS-family
-    * systems use, from the public IVFADC construction: Jégou et al.,
-    * "Product Quantization for Nearest Neighbor Search", TPAMI 2011,
-    * §III): an L1 quantizer of k1 = ⌈√lists⌉ cells, then ONE shared L2
-    * quantizer of k2 = ⌈lists/k1⌉ cells trained on the L1 RESIDUALS
-    * (x − c1); a vector's list id is c1·k2 + c2, and a query probes the
-    * nprobe nearest L1 cells × within each, the nprobe nearest L2 cells
-    * of ITS residual w.r.t. that cell. Driver state is k1 + k2 ≤ 2·√L
+    * (`coarseQuantizer`'s residual rung): driver state is ≤ 2·√L
     * centroids (never L), expression width is O(√L), and list sizes
     * stay ~targetListSize up to maxFlatLists² lists (~4.3e9 vectors at
     * the defaults) — the r16 4096-list cap is retired, not moved. The
@@ -245,91 +283,40 @@ object Similarity {
                                 trainIter: Int = 10,
                                 targetListSize: Long = 256L,
                                 maxFlatLists: Int = 4096): DataFrame = {
-    import graft.ml.KMeansVec
     require(maxFlatLists >= 2, "maxFlatLists must be >= 2")
     GraftFunctions.register(embeddings.sparkSession)
-    val nz = embeddings
-      .select(col("vec_id"), asDouble(col("embedding")).as("emb"))
-      .filter(cosine(col("emb"), col("emb")) > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val lists0 =
-      if (nlist > 0) nlist.toLong
-      else math.max(8L, (nz.count() + targetListSize - 1) / targetListSize)
-    require(lists0 <= maxFlatLists.toLong * maxFlatLists,
-      s"planned $lists0 lists exceeds two-level capacity " +
-        s"(${maxFlatLists}² ) — raise targetListSize")
-    val (lists, probes) =
-      if (lists0 <= maxFlatLists) {
-        // single-level: one flat quantizer, probe = top-nprobe cells
-        val model = KMeansVec.fit(nz, "emb", lists0.toInt, seed,
-          maxIter = trainIter, idCol = "vec_id")
-        val sortedCs = model.centroids.sortBy(_.idx)
-        val l = KMeansVec.assign(nz, "emb", sortedCs)
-          .select(col("vec_id").as("n_id"), col("emb").as("n_emb"),
-            col("cidx").cast("long").as("list"))
-        val p = nz
-          .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-          .withColumn("cell",
-            explode(GraftFunctions.topKVecCentroids(col("q_emb"),
-              sortedCs.map(_.idx), sortedCs.map(_.vec), nprobe)))
-          .select(col("q_id"), col("q_emb"),
-            col("cell").cast("long").as("list"))
-        (l, p)
-      } else {
-        // two-level residual: k1·k2 lists from k1 + k2 centroids
-        val k1 = math.ceil(math.sqrt(lists0.toDouble)).toInt
-        val k2 = ((lists0 + k1 - 1) / k1).toInt
-        val m1 = KMeansVec.fit(nz, "emb", k1, seed,
-          maxIter = trainIter, idCol = "vec_id")
-        val cs1 = m1.centroids.sortBy(_.idx)
-        val mat1 = typedLit(cs1.map(_.vec.toSeq))
-        def residual(vec: Column, cell: Column): Column =
-          zip_with(vec, element_at(mat1, cell + 1), (a, b) => a - b)
-        val assigned1 = KMeansVec.assign(nz, "emb", cs1)
-          .withColumn("res", residual(col("emb"), col("cidx")))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val m2 = KMeansVec.fit(assigned1, "res", k2, seed + 1,
-          maxIter = trainIter, idCol = "vec_id")
-        val cs2 = m2.centroids.sortBy(_.idx)
-        val l = KMeansVec.assign(
-            assigned1.select(col("vec_id"), col("emb"), col("cidx")
-              .as("c1"), col("res")), "res", cs2)
-          .select(col("vec_id").as("n_id"), col("emb").as("n_emb"),
-            (col("c1").cast("long") * k2 + col("cidx")).as("list"))
-        val p = nz
-          .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-          .withColumn("l1",
-            explode(GraftFunctions.topKVecCentroids(col("q_emb"),
-              cs1.map(_.idx), cs1.map(_.vec), nprobe)))
-          .withColumn("qres", residual(col("q_emb"), col("l1")))
-          .withColumn("l2",
-            explode(GraftFunctions.topKVecCentroids(col("qres"),
-              cs2.map(_.idx), cs2.map(_.vec), nprobe)))
-          .select(col("q_id"), col("q_emb"),
-            (col("l1").cast("long") * k2 + col("l2")).as("list"))
-        (l, p)
-      }
-    val w = Window.partitionBy("q_id").orderBy(desc("cos"), asc("n_id"))
-    val best = probes.join(lists, Seq("list"))
-      .filter(col("q_id") =!= col("n_id"))
-      .withColumn("cos", cosine(col("q_emb"), col("n_emb")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") === 1)
-      .select("q_id", "n_id")
-    val pairs = best.as("x")
-      .join(best.as("y"),
-        col("x.q_id") === col("y.n_id") && col("x.n_id") === col("y.q_id")
-          && col("x.q_id") < col("x.n_id"))
-      .select(col("x.q_id").as("id_a"), col("x.n_id").as("id_b"))
-    pairs
-      .join(nz.select(col("vec_id").as("id_a"), col("emb").as("emb_a")),
-        "id_a")
-      .join(nz.select(col("vec_id").as("id_b"), col("emb").as("emb_b")),
-        "id_b")
-      .withColumn("__cos", cosine(col("emb_a"), col("emb_b")))
-      .select(col("id_a"), col("id_b"),
-        expr("cast(round(__cos * 1000000) as bigint)").as("cos_q6"))
-      .orderBy("id_a", "id_b")
+    withPersisted { keep =>
+      val nz = keep(side(embeddings, "n")
+        .filter(cosine(col("n_emb"), col("n_emb")) > 0))
+      val lists =
+        if (nlist > 0) nlist.toLong
+        else math.max(8L, (nz.count() + targetListSize - 1) / targetListSize)
+      val coarse = coarseQuantizer(nz, lists, maxFlatLists, nprobe, seed,
+        trainIter, keep)
+      val probes = coarse.probe(
+        nz.select(col("n_id").as("q_id"), col("n_emb").as("q_emb")))
+      val w = Window.partitionBy("q_id").orderBy(desc("cos"), asc("n_id"))
+      val best = probes.join(coarse.listed, Seq("list"))
+        .filter(col("q_id") =!= col("n_id"))
+        .withColumn("cos", cosine(col("q_emb"), col("n_emb")))
+        .withColumn("rank", row_number().over(w))
+        .filter(col("rank") === 1)
+        .select("q_id", "n_id")
+      val pairs = best.as("x")
+        .join(best.as("y"),
+          col("x.q_id") === col("y.n_id") && col("x.n_id") === col("y.q_id")
+            && col("x.q_id") < col("x.n_id"))
+        .select(col("x.q_id").as("id_a"), col("x.n_id").as("id_b"))
+      pairs
+        .join(nz.select(col("n_id").as("id_a"), col("n_emb").as("emb_a")),
+          "id_a")
+        .join(nz.select(col("n_id").as("id_b"), col("n_emb").as("emb_b")),
+          "id_b")
+        .withColumn("__cos", cosine(col("emb_a"), col("emb_b")))
+        .select(col("id_a"), col("id_b"),
+          expr("cast(round(__cos * 1000000) as bigint)").as("cos_q6"))
+        .orderBy("id_a", "id_b")
+    }
   }
 
   /** MAXIMAL MARGINAL RELEVANCE rerank (Carbonell & Goldstein SIGIR'98):
@@ -368,10 +355,8 @@ object Similarity {
       "lambdaPermille in [0, 1000]")
     val session = corpus.sparkSession
     GraftFunctions.register(session)
-    val cand0 = corpus.select(col("vec_id").as("n_id"),
-      asDouble(col("embedding")).as("n_emb"))
-    val q = broadcast(queries.select(col("vec_id").as("q_id"),
-      asDouble(col("embedding")).as("q_emb")))
+    val cand0 = side(corpus, "n")
+    val q = broadcast(side(queries, "q"))
     val wTop = Window.partitionBy("q_id").orderBy(desc("cos"), asc("n_id"))
     val cands = q.join(cand0, col("q_id") =!= col("n_id"))
       .withColumn("cos", cosine(col("q_emb"), col("n_emb")))
@@ -607,55 +592,155 @@ object Similarity {
       when(dot(emb, litPlane) >= 0, lit(1L << h)).otherwise(lit(0L))
     }.reduce(_ + _)
 
-  /** ANN via IVF (inverted-file) lists: a coarse k-means quantizer
-    * (ml.KMeansVec, trained on the corpus) buckets every corpus vector
-    * into its nearest-centroid list; each query probes only its `nprobe`
-    * nearest lists and exact-reranks the candidates. The classic
-    * recall/cost dial for vector search at corpus scale: work per query
-    * drops from |corpus| to ~nprobe/nlist of it.
+  // ------------------------------------------------------------------ //
+  //  IVF, written once: one coarse quantizer, one PQ stage, one probe
+  //  kernel (TopKVecCentroids) behind annIvf, annIvfPq, annIvfAdc and
+  //  mutualNearestNeighborsIvf — the IVFADC construction of Jégou, Douze
+  //  & Schmid, "Product Quantization for Nearest Neighbor Search", TPAMI
+  //  2011, §III.
+  // ------------------------------------------------------------------ //
+
+  /** A trained IVF coarse quantizer over corpus rows (n_id, n_emb):
+    * `listed` is those rows with their list id (`list`, a long), `probe`
+    * turns query rows (q_id, q_emb) into one (q_id, q_emb, list) row per
+    * probed list, and `centroidOf(list)` rebuilds a list's centroid.
+    */
+  private final case class CoarseQuantizer(listed: DataFrame,
+                                           probe: DataFrame => DataFrame,
+                                           centroidOf: Column => Column)
+
+  /** Trains a coarse quantizer of `lists` lists over `corpus`
+    * (n_id, n_emb) — each query probes `nprobe` of them — with seeded
+    * k-means (ml.KMeansVec, `trainIter` rounds).
+    *
+    * Up to `maxFlatLists` lists it is FLAT: one quantizer (seed `seed`),
+    * probed by the query's nprobe nearest centroids. Past it, TWO-LEVEL
+    * residual (the IVF scale rung of IVFADC): an L1 quantizer of
+    * k1 = ⌈√lists⌉ cells (seed `seed`), then ONE shared L2 quantizer of
+    * k2 = ⌈lists/k1⌉ cells (seed `seed + 1`) trained on the L1 RESIDUALS
+    * x − c1; a vector's list is c1·k2 + c2, and a query probes its nprobe
+    * nearest L1 cells × within each, the nprobe nearest L2 cells of ITS
+    * residual w.r.t. that cell. Driver state is k1 + k2 ≤ 2·√L centroids
+    * (never L), and a list's centroid is mat1[list div k2] +
+    * mat2[list mod k2] — two element_at lookups, never an L-wide literal.
+    * Capacity is maxFlatLists² lists. The L1 residual frame is persisted
+    * through `keep` for the L2 fit.
+    */
+  private def coarseQuantizer(corpus: DataFrame, lists: Long,
+                              maxFlatLists: Int, nprobe: Int, seed: Long,
+                              trainIter: Int,
+                              keep: DataFrame => DataFrame): CoarseQuantizer = {
+    requirePositive("nlist", lists)
+    requirePositive("nprobe", nprobe)
+    require(lists <= maxFlatLists.toLong * maxFlatLists,
+      s"planned $lists lists exceeds two-level capacity " +
+        s"(${maxFlatLists}²) — raise targetListSize")
+    def fit(df: DataFrame, vecCol: String, k: Int,
+            s: Long): (Seq[VecCentroid], Column) = {
+      val cs = KMeansVec.fit(df, vecCol, k, s, maxIter = trainIter,
+        idCol = "n_id").centroids.sortBy(_.idx)
+      (cs, typedLit(cs.map(_.vec.toSeq)))
+    }
+    def row(mat: Column, i: Column): Column =
+      element_at(mat, i.cast("int") + 1)
+    def nearest(vec: Column, cs: Seq[VecCentroid]): Column =
+      explode(GraftFunctions.topKVecCentroids(vec, cs.map(_.idx),
+        cs.map(_.vec), nprobe))
+    if (lists <= maxFlatLists) {
+      val (cs, mat) = fit(corpus, "n_emb", lists.toInt, seed)
+      CoarseQuantizer(
+        KMeansVec.assign(corpus, "n_emb", cs).select(col("n_id"),
+          col("n_emb"), col("cidx").cast("long").as("list")),
+        _.withColumn("cell", nearest(col("q_emb"), cs))
+          .select(col("q_id"), col("q_emb"),
+            col("cell").cast("long").as("list")),
+        list => row(mat, list))
+    } else {
+      val k1 = math.ceil(math.sqrt(lists.toDouble)).toInt
+      val k2 = ((lists + k1 - 1) / k1).toInt
+      val (cs1, mat1) = fit(corpus, "n_emb", k1, seed)
+      def residual(vec: Column, cell: Column): Column =
+        zip_with(vec, row(mat1, cell), (a, b) => a - b)
+      val assigned1 = keep(KMeansVec.assign(corpus, "n_emb", cs1)
+        .withColumn("res", residual(col("n_emb"), col("cidx"))))
+      val (cs2, mat2) = fit(assigned1, "res", k2, seed + 1)
+      CoarseQuantizer(
+        KMeansVec.assign(assigned1.select(col("n_id"), col("n_emb"),
+            col("cidx").as("c1"), col("res")), "res", cs2)
+          .select(col("n_id"), col("n_emb"),
+            (col("c1").cast("long") * k2 + col("cidx")).as("list")),
+        _.withColumn("l1", nearest(col("q_emb"), cs1))
+          .withColumn("qres", residual(col("q_emb"), col("l1")))
+          .withColumn("l2", nearest(col("qres"), cs2))
+          .select(col("q_id"), col("q_emb"),
+            (col("l1").cast("long") * k2 + col("l2")).as("list")),
+        list => zip_with(row(mat1, floor(list / k2)),
+          row(mat2, pmod(list, lit(k2.toLong))), (a, b) => a + b))
+    }
+  }
+
+  /** The PQ stage of IVFADC over a trained coarse quantizer: each corpus
+    * vector's RESIDUAL w.r.t. its list centroid (its spread after coarse
+    * quantization) is split into `m` subvectors, each replaced by the
+    * index of its nearest entry in a per-subspace codebook of `ksub`
+    * centroids (`trainPqBooks`), so an index row is (n_id, list, m small
+    * ints) at ANY list count. The probed candidates are scored by cosine
+    * against listCentroid + decoded residual, read from broadcast
+    * literals (asymmetric distance, the faiss IVFPQ shape), cut at
+    * candFactor·k per query, and exact-reranked by an id join back to
+    * `corpus` (the q85 contract).
+    */
+  private def pqStage(corpus: DataFrame, coarse: CoarseQuantizer,
+                      probes: DataFrame, k: Int, m: Int, ksub: Int,
+                      candFactor: Int, seed: Long, trainIter: Int,
+                      trainCap: Long): DataFrame = {
+    val dim = corpus.select(size(col("n_emb"))).take(1) match {
+      case Array(r) => r.getInt(0)
+      case _ => 1
+    }
+    require(dim % m == 0, s"dim $dim must be divisible by m=$m")
+    val dsub = dim / m
+    val withRes = coarse.listed.select(col("n_id"), col("list"),
+      zip_with(col("n_emb"), coarse.centroidOf(col("list")),
+        (x, c) => x - c).as("res"))
+    val books = trainPqBooks(withRes, m, ksub, dsub, seed, trainIter,
+      trainCap)
+    // encode the FULL corpus: one projection, m argmins
+    val index = withRes.select(col("n_id"), col("list"),
+      array(pqCodeCols(books, m, dsub): _*).as("codes"))
+    val decoded = concat((0 until m).map(j =>
+      element_at(typedLit(books(j).sortBy(_.idx).map(_.vec.toSeq)),
+        element_at(col("codes"), j + 1) + 1)): _*)
+    val approx = zip_with(coarse.centroidOf(col("list")), decoded,
+      (c, r) => c + r)
+    val wc = Window.partitionBy("q_id").orderBy(desc("acos"), asc("n_id"))
+    val cands = probes.join(index, Seq("list"))
+      .filter(col("q_id") =!= col("n_id"))
+      .withColumn("acos", cosine(col("q_emb"), approx))
+      .withColumn("crank", row_number().over(wc))
+      .filter(col("crank") <= k * candFactor)
+      .select("q_id", "q_emb", "n_id")
+    topKByCosine(cands.join(corpus, "n_id"), k)
+  }
+
+  /** ANN via IVF (inverted-file) lists: a flat coarse quantizer of `nlist`
+    * lists (trained on the corpus) buckets every corpus vector into its
+    * nearest-centroid list; each query probes its `nprobe` nearest lists
+    * (TopKVecCentroids — the Σ(x−c)² scan the corpus assignment runs) and
+    * exact-reranks the candidates. The classic recall/cost dial for
+    * vector search at corpus scale: work per query drops from |corpus| to
+    * ~nprobe/nlist of it.
     */
   def annIvf(corpus: DataFrame, queries: DataFrame, k: Int,
              nlist: Int = 16, nprobe: Int = 4, seed: Long = 42L,
-             trainIter: Int = 10): DataFrame = {
-    import graft.ml.KMeansVec
-    GraftFunctions.register(corpus.sparkSession)
-    val corpusD = corpus.select(col("vec_id").as("n_id"),
-      asDouble(col("embedding")).as("n_emb"))
-    // empty corpus: no quantizer to train — return the empty result with
-    // the schema every k-NN builder here emits (bruteForceKnn/annLsh
-    // degrade the same way; a crash inside k-means init would not)
-    if (corpusD.isEmpty) {
-      val s = corpus.sparkSession
-      import s.implicits._
-      return Seq.empty[(Long, Int, Long)].toDF("q_id", "rank", "n_id")
+             trainIter: Int = 10): DataFrame =
+    knnOverCorpus(corpus) { (cached, keep) =>
+      val coarse = coarseQuantizer(cached, nlist, nlist, nprobe, seed,
+        trainIter, keep)
+      val probes = broadcast(coarse.probe(side(queries, "q")))
+      topKByCosine(probes.join(coarse.listed, Seq("list"))
+        .filter(col("q_id") =!= col("n_id")), k)
     }
-    val cached = corpusD.cache()
-    try {
-      val model = KMeansVec.fit(cached, "n_emb", nlist, seed,
-        maxIter = trainIter, idCol = "n_id")
-      val lists = KMeansVec.assign(cached, "n_emb", model.centroids)
-        .withColumnRenamed("cidx", "list")
-      // each query probes its nprobe nearest lists (same distance
-      // expression the corpus assignment uses — KMeansVec.distCols)
-      val sortedCs = model.centroids.sortBy(_.idx)
-      val probeStructs = array(
-        KMeansVec.distCols(col("q_emb"), sortedCs).zip(sortedCs).map {
-          case (d, c) => struct(d.as("d"), lit(c.idx).as("i"))
-        }: _*)
-      val probes = broadcast(queries
-        .select(col("vec_id").as("q_id"), asDouble(col("embedding")).as("q_emb"))
-        .withColumn("probe",
-          explode(slice(array_sort(probeStructs), 1, nprobe)))
-        .select(col("q_id"), col("q_emb"), col("probe.i").as("list")))
-      val w = Window.partitionBy("q_id").orderBy(desc("cos"), asc("n_id"))
-      probes.join(lists, Seq("list")).filter(col("q_id") =!= col("n_id"))
-        .withColumn("cos", cosine(col("q_emb"), col("n_emb")))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select("q_id", "rank", "n_id")
-        .orderBy("q_id", "rank")
-    } finally { cached.unpersist(blocking = false); () }
-  }
 
   /** ANN via 8-bit scalar quantization (SQ): corpus vectors are
     * compressed to one uint8 code per dimension against global per-dim
@@ -682,80 +767,54 @@ object Similarity {
     */
   def annSq(corpus: DataFrame, queries: DataFrame, k: Int,
             candFactor: Int = 8): DataFrame = {
-    GraftFunctions.register(corpus.sparkSession)
-    require(candFactor >= 1, "candFactor must be >= 1")
-    val corpusD = corpus.select(col("vec_id").as("n_id"),
-      asDouble(col("embedding")).as("n_emb"))
-    if (corpusD.isEmpty) {
-      val s = corpus.sparkSession
-      import s.implicits._
-      return Seq.empty[(Long, Int, Long)].toDF("q_id", "rank", "n_id")
+    requirePositive("candFactor", candFactor)
+    // three consumers (range training, candidate scan, rerank) — cached
+    // once; the training collect materializes it
+    knnOverCorpus(corpus) { (cached, _) =>
+      // train: global per-dimension ranges (the SQ "codebook")
+      val ranges = cached
+        .select(posexplode(col("n_emb")).as(Seq("pos", "x")))
+        .groupBy("pos").agg(min("x").as("lo"), max("x").as("hi"))
+        .orderBy("pos").collect()
+      val lo = ranges.map(_.getDouble(1))
+      val span = ranges.map(r => math.max(r.getDouble(2) - r.getDouble(1),
+        java.lang.Double.MIN_NORMAL))
+      val loLit = array(lo.map(lit(_)).toIndexedSeq: _*)
+      val spanLit = array(span.map(lit(_)).toIndexedSeq: _*)
+      def codes(emb: Column): Column =
+        transform(emb, (x, i) => least(greatest(
+          round((x - element_at(loLit, i + 1)) * 255 /
+            element_at(spanLit, i + 1)), lit(0.0)), lit(255.0)).cast("int"))
+      def dequant(cs: Column): Column =
+        transform(cs, (c, i) => element_at(loLit, i + 1) +
+          c.cast("double") * element_at(spanLit, i + 1) / 255)
+      // candidate scan: 1-byte codes are all the corpus this stage reads
+      val coded = cached.select(col("n_id"),
+        dequant(codes(col("n_emb"))).as("n_approx"))
+      val q = broadcast(side(queries, "q"))
+      val wc = Window.partitionBy("q_id").orderBy(desc("acos"), asc("n_id"))
+      val cands = q.join(coded, col("q_id") =!= col("n_id"))
+        .withColumn("acos", cosine(col("q_emb"), col("n_approx")))
+        .withColumn("crank", row_number().over(wc))
+        .filter(col("crank") <= k * candFactor)
+        .select("q_id", "q_emb", "n_id")
+      // exact rerank against full precision, by id
+      topKByCosine(cands.join(cached, "n_id"), k)
     }
-    // three consumers (range training, candidate scan, rerank) — cache
-    // once, same as annIvf; the training collect materializes it
-    val cached = corpusD.cache()
-    try {
-    // train: global per-dimension ranges (the SQ "codebook")
-    val ranges = cached
-      .select(posexplode(col("n_emb")).as(Seq("pos", "x")))
-      .groupBy("pos").agg(min("x").as("lo"), max("x").as("hi"))
-      .orderBy("pos").collect()
-    val lo = ranges.map(_.getDouble(1))
-    val span = ranges.map(r => math.max(r.getDouble(2) - r.getDouble(1),
-      java.lang.Double.MIN_NORMAL))
-    val loLit = array(lo.map(lit(_)).toIndexedSeq: _*)
-    val spanLit = array(span.map(lit(_)).toIndexedSeq: _*)
-    def codes(emb: Column): Column =
-      transform(emb, (x, i) => least(greatest(
-        round((x - element_at(loLit, i + 1)) * 255 /
-          element_at(spanLit, i + 1)), lit(0.0)), lit(255.0)).cast("int"))
-    def dequant(cs: Column): Column =
-      transform(cs, (c, i) => element_at(loLit, i + 1) +
-        c.cast("double") * element_at(spanLit, i + 1) / 255)
-    // candidate scan: 1-byte codes are all the corpus this stage reads
-    val coded = cached.select(col("n_id"),
-      dequant(codes(col("n_emb"))).as("n_approx"))
-    val q = broadcast(queries.select(col("vec_id").as("q_id"),
-      asDouble(col("embedding")).as("q_emb")))
-    val wc = Window.partitionBy("q_id").orderBy(desc("acos"), asc("n_id"))
-    val cands = q.join(coded, col("q_id") =!= col("n_id"))
-      .withColumn("acos", cosine(col("q_emb"), col("n_approx")))
-      .withColumn("crank", row_number().over(wc))
-      .filter(col("crank") <= k * candFactor)
-      .select("q_id", "q_emb", "n_id")
-    // exact rerank against full precision, by id
-    val w = Window.partitionBy("q_id").orderBy(desc("cos"), asc("n_id"))
-    cands.join(cached, "n_id")
-      .withColumn("cos", cosine(col("q_emb"), col("n_emb")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("q_id", "rank", "n_id")
-      .orderBy("q_id", "rank")
-    } finally { cached.unpersist(blocking = false); () }
   }
 
   /** ANN via IVF + PRODUCT QUANTIZATION — the industry-standard 100-TB
     * memory/recall point beyond `annSq`'s global per-dimension ranges:
-    * a coarse k-means quantizer (nlist lists, as annIvf) plus, per
-    * vector, an m-byte PQ code — the RESIDUAL (vector − its list
-    * centroid) is split into `m` subvectors and each is replaced by the
-    * index of its nearest entry in a per-subspace codebook of `ksub`
-    * centroids trained by seeded k-means in code space. The candidate
-    * scan reads ONLY (id, list, m small ints): at dim=768/m=8 that is
-    * 8 bytes where SQ8 needs 768 — two more orders of compression —
-    * and scoring reconstructs list-centroid + codebook entries on the
-    * fly (asymmetric distance, the faiss IVFPQ shape). Exact rerank by
-    * id join, the q85 contract.
+    * `pqStage` over a flat coarse quantizer of `nlist` lists (annIvf's
+    * front end). The candidate scan reads ONLY (id, list, m small ints):
+    * at dim=768/m=8 that is 8 bytes where SQ8 needs 768 — two more orders
+    * of compression.
     *
     * Codebook training runs on a hash-ordered sample capped at
     * `trainCap` (faiss practice: codebooks need ~100k vectors, not the
     * corpus) and is ONE Spark job per Lloyd round for ALL m subspaces
-    * together: subvectors ride an exploded (subspace, subvec) frame,
-    * assignment is a per-subspace codegen'd argmin (the
-    * NearestVecCentroid kernel behind a subspace dispatch), recenter is
-    * one groupBy(subspace, code, dim) collect of m·ksub·(dim/m) cells —
-    * model-state-sized, never data-sized. Encoding the full corpus is a
-    * single codegen'd projection (m argmins per row), no shuffle.
+    * together (`trainPqBooks`). Encoding the full corpus is a single
+    * codegen'd projection (m argmins per row), no shuffle.
     *
     * Exactness contract (the q62/q85 device): on clustered fixtures the
     * pruned+quantized result must EQUAL exact top-k — quantization
@@ -768,95 +827,27 @@ object Similarity {
                m: Int = 4, ksub: Int = 16,
                candFactor: Int = 8, seed: Long = 42L,
                trainIter: Int = 5, trainCap: Long = 100000L): DataFrame = {
-    import graft.ml.{KMeansVec, VecCentroid}
-    GraftFunctions.register(corpus.sparkSession)
-    require(m >= 1 && ksub >= 1 && candFactor >= 1 && nprobe >= 1,
-      "m/ksub/candFactor/nprobe must be >= 1")
-    val corpusD = corpus.select(col("vec_id").as("n_id"),
-      asDouble(col("embedding")).as("n_emb"))
-    if (corpusD.isEmpty) {
-      val s = corpus.sparkSession
-      import s.implicits._
-      return Seq.empty[(Long, Int, Long)].toDF("q_id", "rank", "n_id")
+    requirePositive("m", m)
+    requirePositive("ksub", ksub)
+    requirePositive("candFactor", candFactor)
+    knnOverCorpus(corpus) { (cached, keep) =>
+      val coarse = coarseQuantizer(cached, nlist, nlist, nprobe, seed,
+        trainIter, keep)
+      pqStage(cached, coarse, broadcast(coarse.probe(side(queries, "q"))),
+        k, m, ksub, candFactor, seed, trainIter, trainCap)
     }
-    val cached = corpusD.cache()
-    try {
-      val dim = cached.select(size(col("n_emb"))).take(1) match {
-        case Array(r) => r.getInt(0)
-        case _ => 1
-      }
-      require(dim % m == 0, s"dim $dim must be divisible by m=$m")
-      val dsub = dim / m
-      // ---- coarse quantizer (annIvf's front end, shared formula) ----
-      val coarse = KMeansVec.fit(cached, "n_emb", nlist, seed,
-        maxIter = trainIter, idCol = "n_id")
-      val sortedCs = coarse.centroids.sortBy(_.idx)
-      def litVec(v: Array[Double]): Column = array(v.map(lit(_)): _*)
-      val coarseLit = array(sortedCs.map(c => litVec(c.vec)): _*)
-      val listed = KMeansVec.assign(cached, "n_emb", coarse.centroids)
-        .withColumnRenamed("cidx", "list")
-      // residual = vector − its list centroid (PQ codes the residual:
-      // its spread is what remains AFTER coarse quantization)
-      val resCol = zip_with(col("n_emb"),
-        element_at(coarseLit, col("list") + 1), (x, c) => x - c)
-      val withRes = listed.select(col("n_id"), col("list"),
-        resCol.as("res"))
-      // ---- codebook training on a capped hash-ordered sample ----
-      val books = trainPqBooks(withRes, m, ksub, dsub, seed,
-        trainIter, trainCap)
-      locally {
-        // ---- encode the FULL corpus: one projection, m argmins ----
-        val index = withRes.select(col("n_id"), col("list"),
-          array(pqCodeCols(books, m, dsub): _*).as("codes"))
-        // ---- probe + asymmetric scan + exact rerank ----
-        val probeStructs = array(
-          KMeansVec.distCols(col("q_emb"), sortedCs).zip(sortedCs).map {
-            case (d, c) => struct(d.as("d"), lit(c.idx).as("i"))
-          }: _*)
-        val probes = broadcast(queries
-          .select(col("vec_id").as("q_id"),
-            asDouble(col("embedding")).as("q_emb"))
-          .withColumn("probe",
-            explode(slice(array_sort(probeStructs), 1, nprobe)))
-          .select(col("q_id"), col("q_emb"), col("probe.i").as("list")))
-        val bookLits = (0 until m).map(j =>
-          array(books(j).sortBy(_.idx).map(c => litVec(c.vec)): _*))
-        // reconstruct ≈ list centroid + concat of coded subvectors —
-        // read entirely from (list, codes) + broadcast literals
-        val decoded = concat((0 until m).map(j =>
-          element_at(bookLits(j), element_at(col("codes"), j + 1) + 1)): _*)
-        val approx = zip_with(element_at(coarseLit, col("list") + 1),
-          decoded, (c, r) => c + r)
-        val wc = Window.partitionBy("q_id").orderBy(desc("acos"), asc("n_id"))
-        val cands = probes.join(index, Seq("list"))
-          .filter(col("q_id") =!= col("n_id"))
-          .withColumn("acos", cosine(col("q_emb"), approx))
-          .withColumn("crank", row_number().over(wc))
-          .filter(col("crank") <= k * candFactor)
-          .select("q_id", "q_emb", "n_id")
-        val w = Window.partitionBy("q_id").orderBy(desc("cos"), asc("n_id"))
-        cands.join(cached, "n_id")
-          .withColumn("cos", cosine(col("q_emb"), col("n_emb")))
-          .withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= k)
-          .select("q_id", "rank", "n_id")
-          .orderBy("q_id", "rank")
-      }
-    } finally { cached.unpersist(blocking = false); () }
   }
 
-  /** PQ codebook training core shared by `annIvfPq` and `annIvfAdc`:
-    * grouped Lloyd over a hash-ordered sample capped at `trainCap` —
-    * init is the ksub hash-first sample rows per subspace, each round
-    * is ONE Spark job (per-subspace codegen'd argmin + one
-    * groupBy(sub, code, pos) recenter collect of m·ksub·dsub cells,
-    * model-state-sized). `withRes` must carry (n_id, res).
+  /** PQ codebook training: Lloyd over a hash-ordered sample capped at
+    * `trainCap`, all m subspaces at once — init is the ksub hash-first
+    * sample rows per subspace; each of the fixed `trainIter` rounds is
+    * ONE Spark job (a per-subspace codegen'd argmin, then one
+    * `KMeansVec.recenter` grouped by subspace, collecting m·ksub·dsub
+    * cells — model-state-sized). `withRes` must carry (n_id, res).
     */
   private def trainPqBooks(withRes: DataFrame, m: Int, ksub: Int,
                            dsub: Int, seed: Long, trainIter: Int,
-                           trainCap: Long)
-      : Map[Int, Seq[graft.ml.VecCentroid]] = {
-    import graft.ml.VecCentroid
+                           trainCap: Long): Map[Int, Seq[VecCentroid]] = {
     val subArr = array((0 until m).map(j =>
       slice(col("res"), j * dsub + 1, dsub)): _*)
     val sample = withRes
@@ -879,44 +870,22 @@ object Similarity {
             VecCentroid(i, r.getSeq[Double](2).toArray)
           }.toSeq
         }
-      def argminFor(books: Map[Int, Seq[VecCentroid]],
-                    subCol: Column, jCol: Column): Column =
+      def argminFor(books: Map[Int, Seq[VecCentroid]]): Column =
         (0 until m).foldLeft(lit(-1)) { (acc, j) =>
           val cs = books(j).sortBy(_.idx)
-          when(jCol === j, GraftFunctions.nearestVecCentroid(
-            subCol, cs.map(_.idx), cs.map(_.vec))).otherwise(acc)
+          when(col("sub") === j, GraftFunctions.nearestVecCentroid(
+            col("vec"), cs.map(_.idx), cs.map(_.vec))).otherwise(acc)
         }
-      // grouped Lloyd: ONE recenter job per round covers all m books
-      var round = 0
-      while (round < trainIter) {
-        val cells = subs
-          .withColumn("code", argminFor(books, col("vec"), col("sub")))
-          .select(col("sub"), col("code"), posexplode(col("vec")))
-          .groupBy("sub", "code", "pos")
-          .agg(sum("col").as("s"), count(lit(1)).as("n"))
-          .collect()
-        val byBook = cells.groupBy(r => (r.getInt(0), r.getInt(1)))
-        books = books.map { case (j, cs) =>
-          j -> cs.map { c =>
-            byBook.get((j, c.idx)) match {
-              case Some(rows) =>
-                val vec = c.vec.clone()
-                rows.foreach(r =>
-                  vec(r.getInt(2)) = r.getDouble(3) / r.getLong(4))
-                VecCentroid(c.idx, vec)
-              case None => c // empty code keeps its previous centroid
-            }
-          }
-        }
-        round += 1
-      }
+      for (_ <- 0 until trainIter)
+        books = KMeansVec.recenter(subs.withColumn("cidx", argminFor(books)),
+          "vec", col("sub"), books)
       books
     } finally { subs.unpersist(blocking = false); () }
   }
 
   /** Full-corpus PQ encoding projection: m codegen'd argmins over the
-    * `res` column's subvectors (shared by `annIvfPq`/`annIvfAdc`). */
-  private def pqCodeCols(books: Map[Int, Seq[graft.ml.VecCentroid]],
+    * `res` column's subvectors. */
+  private def pqCodeCols(books: Map[Int, Seq[VecCentroid]],
                          m: Int, dsub: Int): Seq[Column] =
     (0 until m).map { j =>
       val cs = books(j).sortBy(_.idx)
@@ -925,27 +894,16 @@ object Similarity {
         cs.map(_.idx), cs.map(_.vec))
     }
 
-  /** Full IVFADC (r17 verdict item 4) — `annIvfPq`'s PQ re-rank composed
-    * with the SELF-PLANNED, past-the-flat-cap TWO-LEVEL coarse quantizer
-    * of `mutualNearestNeighborsIvf` (Jégou et al., TPAMI 2011, §III —
-    * the complete construction that paper names IVFADC): the list count
-    * is planned as ⌈N/targetListSize⌉ from one bounded count so list
-    * sizes stay ~constant as the corpus grows, and past `maxFlatLists`
-    * planned lists the coarse quantizer goes two-level residual — an L1
-    * quantizer of k1 = ⌈√L⌉ cells plus ONE shared L2 quantizer of
-    * k2 = ⌈L/k1⌉ cells trained on the L1 residuals; a vector's list is
-    * c1·k2 + c2 and driver state is k1 + k2 ≤ 2·√L centroids (never L),
-    * with O(√L) expression width (the list centroid is reconstructed as
-    * mat1[list div k2] + mat2[list mod k2], two element_at lookups —
-    * never an L-wide literal). Capacity ~maxFlatLists² lists ≈ 4.3e9
-    * vectors at the defaults.
-    *
-    * PQ codes the residual w.r.t. the (possibly composed) list centroid
-    * — the `trainPqBooks` grouped Lloyd, unchanged — so the index row
-    * is (id, list, m small ints) at ANY list count; the candidate scan
-    * reconstructs approx = listCentroid + decoded residual from
-    * broadcast literals (asymmetric distance), cuts at candFactor·k,
-    * and exact-reranks by id join (the q85/q163 contract).
+  /** Full IVFADC (r17 verdict item 4) — `pqStage` over the SELF-PLANNED
+    * coarse quantizer of `mutualNearestNeighborsIvf`: the list count is
+    * planned as ⌈N/targetListSize⌉ (floor 8) from one bounded count so
+    * list sizes stay ~constant as the corpus grows, and past
+    * `maxFlatLists` planned lists the quantizer goes two-level residual
+    * (`coarseQuantizer`: ≤ 2·√L centroids of driver state, O(√L)
+    * expression width). Capacity ~maxFlatLists² lists ≈ 4.3e9 vectors at
+    * the defaults. PQ codes the residual w.r.t. the (possibly composed)
+    * list centroid, so the index row is (id, list, m small ints) at ANY
+    * list count.
     *
     * Exactness (the q62/q163 device): equals exact top-k whenever the
     * probed nprobe L1 × nprobe L2 cells contain every true neighbor and
@@ -965,129 +923,17 @@ object Similarity {
                 trainIter: Int = 5, trainCap: Long = 100000L,
                 targetListSize: Long = 256L,
                 maxFlatLists: Int = 4096): DataFrame = {
-    import graft.ml.KMeansVec
-    GraftFunctions.register(corpus.sparkSession)
-    require(m >= 1 && ksub >= 1 && candFactor >= 1 && nprobe >= 1,
-      "m/ksub/candFactor/nprobe must be >= 1")
+    requirePositive("m", m)
+    requirePositive("ksub", ksub)
+    requirePositive("candFactor", candFactor)
     require(maxFlatLists >= 2, "maxFlatLists must be >= 2")
-    val corpusD = corpus.select(col("vec_id").as("n_id"),
-      asDouble(col("embedding")).as("n_emb"))
-    if (corpusD.isEmpty) {
-      val s = corpus.sparkSession
-      import s.implicits._
-      return Seq.empty[(Long, Int, Long)].toDF("q_id", "rank", "n_id")
-    }
-    val cached = corpusD.cache()
-    // two-level path's residual frame — released with `cached` below
-    // (r18 ADVICE: it outlived the call and accumulated across a
-    // long-lived session); by return time the eager phase (m2 fit, PQ
-    // training) is done, and a post-return recompute is one map stage
-    var resid: Option[DataFrame] = None
-    try {
-      val dim = cached.select(size(col("n_emb"))).take(1) match {
-        case Array(r) => r.getInt(0)
-        case _ => 1
-      }
-      require(dim % m == 0, s"dim $dim must be divisible by m=$m")
-      val dsub = dim / m
-      val lists0 = math.max(8L,
+    knnOverCorpus(corpus) { (cached, keep) =>
+      val lists = math.max(8L,
         (cached.count() + targetListSize - 1) / targetListSize)
-      require(lists0 <= maxFlatLists.toLong * maxFlatLists,
-        s"planned $lists0 lists exceeds two-level capacity " +
-          s"(${maxFlatLists}²) — raise targetListSize")
-      val qBase = queries.select(col("vec_id").as("q_id"),
-        asDouble(col("embedding")).as("q_emb"))
-      // (indexed rows, broadcast query probes, list-centroid lookup)
-      val (listed, qProbes, centroidOf) =
-        if (lists0 <= maxFlatLists) {
-          // flat coarse quantizer — annIvfPq's front end, self-planned
-          val model = KMeansVec.fit(cached, "n_emb", lists0.toInt, seed,
-            maxIter = trainIter, idCol = "n_id")
-          val cs = model.centroids.sortBy(_.idx)
-          val mat = typedLit(cs.map(_.vec.toSeq))
-          val l = KMeansVec.assign(cached, "n_emb", cs)
-            .select(col("n_id"), col("n_emb"),
-              col("cidx").cast("long").as("list"))
-          val p = broadcast(qBase
-            .withColumn("cell",
-              explode(GraftFunctions.topKVecCentroids(col("q_emb"),
-                cs.map(_.idx), cs.map(_.vec), nprobe)))
-            .select(col("q_id"), col("q_emb"),
-              col("cell").cast("long").as("list")))
-          val cOf = (list: Column) =>
-            element_at(mat, list.cast("int") + 1)
-          (l, p, cOf)
-        } else {
-          // two-level residual coarse quantizer (the q296 planner)
-          val k1 = math.ceil(math.sqrt(lists0.toDouble)).toInt
-          val k2 = ((lists0 + k1 - 1) / k1).toInt
-          val m1 = KMeansVec.fit(cached, "n_emb", k1, seed,
-            maxIter = trainIter, idCol = "n_id")
-          val cs1 = m1.centroids.sortBy(_.idx)
-          val mat1 = typedLit(cs1.map(_.vec.toSeq))
-          def res1(vec: Column, cell: Column): Column =
-            zip_with(vec, element_at(mat1, cell + 1), (a, b) => a - b)
-          val assigned1 = KMeansVec.assign(cached, "n_emb", cs1)
-            .withColumn("r1", res1(col("n_emb"), col("cidx")))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          resid = Some(assigned1)
-          val m2 = KMeansVec.fit(assigned1, "r1", k2, seed + 1,
-            maxIter = trainIter, idCol = "n_id")
-          val cs2 = m2.centroids.sortBy(_.idx)
-          val mat2 = typedLit(cs2.map(_.vec.toSeq))
-          val l = KMeansVec.assign(
-              assigned1.select(col("n_id"), col("n_emb"),
-                col("cidx").as("c1"), col("r1")), "r1", cs2)
-            .select(col("n_id"), col("n_emb"),
-              (col("c1").cast("long") * k2 + col("cidx")).as("list"))
-          val p = broadcast(qBase
-            .withColumn("l1",
-              explode(GraftFunctions.topKVecCentroids(col("q_emb"),
-                cs1.map(_.idx), cs1.map(_.vec), nprobe)))
-            .withColumn("qres", res1(col("q_emb"), col("l1")))
-            .withColumn("l2",
-              explode(GraftFunctions.topKVecCentroids(col("qres"),
-                cs2.map(_.idx), cs2.map(_.vec), nprobe)))
-            .select(col("q_id"), col("q_emb"),
-              (col("l1").cast("long") * k2 + col("l2")).as("list")))
-          val cOf = (list: Column) => zip_with(
-            element_at(mat1, floor(list / k2).cast("int") + 1),
-            element_at(mat2, pmod(list, lit(k2.toLong)).cast("int") + 1),
-            (a, b) => a + b)
-          (l, p, cOf)
-        }
-      // residual vs the composed list centroid; PQ rides it unchanged
-      val withRes = listed.select(col("n_id"), col("list"),
-        zip_with(col("n_emb"), centroidOf(col("list")),
-          (x, c) => x - c).as("res"))
-      val books = trainPqBooks(withRes, m, ksub, dsub, seed,
-        trainIter, trainCap)
-      val index = withRes.select(col("n_id"), col("list"),
-        array(pqCodeCols(books, m, dsub): _*).as("codes"))
-      def litVec(v: Array[Double]): Column = array(v.map(lit(_)): _*)
-      val bookLits = (0 until m).map(j =>
-        array(books(j).sortBy(_.idx).map(c => litVec(c.vec)): _*))
-      val decoded = concat((0 until m).map(j =>
-        element_at(bookLits(j), element_at(col("codes"), j + 1) + 1)): _*)
-      val approx = zip_with(centroidOf(col("list")), decoded,
-        (c, r) => c + r)
-      val wc = Window.partitionBy("q_id").orderBy(desc("acos"), asc("n_id"))
-      val cands = qProbes.join(index, Seq("list"))
-        .filter(col("q_id") =!= col("n_id"))
-        .withColumn("acos", cosine(col("q_emb"), approx))
-        .withColumn("crank", row_number().over(wc))
-        .filter(col("crank") <= k * candFactor)
-        .select("q_id", "q_emb", "n_id")
-      val w = Window.partitionBy("q_id").orderBy(desc("cos"), asc("n_id"))
-      cands.join(cached, "n_id")
-        .withColumn("cos", cosine(col("q_emb"), col("n_emb")))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select("q_id", "rank", "n_id")
-        .orderBy("q_id", "rank")
-    } finally {
-      resid.foreach(_.unpersist(blocking = false))
-      cached.unpersist(blocking = false); ()
+      val coarse = coarseQuantizer(cached, lists, maxFlatLists, nprobe,
+        seed, trainIter, keep)
+      pqStage(cached, coarse, broadcast(coarse.probe(side(queries, "q"))),
+        k, m, ksub, candFactor, seed, trainIter, trainCap)
     }
   }
 
@@ -1138,11 +984,11 @@ object Similarity {
     // one batched kernel for ALL table signatures (posexplode pos == table
     // index) — see HyperplaneSignatures for why this beats composing
     // bits×tables literal-array dot columns
-    def bucketed(df: DataFrame, idCol: String, embCol: String): DataFrame =
-      df.select(col("vec_id").as(idCol),
-          asDouble(col("embedding")).as(embCol))
-        .select(col(idCol), col(embCol), posexplode(
-          GraftFunctions.hyperplaneSignatures(col(embCol), planes.toSeq)))
+    def bucketed(df: DataFrame, p: String): DataFrame =
+      side(df, p)
+        .select(col(s"${p}_id"), col(s"${p}_emb"), posexplode(
+          GraftFunctions.hyperplaneSignatures(col(s"${p}_emb"),
+            planes.toSeq)))
         .withColumnRenamed("pos", "table")
         .withColumnRenamed("col", "sig")
     // Multi-probe rides the QUERY side (small, broadcast): each query
@@ -1161,24 +1007,18 @@ object Similarity {
         case _ => (0L +: r1) ++ r2
       }
     }
-    val qbBase = bucketed(queries, "q_id", "q_emb")
+    val qbBase = bucketed(queries, "q")
     val qb = broadcast(
       if (probeRadius <= 0) qbBase
       else qbBase.select(col("q_id"), col("q_emb"), col("table"),
         explode(array(probeMasks.map(m =>
           col("sig").bitwiseXOR(lit(m))): _*)).as("sig")))
-    val cb = bucketed(corpus, "n_id", "n_emb")
+    val cb = bucketed(corpus, "n")
     val candidates = qb.join(cb,
         Seq("table", "sig")).filter(col("q_id") =!= col("n_id"))
       .select("q_id", "q_emb", "n_id", "n_emb")
       .dropDuplicates("q_id", "n_id")
-    val w = Window.partitionBy("q_id").orderBy(desc("cos"), asc("n_id"))
-    candidates
-      .withColumn("cos", cosine(col("q_emb"), col("n_emb")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("q_id", "rank", "n_id")
-      .orderBy("q_id", "rank")
+    topKByCosine(candidates, k)
   }
 
   /** Per-label embedding centroids in fixed-grid quantized space: each
@@ -1578,10 +1418,10 @@ object Similarity {
     */
   private def loadCentroids(spark: org.apache.spark.sql.SparkSession,
                             indexTable: String)
-      : Seq[graft.ml.VecCentroid] =
+      : Seq[VecCentroid] =
     spark.table(s"${indexTable}_centroids")
       .orderBy("idx").collect().toSeq
-      .map(r => graft.ml.VecCentroid(r.getInt(0),
+      .map(r => VecCentroid(r.getInt(0),
         r.getSeq[Double](1).toArray))
 
   /** Build (or destructively REBUILD) a persisted IVF index over
@@ -1602,15 +1442,12 @@ object Similarity {
   def ivfIndexBuild(embeddings: DataFrame, histIds: DataFrame,
                     indexTable: String, nlist: Int = 8, seed: Long = 42L,
                     trainIter: Int = 10): Unit = {
-    import graft.ml.KMeansVec
     require(indexTable.nonEmpty, "indexTable must be explicit")
     require(nlist >= 1, "nlist must be >= 1")
     val spark = embeddings.sparkSession
     GraftFunctions.register(spark)
-    val hist = embeddings
-      .join(histIds.select("vec_id"), Seq("vec_id"), "left_semi")
-      .select(col("vec_id").as("n_id"),
-        asDouble(col("embedding")).as("n_emb"))
+    val hist = side(embeddings
+      .join(histIds.select("vec_id"), Seq("vec_id"), "left_semi"), "n")
     val cached = hist.persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -1649,14 +1486,11 @@ object Similarity {
     */
   def ivfIndexAppend(embeddings: DataFrame, dropIds: DataFrame,
                      indexTable: String): Unit = {
-    import graft.ml.KMeansVec
     val spark = embeddings.sparkSession
     GraftFunctions.register(spark)
     val cs = loadCentroids(spark, indexTable)
-    val drop = embeddings
-      .join(dropIds.select("vec_id"), Seq("vec_id"), "left_semi")
-      .select(col("vec_id").as("n_id"),
-        asDouble(col("embedding")).as("n_emb"))
+    val drop = side(embeddings
+      .join(dropIds.select("vec_id"), Seq("vec_id"), "left_semi"), "n")
     KMeansVec.assign(drop, "n_emb", cs)
       .select(col("cidx").cast("int").as("list"),
         col("n_id"), col("n_emb"))
@@ -1684,23 +1518,15 @@ object Similarity {
     val spark = embeddings.sparkSession
     GraftFunctions.register(spark)
     val cs = loadCentroids(spark, indexTable)
-    val queries = embeddings
-      .join(queryIds.select("vec_id"), Seq("vec_id"), "left_semi")
-      .select(col("vec_id").as("q_id"),
-        asDouble(col("embedding")).as("q_emb"))
+    val queries = side(embeddings
+      .join(queryIds.select("vec_id"), Seq("vec_id"), "left_semi"), "q")
     val probes = broadcast(queries
       .withColumn("cell",
         explode(GraftFunctions.topKVecCentroids(col("q_emb"),
           cs.map(_.idx), cs.map(_.vec), nprobe)))
       .select(col("q_id"), col("q_emb"), col("cell").cast("int").as("list")))
-    val w = Window.partitionBy("q_id").orderBy(desc("cos"), asc("n_id"))
-    probes.join(spark.table(indexTable), Seq("list"))
-      .filter(col("q_id") =!= col("n_id"))
-      .withColumn("cos", cosine(col("q_emb"), col("n_emb")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("q_id", "rank", "n_id")
-      .orderBy("q_id", "rank")
+    topKByCosine(probes.join(spark.table(indexTable), Seq("list"))
+      .filter(col("q_id") =!= col("n_id")), k)
   }
 
   /** Compact an appended IVF index (q384): every `ivfIndexAppend` adds

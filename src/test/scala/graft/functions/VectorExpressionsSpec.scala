@@ -1,13 +1,16 @@
 package graft.functions
 
 import graft.SparkSpec
+import org.apache.spark.sql.execution.WholeStageCodegenExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
 /** The codegen'd kernels must agree exactly with the built-in
   * higher-order-function formulation they replaced (same fold order,
   * same doubles) — this is what keeps the DuckDB oracle stable.
   */
-class VectorExpressionsSpec extends SparkSpec {
+class VectorExpressionsSpec extends SparkSpec
+    with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private def hofDot = (a: String, b: String) =>
@@ -104,4 +107,40 @@ class VectorExpressionsSpec extends SparkSpec {
       if (n.contains(21)) assert(n.indexOf(4) < n.indexOf(21))
     }
   }
+
+  private val modes = Seq(
+    "whole-stage codegen" -> (true, Map(
+      "spark.sql.codegen.wholeStage" -> "true",
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+      "spark.sql.codegen.fallback" -> "false")),
+    "no codegen" -> (false, Map(
+      "spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")))
+
+  for ((mode, (codegen, confs)) <- modes)
+    test("vector centroid kernels: a tie goes to the earlier centroid row, " +
+        s"an all-NaN distance row to the first idx ($mode)") {
+      withConfs(confs) {
+        // rows 0 and 1 are one point under two idxs, listed out of idx
+        // order, so the scan order (not the idx) must break the tie
+        val idxs = Seq(9, 4, 17)
+        val cs = Seq(Array(1.0, 1.0), Array(1.0, 1.0), Array(0.0, 0.0))
+        val pts = Seq(0L -> Array(1.0, 1.0), 1L -> Array(0.5, 0.5),
+          2L -> Array(Double.NaN, 0.0), 3L -> Array(0.0, 0.1))
+        // a two-partition RDD, so the optimizer cannot fold the projection
+        val df = spark.sparkContext.parallelize(pts, 2).toDF("id", "v")
+          .select(col("id"),
+            GraftFunctions.nearestVecCentroid(col("v"), idxs, cs).as("near"),
+            GraftFunctions.topKVecCentroids(col("v"), idxs, cs, 2).as("top"))
+        val got = df.collect().map(r =>
+          r.getLong(0) -> (r.getInt(1), r.getSeq[Int](2))).toMap
+        val staged = find(df.queryExecution.executedPlan)(
+          _.isInstanceOf[WholeStageCodegenExec]).isDefined
+        assert(staged == codegen, s"whole-stage codegen was $staged")
+        assert(got(0L) == ((9, Seq(9, 4)))) // on the duplicated point
+        assert(got(1L) == ((9, Seq(9, 4)))) // equidistant from all three
+        assert(got(2L)._1 == 9) // every distance NaN
+        assert(got(3L) == ((17, Seq(17, 9))))
+      }
+    }
 }

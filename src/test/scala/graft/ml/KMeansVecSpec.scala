@@ -41,6 +41,37 @@ class KMeansVecSpec extends SparkSpec {
     assert(r(1).vec.toSeq == Seq(99.0, 99.0, 99.0)) // untouched
   }
 
+  test("recenter by group: each centroid set is recentered on its own " +
+      "rows, all sets in one action") {
+    // group 0 holds blob A's rows, group 1 blob B's, under the SAME idxs
+    val grouped = blobs.withColumn("g", ($"vec_id" >= 3).cast("int"))
+      .withColumn("cidx", org.apache.spark.sql.functions.lit(0))
+    val prev = Map(
+      0 -> Seq(VecCentroid(0, Array(1.0, 1.0, 1.0)),
+        VecCentroid(1, Array(7.0, 7.0, 7.0))),
+      1 -> Seq(VecCentroid(0, Array(9.0, 9.0, 9.0))))
+    var r: Map[Int, Seq[VecCentroid]] = Map.empty
+    val actions = actionsOf {
+      r = KMeansVec.recenter(grouped, "emb", $"g", prev)
+    }
+    assert(actions.size == 1, actions.map(_._1).toString)
+    assert(r(0).map(_.vec.toSeq) == Seq(blobA.toSeq, Seq(7.0, 7.0, 7.0)))
+    assert(r(1).map(_.vec.toSeq) == Seq(blobB.toSeq))
+  }
+
+  test("fit rejects k < 1, maxIter < 1 and tol < 0, naming the value") {
+    val bad: Seq[(String, () => Any)] = Seq(
+      "got k=0" -> (() => KMeansVec.fit(blobs, "emb", k = 0, seed = 1L)),
+      "got maxIter=0" -> (() =>
+        KMeansVec.fit(blobs, "emb", k = 2, seed = 1L, maxIter = 0)),
+      "got tol=-1.0" -> (() =>
+        KMeansVec.fit(blobs, "emb", k = 2, seed = 1L, tol = -1.0)))
+    bad.foreach { case (msg, call) =>
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains(msg), e.getMessage)
+    }
+  }
+
   test("init is deterministic for a fixed seed") {
     val a = KMeansVec.initFromSample(blobs, "vec_id", "emb", 3, 7L)
     val b = KMeansVec.initFromSample(blobs, "vec_id", "emb", 3, 7L)

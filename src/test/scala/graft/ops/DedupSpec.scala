@@ -119,6 +119,21 @@ class DedupSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(mh == exact)
   }
 
+  test("minhashPairs and bandKeys reject a non-dividing bands and a " +
+      "threshold outside (0, 1], naming the value") {
+    val d = docs("a b c d", "a b c e")
+    val bad: Seq[(String, () => Any)] = Seq(
+      "bands=5, numHashes=32" -> (() =>
+        Dedup.minhashPairs(d, numHashes = 32, bands = 5)),
+      "bands=5, numHashes=32" -> (() =>
+        Dedup.bandKeys(d, numHashes = 32, bands = 5)),
+      "threshold=1.5" -> (() => Dedup.minhashPairs(d, threshold = 1.5)))
+    bad.foreach { case (msg, call) =>
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains(msg), e.getMessage)
+    }
+  }
+
   /** A seeded corpus for the MinHash verify: random base documents, planted
     * edits of them, exact duplicates, documents shorter than n = 3
     * tokens, one band collision between documents that share no shingle

@@ -1,9 +1,13 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.functions.TopKVecCentroids
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.ArraySort
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
-class SimilaritySpec extends SparkSpec {
+class SimilaritySpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private def vecs(vs: (Long, Array[Float])*) =
@@ -702,5 +706,94 @@ class SimilaritySpec extends SparkSpec {
       k = 3, m = 2)
     assert(r.columns.toSeq == Seq("q_id", "rank", "n_id") &&
       r.count() == 0L)
+  }
+
+  test("every IVF operator probes through graft_topk_vec_centroids, " +
+      "never an array_sort") {
+    val e = vecs(clustered(120): _*)
+    val queries = e.filter(col("vec_id") < 8)
+    // 256 vectors / targetListSize 16 → 16 lists > maxFlatLists 4:
+    // the two-level path
+    val e2 = Similarity.clusteredEmbeddings(
+      (0L until 256L).map(i =>
+        (i, Array.fill(8)(((i * 31) % 7).toFloat / 100f)))
+        .toDF("vec_id", "embedding"), groups = 8, scale = 3.0)
+    val ops: Seq[(String, DataFrame)] = Seq(
+      "annIvf" -> Similarity.annIvf(e, queries, k = 5, nlist = 8,
+        nprobe = 2),
+      "annIvfPq" -> Similarity.annIvfPq(e, queries, k = 5, nlist = 8,
+        nprobe = 2),
+      "annIvfAdc flat" -> Similarity.annIvfAdc(e, queries, k = 5,
+        nprobe = 2, targetListSize = 16L),
+      "annIvfAdc two-level" -> Similarity.annIvfAdc(e2,
+        e2.filter(col("vec_id") < 8), k = 5, nprobe = 3,
+        targetListSize = 16L, maxFlatLists = 4),
+      "mutualNearestNeighborsIvf" ->
+        Similarity.mutualNearestNeighborsIvf(e, nlist = 8, nprobe = 2))
+    ops.foreach { case (name, df) =>
+      assert(df.collect().nonEmpty, name)
+      val exprs = collect(df.queryExecution.executedPlan) { case p =>
+        p.expressions.flatMap(_.collect { case x => x })
+      }.flatten
+      assert(exprs.exists(_.isInstanceOf[TopKVecCentroids]),
+        s"$name: no graft_topk_vec_centroids probe")
+      assert(!exprs.exists(_.isInstanceOf[ArraySort]), s"$name: array_sort")
+    }
+  }
+
+  test("mutualNearestNeighborsIvf and the ANN IVF family leave nothing " +
+      "persisted, on the flat and the two-level path") {
+    // a corpus no other test builds: persisting a plan that is already
+    // cached adds no RDD, so a shared fixture would hide a leak behind
+    // the entry an earlier test left
+    val e = Similarity.clusteredEmbeddings(
+      (0L until 256L).map(i =>
+        (i, Array.fill(8)(((i * 13) % 5).toFloat / 50f)))
+        .toDF("vec_id", "embedding"), groups = 8, scale = 2.0)
+    val queries = e.filter(col("vec_id") < 8)
+    val calls: Seq[(String, () => DataFrame)] = Seq(
+      "mutual-NN flat" -> (() =>
+        Similarity.mutualNearestNeighborsIvf(e, nlist = 8, nprobe = 2)),
+      "mutual-NN two-level" -> (() =>
+        Similarity.mutualNearestNeighborsIvf(e, nprobe = 3,
+          targetListSize = 16L, maxFlatLists = 4)),
+      "annIvf" -> (() => Similarity.annIvf(e, queries, k = 5, nlist = 8)),
+      "annIvfPq" -> (() => Similarity.annIvfPq(e, queries, k = 5,
+        nlist = 8)),
+      "annIvfAdc two-level" -> (() => Similarity.annIvfAdc(e, queries,
+        k = 5, nprobe = 3, targetListSize = 16L, maxFlatLists = 4)))
+    calls.foreach { case (name, call) =>
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      assert(call().collect().nonEmpty, name)
+      val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(left.isEmpty, s"$name left RDDs $left persisted")
+    }
+  }
+
+  test("IVF operators reject a parameter below 1, naming it and its value") {
+    val e = vecs(clustered(40): _*)
+    val q = e.filter(col("vec_id") < 2)
+    val bad: Seq[(String, () => Any)] = Seq(
+      "need nprobe >= 1, got 0" -> (() =>
+        Similarity.annIvf(e, q, k = 3, nlist = 4, nprobe = 0)),
+      "need nlist >= 1, got 0" -> (() =>
+        Similarity.annIvf(e, q, k = 3, nlist = 0)),
+      "need nlist >= 1, got -2" -> (() =>
+        Similarity.annIvfPq(e, q, k = 3, nlist = -2)),
+      "need nprobe >= 1, got 0" -> (() =>
+        Similarity.annIvfPq(e, q, k = 3, nprobe = 0)),
+      "need m >= 1, got 0" -> (() => Similarity.annIvfPq(e, q, k = 3, m = 0)),
+      "need ksub >= 1, got 0" -> (() =>
+        Similarity.annIvfAdc(e, q, k = 3, ksub = 0)),
+      "need candFactor >= 1, got 0" -> (() =>
+        Similarity.annIvfPq(e, q, k = 3, candFactor = 0)),
+      "need nprobe >= 1, got 0" -> (() =>
+        Similarity.annIvfAdc(e, q, k = 3, nprobe = 0)),
+      "need nprobe >= 1, got 0" -> (() =>
+        Similarity.mutualNearestNeighborsIvf(e, nprobe = 0)))
+    bad.foreach { case (msg, call) =>
+      val ex = intercept[IllegalArgumentException](call())
+      assert(ex.getMessage.contains(msg), ex.getMessage)
+    }
   }
 }

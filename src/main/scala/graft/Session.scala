@@ -38,4 +38,23 @@ object Session {
 
   def builder(cores: Int): SparkSession.Builder =
     SparkSession.builder().config(settings(cores))
+
+  /** Runs `body` with `confs` set on `spark`, then puts back each key's
+    * explicit setting, or unsets a key that had none. The saved value is
+    * the explicit one (`getAllConfs`): `spark.conf.get`/`getOption` return
+    * Spark's default for an unset registered key, and restoring that would
+    * leave the key set.
+    */
+  private[graft] def withConfs[T](spark: SparkSession,
+      confs: Map[String, String])(body: => T): T = {
+    val explicit = spark.sessionState.conf.getAllConfs
+    val saved = confs.keys.map(k => k -> explicit.get(k))
+    try {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }

@@ -233,25 +233,36 @@ object VecCentroidScan {
   }
 
   /** Idxs of the min(k, |cs|) nearest centroids, nearest first, kept in a
-    * k-element insertion buffer; slots no finite distance reached hold 0. */
+    * k-element insertion buffer of rows. Slots no finite distance reached
+    * take the rows not yet chosen, in scan order, so no row is chosen
+    * twice; with k = 1 that is [[nearest]]'s all-NaN rule. */
   def topK(x: ArrayData, idxs: Array[Int], cs: Array[Array[Double]],
            k: Int): Array[Int] = {
     val kk = math.min(k, cs.length)
     val bd = Array.fill(kk)(Double.PositiveInfinity)
-    val bi = new Array[Int](kk)
+    val br = new Array[Int](kk)
+    var filled = 0
     var c = 0
     while (c < cs.length) {
       val s = sqDist(x, cs(c))
       if (s < bd(kk - 1)) {
         var p = kk - 1
         while (p > 0 && s < bd(p - 1)) {
-          bd(p) = bd(p - 1); bi(p) = bi(p - 1); p -= 1
+          bd(p) = bd(p - 1); br(p) = br(p - 1); p -= 1
         }
-        bd(p) = s; bi(p) = idxs(c)
+        bd(p) = s; br(p) = c
+        if (filled < kk) filled += 1
       }
       c += 1
     }
-    bi
+    c = 0
+    while (filled < kk) {
+      if (!br.take(filled).contains(c)) { br(filled) = c; filled += 1 }
+      c += 1
+    }
+    var p = 0
+    while (p < kk) { br(p) = idxs(br(p)); p += 1 }
+    br
   }
 }
 

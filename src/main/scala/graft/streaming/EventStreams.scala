@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
+  OutputMode, StreamingQuery, Trigger}
 
 /** Structured Streaming surface over the `events` table shape
   * (SURVEY.md §2.8 — the reference has no streaming; this is engine-surface
@@ -163,22 +164,10 @@ object EventStreams {
                            firstType: String = "view",
                            secondType: String = "purchase",
                            window: String = "24 hours",
-                           delay: String = "1 hour"): DataFrame = {
-    val v = withEventTime(events.filter(col("event_type") === firstType))
-      .withWatermark("event_time", delay)
-      .select(col("user_id"), col("event_time").as("view_time"),
-        col("value").as("v1"))
-    val p = withEventTime(events.filter(col("event_type") === secondType))
-      .withWatermark("event_time", delay)
-      .select(col("user_id").as("uid2"), col("event_time").as("purchase_time"),
-        col("value").as("v2"))
-    v.join(p,
-      col("user_id") === col("uid2") &&
-      col("purchase_time") > col("view_time") &&
-      col("purchase_time") <= col("view_time") + expr(s"INTERVAL $window"))
+                           delay: String = "1 hour"): DataFrame =
+    viewPurchaseJoin(events, firstType, secondType, window, delay, "inner")
       .select(col("user_id"), col("view_time"), col("purchase_time"),
         (col("v1") + col("v2")).as("combined_value"))
-  }
 
   /** LEFT-OUTER stream-stream join: every view pairs with the purchases
     * that follow it within `window`, and a view with NO such purchase is
@@ -205,22 +194,34 @@ object EventStreams {
                             firstType: String = "view",
                             secondType: String = "purchase",
                             window: String = "24 hours",
-                            delay: String = "1 hour"): DataFrame = {
-    val v = withEventTime(events.filter(col("event_type") === firstType))
-      .withWatermark("event_time", delay)
-      .select(col("user_id"), col("event_time").as("view_time"),
-        col("value").as("v1"))
-    val p = withEventTime(events.filter(col("event_type") === secondType))
-      .withWatermark("event_time", delay)
-      .select(col("user_id").as("uid2"), col("event_time").as("purchase_time"),
-        col("value").as("v2"))
+                            delay: String = "1 hour"): DataFrame =
+    viewPurchaseJoin(events, firstType, secondType, window, delay,
+        "left_outer")
+      .select(col("user_id"), col("view_time"), col("purchase_time"),
+        col("v1"), col("v2"))
+
+  /** The view ⋈ purchase join both stream-stream operators run: each side
+    * filtered to its type and watermarked by `delay` (view side
+    * `user_id, view_time, v1`; purchase side `uid2, purchase_time, v2`),
+    * joined on the same user with `purchase_time` in
+    * `(view_time, view_time + window]` — the range conjunct that lets
+    * Spark expire join state.
+    */
+  private def viewPurchaseJoin(events: DataFrame, firstType: String,
+      secondType: String, window: String, delay: String,
+      joinType: String): DataFrame = {
+    def side(eventType: String) =
+      withEventTime(events.filter(col("event_type") === eventType))
+        .withWatermark("event_time", delay)
+    val v = side(firstType).select(col("user_id"),
+      col("event_time").as("view_time"), col("value").as("v1"))
+    val p = side(secondType).select(col("user_id").as("uid2"),
+      col("event_time").as("purchase_time"), col("value").as("v2"))
     v.join(p,
       col("user_id") === col("uid2") &&
       col("purchase_time") > col("view_time") &&
       col("purchase_time") <= col("view_time") + expr(s"INTERVAL $window"),
-      "left_outer")
-      .select(col("user_id"), col("view_time"), col("purchase_time"),
-        col("v1"), col("v2"))
+      joinType)
   }
 
   final case class TimedEvent(user_id: Long, ts: Long, event_type: String,
@@ -270,29 +271,11 @@ object EventStreams {
           if (state.hasTimedOut) {
             val s = state.get
             state.remove()
-            Iterator(SessionOut(uid, s.startUs, s.lastUs, s.n, s.sum))
+            Iterator(closedSession(uid, s))
           } else {
-            val evs = batch.toArray.sortBy(_.ts)
-            val closed =
-              scala.collection.mutable.ListBuffer.empty[SessionOut]
-            var cur = state.getOption
-            evs.foreach { e =>
-              val us = e.ts / 1000
-              cur match {
-                case Some(s) if us - s.lastUs < gapUs =>
-                  // admitted-but-late events (< watermark delay) may sort
-                  // before the session's current bounds — never move the
-                  // bounds backward or the timeout would regress
-                  cur = Some(SessionAcc(math.min(s.startUs, us),
-                    math.max(s.lastUs, us), s.n + 1, s.sum + e.value))
-                case Some(s) =>
-                  closed += SessionOut(uid, s.startUs, s.lastUs, s.n, s.sum)
-                  cur = Some(SessionAcc(us, us, 1, e.value))
-                case None =>
-                  cur = Some(SessionAcc(us, us, 1, e.value))
-              }
-            }
-            cur.foreach { s =>
+            val (next, closed) =
+              foldSessions(uid, state.getOption, batch, gapUs)
+            next.foreach { s =>
               state.update(s)
               // timeout fires when the watermark passes last + gap (ms)
               state.setTimeoutTimestamp(s.lastUs / 1000 + gapUs / 1000)
@@ -302,11 +285,43 @@ object EventStreams {
       }
   }
 
+  /** One sessionizer step, shared by [[sessionizeWithState]] and
+    * [[SessionStatefulProcessor]]: folds `events` in `ts` order into the
+    * open session `cur`, closing it at the first event `gapUs` or more
+    * after its last one. Returns the open session left and the sessions
+    * closed on the way.
+    */
+  private def foldSessions(uid: Long, cur: Option[SessionAcc],
+      events: Iterator[TimedEvent],
+      gapUs: Long): (Option[SessionAcc], Seq[SessionOut]) = {
+    val closed = scala.collection.mutable.ListBuffer.empty[SessionOut]
+    val next = events.toArray.sortBy(_.ts).foldLeft(cur) { (acc, e) =>
+      val us = e.ts / 1000
+      acc match {
+        case Some(s) if us - s.lastUs < gapUs =>
+          // admitted-but-late events (< watermark delay) may sort before
+          // the session's current bounds — never move the bounds backward
+          // or the timeout would regress
+          Some(SessionAcc(math.min(s.startUs, us),
+            math.max(s.lastUs, us), s.n + 1, s.sum + e.value))
+        case Some(s) =>
+          closed += closedSession(uid, s)
+          Some(SessionAcc(us, us, 1, e.value))
+        case None =>
+          Some(SessionAcc(us, us, 1, e.value))
+      }
+    }
+    (next, closed.toList)
+  }
+
+  private def closedSession(uid: Long, s: SessionAcc): SessionOut =
+    SessionOut(uid, s.startUs, s.lastUs, s.n, s.sum)
+
   /** The q346 sessionizer's state machine re-expressed on Spark 4's
     * `transformWithState` (StatefulProcessor — the arbitrary-state API
     * v2): named ValueState handle + registered event-time timers in
-    * place of GroupState + setTimeoutTimestamp, with the SAME merge
-    * logic line for line. One live timer per key: each batch deletes
+    * place of GroupState + setTimeoutTimestamp, around the SAME fold
+    * (`foldSessions`). One live timer per key: each batch deletes
     * the previous flush timer and re-registers at last-event + gap —
     * exactly what setTimeoutTimestamp did implicitly in v1.
     */
@@ -325,26 +340,9 @@ object EventStreams {
     override def handleInputRows(uid: Long, rows: Iterator[TimedEvent],
         timers: org.apache.spark.sql.streaming.TimerValues)
         : Iterator[SessionOut] = {
-      val evs = rows.toArray.sortBy(_.ts)
-      val closed = scala.collection.mutable.ListBuffer.empty[SessionOut]
-      var cur = if (session.exists()) Some(session.get()) else None
-      evs.foreach { e =>
-        val us = e.ts / 1000
-        cur match {
-          case Some(s) if us - s.lastUs < gapUs =>
-            // the v1 late-event law verbatim: admitted-but-late events
-            // may sort before the session's bounds — never move them
-            // backward or the flush timer would regress
-            cur = Some(SessionAcc(math.min(s.startUs, us),
-              math.max(s.lastUs, us), s.n + 1, s.sum + e.value))
-          case Some(s) =>
-            closed += SessionOut(uid, s.startUs, s.lastUs, s.n, s.sum)
-            cur = Some(SessionAcc(us, us, 1, e.value))
-          case None =>
-            cur = Some(SessionAcc(us, us, 1, e.value))
-        }
-      }
-      cur.foreach { s =>
+      val (next, closed) = foldSessions(uid,
+        if (session.exists()) Some(session.get()) else None, rows, gapUs)
+      next.foreach { s =>
         session.update(s)
         getHandle.listTimers().foreach(t =>
           getHandle.deleteTimer(t.asInstanceOf[Long]))
@@ -360,7 +358,7 @@ object EventStreams {
       if (session.exists()) {
         val s = session.get()
         session.clear()
-        Iterator(SessionOut(uid, s.startUs, s.lastUs, s.n, s.sum))
+        Iterator(closedSession(uid, s))
       } else Iterator.empty
   }
 
@@ -472,18 +470,10 @@ object EventStreams {
     */
   def asOfEnrichmentViaStream(spark: SparkSession, dir: String,
       queryName: String = "q361_stream_asof"): DataFrame = {
-    spark.catalog.dropTempView(queryName)
-    withShufflePartitions(spark, statePartitions(spark)) {
-      val sq = enrichPurchasesWithLastClick(readEventStream(spark, dir),
+    drain(spark, Seq(Sink(queryName,
+      enrichPurchasesWithLastClick(readEventStream(spark, dir),
           ttlUs = 100L * 365 * 24 * 3600 * 1000000L,
-          delay = "87600 hours")
-        .toDF()
-        .writeStream.format("memory").queryName(queryName)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      sq.awaitTermination()
-    }
+          delay = "87600 hours").toDF())))(())
     spark.table(queryName)
       .filter(col("click_id").isNotNull)
       .select(col("purchase_id"), col("click_id"), col("gap_us"))
@@ -534,15 +524,8 @@ object EventStreams {
     */
   def tumblingCountsViaStream(spark: SparkSession, dir: String,
       queryName: String = "q309_stream_tumbling"): DataFrame = {
-    spark.catalog.dropTempView(queryName)
-    withShufflePartitions(spark, statePartitions(spark)) {
-      val sq = tumblingTypeCounts(readEventStream(spark, dir))
-        .writeStream.format("memory").queryName(queryName)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      sq.awaitTermination()
-    }
+    drain(spark, Seq(Sink(queryName,
+      tumblingTypeCounts(readEventStream(spark, dir)), "complete")))(())
     spark.table(queryName).orderBy("win_us", "event_type")
   }
 
@@ -566,27 +549,16 @@ object EventStreams {
     */
   def dedupedUnionCensusViaStream(spark: SparkSession, dir: String,
       queryName: String = "q312_stream_dedup"): DataFrame = {
-    spark.catalog.dropTempView(queryName)
-    withShufflePartitions(spark, statePartitions(spark)) {
-      val doubled = readEventStream(spark, dir)
-        .unionByName(readEventStream(spark, dir))
-      val sq = withEventTime(doubled)
-        .withWatermark("event_time", "2 hours")
-        .dropDuplicatesWithinWatermark("event_id")
-        .writeStream.format("memory").queryName(queryName)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      sq.awaitTermination()
-    }
+    val doubled = readEventStream(spark, dir)
+      .unionByName(readEventStream(spark, dir))
+    drain(spark, Seq(Sink(queryName, withEventTime(doubled)
+      .withWatermark("event_time", "2 hours")
+      .dropDuplicatesWithinWatermark("event_id"))))(())
     spark.table(queryName)
       .groupBy("event_type")
       .agg(count(lit(1)).as("cnt"),
         countDistinct(col("user_id")).as("n_users"),
-        // exact cents, not a rounded double sum: a per-type corpus-wide
-        // double fold is order-sensitive at the ulp level and this
-        // census must hash-match the oracle bit for bit
-        sum(expr("cast(round(value * 100) as long)")).as("sum_cents"))
+        sum(cents("value")).as("sum_cents"))
       .orderBy("event_type")
   }
 
@@ -607,17 +579,17 @@ object EventStreams {
     * `purchase_time <= view_time + window`); the census is a keyed
     * partial agg. The memory sink is parity harness, not deployment.
     */
-  /** Run `f` with `spark.sql.shuffle.partitions` temporarily lowered: a
-    * streaming query materializes one STATE STORE INSTANCE per shuffle
-    * partition per stateful operator, and on a single host the per-store
-    * fixed cost (provider init, checkpoint dir, commit fsync) dominates
-    * a finite parity run long before data volume does. The streaming
-    * query binds the conf at START; the restored value governs
-    * everything planned afterwards (the caller's census aggregates).
-    * On a real cluster the deployment path sizes this to the state
-    * volume instead — this knob is about the parity harness's fixed
-    * costs, not the operator's scale shape (the DevScale rung is flat).
-    */
+  def twoLegPairsCensusViaStream(spark: SparkSession, dir: String,
+      queryName: String = "q345_stream_join"): DataFrame = {
+    drain(spark, Seq(Sink(queryName,
+      twoLegPairsStreaming(readEventStream(spark, dir)))))(())
+    spark.table(queryName)
+      .groupBy("user_id")
+      .agg(count(lit(1)).as("n_pairs"),
+        sum(cents("combined_value")).as("sum_cents"))
+      .orderBy("user_id")
+  }
+
   /** Stream-STATIC dim enrichment executed through the real engine,
     * driver-checkable (q370): the purchase stream joined to the STATIC
     * customer dim (broadcast hash join inside every micro-batch — the
@@ -639,23 +611,15 @@ object EventStreams {
     */
   def dimEnrichmentViaStream(spark: SparkSession, dir: String,
       queryName: String = "q370_stream_dim"): DataFrame = {
-    spark.catalog.dropTempView(queryName)
     val cust = graft.Tables.customer(spark, dir)
       .select(col("c_custkey"), col("c_nationkey"))
-    withShufflePartitions(spark, statePartitions(spark)) {
-      val sq = readEventStream(spark, dir)
-        .filter(col("event_type") === "purchase")
-        .join(broadcast(cust), col("user_id") === col("c_custkey"))
-        .writeStream.format("memory").queryName(queryName)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      sq.awaitTermination()
-    }
+    drain(spark, Seq(Sink(queryName, readEventStream(spark, dir)
+      .filter(col("event_type") === "purchase")
+      .join(broadcast(cust), col("user_id") === col("c_custkey")))))(())
     spark.table(queryName)
       .groupBy(col("c_nationkey").cast("long").as("nation"))
       .agg(count(lit(1)).as("n_purchases"),
-        sum(expr("cast(round(value * 100) as long)")).as("sum_cents"))
+        sum(cents("value")).as("sum_cents"))
       .orderBy("nation")
   }
 
@@ -689,80 +653,146 @@ object EventStreams {
     */
   def stateStoreCensus(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    def lastStateOps(
-        sq: org.apache.spark.sql.streaming.StreamingQuery,
-        pipeline: String): Seq[(String, String, Long, Long, Long)] = {
-      sq.awaitTermination()
-      sq.recentProgress.toSeq.reverse
-        .find(_.stateOperators.nonEmpty).toSeq
-        .flatMap(_.stateOperators.toSeq)
-        .map(so => (pipeline, so.operatorName, so.numRowsTotal,
-          so.numRowsUpdated, so.memoryUsedBytes))
-    }
-    val rows = withShufflePartitions(spark, statePartitions(spark)) {
-      spark.catalog.dropTempView("q369_state_join")
-      spark.catalog.dropTempView("q369_state_sessions")
-      // START both pipelines before awaiting either (guide §2.6 —
-      // overlap independent jobs): the two queries share no state, so
-      // the sessionizer's micro-batches back-fill cores the join's
-      // trailing batch leaves idle. Results are per-query state metrics
-      // — identical under any interleaving.
-      val sqJoin =
-        twoLegPairsStreaming(readEventStream(spark, dir))
-          .writeStream.format("memory").queryName("q369_state_join")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      val sqSess =
+    // both pipelines start before either is awaited (guide §2.6 —
+    // overlap independent jobs): the two queries share no state, so the
+    // sessionizer's micro-batches back-fill cores the join's trailing
+    // batch leaves idle. Results are per-query state metrics — identical
+    // under any interleaving.
+    val (queries, _) = drain(spark, Seq(
+      Sink("q369_state_join",
+        twoLegPairsStreaming(readEventStream(spark, dir))),
+      Sink("q369_state_sessions",
         sessionizeWithState(readEventStream(spark, dir),
-            gapUs = 30L * 60 * 1000000, delay = "87600 hours")
-          .toDF()
-          .writeStream.format("memory").queryName("q369_state_sessions")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      lastStateOps(sqJoin, "1_stream_join") ++
-        lastStateOps(sqSess, "2_sessionize")
+          gapUs = 30L * 60 * 1000000, delay = "87600 hours").toDF())))(())
+    val rows = queries.zip(Seq("1_stream_join", "2_sessionize")).flatMap {
+      case (sq, pipeline) =>
+        sq.recentProgress.toSeq.reverse
+          .find(_.stateOperators.nonEmpty).toSeq
+          .flatMap(_.stateOperators.toSeq)
+          .map(so => (pipeline, so.operatorName, so.numRowsTotal,
+            so.numRowsUpdated, so.memoryUsedBytes))
     }
     rows.toDF("pipeline", "operator", "n_state_rows", "n_rows_updated",
         "state_bytes")
       .orderBy("pipeline", "operator")
   }
 
-  /** State-store width of the finite parity runs: a streaming query
-    * materializes one state-store instance per shuffle partition per
-    * stateful operator (a stream-stream join keeps FOUR per partition),
-    * and on a finite input the per-store fixed cost (provider init,
-    * checkpoint dir, per-batch commit fsync) dominates long before data
-    * volume does. Deployment sizes this to state VOLUME via the same
-    * conf; the default is the measured fixed-cost knee of the parity
-    * fixtures (r20 A/B over the five state-heavy entries, min of 3:
-    * width 8 = 17.5 s, width 4 = 12.0 s, width 2 = 12.0 s — 4 is the
-    * knee). Results are width-invariant (state is keyed; the census
-    * aggregates are exact integer arithmetic; q369's pinned counts are
-    * operator TOTALS) — StreamingSpec pins that.
+  // ---- the parity harness: every *ViaStream / census / readback entry ----
+
+  /** One memory-sink query of a parity run: the query (and temp view)
+    * name, the streaming frame, the output mode, and a checkpoint
+    * directory if the run's state is read back afterwards. */
+  private[streaming] final case class Sink(name: String, frame: DataFrame,
+      mode: String = "append", checkpoint: Option[String] = None)
+
+  /** State-store width of the parity runs (see [[drain]]). Deployment
+    * sizes the same conf to state VOLUME; 4 is the measured fixed-cost
+    * knee of the parity fixtures (r20 A/B over the five state-heavy
+    * entries, min of 3: width 8 = 17.5 s, width 4 = 12.0 s, width 2 =
+    * 12.0 s). Results do not depend on it — state is keyed, the census
+    * aggregates are exact integer arithmetic and q369's pinned counts are
+    * operator TOTALS; StreamingSpec "state width: the q345 and q346
+    * censuses are equal at one and four partitions" pins that.
     */
-  private def statePartitions(spark: SparkSession): Int =
-    spark.conf.getOption("spark.graft.streaming.statePartitions")
-      .map(_.toInt).getOrElse(4)
+  private val StatePartitions = 4
 
-  private def withShufflePartitions[T](spark: SparkSession, n: Int)(
-      f: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val old = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try f finally spark.conf.set(key, old)
-  }
+  /** The lifecycle of one parity run: starts every sink's query under
+    * `Trigger.AvailableNow` (dropping a stale view of the same name
+    * first), runs `body` while they drain, awaits them all, and returns
+    * the finished queries with `body`'s value. On every exit path it
+    * stops each query it started and puts `confs` and
+    * `spark.sql.shuffle.partitions` back as it found them.
+    *
+    * Width: a streaming query materializes one state-store instance per
+    * shuffle partition per stateful operator (a stream-stream join keeps
+    * FOUR per partition), and on a finite input the per-store fixed cost
+    * (provider init, checkpoint dir, per-batch commit fsync) dominates
+    * long before data volume does, so the queries run at
+    * [[StatePartitions]]. A query binds the conf at START; the restored
+    * value governs everything planned afterwards (the caller's census
+    * aggregates). This is about the harness's fixed costs, not the
+    * operators' scale shape (the DevScale rung is flat).
+    */
+  private[streaming] def drain[T](spark: SparkSession, sinks: Seq[Sink],
+      confs: Map[String, String] = Map.empty)(
+      body: => T): (Seq[StreamingQuery], T) =
+    graft.Session.withConfs(spark, confs +
+        ("spark.sql.shuffle.partitions" -> StatePartitions.toString)) {
+      val started = scala.collection.mutable.ArrayBuffer.empty[StreamingQuery]
+      try {
+        sinks.foreach { s =>
+          spark.catalog.dropTempView(s.name)
+          val w = s.frame.writeStream.format("memory").queryName(s.name)
+            .outputMode(s.mode).trigger(Trigger.AvailableNow())
+          started +=
+            s.checkpoint.fold(w)(w.option("checkpointLocation", _)).start()
+        }
+        val out = body
+        started.foreach(_.awaitTermination())
+        (started.toList, out)
+      } finally started.foreach(_.stop())
+    }
 
-  private def withConf[T](spark: SparkSession, key: String, value: String)(
-      f: => T): T = {
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try f finally old match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+  /** Runs `run` against a fresh temp checkpoint, then opens the state it
+    * left with `format("statestore")` (plus `options`), collects
+    * `census` of it and returns the rows as a local frame. The checkpoint
+    * is deleted on every exit path. */
+  private[streaming] def readState[B](spark: SparkSession,
+      options: Map[String, String] = Map.empty)(run: String => B)(
+      census: (DataFrame, B) => DataFrame): DataFrame = {
+    val cp = java.nio.file.Files.createTempDirectory("graft_state_cp")
+      .toString
+    try {
+      val b = run(cp)
+      val frame = census(spark.read.format("statestore")
+        .option("path", cp).options(options).load(), b)
+      spark.createDataFrame(java.util.Arrays.asList(frame.collect(): _*),
+        frame.schema)
+    } finally {
+      val path = new org.apache.hadoop.fs.Path(cp)
+      val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
+      fs.delete(path, true)
     }
   }
+
+  /** `min(max view µs, max purchase µs) − horizonUs` over the batch
+    * events table (the same files the stream reads): exact integer µs,
+    * no watermark value in it. The MIN, not the global max: each side's
+    * watermark node sits AFTER its type filter and tracks only its own
+    * type's max event time, so the join's global watermark is the MIN
+    * over the two sides — a trailing purchase-only (or view-only)
+    * stretch advances one side's clock and not the other's. When either
+    * type is absent the watermark never advances and the bound is
+    * `Long.MinValue`.
+    */
+  private def viewPurchaseBound(spark: SparkSession, dir: String,
+      horizonUs: Long): Long = {
+    val t = graft.Tables.events(spark, dir)
+      .agg(
+        max(when(col("event_type") === "view", expr("ts div 1000")))
+          .as("mv"),
+        max(when(col("event_type") === "purchase", expr("ts div 1000")))
+          .as("mp"))
+      .head()
+    if (t.isNullAt(0) || t.isNullAt(1)) Long.MinValue
+    else math.min(t.getLong(0), t.getLong(1)) - horizonUs
+  }
+
+  /** Exact cents of a double expression, rounded per row: summed as longs,
+    * the census matches the oracle bit for bit, where a corpus-wide
+    * double fold is order-sensitive at the ulp level. */
+  private def cents(x: String): Column =
+    expr(s"cast(round(($x) * 100) as long)")
+
+  /** The per-user census of closed sessions q346 and q385 share. */
+  private def closedSessionCensus(spark: SparkSession,
+      queryName: String): DataFrame =
+    spark.table(queryName)
+      .groupBy("user_id")
+      .agg(count(lit(1)).as("n_sessions_closed"),
+        sum("n_events").as("n_events"),
+        sum(expr("session_end_us - session_start_us")).as("dur_us"))
+      .orderBy("user_id")
 
   /** The streaming AGGREGATION STATE read back through Spark's state
     * data source (q387): run q309's complete-mode tumbling aggregate
@@ -786,34 +816,17 @@ object EventStreams {
     * form; a production inspection keeps the checkpoint, obviously.
     */
   def aggStateReadback(spark: SparkSession, dir: String,
-      queryName: String = "q387_state_reader"): DataFrame = {
-    spark.catalog.dropTempView(queryName)
-    val cp = java.nio.file.Files
-      .createTempDirectory("graft_q387_cp").toString
-    withShufflePartitions(spark, statePartitions(spark)) {
-      val sq = tumblingTypeCounts(readEventStream(spark, dir))
-        .writeStream.format("memory").queryName(queryName)
-        .outputMode("complete")
-        .option("checkpointLocation", cp)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      sq.awaitTermination()
-    }
-    val census = spark.read.format("statestore")
-      .option("path", cp).load()
-      .select(unix_micros(col("key.window.start")).as("win_us"),
+      queryName: String = "q387_state_reader"): DataFrame =
+    readState(spark) { cp =>
+      drain(spark, Seq(Sink(queryName,
+        tumblingTypeCounts(readEventStream(spark, dir)), "complete",
+        Some(cp))))(())
+    } { (state, _) =>
+      state.select(unix_micros(col("key.window.start")).as("win_us"),
         col("key.event_type").as("event_type"),
         col("value.count").as("cnt"),
         round(col("value.sum"), 2).as("sum_value"))
-    val rows = census.collect()
-    val fs = new org.apache.hadoop.fs.Path(cp)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(cp), true)
-    spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](
-        java.util.Arrays.asList(rows: _*)), census.schema)
-      .orderBy("win_us", "event_type")
-  }
+    }.orderBy("win_us", "event_type")
 
   /** Stream-stream JOIN STATE read back through the state data source
     * (q393, `joinSide=left`): run the q345 view⋈purchase join with a
@@ -837,52 +850,24 @@ object EventStreams {
     * census is exact as well.
     */
   def joinStateReadback(spark: SparkSession, dir: String,
-      queryName: String = "q393_join_state"): DataFrame = {
-    spark.catalog.dropTempView(queryName)
-    val cp = java.nio.file.Files
-      .createTempDirectory("graft_q393_cp").toString
-    // the batch bound job runs WHILE the stream drains (guide §2.6 —
-    // it reads the same immutable files and shares nothing with the
-    // join's state)
-    val tm = withShufflePartitions(spark, statePartitions(spark)) {
-      val sq = twoLegPairsStreaming(readEventStream(spark, dir))
-        .writeStream.format("memory").queryName(queryName)
-        .outputMode("append")
-        .option("checkpointLocation", cp)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      val t = graft.Tables.events(spark, dir)
-        .agg(
-          max(when(col("event_type") === "view", expr("ts div 1000")))
-            .as("mv"),
-          max(when(col("event_type") === "purchase", expr("ts div 1000")))
-            .as("mp"))
-        .head
-      sq.awaitTermination()
-      t
-    }
-    val boundUs =
-      if (tm.isNullAt(0) || tm.isNullAt(1)) Long.MinValue
-      else math.min(tm.getLong(0), tm.getLong(1)) -
-        24L * 3600L * 1000000L // window; the 1h delay IS the guard
-    val census = spark.read.format("statestore")
-      .option("path", cp).option("joinSide", "left").load()
-      .select(col("value.user_id").as("user_id"),
-        unix_micros(col("value.view_time")).as("vt_us"),
-        col("value.v1").as("v1"))
-      .filter(col("vt_us") >= boundUs)
-      .groupBy("user_id")
-      .agg(count(lit(1)).as("n_recent_views"),
-        sum(expr("cast(round(v1 * 100) as long)")).as("v_cents"))
-    val rows = census.collect()
-    val fs = new org.apache.hadoop.fs.Path(cp)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(cp), true)
-    spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](
-        java.util.Arrays.asList(rows: _*)), census.schema)
-      .orderBy("user_id")
-  }
+      queryName: String = "q393_join_state"): DataFrame =
+    readState(spark, Map("joinSide" -> "left")) { cp =>
+      // the batch bound job runs WHILE the stream drains (guide §2.6 —
+      // it reads the same immutable files and shares nothing with the
+      // join's state); the window is the horizon, the 1h delay the guard
+      drain(spark, Seq(Sink(queryName,
+        twoLegPairsStreaming(readEventStream(spark, dir)),
+        checkpoint = Some(cp))))(
+        viewPurchaseBound(spark, dir, 24L * 3600L * 1000000L))._2
+    } { (state, boundUs) =>
+      state.select(col("value.user_id").as("user_id"),
+          unix_micros(col("value.view_time")).as("vt_us"),
+          col("value.v1").as("v1"))
+        .filter(col("vt_us") >= boundUs)
+        .groupBy("user_id")
+        .agg(count(lit(1)).as("n_recent_views"),
+          sum(cents("v1")).as("v_cents"))
+    }.orderBy("user_id")
 
   /** The v2 sessionizer executed through the real engine (q385): same
     * wrapper shape and SAME ORACLE as q346 — the api-migration parity.
@@ -893,46 +878,13 @@ object EventStreams {
     */
   def closedSessionCensusViaStreamV2(spark: SparkSession, dir: String,
       queryName: String = "q385_stream_tws_sessions"): DataFrame = {
-    spark.catalog.dropTempView(queryName)
-    withConf(spark, "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider") {
-      withShufflePartitions(spark, statePartitions(spark)) {
-        val sq = sessionizeWithStateV2(readEventStream(spark, dir),
-            gapUs = 30L * 60 * 1000000, delay = "87600 hours")
-          .toDF()
-          .writeStream.format("memory").queryName(queryName)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        sq.awaitTermination()
-      }
-    }
-    spark.table(queryName)
-      .groupBy("user_id")
-      .agg(count(lit(1)).as("n_sessions_closed"),
-        sum("n_events").as("n_events"),
-        sum(expr("session_end_us - session_start_us")).as("dur_us"))
-      .orderBy("user_id")
-  }
-
-  def twoLegPairsCensusViaStream(spark: SparkSession, dir: String,
-      queryName: String = "q345_stream_join"): DataFrame = {
-    spark.catalog.dropTempView(queryName)
-    withShufflePartitions(spark, statePartitions(spark)) {
-      val sq = twoLegPairsStreaming(readEventStream(spark, dir))
-        .writeStream.format("memory").queryName(queryName)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      sq.awaitTermination()
-    }
-    spark.table(queryName)
-      .groupBy("user_id")
-      .agg(count(lit(1)).as("n_pairs"),
-        sum(expr("cast(round(combined_value * 100) as long)"))
-          .as("sum_cents"))
-      .orderBy("user_id")
+    drain(spark, Seq(Sink(queryName,
+        sessionizeWithStateV2(readEventStream(spark, dir),
+          gapUs = 30L * 60 * 1000000, delay = "87600 hours").toDF())),
+      confs = Map("spark.sql.streaming.stateStore.providerClass" ->
+        ("org.apache.spark.sql.execution.streaming.state." +
+          "RocksDBStateStoreProvider")))(())
+    closedSessionCensus(spark, queryName)
   }
 
   /** The LEFT-OUTER stream-stream join executed through the real engine
@@ -947,54 +899,28 @@ object EventStreams {
     * Census membership: only views with
     * `view_us ≤ min(max view_us, max purchase_us) − (window + delay +
     * 1h guard)` — the min because the global watermark is the MIN over
-    * the two per-side watermark nodes (each sits after its type filter
-    * and sees only its own type; see the bound computation below). For
-    * member views the watermark provably passed their eviction point a
-    * full hour before end-of-input, so every member has either matched
-    * or been null-emitted, and the engine's ms-quantized watermark edge
+    * the two per-side watermark nodes (`viewPurchaseBound`). For member
+    * views the watermark provably passed their eviction point a full
+    * hour before end-of-input, so every member has either matched or
+    * been null-emitted, and the engine's ms-quantized watermark edge
     * cannot decide membership (it lands inside the guard band; integer
     * µs arithmetic on both engines decides instead — the q346 device).
+    * The bound job runs WHILE the stream drains (guide §2.6 — same
+    * immutable files, no shared state).
     */
   def leftOuterPairsCensusViaStream(spark: SparkSession, dir: String,
       queryName: String = "q380_stream_louter"): DataFrame = {
-    spark.catalog.dropTempView(queryName)
-    // Guard-band bound from the BATCH table (same files): exact integer
-    // µs, no watermark value in the census arithmetic. The bound anchors
-    // on MIN(max view ts, max purchase ts), not the global max: each
-    // side's watermark node sits AFTER its type filter and tracks only
-    // its own type's max event time, so the query's global watermark is
-    // the MIN over the two sides — a trailing purchase-only (or
-    // view-only) stretch of the fixture advances one side's clock and
-    // not the other's, and a global-max bound would count views the
-    // engine provably has NOT evicted yet. The bound job runs WHILE the
-    // stream drains (guide §2.6 — same immutable files, no shared state).
-    val tm = withShufflePartitions(spark, statePartitions(spark)) {
-      val sq = viewPurchaseLeftOuter(readEventStream(spark, dir))
-        .writeStream.format("memory").queryName(queryName)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      val t = graft.Tables.events(spark, dir)
-        .agg(
-          max(when(col("event_type") === "view", expr("ts div 1000")))
-            .as("mv"),
-          max(when(col("event_type") === "purchase", expr("ts div 1000")))
-            .as("mp"))
-        .head
-      sq.awaitTermination()
-      t
-    }
-    val boundUs =
-      if (tm.isNullAt(0) || tm.isNullAt(1)) Long.MinValue
-      else math.min(tm.getLong(0), tm.getLong(1)) -
-        26L * 3600L * 1000000L // 24h window + 1h delay + 1h guard
+    val (_, boundUs) = drain(spark, Seq(Sink(queryName,
+      viewPurchaseLeftOuter(readEventStream(spark, dir)))))(
+      // 24h window + 1h delay + 1h guard
+      viewPurchaseBound(spark, dir, 26L * 3600L * 1000000L))
     spark.table(queryName)
       .filter(unix_micros(col("view_time")) <= boundUs)
       .groupBy("user_id")
       .agg(count(lit(1)).as("n_rows"),
         count(col("purchase_time")).as("n_matched"),
-        sum(when(col("purchase_time").isNotNull,
-          expr("cast(round((v1 + v2) * 100) as long)"))).as("matched_cents"))
+        sum(when(col("purchase_time").isNotNull, cents("v1 + v2")))
+          .as("matched_cents"))
       .orderBy("user_id")
   }
 
@@ -1015,22 +941,9 @@ object EventStreams {
     */
   def closedSessionCensusViaStream(spark: SparkSession, dir: String,
       queryName: String = "q346_stream_sessions"): DataFrame = {
-    spark.catalog.dropTempView(queryName)
-    withShufflePartitions(spark, statePartitions(spark)) {
-      val sq = sessionizeWithState(readEventStream(spark, dir),
-          gapUs = 30L * 60 * 1000000, delay = "87600 hours")
-        .toDF()
-        .writeStream.format("memory").queryName(queryName)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      sq.awaitTermination()
-    }
-    spark.table(queryName)
-      .groupBy("user_id")
-      .agg(count(lit(1)).as("n_sessions_closed"),
-        sum("n_events").as("n_events"),
-        sum(expr("session_end_us - session_start_us")).as("dur_us"))
-      .orderBy("user_id")
+    drain(spark, Seq(Sink(queryName,
+      sessionizeWithState(readEventStream(spark, dir),
+        gapUs = 30L * 60 * 1000000, delay = "87600 hours").toDF())))(())
+    closedSessionCensus(spark, queryName)
   }
 }

@@ -22,17 +22,10 @@ abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
 
   /** Runs `body` with `confs` set on the shared session, then restores
-    * each key's previous value, or unsets it. */
-  protected def withConfs[T](confs: Map[String, String])(body: => T): T = {
-    val saved = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    try {
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
-      body
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+    * each key's previous explicit value, or unsets it
+    * ([[Session.withConfs]]). */
+  protected def withConfs[T](confs: Map[String, String])(body: => T): T =
+    Session.withConfs(spark, confs)(body)
 
   /** Runs `marker` after `body` and waits until `seen` holds: the listener
     * bus delivers asynchronously but in order, so once the marker's event
@@ -47,7 +40,10 @@ abstract class SparkSpec extends AnyFunSuite {
   }
 
   /** (name, query execution) of every listener action `body` runs, in
-    * order; a `tail` action is the marker, so `body` must run none. */
+    * order; `tail` actions are the markers, so `body` must run none. A
+    * marker also runs before `body`: an action that ended before the
+    * listener was registered can still be on the bus, and it is
+    * delivered ahead of that marker. */
   protected def actionsOf(body: => Unit): Seq[(String, QueryExecution)] = {
     val actions =
       new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]()
@@ -60,10 +56,13 @@ abstract class SparkSpec extends AnyFunSuite {
         actions.add((funcName, qe))
     }
     def seen = actions.toArray(Array.empty[(String, QueryExecution)]).toSeq
+    def markers = seen.count(_._1 == "tail")
     spark.listenerManager.register(listener)
-    try flushed(body, spark.range(1).tail(1), seen.exists(_._1 == "tail"))
-    finally spark.listenerManager.unregister(listener)
-    seen.takeWhile(_._1 != "tail")
+    try {
+      flushed((), spark.range(1).tail(1), markers == 1)
+      flushed(body, spark.range(1).tail(1), markers == 2)
+    } finally spark.listenerManager.unregister(listener)
+    seen.dropWhile(_._1 != "tail").drop(1).takeWhile(_._1 != "tail")
   }
 
   /** The number of Spark jobs `body` starts. */

@@ -143,4 +143,19 @@ class VectorExpressionsSpec extends SparkSpec
         assert(got(3L) == ((17, Seq(17, 9))))
       }
     }
+
+  for ((mode, (_, confs)) <- modes)
+    test("topK vector centroids: slots no distance reached take the " +
+        s"unchosen idxs in scan order, never a repeat ($mode)") {
+      withConfs(confs) {
+        val idxs = Seq(5, 6, 7)
+        val cs = Seq(Array(0.0, 0.0), Array(1.0, 0.0), Array(0.0, 1.0))
+        // a one-row RDD, so the optimizer cannot fold the projection
+        val got = spark.sparkContext
+          .parallelize(Seq(Array(Double.NaN, 0.0)), 1).toDF("v")
+          .select(GraftFunctions.topKVecCentroids(col("v"), idxs, cs, 2))
+          .as[Seq[Int]].collect().toSeq
+        assert(got == Seq(Seq(5, 6))) // every distance NaN
+      }
+    }
 }

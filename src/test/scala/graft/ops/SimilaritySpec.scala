@@ -135,6 +135,17 @@ class SimilaritySpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(recall >= 0.9, s"recall $recall")
   }
 
+  test("annIvf: a NaN query probes distinct lists and returns no " +
+      "neighbour twice") {
+    val e = vecs(clustered(120): _*)
+    val nan = vecs(1000L -> (Float.NaN +: Array.fill(63)(0.5f)))
+    val ids = Similarity.annIvf(e, nan, k = 6, nlist = 8, nprobe = 3,
+        seed = 11L)
+      .filter(col("q_id") === 1000L)
+      .select("n_id").as[Long].collect().toSeq
+    assert(ids.nonEmpty && ids.distinct == ids, ids)
+  }
+
   test("ivf index lifecycle: append assigns under FROZEN centroids, " +
       "query equals brute force over the indexed set") {
     // two far clusters in 2-D; history holds members of both so the

@@ -17,6 +17,9 @@ class StreamingSpec extends SparkSpec {
   private def ev(user: Long, tsNs: Long, typ: String = "view",
                  value: Double = 1.0) = Event(user, tsNs, typ, value)
 
+  /** The sf0.001 fixture (TESTDATA.md) the parity-harness tests stream. */
+  private val fixture = "/root/testdata/sf0.001"
+
   private val rocksDb = Map("spark.sql.streaming.stateStore.providerClass" ->
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 
@@ -721,5 +724,79 @@ class StreamingSpec extends SparkSpec {
       .as[(String, String, Long, Long, Long)].collect().toSeq
     assert(again.map(r => (r._1, r._2, r._3, r._4)) ==
       got.map(r => (r._1, r._2, r._3, r._4)))
+  }
+
+  test("parity entries leave unset shuffle.partitions and state-store " +
+      "provider keys unset") {
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.streaming.stateStore.providerClass")
+    val saved = keys.map(k => k -> spark.sessionState.conf.getAllConfs.get(k))
+    keys.foreach(spark.conf.unset)
+    try {
+      EventStreams.tumblingCountsViaStream(spark, fixture,
+        queryName = "spec_conf_q309")
+      EventStreams.closedSessionCensusViaStreamV2(spark, fixture,
+        queryName = "spec_conf_q385")
+      val left = spark.sessionState.conf.getAllConfs
+      keys.foreach(k =>
+        assert(!left.contains(k), s"$k left at ${left.get(k)}"))
+      assert(spark.streams.active.isEmpty)
+    } finally saved.foreach { case (k, v) => v.foreach(spark.conf.set(k, _)) }
+  }
+
+  test("a parity run whose body throws stops its queries and deletes " +
+      "its checkpoint") {
+    var checkpoint = Option.empty[String]
+    val ex = intercept[IllegalStateException] {
+      EventStreams.readState(spark) { cp =>
+        checkpoint = Some(cp)
+        EventStreams.drain(spark, Seq(EventStreams.Sink("spec_failing_run",
+            EventStreams.tumblingTypeCounts(
+              EventStreams.readEventStream(spark, fixture)),
+            "complete", Some(cp))))(
+          throw new IllegalStateException("bound job failed"))
+      }((state, _) => state)
+    }
+    assert(ex.getMessage == "bound job failed")
+    assert(spark.streams.active.isEmpty)
+    assert(checkpoint.exists(cp => !new java.io.File(cp).exists), checkpoint)
+  }
+
+  test("state width: the q345 and q346 censuses are equal at one and " +
+      "four partitions") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{count, expr, lit, sum}
+    def drained(name: String, frame: DataFrame): DataFrame = {
+      val q = frame.writeStream.format("memory").queryName(name)
+        .outputMode("append")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      withQuery(q)(q.awaitTermination())
+      spark.table(name)
+    }
+    def censuses(width: Int) =
+      withConfs(Map("spark.sql.shuffle.partitions" -> width.toString)) {
+        val pairs = drained(s"spec_width_join_$width",
+            EventStreams.twoLegPairsStreaming(
+              EventStreams.readEventStream(spark, fixture)))
+          .groupBy("user_id")
+          .agg(count(lit(1)).as("n_pairs"),
+            sum(expr("cast(round(combined_value * 100) as long)")))
+          .orderBy("user_id").collect().map(_.toSeq).toSeq
+        val sessions = drained(s"spec_width_sessions_$width",
+            EventStreams.sessionizeWithState(
+              EventStreams.readEventStream(spark, fixture),
+              gapUs = 30L * 60 * 1000000, delay = "87600 hours").toDF())
+          .groupBy("user_id")
+          .agg(count(lit(1)), sum("n_events"),
+            sum(expr("session_end_us - session_start_us")))
+          .orderBy("user_id").collect().map(_.toSeq).toSeq
+        (pairs, sessions)
+      }
+    val (pairs1, sessions1) = censuses(1)
+    val (pairs4, sessions4) = censuses(4)
+    assert(pairs1.nonEmpty && sessions1.nonEmpty)
+    assert(pairs1 == pairs4)
+    assert(sessions1 == sessions4)
   }
 }

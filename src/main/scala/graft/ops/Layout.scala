@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Multi-dimensional data layout: Z-order (Morton) clustering so that
   * file-level min/max statistics prune on EVERY interleaved dimension,
@@ -86,15 +87,22 @@ object Layout {
                    tieCol: String, buckets: Int = 16,
                    bits: Int = 16): DataFrame = {
     val w = Window.orderBy(col("zval"), col(tieCol))
-    df.select(col(xCol), col(yCol), col(tieCol),
+    bucketBoxes(df.select(col(xCol), col(yCol), col(tieCol),
         zValue(col(xCol), col(yCol), bits).as("zval"))
-      .withColumn("bucket", ntile(buckets).over(w).cast("long"))
-      .groupBy("bucket")
+      .withColumn("bucket", ntile(buckets).over(w).cast("long")), xCol, yCol)
+  }
+
+  /** The census tail of `zorderCensus`, `zorderCensusSharded` and
+    * `hilbertCensusSharded`: each `bucket`'s size and bounding box in both
+    * dimensions, in bucket order.
+    */
+  private def bucketBoxes(bucketed: DataFrame, xCol: String,
+                          yCol: String): DataFrame =
+    bucketed.groupBy("bucket")
       .agg(count(lit(1)).as("n"),
         min(xCol).as("x_min"), max(xCol).as("x_max"),
         min(yCol).as("y_min"), max(yCol).as("y_max"))
       .orderBy("bucket")
-  }
 
   /** The production layout write path: range-partition on the z-value
     * (one exchange, sampled boundaries) and sort within each partition so
@@ -176,119 +184,44 @@ object Layout {
   /** Exact global `row_number() OVER (ORDER BY orderCols)` WITHOUT a
     * single-task sort — the sharded alternative to the global-order window
     * (the wall `zorderCensus` and any ungrouped rank statistic hit at
-    * corpus scale). Packing.packAssignments' two-pass distributed prefix
-    * sum generalized from token sums to row counts: range-partition on the
-    * order (one exchange, sampled boundaries — the SAME machinery a global
-    * sort uses for its first stage; what's removed is the single merge
-    * task), pass 1 collects one count per partition to the driver, pass 2
-    * streams each partition once adding its broadcast base offset. Nothing
-    * wider than `parts` rows reaches the driver, every stage is
-    * partition-parallel.
+    * corpus scale): `prefixScan` counting rows, `rnk` = earlier rows + 1.
     *
     * `orderCols` must be a TOTAL order (include a tie column) — rows that
     * compare equal would receive an arbitrary rank assignment (and range
     * boundaries could split them nondeterministically across runs).
-    * Determinism does NOT depend on where the sampled boundaries fall: the
-    * rank of a row in a total order is a property of the order alone, so
-    * moving a boundary moves which pass computes an offset, never a row's
-    * rank (LayoutSpec pins equality across partition counts).
     *
-    * Output: the input columns plus `rnk` (1-based global rank). The
-    * mapPartitions pass is row-streaming (no buffering) but does leave
-    * whole-stage codegen — the trade for removing the single-task sort;
-    * downstream aggregation re-enters codegen.
+    * Output: the input columns plus `rnk` (1-based global rank).
     */
-  def shardedRanks(df: DataFrame, orderCols: Seq[String],
-                   parts: Int = 0): DataFrame =
-    shardedRanksWithTotal(df, orderCols, parts)._1
+  def shardedRanks(df: DataFrame, orderCols: Seq[String]): DataFrame =
+    shardedRanksWithTotal(df, orderCols)._1
 
+  /** `shardedRanks` plus the row count, known on the driver after pass 1. */
   private[graft] def shardedRanksWithTotal(
-      df: DataFrame, orderCols: Seq[String],
-      parts: Int = 0): (DataFrame, Long) = {
-    require(orderCols.nonEmpty, "need at least one order column")
-    val session = df.sparkSession
-    val n =
-      if (parts > 0) parts
-      else shuffleWidth(session)
-    // persist: pass 1's eager collect and the caller's eventual action on
-    // pass 2 both read this frame (the Packing convention — the entry
-    // stays in the session's cache until the caller's `clearCache()`; an
-    // eager unpersist would evict before the lazy pass 2 runs)
-    val ranged = df
-      .repartitionByRange(n, orderCols.map(col): _*)
-      .sortWithinPartitions(orderCols.map(col): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val counts = ranged.rdd.mapPartitionsWithIndex { (pid, it) =>
-      Iterator.single((pid, it.size.toLong))
-    }.collect().toMap
-    val base = (0 until n).scanLeft(0L)(
-      (acc, p) => acc + counts.getOrElse(p, 0L)).toArray
-    val bBase = session.sparkContext.broadcast(base)
-    val outSchema = org.apache.spark.sql.types.StructType(
-      df.schema.fields :+ org.apache.spark.sql.types.StructField(
-        "rnk", org.apache.spark.sql.types.LongType, nullable = false))
-    val rows = ranged.rdd.mapPartitionsWithIndex { (pid, it) =>
-      var r = bBase.value(pid)
-      it.map { row =>
-        r += 1
-        org.apache.spark.sql.Row.fromSeq(row.toSeq :+ r)
-      }
-    }
-    (session.createDataFrame(rows, outSchema), base(n))
+      df: DataFrame, orderCols: Seq[String]): (DataFrame, Long) = {
+    val (scanned, total) = prefixScan(df, None, orderCols, None,
+      Math.addExact(_, _), "shardedRanks", shuffleWidth(df.sparkSession))
+    (scanned.withColumn("rnk", rankOf).drop(prevCol, totalCol),
+      total.getOrElse(0L))
   }
 
   /** Exact running max of `valueCol` over rows STRICTLY BEFORE each row
-    * in the `orderCols` total order — the prefix-max twin of
-    * `shardedRanks`, and the machinery that removes the global-order
-    * window from ingestion-order audits (Behavior.latenessCensusSharded).
-    * Same two-pass shape: range-partition on the order (one exchange,
-    * sampled boundaries), pass 1 collects ONE max per partition to the
-    * driver, pass 2 streams each partition once carrying its broadcast
-    * base (the running max over all earlier partitions). Nothing wider
-    * than `parts` values reaches the driver; no single task ever sorts
-    * more than one range partition.
+    * in the `orderCols` total order — `max(valueCol) OVER (ORDER BY
+    * orderCols ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)` as a
+    * `prefixScan` under `math.max`, the machinery that removes the
+    * global-order window from ingestion-order audits
+    * (Behavior.latenessCensusSharded).
     *
     * Output: the input columns plus `run_max_prev` (nullable long — null
-    * for the global first row, where no earlier row exists). `valueCol`
-    * must be integral and non-null; `orderCols` must be a total order
-    * (the shardedRanks contract — equal keys would make "before"
-    * ambiguous).
+    * where no earlier row has a value). `valueCol` must be a LONG column;
+    * its nulls are skipped, as SQL `max` skips them. `orderCols` must be
+    * a total order (equal keys would make "before" ambiguous).
     */
   def shardedRunningMax(df: DataFrame, orderCols: Seq[String],
-                        valueCol: String, parts: Int = 0): DataFrame = {
-    require(orderCols.nonEmpty, "need at least one order column")
-    val session = df.sparkSession
-    val n =
-      if (parts > 0) parts
-      else shuffleWidth(session)
-    val vIdx = df.schema.fieldIndex(valueCol)
-    val ranged = df
-      .repartitionByRange(n, orderCols.map(col): _*)
-      .sortWithinPartitions(orderCols.map(col): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val maxes = ranged.rdd.mapPartitionsWithIndex { (pid, it) =>
-      var m = Long.MinValue
-      it.foreach(r => m = math.max(m, r.getLong(vIdx)))
-      Iterator.single((pid, m))
-    }.collect().toMap
-    // base(p) = max over all partitions BEFORE p (MinValue = none yet)
-    val base = (0 until n).scanLeft(Long.MinValue)((acc, p) =>
-      math.max(acc, maxes.getOrElse(p, Long.MinValue))).toArray
-    val bBase = session.sparkContext.broadcast(base)
-    val outSchema = org.apache.spark.sql.types.StructType(
-      df.schema.fields :+ org.apache.spark.sql.types.StructField(
-        "run_max_prev", org.apache.spark.sql.types.LongType,
-        nullable = true))
-    val rows = ranged.rdd.mapPartitionsWithIndex { (pid, it) =>
-      var run = bBase.value(pid)
-      it.map { row =>
-        val prev: Any = if (run == Long.MinValue) null else run
-        run = math.max(run, row.getLong(vIdx))
-        org.apache.spark.sql.Row.fromSeq(row.toSeq :+ prev)
-      }
-    }
-    session.createDataFrame(rows, outSchema)
-  }
+                        valueCol: String): DataFrame =
+    prefixScan(df, None, orderCols, Some(valueCol), math.max(_, _),
+        "shardedRunningMax", shuffleWidth(df.sparkSession))._1
+      .withColumnRenamed(prevCol, "run_max_prev")
+      .drop(totalCol)
 
   /** Exact per-GROUP `row_number() OVER (PARTITION BY group ORDER BY
     * orderCols)` plus the group total, without any group's rows ever
@@ -296,12 +229,10 @@ object Layout {
     * LOW-CARDINALITY-group regime where a partitioned window is still a
     * wall (a per-language window over a corpus that is 40% one language
     * sorts 40% of the corpus in a single task; "partitioned" only helps
-    * when no partition is corpus-sized). Range-partition on (group ++
-    * order) so each partition holds contiguous runs; pass 1 collects one
-    * (partition, group) count per run to the driver — bounded by
-    * `parts` × groups-per-partition, the low-cardinality contract —
-    * pass 2 streams each partition once with broadcast per-group base
-    * offsets. High-cardinality groups should use the ordinary
+    * when no partition is corpus-sized). Pass 1 of `prefixScan` ships one
+    * count per (partition, group) run, so the driver holds width ×
+    * groups-per-partition runs — the low-cardinality contract, enforced
+    * by `maxDriverRuns`. High-cardinality groups should use the ordinary
     * partitioned window instead (partitions are small by construction
     * there).
     *
@@ -309,96 +240,146 @@ object Layout {
     * (group row count). `orderCols` must total-order within a group.
     */
   def shardedGroupRanks(df: DataFrame, groupCol: String,
-                        orderCols: Seq[String],
-                        parts: Int = 0): DataFrame = {
+                        orderCols: Seq[String]): DataFrame =
+    prefixScan(df, Some(groupCol), orderCols, None, Math.addExact(_, _),
+        "shardedGroupRanks", shuffleWidth(df.sparkSession))._1
+      .withColumn("rnk", rankOf)
+      .withColumn("n_grp", col(totalCol))
+      .drop(prevCol, totalCol)
+
+  /** The two columns `prefixScan` appends: the fold of the group's earlier
+    * values (null when there are none) and the fold of the whole group. */
+  private[ops] val prevCol = "__scan_prev"
+  private[ops] val totalCol = "__scan_total"
+
+  /** 1-based rank from a row-counting `prefixScan`: earlier rows + 1. */
+  private def rankOf: Column = coalesce(col(prevCol), lit(0L)) + 1
+
+  /** The one distributed prefix scan, behind `shardedRanks`,
+    * `shardedRunningMax`, `shardedGroupRanks` and
+    * `Packing.packAssignments`: an exclusive fold of `value` under `step`
+    * over the total order `group ++ orderCols`, restarted for each
+    * `group` value (`None`: one constant group). `value` is a LONG column
+    * whose nulls are skipped, as SQL aggregates skip them (`None`: 1 per
+    * row, a row count); `step` must be associative (`Math.addExact`,
+    * `math.max`).
+    *
+    * Blelloch's two-pass form ("Prefix Sums and Their Applications",
+    * CMU-CS-90-190), the Spark-native stand-in for a partitioner plus
+    * secondary sort: range-partition on the order at `width` (one
+    * exchange, sampled boundaries — the first stage of a global sort,
+    * without its single merge task) and sort within partitions; pass 1
+    * collects one fold per (partition, group) run; the driver turns the
+    * runs into each run's exclusive base and each group's total and
+    * broadcasts both; pass 2 streams each partition once from its base.
+    * Both passes read the ONE RDD taken from the sorted frame, so pass 2
+    * reads the range exchange's shuffle output instead of re-running it,
+    * and nothing enters the session cache. Pass 2 is row-streaming (no
+    * buffering) but leaves whole-stage codegen — the trade for removing
+    * the single-task sort; downstream aggregation re-enters codegen.
+    *
+    * A row's fold is a property of the order alone, so it does not depend
+    * on where the sampled boundaries fall (LayoutSpec pins equality across
+    * widths); `orderCols` must totally order each group for that to hold.
+    *
+    * Output: the input columns plus `prevCol` and `totalCol` (non-null
+    * for a row count). Also returns the fold of every group, on the
+    * driver — the grand total of a sum, `None` for an empty frame.
+    */
+  private[graft] def prefixScan(df: DataFrame, group: Option[String],
+      orderCols: Seq[String], value: Option[String],
+      step: (Long, Long) => Long, caller: String,
+      width: Int): (DataFrame, Option[Long]) = {
     require(orderCols.nonEmpty, "need at least one order column")
-    val session = df.sparkSession
-    val n =
-      if (parts > 0) parts
-      else shuffleWidth(session)
-    val gIdx = df.schema.fieldIndex(groupCol)
-    val all = (groupCol +: orderCols).map(col)
-    val ranged = df
-      .repartitionByRange(n, all: _*)
-      .sortWithinPartitions(all: _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val keys = (group.toSeq ++ orderCols).map(col)
+    val ranged = df.repartitionByRange(width, keys: _*)
+      .sortWithinPartitions(keys: _*).rdd
+    val gIdx = group.fold(-1)(df.schema.fieldIndex)
+    val vIdx = value.fold(-1)(df.schema.fieldIndex)
     // group key for the driver-side bookkeeping: (isNull, string form).
     // A bare String.valueOf would merge a NULL group with the literal
-    // string "null" (totals summed across both, base offsets interleaved
-    // — wrong rnk/n_grp for each); the isNull flag keeps them distinct.
+    // string "null" (totals folded across both, bases interleaved —
+    // wrong results for each); the isNull flag keeps them distinct.
     // Within one typed column the string form of NON-null values is
     // injective for every group type this operator contracts for
     // (string/integral/date — the low-cardinality regime).
-    def gKey(r: org.apache.spark.sql.Row): (Boolean, String) =
-      if (r.isNullAt(gIdx)) (true, "")
+    def gKey(r: Row): (Boolean, String) =
+      if (gIdx < 0) (false, "")
+      else if (r.isNullAt(gIdx)) (true, "")
       else (false, String.valueOf(r.get(gIdx)))
-    // pass 1: per-(partition, group) row counts — one row per contiguous
-    // group run. The collect is bounded by parts × groups-per-partition
-    // (the low-cardinality contract); maxDriverRuns makes a violated
-    // contract fail FAST with a named remedy instead of OOMing the
-    // driver at 100× — checked in the executor (before the rows ship)
-    // and again on the assembled total.
-    val counts = ranged.rdd.mapPartitionsWithIndex { (pid, it) =>
-      val m =
-        scala.collection.mutable.LinkedHashMap.empty[(Boolean, String), Long]
+    def fold(acc: Option[Long], r: Row): Option[Long] =
+      if (vIdx >= 0 && r.isNullAt(vIdx)) acc
+      else {
+        val v = if (vIdx < 0) 1L else r.getLong(vIdx)
+        Some(acc.fold(v)(step(_, v)))
+      }
+    def merge(a: Option[Long], b: Option[Long]): Option[Long] =
+      (a ++ b).reduceOption(step)
+    // pass 1: one fold per (partition, group) run. The collect is bounded
+    // by width × groups-per-partition (the low-cardinality contract);
+    // maxDriverRuns makes a violated contract fail FAST with a named
+    // remedy instead of OOMing the driver at 100× — checked in the
+    // executor (before the rows ship) and again on the assembled total.
+    val groupName = group.getOrElse("")
+    val runs = ranged.mapPartitionsWithIndex { (pid, it) =>
+      val m = scala.collection.mutable.LinkedHashMap
+        .empty[(Boolean, String), Option[Long]]
       it.foreach { r =>
         val g = gKey(r)
-        m.update(g, m.getOrElse(g, 0L) + 1L)
+        m.update(g, fold(m.getOrElse(g, None), r))
         if (m.size > maxDriverRuns)
           throw new IllegalStateException(
-            s"shardedGroupRanks: > $maxDriverRuns distinct '$groupCol' " +
+            s"$caller: > $maxDriverRuns distinct '$groupName' " +
               "groups in one range partition — the group column is " +
               "high-cardinality; use an ordinary partitioned window " +
               "(partitions are small by construction there)")
       }
-      m.iterator.map { case (g, c) => (pid, g, c) }
+      m.iterator.map { case (g, f) => (pid, g, f) }
     }.collect()
-    require(counts.length <= maxDriverRuns,
-      s"shardedGroupRanks: ${counts.length} (partition, group) runs " +
-        s"exceed the $maxDriverRuns driver budget — '$groupCol' is " +
+    require(runs.length <= maxDriverRuns,
+      s"$caller: ${runs.length} (partition, group) runs " +
+        s"exceed the $maxDriverRuns driver budget — '$groupName' is " +
         "high-cardinality; use an ordinary partitioned window")
-    val totals = counts.groupBy(_._2).map { case (g, rs) =>
-      g -> rs.map(_._3).sum }
-    val bases: Map[(Int, (Boolean, String)), Long] = {
-      val byGroup = counts.groupBy(_._2)
-      byGroup.flatMap { case (g, rs) =>
-        val sorted = rs.sortBy(_._1)
-        val cum = sorted.scanLeft(0L)(_ + _._3)
-        sorted.zip(cum).map { case ((pid, _, _), base) =>
-          (pid, g) -> base }
-      }
+    val byGroup = runs.groupBy(_._2).map { case (g, rs) =>
+      g -> rs.sortBy(_._1).toSeq }
+    val bases = byGroup.flatMap { case (g, rs) =>
+      rs.map(_._3).scanLeft(Option.empty[Long])(merge).zip(rs)
+        .map { case (base, (pid, _, _)) => (pid, g) -> base }
     }
-    val bBases = session.sparkContext.broadcast(bases)
-    val bTotals = session.sparkContext.broadcast(totals)
-    val outSchema = org.apache.spark.sql.types.StructType(
-      df.schema.fields ++ Seq(
-        org.apache.spark.sql.types.StructField("rnk",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("n_grp",
-          org.apache.spark.sql.types.LongType, nullable = false)))
-    val rows = ranged.rdd.mapPartitionsWithIndex { (pid, it) =>
+    val totals = byGroup.map { case (g, rs) =>
+      g -> rs.map(_._3).reduce(merge) }
+    val sc = df.sparkSession.sparkContext
+    val bBases = sc.broadcast(bases)
+    val bTotals = sc.broadcast(totals)
+    // pass 2: each partition streamed once more, each run from its base
+    val rows = ranged.mapPartitionsWithIndex { (pid, it) =>
       var cur: (Boolean, String) = null
-      var r = 0L
-      var tot = 0L
-      it.map { row =>
-        val g = gKey(row)
+      var acc = Option.empty[Long]
+      var tot = Option.empty[Long]
+      it.map { r =>
+        val g = gKey(r)
         if (g != cur) {
           cur = g
-          r = bBases.value.getOrElse((pid, g), 0L)
-          tot = bTotals.value.getOrElse(g, 0L)
+          acc = bBases.value((pid, g))
+          tot = bTotals.value(g)
         }
-        r += 1
-        org.apache.spark.sql.Row.fromSeq(row.toSeq ++ Seq(r, tot))
+        val prev = acc
+        acc = fold(acc, r)
+        Row.fromSeq(r.toSeq ++ Seq(prev.getOrElse(null), tot.getOrElse(null)))
       }
     }
-    session.createDataFrame(rows, outSchema)
+    val schema = StructType(df.schema.fields ++ Seq(
+      StructField(prevCol, LongType, nullable = true),
+      StructField(totalCol, LongType, nullable = value.isDefined)))
+    (df.sparkSession.createDataFrame(rows, schema),
+      totals.values.foldLeft(Option.empty[Long])(merge))
   }
 
   /** Hard ceiling on pass-1's driver-side (partition, group) run count —
-    * roughly the driver-memory budget of `shardedGroupRanks`' bookkeeping
+    * roughly the driver-memory budget of `prefixScan`'s bookkeeping
     * (~1e6 small tuples ≈ tens of MB). A group column that blows past it
-    * violates the operator's low-cardinality contract; failing fast with
-    * the remedy in the message beats a driver OOM three stages later.
+    * violates the grouped scan's low-cardinality contract; failing fast
+    * with the remedy in the message beats a driver OOM three stages later.
     */
   private val maxDriverRuns = 1000000
 
@@ -430,18 +411,13 @@ object Layout {
     */
   def zorderCensusSharded(df: DataFrame, xCol: String, yCol: String,
                           tieCol: String, buckets: Int = 16,
-                          bits: Int = 16, parts: Int = 0): DataFrame = {
+                          bits: Int = 16): DataFrame = {
     val z = df.select(col(xCol), col(yCol), col(tieCol),
       zValue(col(xCol), col(yCol), bits).as("zval"))
-    val (ranked, total) =
-      shardedRanksWithTotal(z, Seq("zval", tieCol), parts)
-    ranked
-      .withColumn("bucket", ntileFromRank(col("rnk"), total, buckets))
-      .groupBy("bucket")
-      .agg(count(lit(1)).as("n"),
-        min(xCol).as("x_min"), max(xCol).as("x_max"),
-        min(yCol).as("y_min"), max(yCol).as("y_max"))
-      .orderBy("bucket")
+    val (ranked, total) = shardedRanksWithTotal(z, Seq("zval", tieCol))
+    bucketBoxes(ranked
+      .withColumn("bucket", ntileFromRank(col("rnk"), total, buckets)),
+      xCol, yCol)
   }
 
   /** Zone-map pruning audit: how many of `nFiles` equal-row files a
@@ -463,11 +439,11 @@ object Layout {
     * contract).
     */
   def zoneMapPruneAudit(df: DataFrame, predCol: String, tieCol: String,
-                        nFiles: Int = 16, parts: Int = 0): DataFrame = {
+                        nFiles: Int = 16): DataFrame = {
     require(nFiles >= 1, "nFiles must be >= 1")
     val base = df.select(col(predCol), col(tieCol))
     def zoneMaps(orderCols: Seq[String]): (DataFrame, Long) = {
-      val (ranked, total) = shardedRanksWithTotal(base, orderCols, parts)
+      val (ranked, total) = shardedRanksWithTotal(base, orderCols)
       val fileSize = math.max(1L, (total + nFiles - 1) / nFiles)
       (ranked
         .withColumn("file", expr(s"(rnk - 1) div ${fileSize}L"))
@@ -603,18 +579,13 @@ object Layout {
     */
   def hilbertCensusSharded(df: DataFrame, xCol: String, yCol: String,
                            tieCol: String, buckets: Int = 16,
-                           bits: Int = 16, parts: Int = 0): DataFrame = {
+                           bits: Int = 16): DataFrame = {
     val h = hilbertValue(
       df.select(col(xCol), col(yCol), col(tieCol)), xCol, yCol, bits)
-    val (ranked, total) =
-      shardedRanksWithTotal(h, Seq("hval", tieCol), parts)
-    ranked
-      .withColumn("bucket", ntileFromRank(col("rnk"), total, buckets))
-      .groupBy("bucket")
-      .agg(count(lit(1)).as("n"),
-        min(xCol).as("x_min"), max(xCol).as("x_max"),
-        min(yCol).as("y_min"), max(yCol).as("y_max"))
-      .orderBy("bucket")
+    val (ranked, total) = shardedRanksWithTotal(h, Seq("hval", tieCol))
+    bucketBoxes(ranked
+      .withColumn("bucket", ntileFromRank(col("rnk"), total, buckets)),
+      xCol, yCol)
   }
 
   /** Rendezvous (highest-random-weight) reshard planner: the per-shard

@@ -1,9 +1,7 @@
 package graft.ops
 
-import org.apache.spark.TaskContext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Sequence packing for pre-training: documents in doc_id order are
   * conceptually concatenated and cut into fixed token-budget chunks;
@@ -15,12 +13,13 @@ import org.apache.spark.storage.StorageLevel
   * The interesting part at scale is the prefix sum. The SQL formulation —
   * `sum(n_tokens) OVER (ORDER BY doc_id)` with no PARTITION BY — plans as
   * a SINGLE-task window over the whole corpus (the same funnel the df-cap
-  * work removed from dedup). Here it is the classic two-pass distributed
-  * prefix sum instead: range-partition by doc_id, pass 1 collects one
-  * (partition, token-total) row per partition to the driver, pass 2
-  * streams each partition once more adding its broadcast base offset.
-  * Both passes are narrow scans of the cached stats frame; nothing wider
-  * than `numPartitions` rows ever reaches the driver.
+  * work removed from dedup). Here it is `Layout.prefixScan`, the two-pass
+  * distributed prefix sum, instead: the token counts are range-partitioned
+  * by doc_id, pass 1 ships one token total per partition to the driver,
+  * and pass 2 streams each partition once more from its broadcast base
+  * offset, reading the same range exchange output as pass 1. Nothing is
+  * cached, and nothing wider than one row per partition reaches the
+  * driver.
   *
   * Result determinism does NOT depend on where the range boundaries fall:
   * the prefix of a total order is a property of the ORDER, not of the
@@ -30,51 +29,19 @@ import org.apache.spark.storage.StorageLevel
   */
 object Packing {
 
-  /** `(doc_id, n_tokens, pack_id)` for every document; whitespace tokens
-    * (Text.tokens), packs of `budget` tokens. `parts` overrides the
-    * prefix-sum partition count (defaults to the session's shuffle
-    * width); any value produces the identical assignment.
+  /** `(doc_id, n_tokens, pack_id)` for every document, in doc_id order;
+    * whitespace tokens (Text.tokens), packs of `budget` tokens.
     */
-  def packAssignments(documents: DataFrame, budget: Long,
-                      parts: Int = 0): DataFrame = {
+  def packAssignments(documents: DataFrame, budget: Long): DataFrame = {
     require(budget >= 1, "token budget must be >= 1")
-    val session = documents.sparkSession
-    import session.implicits._
-    val n =
-      if (parts > 0) parts
-      else shuffleWidth(session)
     val stats = documents.select(col("doc_id"),
       size(Text.tokens(col("text"))).cast("long").as("n_tokens"))
-    // persist: pass 1 (eager collect, below) and the caller's eventual
-    // action on pass 2 both read this frame — without the cache, pass 2
-    // would re-run the tokenize + range shuffle. NOT unpersisted here:
-    // pass 2 is lazy, so an eager unpersist would evict before the caller
-    // ever runs it. The entry stays in the session's cache until the
-    // caller's `clearCache()` (the pairsBySetOverlap convention).
-    val ranged = stats
-      .repartitionByRange(n, col("doc_id"))
-      .sortWithinPartitions("doc_id")
-      .as[(Long, Long)]
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // pass 1: one (partitionId, tokenTotal) row per partition
-    val totals = ranged.mapPartitions { it =>
-      var sum = 0L
-      it.foreach { case (_, t) => sum += t }
-      Iterator.single((TaskContext.getPartitionId(), sum))
-    }.collect().toMap
-    // base offset of partition p = sum of totals of partitions < p
-    val base = (0 until n).scanLeft(0L)(
-      (acc, p) => acc + totals.getOrElse(p, 0L)).toArray
-    val bBase = session.sparkContext.broadcast(base)
-    // pass 2: running sum within each partition, seeded by its base
-    ranged.mapPartitions { it =>
-      var cum = bBase.value(TaskContext.getPartitionId())
-      it.map { case (id, t) =>
-        val start = cum
-        cum += t
-        (id, t, start / budget)
-      }
-    }.toDF("doc_id", "n_tokens", "pack_id")
+    Layout.prefixScan(stats, None, Seq("doc_id"), Some("n_tokens"),
+        Math.addExact(_, _), "packAssignments",
+        shuffleWidth(documents.sparkSession))._1
+      .select(col("doc_id"), col("n_tokens"),
+        expr(s"coalesce(${Layout.prevCol}, 0L) div ${budget}L")
+          .as("pack_id"))
       .orderBy("doc_id")
   }
 
@@ -93,9 +60,9 @@ object Packing {
     * (per-pack, then per-combination). No window beyond the sharded
     * prefix sum.
     */
-  def packContaminationCensus(documents: DataFrame, budget: Long,
-                              parts: Int = 0): DataFrame = {
-    val packs = packAssignments(documents, budget, parts)
+  def packContaminationCensus(documents: DataFrame,
+                              budget: Long): DataFrame = {
+    val packs = packAssignments(documents, budget)
     packs.join(documents.select(col("doc_id"), col("source"),
         col("lang")), "doc_id")
       .groupBy("pack_id")

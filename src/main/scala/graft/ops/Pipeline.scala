@@ -192,8 +192,9 @@ object Pipeline {
     // final action (its stage row, both positional-gram branches of the
     // span census, and the cleaned stage) — union branches share no
     // subplans, so without this the dedup semi-join and text scan run
-    // 4×. The entry stays in the session's cache until the caller runs
-    // `spark.catalog.clearCache()` (the Layout.shardedRanks convention):
+    // 4×. Not unpersisted here: the caller's action is lazy, so an eager
+    // unpersist would evict before it runs. The entry stays in the
+    // session's cache until the caller runs `spark.catalog.clearCache()`:
     // the ContextCleaner never frees a Dataset cache entry.
     val ded = documents.join(keepIds, Seq("doc_id"), "left_semi")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -577,15 +577,15 @@ object Profiling {
     * given global rank is tie-break-invariant among equal values, so the
     * output is a property of the value distribution alone.
     */
-  def globalQuantilesSharded(df: DataFrame, valueCol: String, tieCol: String,
-                             permilles: Seq[Long] = Seq(500L, 900L, 990L),
-                             parts: Int = 0): DataFrame = {
+  def globalQuantilesSharded(df: DataFrame, valueCol: String,
+      tieCol: String,
+      permilles: Seq[Long] = Seq(500L, 900L, 990L)): DataFrame = {
     require(permilles.nonEmpty && permilles.forall(p => p >= 1 && p <= 1000),
       "permilles must be in [1, 1000]")
     val session = df.sparkSession
     import session.implicits._
     val (ranked, n) = graft.ops.Layout.shardedRanksWithTotal(
-      df.select(col(valueCol), col(tieCol)), Seq(valueCol, tieCol), parts)
+      df.select(col(valueCol), col(tieCol)), Seq(valueCol, tieCol))
     val targets = permilles.map(p => (p, (n * p + 999L) / 1000L))
       .toDF("p_permille", "target_rnk")
     ranked.join(broadcast(targets), col("rnk") === col("target_rnk"))
@@ -659,11 +659,10 @@ object Profiling {
     * Bit-identical to the window form (ProfilingSpec pins it).
     */
   def groupPercentRankSharded(df: DataFrame, groupCol: String,
-                              valueCol: String, tieCol: String,
-                              parts: Int = 0): DataFrame = {
+                              valueCol: String, tieCol: String): DataFrame = {
     Layout.shardedGroupRanks(
         df.select(col(groupCol), col(valueCol), col(tieCol)),
-        groupCol, Seq(valueCol, tieCol), parts)
+        groupCol, Seq(valueCol, tieCol))
       .withColumn("pct",
         when(col("n_grp") === 1L, lit(0.0))
           .otherwise((col("rnk") - 1).cast("double") /
@@ -817,12 +816,11 @@ object Profiling {
     * `outcomeCol` must be 0/1-valued.
     */
   def scoreCalibration(df: DataFrame, idCol: String, scoreCol: String,
-                       tieCol: String, outcomeCol: String, k: Int,
-                       parts: Int = 0): DataFrame = {
+                       tieCol: String, outcomeCol: String, k: Int): DataFrame = {
     require(k >= 1, "k must be >= 1")
     val cols = Seq(idCol, scoreCol, tieCol, outcomeCol).distinct
     val (ranked, n) = graft.ops.Layout.shardedRanksWithTotal(
-      df.select(cols.map(col): _*), Seq(scoreCol, tieCol), parts)
+      df.select(cols.map(col): _*), Seq(scoreCol, tieCol))
     ranked
       .select(graft.ops.Layout.ntileFromRank(col("rnk"), n, k)
           .as("bucket"),
@@ -863,11 +861,10 @@ object Profiling {
     * constant (≤ 100 enforced), so the minimax never touches the corpus.
     */
   def isotonicCalibration(df: DataFrame, idCol: String, scoreCol: String,
-                          tieCol: String, outcomeCol: String, k: Int,
-                          parts: Int = 0): DataFrame = {
+                          tieCol: String, outcomeCol: String,
+                          k: Int): DataFrame = {
     require(k >= 1 && k <= 100, "k must be in [1, 100]")
-    val base = scoreCalibration(df, idCol, scoreCol, tieCol, outcomeCol,
-        k, parts)
+    val base = scoreCalibration(df, idCol, scoreCol, tieCol, outcomeCol, k)
       .select(col("bucket"), col("n"), col("n_pos"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // cumulative counts over the k-row table (domain-bounded window)
@@ -898,13 +895,12 @@ object Profiling {
   }
 
   def quantileBuckets(df: DataFrame, idCol: String, valueCol: String,
-                      tieCol: String, k: Int,
-                      parts: Int = 0): DataFrame = {
+                      tieCol: String, k: Int): DataFrame = {
     require(k >= 1, "k must be >= 1")
     // idCol may double as tieCol — select each needed column once
     val cols = Seq(idCol, valueCol, tieCol).distinct
     val (ranked, n) = graft.ops.Layout.shardedRanksWithTotal(
-      df.select(cols.map(col): _*), Seq(valueCol, tieCol), parts)
+      df.select(cols.map(col): _*), Seq(valueCol, tieCol))
     ranked.select(col(idCol), col(valueCol),
         graft.ops.Layout.ntileFromRank(col("rnk"), n, k).as("bucket"))
       .orderBy(idCol)

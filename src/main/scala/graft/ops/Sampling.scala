@@ -608,9 +608,10 @@ object Sampling {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(stratumCol).orderBy(col(scoreCol).desc, col(idCol).asc)
     // persist: the rank window feeds three downstream reads of the lazy
-    // result — an eager unpersist here would evict before the caller's
-    // action runs, so the entry stays in the session's cache until the
-    // caller's `clearCache()` (the Layout.shardedRanks convention)
+    // result (the stratum sizes, the distinct ranks, the predecessor join),
+    // which would each re-run its shuffle and sort. An eager unpersist
+    // here would evict before the caller's action runs, so the entry
+    // stays in the session's cache until the caller's `clearCache()`
     val ranked = df.select(col(idCol), col(stratumCol), col(scoreCol))
       .withColumn("rnk", row_number().over(w).cast("long"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -888,15 +889,14 @@ object Sampling {
     * contract; sources are.)
     */
   def quantileNormalize(df: DataFrame, idCol: String, groupCol: String,
-                        valueCol: String, tieCol: String,
-                        parts: Int = 0): DataFrame = {
+                        valueCol: String, tieCol: String): DataFrame = {
     val cols = Seq(idCol, groupCol, valueCol, tieCol).distinct
     val base = df.select(cols.map(col): _*)
     val (g, n) = graft.ops.Layout.shardedRanksWithTotal(
-      base, Seq(valueCol, tieCol), parts)
+      base, Seq(valueCol, tieCol))
     val qf = g.select(col("rnk").as("__g"), col(valueCol).as("norm"))
     val s = graft.ops.Layout.shardedGroupRanks(
-      base, groupCol, Seq(valueCol, tieCol), parts)
+      base, groupCol, Seq(valueCol, tieCol))
     val target = s.withColumn("__g",
       when(col("n_grp") >= 2, expr(
         s"cast(cast(rnk - 1 as decimal(38,0)) * ${n - 1} " +

@@ -1299,9 +1299,10 @@ object Text {
   def vocabCoverage(documents: DataFrame, vocabSize: Int = 1000): DataFrame = {
     require(vocabSize >= 1, "vocabSize must be >= 1")
     // persist: vocab + totals + the final join all read this census from
-    // the caller's lazy action — the entry stays in the session's cache
-    // until the caller's `clearCache()` (the Layout.shardedRanks
-    // convention; an eager unpersist would evict before the action)
+    // the caller's lazy action, and each would re-run the tokenize and
+    // its shuffle. The entry stays in the session's cache until the
+    // caller's `clearCache()` (an eager unpersist would evict before the
+    // action)
     val bySrc = documents
       .select(col("source"), explode(tokens(col("text"))).as("tok"))
       .groupBy("source", "tok").agg(count(lit(1)).as("c"))
@@ -1431,9 +1432,10 @@ object Text {
                       minCount: Long = 3L): DataFrame = {
     require(topK >= 1 && priorMass > 0 && minCount >= 1,
       "need positive topK/priorMass/minCount")
-    // persist: margins/srcTot/scored all read this census lazily — the
-    // entry stays in the session's cache until the caller's
-    // `clearCache()` (the Layout.shardedRanks convention)
+    // persist: margins/srcTot/scored all read this census lazily, and
+    // each would re-run the tokenize and its shuffle. The entry stays in
+    // the session's cache until the caller's `clearCache()` (an eager
+    // unpersist would evict before the caller's action)
     val census = documents
       .select(col("source"), explode(tokens(col("text"))).as("w"))
       .groupBy("source", "w").agg(count(lit(1)).as("y_sw"))
@@ -1535,9 +1537,10 @@ object Text {
     */
   def zipfCensus(documents: DataFrame, topK: Int = 50): DataFrame = {
     require(topK >= 2, "topK must be >= 2 for a slope")
-    // persist: totals + the rank window both read this census lazily —
-    // the entry stays in the session's cache until the caller's
-    // `clearCache()` (the Layout.shardedRanks convention)
+    // persist: totals + the rank window both read this census lazily,
+    // and each would re-run the tokenize and its shuffle. The entry stays
+    // in the session's cache until the caller's `clearCache()` (an eager
+    // unpersist would evict before the caller's action)
     val census = documents
       .select(col("source"), explode(tokens(col("text"))).as("w"))
       .groupBy("source", "w").agg(count(lit(1)).as("c"))

@@ -545,9 +545,11 @@ object PropertyProps extends Properties("graft") {
     Prop.forAllNoShrink(Gen.nonEmptyListOf(doc), Gen.chooseNum(1L, 20L),
       Gen.chooseNum(1, 5)) { (texts, budget, parts) =>
       val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-      val got = graft.ops.Packing
-        .packAssignments(docs.toDF("doc_id", "text"), budget, parts)
-        .as[(Long, Long, Long)].collect().toSeq
+      val got = Session.withConfs(spark,
+          Map("spark.sql.shuffle.partitions" -> parts.toString)) {
+        graft.ops.Packing.packAssignments(docs.toDF("doc_id", "text"), budget)
+          .as[(Long, Long, Long)].collect().toSeq
+      }
       // reference: token counts in doc_id order, pack = floor(prefix/budget)
       var cum = 0L
       val want = docs.sortBy(_._1).map { case (id, t) =>
@@ -756,9 +758,12 @@ object PropertyProps extends Properties("graft") {
       (rows0, parts) =>
         val rows = rows0.distinct // (v, t) must be a total order
         val df = rows.toDF("v", "t")
-        val got = graft.ops.Layout.shardedRanks(df, Seq("v", "t"), parts)
-          .select(col("v"), col("t"), col("rnk"))
-          .as[(Long, Long, Long)].collect().toSeq
+        val got = Session.withConfs(spark,
+            Map("spark.sql.shuffle.partitions" -> parts.toString)) {
+          graft.ops.Layout.shardedRanks(df, Seq("v", "t"))
+            .select(col("v"), col("t"), col("rnk"))
+            .as[(Long, Long, Long)].collect().toSeq
+        }
         val want = rows.sorted.zipWithIndex
           .map { case ((v, t), i) => (v, t, i + 1L) }.toSet
         got.toSet == want

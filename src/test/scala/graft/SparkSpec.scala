@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -65,6 +66,12 @@ abstract class SparkSpec extends AnyFunSuite {
     seen.dropWhile(_._1 != "tail").drop(1).takeWhile(_._1 != "tail")
   }
 
+  private def inGroup(group: String)(f: => Unit): Unit = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try f finally sc.clearJobGroup()
+  }
+
   /** The number of Spark jobs `body` starts. */
   protected def jobsOf(body: => Unit): Int = {
     val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -73,15 +80,38 @@ abstract class SparkSpec extends AnyFunSuite {
         groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
     }
     val sc = spark.sparkContext
-    def inGroup(group: String)(f: => Unit): Unit = {
-      sc.setJobGroup(group, group)
-      try f finally sc.clearJobGroup()
-    }
     sc.addSparkListener(listener)
     try flushed(inGroup("graft-jobs-of")(body),
       inGroup("graft-jobs-of-marker")(spark.range(1).rdd.count()),
       groups.contains("graft-jobs-of-marker"))
     finally sc.removeSparkListener(listener)
     groups.toArray.count(_ == "graft-jobs-of")
+  }
+
+  /** The stage id of every map stage `body` completes (a stage that wrote
+    * shuffle output), in completion order; a map stage whose output a job
+    * reuses is skipped and absent, one that runs again appears again.
+    */
+  protected def mapStagesOf(body: => Unit): Seq[Int] = {
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    @volatile var marked = false
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.jobGroup.id") ==
+            "graft-map-stages-marker") marked = true
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val info = e.stageInfo
+        if (!marked && info.taskMetrics.shuffleWriteMetrics.recordsWritten > 0)
+          stages.add(info.stageId)
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try flushed(body,
+      inGroup("graft-map-stages-marker")(spark.range(1).rdd.count()),
+      marked)
+    finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    stages.asScala.toSeq
   }
 }

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Pins the z-order layout contracts: the Morton interleave formula, the
@@ -11,6 +12,17 @@ import org.apache.spark.sql.functions._
   */
 class LayoutSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Runs `body` at prefix-scan width `p` (p >= 2: the session's width is
+    * at least its 2 cores). */
+  private def atWidth[T](p: Int)(body: => T): T =
+    withConfs(Map("spark.sql.shuffle.partitions" -> p.toString))(body)
+
+  /** The prefix scan at width 1, below the session's core count. */
+  private def scanAtOne(df: DataFrame, group: Option[String],
+                        order: Seq[String], value: Option[String],
+                        step: (Long, Long) => Long): DataFrame =
+    Layout.prefixScan(df, group, order, value, step, "test", 1)._1
 
   test("zValue interleaves bits (x even positions, y odd)") {
     val df = Seq((0L, 0L), (1L, 0L), (0L, 1L), (1L, 1L), (2L, 0L), (3L, 1L))
@@ -131,11 +143,18 @@ class LayoutSpec extends SparkSpec {
     val w = org.apache.spark.sql.expressions.Window.orderBy("v", "tie")
     val expect = df.withColumn("rnk", row_number().over(w).cast("long"))
       .orderBy("rnk").as[(Long, Long, Long)].collect().toSeq
-    for (parts <- Seq(1, 3, 32)) {
-      val got = Layout.shardedRanks(df, Seq("v", "tie"), parts)
-        .orderBy("rnk").as[(Long, Long, Long)].collect().toSeq
+    for (parts <- Seq(3, 32)) {
+      val got = atWidth(parts) {
+        Layout.shardedRanks(df, Seq("v", "tie"))
+          .orderBy("rnk").as[(Long, Long, Long)].collect().toSeq
+      }
       assert(got == expect, s"parts=$parts")
     }
+    val one = scanAtOne(df, None, Seq("v", "tie"), None, Math.addExact(_, _))
+      .select(col("v"), col("tie"),
+        (coalesce(col(Layout.prevCol), lit(0L)) + 1).as("rnk"))
+      .orderBy("rnk").as[(Long, Long, Long)].collect().toSeq
+    assert(one == expect, "parts=1")
   }
 
   test("shardedRanks plans the wideBy width when shuffle.partitions is unset") {
@@ -171,21 +190,35 @@ class LayoutSpec extends SparkSpec {
 
   test("shardedRunningMax equals the strict-prefix max window, at every " +
       "partition count") {
-    val df = (1 to 300).map(i =>
-      (i.toLong, (i * 7919L) % 97)).toDF("ord", "v")
     val w = org.apache.spark.sql.expressions.Window.orderBy("ord")
       .rowsBetween(org.apache.spark.sql.expressions.Window
         .unboundedPreceding, -1)
-    val expect = df
-      .withColumn("run_max_prev",
-        org.apache.spark.sql.functions.max("v").over(w))
-      .orderBy("ord")
-      .as[(Long, Long, Option[Long])].collect().toSeq
-    for (parts <- Seq(1, 3, 32)) {
-      val got = Layout.shardedRunningMax(df, Seq("ord"), "v", parts)
+    val inputs = Seq(
+      (1 to 300).map(i => (i.toLong, Option((i * 7919L) % 97))),
+      // a running max of Long.MinValue is a value, not "no earlier row"
+      Seq((1L, Some(Long.MinValue)), (2L, Some(0L)), (3L, Some(-5L))),
+      // a null value is skipped, as SQL max skips it
+      Seq((1L, Some(3L)), (2L, None), (3L, Some(1L))))
+    for (rows <- inputs) {
+      val df = rows.toDF("ord", "v")
+      val expect = df
+        .withColumn("run_max_prev",
+          org.apache.spark.sql.functions.max("v").over(w))
         .orderBy("ord")
-        .as[(Long, Long, Option[Long])].collect().toSeq
-      assert(got == expect, s"parts=$parts")
+        .as[(Long, Option[Long], Option[Long])].collect().toSeq
+      for (parts <- Seq(3, 32)) {
+        val got = atWidth(parts) {
+          Layout.shardedRunningMax(df, Seq("ord"), "v")
+            .orderBy("ord")
+            .as[(Long, Option[Long], Option[Long])].collect().toSeq
+        }
+        assert(got == expect, s"parts=$parts")
+      }
+      val one = scanAtOne(df, None, Seq("ord"), Some("v"), math.max(_, _))
+        .select(col("ord"), col("v"), col(Layout.prevCol))
+        .orderBy("ord")
+        .as[(Long, Option[Long], Option[Long])].collect().toSeq
+      assert(one == expect, "parts=1")
     }
   }
 
@@ -196,8 +229,10 @@ class LayoutSpec extends SparkSpec {
     val offline = Layout.zorderCensus(grid, "x", "y", "tie",
       buckets = 7, bits = 4).collect().toSeq
     for (parts <- Seq(2, 32)) {
-      val sharded = Layout.zorderCensusSharded(grid, "x", "y", "tie",
-        buckets = 7, bits = 4, parts = parts).collect().toSeq
+      val sharded = atWidth(parts) {
+        Layout.zorderCensusSharded(grid, "x", "y", "tie",
+          buckets = 7, bits = 4).collect().toSeq
+      }
       assert(sharded == offline, s"parts=$parts")
     }
   }
@@ -210,9 +245,11 @@ class LayoutSpec extends SparkSpec {
       (Option.empty[String], 20L), (Option("x"), 5L))
       .toDF("g", "v")
     for (parts <- Seq(2, 8)) {
-      val got = Layout.shardedGroupRanks(df, "g", Seq("v"), parts)
-        .select("g", "v", "rnk", "n_grp")
-        .as[(Option[String], Long, Long, Long)].collect().toSet
+      val got = atWidth(parts) {
+        Layout.shardedGroupRanks(df, "g", Seq("v"))
+          .select("g", "v", "rnk", "n_grp")
+          .as[(Option[String], Long, Long, Long)].collect().toSet
+      }
       // NULL is a 3-row group of its own; so is the LITERAL string
       // "null" — merging them (the String.valueOf collision) would
       // report n_grp=6 and interleaved ranks for both
@@ -224,6 +261,36 @@ class LayoutSpec extends SparkSpec {
         (Option.empty[String], 30L, 3L, 3L),
         (Option("x"), 5L, 1L, 1L))
       assert(got == want, s"parts=$parts")
+    }
+  }
+
+  test("the prefix scans leave nothing cached and run each range " +
+      "exchange once") {
+    // frames no other test builds: persisting a plan that is already
+    // cached adds no RDD, so a shared fixture would hide a leak behind
+    // the entry an earlier test left
+    val df = (1L to 120L).map(i => (i % 3, (i * 7919L) % 61, i))
+      .toDF("g", "v", "tie")
+    val docs = (0L until 40L)
+      .map(i => (i, Seq.fill(1 + (i % 5).toInt)("w").mkString(" ")))
+      .toDF("doc_id", "text")
+    // (name, call, map stages: the range exchange, plus the final sort's)
+    val calls: Seq[(String, () => DataFrame, Int)] = Seq(
+      ("shardedRanks", () => Layout.shardedRanks(df, Seq("v", "tie")), 1),
+      ("shardedRunningMax",
+        () => Layout.shardedRunningMax(df, Seq("tie"), "v"), 1),
+      ("shardedGroupRanks",
+        () => Layout.shardedGroupRanks(df, "g", Seq("v", "tie")), 1),
+      ("packAssignments", () => Packing.packAssignments(docs, 8L), 2))
+    spark.catalog.clearCache()
+    calls.foreach { case (name, call, mapStages) =>
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val stages = mapStagesOf(assert(call().collect().nonEmpty, name))
+      assert(spark.sharedState.cacheManager.isEmpty, s"$name cached a frame")
+      val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(left.isEmpty, s"$name left RDDs $left persisted")
+      // pass 2 reads pass 1's range exchange output: no map stage reruns
+      assert(stages.size == mapStages, s"$name map stages: $stages")
     }
   }
 
@@ -252,8 +319,10 @@ class LayoutSpec extends SparkSpec {
       .as[(String, Long, Long)].collect().toSeq
     assert(got == Seq(("aa", 4L, 2L), ("bb", 4L, 2L)))
     // determinism across shard counts (the shardedRanks contract)
-    val again = Layout.zoneMapPruneAudit(docs, "lang", "doc_id",
-      nFiles = 4, parts = 7).as[(String, Long, Long)].collect().toSeq
+    val again = atWidth(7) {
+      Layout.zoneMapPruneAudit(docs, "lang", "doc_id", nFiles = 4)
+        .as[(String, Long, Long)].collect().toSeq
+    }
     assert(again == got)
     // a value spanning a file boundary is charged every file it
     // straddles: langs of sizes 15/15/10 over files of 10 — here ids

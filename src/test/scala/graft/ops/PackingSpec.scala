@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.sql.functions.{expr, size}
 
 class PackingSpec extends SparkSpec {
   import spark.implicits._
@@ -27,10 +28,21 @@ class PackingSpec extends SparkSpec {
 
   test("assignment is invariant to the prefix-sum partition count") {
     val texts = (0 until 40).map(i => Seq.fill(1 + i % 7)("w").mkString(" "))
-    def run(parts: Int) = Packing.packAssignments(
-      docs(texts: _*), budget = 10, parts = parts)
-      .as[(Long, Long, Long)].collect().toSeq
-    assert(run(1) == run(3))
+    def run(parts: Int) =
+      withConfs(Map("spark.sql.shuffle.partitions" -> parts.toString)) {
+        Packing.packAssignments(docs(texts: _*), budget = 10)
+          .as[(Long, Long, Long)].collect().toSeq
+      }
+    // width 1, below the session's core count: the scan itself
+    val one = Layout.prefixScan(
+        docs(texts: _*).select($"doc_id",
+          size(Text.tokens($"text")).cast("long").as("n_tokens")),
+        None, Seq("doc_id"), Some("n_tokens"), Math.addExact(_, _),
+        "test", 1)._1
+      .select($"doc_id", $"n_tokens",
+        expr(s"coalesce(${Layout.prevCol}, 0L) div 10L"))
+      .orderBy("doc_id").as[(Long, Long, Long)].collect().toSeq
+    assert(one == run(3))
     assert(run(3) == run(13))
   }
 

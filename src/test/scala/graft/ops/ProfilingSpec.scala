@@ -232,12 +232,25 @@ class ProfilingSpec extends SparkSpec {
       .toDF("lang", "n_chars", "doc_id")
     val want = Profiling.groupPercentRank(df, "lang", "n_chars", "doc_id")
       .as[(String, Long, Long, Double)].collect().toSeq
-    for (p <- Seq(1, 3, 32)) {
-      val got = Profiling.groupPercentRankSharded(df, "lang", "n_chars",
-          "doc_id", parts = p)
-        .as[(String, Long, Long, Double)].collect().toSeq
+    for (p <- Seq(3, 32)) {
+      val got = withConfs(Map("spark.sql.shuffle.partitions" -> p.toString)) {
+        Profiling.groupPercentRankSharded(df, "lang", "n_chars", "doc_id")
+          .as[(String, Long, Long, Double)].collect().toSeq
+      }
       assert(got == want, s"parts=$p")
     }
+    // width 1, below the session's core count: the scan itself, with
+    // rnk - 1 = the earlier rows and n_grp = the group total
+    import org.apache.spark.sql.functions.{coalesce, col, lit, when}
+    val one = Layout.prefixScan(df, Some("lang"), Seq("n_chars", "doc_id"),
+        None, Math.addExact(_, _), "test", 1)._1
+      .select(col("lang"), col("n_chars"), col("doc_id"),
+        when(col(Layout.totalCol) === 1L, lit(0.0))
+          .otherwise(coalesce(col(Layout.prevCol), lit(0L)).cast("double") /
+            (col(Layout.totalCol) - 1).cast("double")).as("pct"))
+      .orderBy("lang", "n_chars", "doc_id")
+      .as[(String, Long, Long, Double)].collect().toSeq
+    assert(one == want, "parts=1")
   }
 
   test("quantileBuckets: bit-identical to the ntile window") {
@@ -596,9 +609,10 @@ class ProfilingSpec extends SparkSpec {
       (3L, 3L, 7L, 9L, 3L, 1000L),
       (4L, 3L, 10L, 12L, 3L, 1000L)))
     // shard-count determinism (the shardedRanks contract)
-    assert(Profiling.scoreCalibration(df, "id", "score", "id", "y",
-        k = 4, parts = 5)
-      .as[(Long, Long, Long, Long, Long, Long)].collect().toSeq == got)
+    assert(withConfs(Map("spark.sql.shuffle.partitions" -> "5")) {
+      Profiling.scoreCalibration(df, "id", "score", "id", "y", k = 4)
+        .as[(Long, Long, Long, Long, Long, Long)].collect().toSeq
+    } == got)
   }
 
   test("conformalCoverage: q-hat is the exact order statistic; eval " +
